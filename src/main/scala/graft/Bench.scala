@@ -1,25 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Engine.session: AQE starts shuffles wide and coalesces small
-      // ones to core count — payload-heavy shuffles keep enough splits.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Engine.session: skip UnionLoopExec's per-iteration collect
-      // (see Engine for the measurement; results unaffected).
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation", "0")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Engine.session(s"local[$cpus]", cpus)
     // Warm the JVM (codegen, parquet reader, shuffle machinery) before any
     // query is timed, so single-iteration timings measure the queries and
     // not first-touch JIT.

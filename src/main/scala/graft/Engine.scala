@@ -51,12 +51,6 @@ object Engine {
     spark
   }
 
-  /** Configure an existing session the same way Verify/Bench do. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
-
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
@@ -85,7 +79,7 @@ object Engine {
     def fresh() =
       if (name == "events") events(spark, sfDir)
       else spark.read.parquet(s"$sfDir/$name.parquet")
-    if (spark.conf.getOption("spark.graft.tableCache").contains("false")) fresh()
+    if (!GraftConf.TableCache(spark)) fresh()
     else tableCache.getOrElseUpdate((spark, sfDir, name), fresh())
   }
 

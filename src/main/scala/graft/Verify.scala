@@ -1,31 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * `Verify <sfDir> <outDir> [lane...]` dumps every declared query, or only
+  * the named lanes — a new or changed query can be oracle-checked at the
+  * big SFs (tools/check_oracles.py globs whatever lane directories exist)
+  * without paying for the full sweep. Unknown lane names are rejected
+  * before the session starts.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Engine.session: AQE starts shuffles wide and coalesces small
-      // ones to core count — payload-heavy shuffles keep enough splits.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Engine.session: skip UnionLoopExec's per-iteration collect
-      // (see Engine for the measurement; results unaffected).
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation", "0")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [lane...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val queries = SparkEntry.queries
+    val lanes = if (args.length > 2) args.drop(2).toSeq else queries.keys.toSeq
+    val unknown = lanes.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown lanes: ${unknown.mkString(", ")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Engine.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    lanes.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

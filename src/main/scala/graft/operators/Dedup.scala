@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -106,7 +107,7 @@ object Dedup {
     * exact integer counts). Documents shorter than n words have no
     * shingles and are absent. Scale shape: shingling is the JIT'd
     * row-local pass ([[shinglesJit]] — the Column-HOF form measured 6×
-    * slower end-to-end in ProfileDupOps), its distinct (doc, shingle)
+    * slower end-to-end in ProfileDupOps (git 2262e7b)), its distinct (doc, shingle)
     * pairs are scratch-materialized for their two consumers; the
     * shared-shingle set is a map-side-combined count over it; the
     * doc-level ratio is one equi-join back on the shingle plus a
@@ -746,7 +747,7 @@ object Dedup {
       maxRounds: Int = 64): DataFrame = {
     val spark0 = docs.sparkSession
     if (threshold < 1.0 &&
-        spark0.conf.getOption("spark.graft.dedupCache").forall(_ != "false")) {
+        GraftConf.DedupCache(spark0)) {
       val key = (spark0, docs.queryExecution.analyzed.canonicalized, threshold, maxRounds)
       return labelCache.getOrElseUpdate(key,
         componentLabelsUncached(docs, threshold, maxRounds))

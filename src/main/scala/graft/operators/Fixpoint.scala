@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{col, count, lit, struct, xxhash64}
 
@@ -105,25 +106,12 @@ object Fixpoint {
         .getContentSummary(p).getLength
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
-  /** Parsed, validated `spark.graft.fixpoint.targetBucketBytes` (default
-    * 128 MB): 0 would divide-by-zero mid-iteration, a negative value
-    * silently collapses every round table to 1 bucket — fail loud at
-    * entry instead, naming the conf key.
-    */
-  private def targetBucketBytesOf(spark: org.apache.spark.sql.SparkSession): Long = {
-    val v = spark.conf.getOption("spark.graft.fixpoint.targetBucketBytes")
-      .map(_.toLong).getOrElse(128L << 20)
-    require(v > 0,
-      s"spark.graft.fixpoint.targetBucketBytes must be > 0 bytes, got $v")
-    v
-  }
-
   /** Bytes-derived bucket count for the round tables when the caller did
     * not size them (buckets = 0) — guide-§2 scale-adaptive partitioning:
     * a constant `spark.sql.shuffle.partitions` fan-out pays one write
     * task + one file PER BUCKET PER ROUND regardless of frontier size
     * (measured: the 25-round nation closure runs 1.4-2x slower at 32
-    * buckets than at 4, ProfileFixpoint), while a 100 TB closure wants
+    * buckets than at 4, ProfileFixpoint (git 2262e7b)), while a 100 TB closure wants
     * buckets sized like any shuffle. `ceil(bytes / targetBucketBytes)`
     * clamped to [1, spark.sql.shuffle.partitions]; the ceiling keeps a
     * deployment's configured width as the upper bound (a cluster raises
@@ -188,16 +176,10 @@ object Fixpoint {
     require(cols.nonEmpty, "Fixpoint.iterate: seed must have at least one column")
     val cap = if (buckets > 0) buckets
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val targetBytes = targetBucketBytesOf(spark)
-    val localRowsCap = spark.conf
-      .getOption("spark.graft.fixpoint.localFrontierRows").map(_.toInt)
-      .getOrElse(10000)
-    val localTotalCap = spark.conf
-      .getOption("spark.graft.fixpoint.localTotalRows").map(_.toLong)
-      .getOrElse(200000L)
-    val compactEvery = spark.conf
-      .getOption("spark.graft.fixpoint.compactRounds").map(_.toInt).getOrElse(8)
-    require(compactEvery >= 1, "spark.graft.fixpoint.compactRounds must be >= 1")
+    val targetBytes = GraftConf.FixpointTargetBucketBytes(spark)
+    val localRowsCap = GraftConf.FixpointLocalFrontierRows(spark)
+    val localTotalCap = GraftConf.FixpointLocalTotalRows(spark)
+    val compactEvery = GraftConf.FixpointCompactRounds(spark)
     // Next BUCKETED round's bucket count: explicit `buckets` wins; else
     // derived from the previous persisted frontier's measured bytes (seed
     // round: the optimizer's estimate) — see adaptiveBuckets.
@@ -381,9 +363,9 @@ object Fixpoint {
     * workloads re-touch keys, so round tables are NOT disjoint —
     * unboundedly many superseded rows would accumulate and every
     * lookup's join chain would grow one table per round (O(rounds²·K)
-    * scanned over a long run). Past
-    * `spark.graft.keyedFixpointCompactRounds` live tables (default 8)
-    * the state COMPACTS: latest-per-key resolves into one bucketed
+    * scanned over a long run). Past `spark.graft.fixpoint.compactRounds`
+    * live tables (default 8, the same key as [[iterate]]'s) the state
+    * COMPACTS: latest-per-key resolves into one bucketed
     * table and iteration continues from it — lookups join ≤ compact+1
     * tables, superseded rows are dropped rather than re-scanned forever,
     * and one K-row shuffle per compaction pays for it. ([[iterate]]
@@ -412,7 +394,7 @@ object Fixpoint {
       s"Fixpoint.iterateKeyed: keys ${keys.mkString(",")} must be seed columns ${cols.mkString(",")}")
     val cap = if (buckets > 0) buckets
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val targetBytes = targetBucketBytesOf(spark)
+    val targetBytes = GraftConf.FixpointTargetBucketBytes(spark)
     var nextNb =
       if (buckets > 0) buckets
       else adaptiveBuckets(
@@ -438,10 +420,7 @@ object Fixpoint {
         .agg(max_by(fstruct(cols.map(col): _*), col("__gkf_round")).as("__gkf_row"))
         .select(cols.map(c => col(s"__gkf_row.$c")): _*)
     }
-    val compactEvery = spark.conf
-      .getOption("spark.graft.keyedFixpointCompactRounds").map(_.toInt).getOrElse(8)
-    require(compactEvery >= 1,
-      "spark.graft.keyedFixpointCompactRounds must be >= 1")
+    val compactEvery = GraftConf.FixpointCompactRounds(spark)
     var created = Vector.empty[String]
     // Frontier-round persist: sized by the frontier-derived nextNb, which
     // the just-written table's measured bytes then update. Returns the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -30,7 +31,7 @@ private[graft] object Scratch {
   private val roots = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def sessionRoot(spark: SparkSession): String = {
-    val base = spark.conf.getOption("spark.graft.scratchDir")
+    val base = GraftConf.ScratchDir(spark)
       .getOrElse(System.getProperty("java.io.tmpdir"))
       .stripSuffix("/")
     roots.computeIfAbsent(base, { base =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -437,18 +438,13 @@ object Similarity {
     require(zeroNorm.isEmpty,
       s"assignToCentroids: zero-norm centroid(s) ${zeroNorm.map(_._1).mkString(",")} " +
         "in codebook — cosine against them is undefined (NaN)")
-    val broadcastK = spark.conf.getOption("spark.graft.ivfBroadcastCodebookK")
-      .map(_.toInt).getOrElse(1024)
-    val twoLevelK = spark.conf.getOption("spark.graft.twoLevelAssignK")
-      .map(_.toInt).getOrElse(8192)
+    val broadcastK = GraftConf.IvfBroadcastCodebookK(spark)
+    val twoLevelK = GraftConf.TwoLevelAssignK(spark)
     val (expr, handle, twoLevel) =
       if (cb.length > twoLevelK) {
-        val nProbe = spark.conf.getOption("spark.graft.twoLevelAssignNProbe")
-          .map(_.toInt).getOrElse(8)
-        val fitSample = spark.conf.getOption("spark.graft.twoLevelCoarseFitSample")
-          .map(_.toInt).getOrElse(131072)
+        val nProbe = GraftConf.TwoLevelAssignNProbe(spark)
         val bc = spark.sparkContext.broadcast(
-          buildTwoLevelCodebook(cb.map(_._1), cb.map(_._2), fitSample))
+          buildTwoLevelCodebook(cb.map(_._1), cb.map(_._2)))
         (graft.functions.BestCentroidTwoLevel(
           ColumnBridge.expression(col("embedding")), bc, nProbe),
           Some(bc), Some(bc))
@@ -481,7 +477,7 @@ object Similarity {
     * drops from (rounds+1)·k·√k·dim to rounds·s·√k·dim + k·√k·dim — at
     * the k=10⁶ contract edge that is the difference between the driver
     * fitting 2·10⁶ and 2·1.3·10⁵ rows per round while the cluster idles
-    * (ProfileTwoLevelBuild measures it). Sampling moves cell BOUNDARIES
+    * (ProfileTwoLevelBuild (git 2262e7b) measures it). Sampling moves cell BOUNDARIES
     * only — probe/parity semantics (exactness at nProbe ≥ cell count,
     * duplicate co-assignment) are properties of the kernel, not the fit.
     */
@@ -607,8 +603,7 @@ object Similarity {
     val spark = q.sparkSession
     res.twoLevel match {
       case Some(bc) =>
-        val nCells = spark.conf.getOption("spark.graft.twoLevelAssignNProbe")
-          .map(_.toInt).getOrElse(8)
+        val nCells = GraftConf.TwoLevelAssignNProbe(spark)
         q.select(col("query_id"), col("qe"),
             posexplode(ColumnBridge.column(graft.functions.TopCentroidsTwoLevel(
               ColumnBridge.expression(col("qe")), bc, nCells, nProbe))))
@@ -703,14 +698,13 @@ object Similarity {
     *     itself — built once per iteration inside [[assignToCentroids]]
     *     and shipped as a broadcast variable, the map-side-assign
     *     alternative to shuffling k×N join rows; it is transient and
-    *     constant-sized across iterations (ProfileSemantic measures the
+    *     constant-sized across iterations (ProfileSemantic (git 2262e7b) measures the
     *     flat driver heap at k=10⁴).
     */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val distributedK = spark.conf.getOption("spark.graft.kmeansDistributedK")
-      .map(_.toInt).getOrElse(1024)
+    val distributedK = GraftConf.KmeansDistributedK(spark)
     if (k > distributedK) return kmeansCentroidsDistributed(corpus, k, iters)
     var centroids = corpus.orderBy("vec_id").limit(k)
       .select(col("vec_id"), col("embedding"))
@@ -930,7 +924,7 @@ object Similarity {
     // the boundary Catalyst collapses the projection into the post-join
     // stage, re-evaluating the O(k·dim) PqCodes kernel once per
     // (row × matching probe) instead of once per row: measured 19 s vs
-    // 2 s at n=200k, q=100, nProbe=8 (ProfilePq).
+    // 2 s at n=200k, q=100, nProbe=8 (ProfilePq (git 2262e7b)).
     val (coded, _) = Scratch.materialize(
       res.assigned.select(col("vec_id"), col("cid"),
         ColumnBridge.column(graft.functions.PqCodes(

@@ -746,7 +746,7 @@ object TextAnalysis {
     * (typos, URLs, hashes can reach 10⁸-10⁹ rows on 100 TB of web text)
     * correctly falls back to a shuffled join instead of OOMing the
     * driver, which the previous forced `broadcast(tc)` hint removed
-    * (ProfileVocab measures the fallback engaging on a synthetic
+    * (ProfileVocab (git 2262e7b) measures the fallback engaging on a synthetic
     * unique-token corpus). Corpus totals (token count, pair count) come
     * from ONE single-row aggregate — the pair total via the closed form
     * Σ_docs Σ_{j=1..L-1} min(window, j), which equals the number of rows

@@ -1354,7 +1354,6 @@ object AnalyticsQueries {
     // would silently read the stale snapshot). newSession shares the
     // SparkContext and catalog but scopes temp views and TempTables.
     val s2 = spark.newSession()
-    graft.Engine.tune(s2)
     s2.read.parquet(s"$sfDir/orders.parquet").createOrReplaceTempView("orders")
     val dir = s"/tmp/graft_q95_spark_${java.util.UUID.randomUUID().toString.take(8)}"
     s2.sql(

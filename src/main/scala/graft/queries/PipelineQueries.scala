@@ -69,10 +69,7 @@ object PipelineQueries {
           if (!spark.sparkContext.isStopped)
             dirs.foreach(d => try Scratch.delete(spark, d)
               catch { case _: Throwable => () })
-        val graceSec =
-          try spark.conf.getOption("spark.graft.archiveEvictGraceSec")
-            .map(_.toLong).getOrElse(900L)
-          catch { case _: Throwable => 900L } // stopped session: default
+        val graceSec = graft.GraftConf.ArchiveEvictGraceSec.readIfLive(spark)
         if (graceSec <= 0) reclaim.run()
         else {
           archiveEvictTimer.schedule(reclaim, graceSec,
@@ -1014,7 +1011,7 @@ object PipelineQueries {
     // buckets sized to the tiny closure (≤25 rows) exactly like sizing a
     // shuffle — the default (spark.sql.shuffle.partitions) pays one write
     // task + file per bucket per round for no benefit here; a 100 TB
-    // closure would size it in the hundreds instead (ProfileFixpoint
+    // closure would size it in the hundreds instead (ProfileFixpoint (git 2262e7b)
     // measures the tradeoff).
     graft.operators.Fixpoint.iterate(seed,
         d => d.join(edges, d("x") === edges("u")).select(col("v").as("x")),
@@ -1158,7 +1155,7 @@ object PipelineQueries {
     // threshold (max natural cosine ~0.44), so the oracle is exactly the
     // original corpus. The planted offset is DERIVED from max(vec_id)+1
     // (a fixed +20000 silently collides with natural ids at larger SFs —
-    // the trap ProfileDedup fixed the same way) and k tracks the corpus
+    // the trap ProfileDedup (git 2262e7b) fixed the same way) and k tracks the corpus
     // (~N/500, floor 16), keeping clusters at the documented
     // ~N/clusterSize contract at every SF; one tiny agg job up front.
     val e = t(spark, sfDir, "embeddings")

@@ -1874,9 +1874,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val describeRe =
     "(?is)\\A\\s*(?:DESCRIBE|DESC)\\s+([A-Za-z_]\\w*)\\s*;?\\s*\\z".r
   private def duckDescribeEnabled: Boolean =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.duckdbDescribe").contains("true")
-    catch { case scala.util.control.NonFatal(_) => false }
+    graft.GraftConf.DuckdbDescribe.readIfLive(org.apache.spark.sql.SparkSession.active)
 
   /** Non-TEMP CREATE OR REPLACE TABLE, single-part name (the TEMP form
     * never matches — TEMP sits between REPLACE and TABLE there).

@@ -91,11 +91,7 @@ object TempTables {
     */
   def put(name: String, df: DataFrame): Unit = {
     val spark = df.sparkSession
-    val cap =
-      try spark.conf.getOption("spark.graft.tempTableLocalRows")
-        .map(_.toLong).getOrElse(10000L)
-      catch { case scala.util.control.NonFatal(_) => 10000L }
-    require(cap >= 0, s"spark.graft.tempTableLocalRows must be >= 0, got $cap")
+    val cap = graft.GraftConf.TempTableLocalRows(spark)
     val content: Either[String, DataFrame] =
       if (cap > 0 &&
           df.queryExecution.optimizedPlan.maxRows.exists(_ <= cap)) {

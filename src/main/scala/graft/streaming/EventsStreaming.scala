@@ -60,12 +60,9 @@ object EventsStreaming {
   private def withStateParts[T](spark: SparkSession, stateRows: () => Long = null)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
-    val conf = spark.conf.getOption("spark.graft.streamStateParts").getOrElse("8")
-    val parts =
-      if (conf == "auto")
-        autoStateParts(if (stateRows == null) -1L else stateRows()).toString
-      else conf
-    spark.conf.set(key, parts)
+    val parts = graft.GraftConf.StreamStateParts(spark).getOrElse(
+      autoStateParts(if (stateRows == null) -1L else stateRows()))
+    spark.conf.set(key, parts.toString)
     // Skip the trailing zero-input micro-batch (round 21): after the data
     // batch, AvailableNow schedules one more batch purely to advance the
     // watermark and evict state — a full per-store commit cycle (~0.8-1.9 s

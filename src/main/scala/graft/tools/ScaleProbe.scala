@@ -107,7 +107,7 @@ object ScaleProbe {
     //
     // Collocations: pair generation is row-local (never a positions
     // self-join), counting is two map-combined shuffles, and the vocab
-    // join strategy is AQE's call (ProfileVocab A/Bs the fallback). The
+    // join strategy is AQE's call (ProfileVocab (git 2262e7b) A/Bs the fallback). The
     // salt rewrite roughly doubles tokens per doc at k>0, so the curve
     // tracks token volume, not just doc count.
     if (on("colloc")) {
@@ -204,7 +204,7 @@ object ScaleProbe {
       // is discovered once, rounds = tree depth, per-round work tracks
       // the level width. The curve claim: linear in nNodes at fixed
       // depth shape (compaction keeps update-heavy runs linear too —
-      // that regime is A/B'd in ProfileFixpoint, not here).
+      // that regime is A/B'd in ProfileFixpoint (git 2262e7b), not here).
       val labeled = time(s"keyed fixpoint BFS depth over $nNodes-node tree") {
         graft.operators.Fixpoint.iterateKeyed(
           spark.range(1).select(lit(0L).as("node"), lit(0L).as("depth")),

@@ -108,7 +108,7 @@ class FixpointSpec extends AnyFunSuite {
           keys = Seq("k"), maxRounds = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val default = run()
-    val key = "spark.graft.keyedFixpointCompactRounds"
+    val key = "spark.graft.fixpoint.compactRounds"
     spark.conf.set(key, "2")
     try assert(run() == default && default == Seq((1L, 9L), (2L, 100L)))
     finally spark.conf.unset(key)
