@@ -59,17 +59,17 @@ object HighsFunctions {
   def opensslVersionStringUtf8(name: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
     org.apache.spark.unsafe.types.UTF8String.fromString(opensslVersionString(name.toString))
 
-  private val createVariablesSchema = StructType(Seq(
+  val createVariablesSchema: StructType = StructType(Seq(
     StructField("variable_name", StringType, nullable = false),
     StructField("variable_index", StringType, nullable = false),
     StructField("status", StringType, nullable = false)))
 
-  private val createConstraintsSchema = StructType(Seq(
+  val createConstraintsSchema: StructType = StructType(Seq(
     StructField("constraint_name", StringType, nullable = false),
     StructField("constraint_index", StringType, nullable = false),
     StructField("status", StringType, nullable = false)))
 
-  private val setCoefficientsSchema = StructType(Seq(
+  val setCoefficientsSchema: StructType = StructType(Seq(
     StructField("constraint_name", StringType, nullable = false),
     StructField("variable_name", StringType, nullable = false),
     StructField("coefficient", DoubleType, nullable = false),

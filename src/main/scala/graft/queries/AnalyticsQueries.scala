@@ -1038,8 +1038,8 @@ object AnalyticsQueries {
   // ... WHERE ...` and `DELETE FROM ... WHERE ...` statements pasted
   // unchanged. Spark parses both but every v1 table fails analysis
   // ("does not support row-level operations"), so sql/UpdateDeleteRewrite
-  // intercepts PRE-delegation and lands on the eager update_table /
-  // delete_from TVFs — q53's read→transform→stage→INSERT OVERWRITE
+  // intercepts PRE-delegation and runs them as the UpdateTableCommand /
+  // DeleteFromCommand Spark commands — q53's read→transform→stage→INSERT OVERWRITE
   // recipe run mechanically, returning DuckDB's one-row Count (asserted
   // in SqlEntryPointsSpec). Both engines execute their own genuine
   // mutation machinery on a scratch copy of orders and the FINAL TABLE
@@ -1204,7 +1204,7 @@ object AnalyticsQueries {
   // PRIMARY KEY — the idempotent-upsert backbone of ingestion scripts.
   // IDENTICAL statement script on both engines: DuckDB enforces the PK
   // through its ART index; the engine resolves the same conflicts via
-  // a keyed anti-join + union over the snapshot (temp_upsert), with
+  // a keyed anti-join + union over the snapshot (UpsertCommand), with
   // DuckDB-pinned Counts (REPLACE = input rows, IGNORE = actually
   // inserted) and the duplicate-key-within-increment constraint error.
   declare("q99_insert_or_replace",
@@ -2127,7 +2127,7 @@ object AnalyticsQueries {
 
   // DuckDB statement parity: `COPY (query) TO 'path' (FORMAT PARQUET)`
   // executing — the export idiom of every DuckDB script. The statement
-  // rewrites onto the eager copy_to() TVF (sql/CopyToRewrite): the
+  // runs as a CopyToCommand (sql/CopyToRewrite): the
   // write happens (Spark: a distributed directory of part files; the
   // oracle's DuckDB: its single file — each engine exports to its own
   // path, the ONE divergence literal-identical text can't carry), and
@@ -2886,7 +2886,7 @@ object AnalyticsQueries {
   // Catalog-table keyed ingest (round 17): CREATE TABLE with PRIMARY
   // KEY (constraint stripped, key registered — CatalogPkRewrite), then
   // INSERT OR REPLACE / ON CONFLICT DO NOTHING / DO UPDATE SET against
-  // the CATALOG table (temp_upsert's catalog path: keyed anti-join +
+  // the CATALOG table (UpsertCommand's catalog path: keyed anti-join +
   // union staged OUTSIDE the table, then INSERT OVERWRITE — the
   // idempotent-ingest recipe run mechanically; ignore mode appends only
   // fresh rows). IDENTICAL script on both engines; DuckDB executes its
@@ -3096,7 +3096,7 @@ object AnalyticsQueries {
   }
 
   // DuckDB statement parity: `COPY tbl FROM 'path'` import direction
-  // executing (sql/CopyToRewrite FROM branch → copy_from TVF →
+  // executing (sql/CopyToRewrite FROM branch → CopyFromCommand →
   // insertInto append). The Spark side runs the real pipeline — export
   // region, create a catalog table, import the file back — and returns
   // DuckDB's one-row Count; the oracle models the same count (the

@@ -1,7 +1,5 @@
 package graft.sql
 
-import scala.util.control.NonFatal
-
 /** DuckDB's `ALTER TABLE` surface for graft temp tables ([[TempTables]]
   * snapshots — the tables a pasted ETL script creates and mutates):
   *
@@ -14,10 +12,10 @@ import scala.util.control.NonFatal
   * }}}
   *
   * All parse natively in Spark (v2 ALTER syntax) but die in analysis
-  * against a temp view, so the temp-table forms intercept
-  * PRE-delegation (the UPDATE/DELETE pattern): the snapshot is
-  * re-materialized with the changed schema and the statement returns
-  * DuckDB's empty result. DuckDB 1.0 semantics pinned: ADD backfills
+  * against a temp view, so the temp-table forms are claimed
+  * PRE-delegation as an [[AlterTempTableCommand]] (the UPDATE/DELETE
+  * pattern), which re-materializes the snapshot with the changed schema
+  * and returns DuckDB's empty result. DuckDB 1.0 semantics pinned: ADD backfills
   * the DEFAULT (or NULL) into existing rows, dropping/renaming a
   * missing column errors (IF EXISTS tolerated), RENAME TO onto an
   * existing name errors, and ALTER TYPE casts the data — a value that
@@ -32,97 +30,12 @@ object AlterTableRewrite {
 
   private val headRe =
     """(?is)\A\s*ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s+(.+?)\s*;?\s*\z""".r
-  private val addRe =
-    """(?is)\AADD\s+(?:COLUMN\s+)?(?:(IF\s+NOT\s+EXISTS)\s+)?([A-Za-z_]\w*)\s+(.+?)(?:\s+DEFAULT\s+(.+))?\z""".r
-  private val dropRe =
-    """(?is)\ADROP\s+(?:COLUMN\s+)?(?:(IF\s+EXISTS)\s+)?([A-Za-z_]\w*)\z""".r
-  private val renToRe =
-    """(?is)\ARENAME\s+TO\s+([A-Za-z_]\w*)\z""".r
-  private val renColRe =
-    """(?is)\ARENAME\s+(?:COLUMN\s+)?([A-Za-z_]\w*)\s+TO\s+([A-Za-z_]\w*)\z""".r
-  private val altTypeRe =
-    """(?is)\AALTER\s+(?:COLUMN\s+)?([A-Za-z_]\w*)\s+(?:SET\s+DATA\s+)?TYPE\s+(.+?)\z""".r
-
-  /** Evaluated-once extractor (the rewrite performs the mutation). */
-  object Rewritten {
-    def unapply(sql: String): Option[String] = rewrite(sql)
-  }
-
-  /** DuckDB's length-less string spellings → Spark's STRING (same
-    * normalization as CREATE TEMP TABLE's column defs).
+  /** The command for a temp-table ALTER; None leaves the statement to
+    * Spark (catalog tables, unknown names).
     */
-  private def normalizeType(t: String): String =
-    "(?i)\\b(?:VARCHAR|TEXT|BPCHAR)\\b(?!\\s*\\()".r.replaceAllIn(t, "STRING")
-
-  private def fail(msg: String): Nothing =
-    throw new org.apache.spark.sql.AnalysisException(
-      "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
-
-  private val empty = "SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0"
-
-  def rewrite(sql: String): Option[String] = {
+  def rewrite(sql: String): Option[AlterTempTableCommand] = {
     val m = headRe.findFirstMatchIn(sql).getOrElse(return None)
-    val name = m.group(1)
-    val rest = m.group(2).trim
-    if (!TempTables.exists(name)) return None
-    val spark =
-      try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    import org.apache.spark.sql.functions.{col, expr, lit}
-    val df = spark.table(name)
-    def resolve(c: String): Option[String] =
-      df.columns.find(_.equalsIgnoreCase(c))
-    def parseType(t: String) =
-      try spark.sessionState.sqlParser.parseDataType(normalizeType(t.trim))
-      catch { case NonFatal(_) =>
-        fail(s"ALTER TABLE $name: cannot parse type '$t'") }
-    rest match {
-      case addRe(ifnex, c, tpe, dflt) =>
-        if (resolve(c).isDefined) {
-          if (ifnex == null)
-            fail(s"""ALTER TABLE $name: column "$c" already exists""")
-        } else {
-          val dt = parseType(tpe)
-          val e = Option(dflt).map(d => expr(d.trim)).getOrElse(lit(null))
-          TempTables.put(name, df.withColumn(c, e.cast(dt)))
-        }
-        Some(empty)
-      case dropRe(ifex, c) =>
-        resolve(c) match {
-          case Some(real) => TempTables.put(name, df.drop(real))
-          case None if ifex != null => ()
-          case None =>
-            fail(s"""ALTER TABLE $name: column "$c" does not exist""")
-        }
-        Some(empty)
-      case renToRe(newName) =>
-        if (TempTables.exists(newName) || spark.catalog.tableExists(newName))
-          fail(s"""ALTER TABLE: table with name "$newName" already exists""")
-        TempTables.put(newName, df)
-        TempTables.keysOf(name).foreach(TempTables.setKeys(newName, _))
-        TempTables.drop(name)
-        Some(empty)
-      case renColRe(a, b) =>
-        val real = resolve(a).getOrElse(
-          fail(s"""ALTER TABLE $name: column "$a" does not exist"""))
-        if (resolve(b).isDefined)
-          fail(s"""ALTER TABLE $name: column "$b" already exists""")
-        TempTables.put(name, df.withColumnRenamed(real, b))
-        Some(empty)
-      case altTypeRe(c, tpe) if !"(?i)\\bUSING\\b".r
-          .findFirstIn(ReplaceRewrite.maskLiterals(tpe)).isDefined =>
-        val real = resolve(c).getOrElse(
-          fail(s"""ALTER TABLE $name: column "$c" does not exist"""))
-        val dt = parseType(tpe)
-        TempTables.put(name, df.withColumn(real, col(real).cast(dt)))
-        Some(empty)
-      case _ =>
-        fail(s"ALTER TABLE on temp table '$name': supported forms are " +
-          "ADD [COLUMN] [IF NOT EXISTS] c TYPE [DEFAULT expr], " +
-          "DROP [COLUMN] [IF EXISTS] c, RENAME [COLUMN] a TO b, " +
-          "RENAME TO t2, and ALTER [COLUMN] c [SET DATA] TYPE type. " +
-          "This statement is not one of them (TYPE ... USING expr: " +
-          "run the cast as UPDATE t SET c = expr first).")
-    }
+    if (!TempTables.exists(m.group(1))) return None
+    Some(AlterTempTableCommand(m.group(1), DuckLiterals.halveBackslashes(m.group(2).trim)))
   }
 }

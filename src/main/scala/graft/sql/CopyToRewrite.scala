@@ -3,7 +3,7 @@ package graft.sql
 /** Mechanical rewrite of DuckDB's `COPY ... TO` statement (the standard
   * export idiom of every DuckDB script; host capability pin
   * /root/reference/.github/workflows/MainDistributionPipeline.yml:29)
-  * onto the eager `copy_to()` table function:
+  * onto a [[CopyToCommand]]:
   *
   * {{{
   * COPY (SELECT ...) TO 'out.parquet' (FORMAT PARQUET)
@@ -12,9 +12,8 @@ package graft.sql
   * COPY tablename    TO 'dir' (FORMAT PARQUET, PARTITION_BY (a, b))
   * }}}
   *
-  * becomes `SELECT * FROM copy_to('<source>', '<path>', '<format>',
-  * <header>[, '<partition_csv>'])`, which writes at analysis and
-  * returns DuckDB's one-row `Count` result. Format defaults from the
+  * becomes a command that writes when the statement runs and returns
+  * DuckDB's one-row `Count` result. Format defaults from the
   * path extension (`.parquet`/`.csv`) exactly as DuckDB infers it;
   * `HEADER` defaults true for CSV (DuckDB ≥0.8 default);
   * `PARTITION_BY` produces the SAME hive-style `col=value/` directory
@@ -22,7 +21,7 @@ package graft.sql
   * 100 TB export layout, partition-prunable on re-read).
   *
   * The IMPORT direction (`COPY tbl FROM 'path' [(FORMAT ..., HEADER)]`)
-  * rewrites onto `copy_from()`, which appends the file's rows into the
+  * becomes a [[CopyFromCommand]], which appends the file's rows into the
   * existing catalog table (Spark: `insertInto` — by-position, DuckDB's
   * own mapping) and returns the same one-row Count. CSV options
   * DELIMITER/QUOTE/ESCAPE/NULL map 1:1 onto the DataFrame reader/writer
@@ -32,13 +31,13 @@ package graft.sql
   */
 object CopyToRewrite {
 
-  def rewrite(sql: String): Option[String] = {
+  def rewrite(sql: String): Option[DuckCommand] = {
     val head = """(?is)\A\s*COPY\s+""".r.findFirstMatchIn(sql).getOrElse(return None)
     val i0 = head.end
     if (i0 >= sql.length) return None
     // Source: a parenthesized query (balanced — the select may itself
     // contain parens/strings) or a bare table identifier. The parens
-    // are KEPT on the query form: copy_to's source dispatch routes
+    // are KEPT on the query form: CopyToCommand's source dispatch routes
     // '('-prefixed text through spark.sql, and a parenthesized query
     // parses there whatever it starts with — stripping them broke
     // `COPY (WITH q AS ... SELECT ...)`, which begins with neither
@@ -62,7 +61,7 @@ object CopyToRewrite {
     // be a target, never a query.
     if (isImport && source.startsWith("(")) return None
     val toM = toM0
-    val path = toM.group(2).replace("''", "'")
+    val path = DuckLiterals.literalValue(toM.group(2))
     if (path.isEmpty) return None
     val tail = sql.substring(afterSrc + toM.end).trim
       .stripSuffix(";").trim
@@ -102,15 +101,15 @@ object CopyToRewrite {
             if (names.isEmpty || names.exists(!_.matches("[A-Za-z_]\\w*")))
               return None
             partition = names
-          case dm(d) => delimiter = Some(d.replace("''", "'"))
+          case dm(d) => delimiter = Some(DuckLiterals.literalValue(d))
           // COMPRESSION on the export side maps straight to the writer
           // codec (zstd/gzip/snappy/none — same names both engines);
           // readers sniff compression themselves, so accept-and-ignore
           // on import would hide a typo — decline there instead.
           case cm(c) if !isImport => compression = Some(c.toLowerCase)
-          case qm(q) => quote = Some(q.replace("''", "'"))
-          case em(e) => escape = Some(e.replace("''", "'"))
-          case nm(x) => nullStr = Some(x.replace("''", "'"))
+          case qm(q) => quote = Some(DuckLiterals.literalValue(q))
+          case em(e) => escape = Some(DuckLiterals.literalValue(e))
+          case nm(x) => nullStr = Some(DuckLiterals.literalValue(x))
           case _ => return None
         }
       }
@@ -128,30 +127,15 @@ object CopyToRewrite {
     // DELIMITER/QUOTE/ESCAPE/NULL are CSV notions on both engines.
     if ((delimiter.isDefined || quote.isDefined || escape.isDefined ||
       nullStr.isDefined) && fmt != "csv") return None
-    // Quote-doubling only (DuckLiterals entry doubling rides along).
-    def lit(s: String) =
-      "'" + s.replace("'", "''") + "'"
-    // Extra writer/reader options ride as one 'k=v;k=v' argument so the
-    // TVF arities stay stable ('=' / ';' cannot appear in the values:
-    // codec names are words and any option value containing them
-    // declines; empty values — QUOTE '' — are legal).
-    val kvs = delimiter.map(d => "delimiter" -> d).toSeq ++
-      compression.map(c => "compression" -> c) ++
-      quote.map(q => "quote" -> q) ++
-      escape.map(e => "escape" -> e) ++
-      nullStr.map(x => "nullstr" -> x)
-    if (kvs.exists { case (_, x) => x.contains("=") || x.contains(";") })
-      return None
-    val opts = kvs.map { case (k, x) => s"$k=$x" }.mkString(";")
-    val optsArg = if (opts.isEmpty) "" else s", ${lit(opts)}"
+    val options = (delimiter.map("delimiter" -> _).toSeq ++
+      compression.map("compression" -> _) ++
+      quote.map("quote" -> _) ++
+      escape.map("escape" -> _) ++
+      nullStr.map("nullstr" -> _)).toMap
+    val src = DuckLiterals.halveBackslashes(source)
     if (isImport)
-      return Some(s"SELECT * FROM copy_from(${lit(source)}, ${lit(path)}, " +
-        s"${lit(fmt)}, ${header.getOrElse(true)}$optsArg)")
-    val partArg =
-      if (partition.isEmpty && opts.nonEmpty) s", ''"
-      else if (partition.isEmpty) ""
-      else s", ${lit(partition.mkString(","))}"
-    Some(s"SELECT * FROM copy_to(${lit(source)}, ${lit(path)}, " +
-      s"${lit(fmt)}, ${header.getOrElse(true)}$partArg$optsArg)")
+      Some(CopyFromCommand(src, path, fmt, header.getOrElse(true), options))
+    else
+      Some(CopyToCommand(src, path, fmt, header.getOrElse(true), partition, options))
   }
 }

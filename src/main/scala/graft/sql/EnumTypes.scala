@@ -16,17 +16,6 @@ import org.apache.spark.sql.SparkSession
   * Ordering divergence (documented): DuckDB compares enums by member
   * INDEX; the VARCHAR model compares lexicographically.
   */
-/** Single-evaluation extractor: DROP TYPE's registry removal is a side
-  * effect — the rewrite must run exactly once per statement (the
-  * TempTableRewritten pattern).
-  */
-object EnumDdlRewritten {
-  def unapply(sql: String): Option[String] =
-    if ("(?is)\\A\\s*(CREATE|DROP)\\s+TYPE\\b".r.findFirstIn(sql).isDefined)
-      EnumTypes.ddlRewrite(sql)
-    else None
-}
-
 object EnumTypes {
 
   private val registry = new java.util.concurrent.ConcurrentHashMap[
@@ -53,25 +42,17 @@ object EnumTypes {
     """(?is)\A\s*DROP\s+TYPE\s+(IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
   private val litRe = """\A'((?:[^']|'')*)'\z""".r
 
-  /** CREATE TYPE / DROP TYPE — side-effecting pre-delegation rewrites
-    * (Spark rejects both at parse, so no native statement is claimed);
-    * the marker select returns DuckDB's empty result.
+  /** CREATE TYPE / DROP TYPE as commands (Spark rejects both at parse,
+    * so no native statement is claimed).
     */
-  def ddlRewrite(sql: String): Option[String] = sql match {
+  def ddlRewrite(sql: String): Option[DuckCommand] = sql match {
     case createTypeRe(name, body) =>
       val vals = ReplaceRewrite.splitTop(body).map(_.trim).map {
         case litRe(v) => v.replace("''", "'")
         case other => return None // non-literal member: decline
       }
-      if (vals.isEmpty) return None
-      define(name, vals.toSeq)
-      Some("SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0")
-    case dropTypeRe(ifExists, name) =>
-      if (!drop(name) && ifExists == null)
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"Type with name $name does not exist!"))
-      Some("SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0")
+      if (vals.isEmpty) None else Some(CreateEnumTypeCommand(name, vals.toSeq))
+    case dropTypeRe(ifExists, name) => Some(DropEnumTypeCommand(name, ifExists != null))
     case _ => None
   }
 

@@ -251,7 +251,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     """(?is)\A\s*EXPORT\s+DATABASE\s+'((?:[^']|'')+)'\s*(?:\(\s*FORMAT\s+'?(\w+)'?\s*\))?\s*;?\s*\z""".r
   private val importDbRe =
     """(?is)\A\s*IMPORT\s+DATABASE\s+'((?:[^']|'')+)'\s*;?\s*\z""".r
-  private def exportImportRewrite(sql: String): Option[String] = sql match {
+  private def exportImportRewrite(sql: String): Option[DuckCommand] = sql match {
     case exportDbRe(dir, fmt) =>
       if (fmt != null && !fmt.equalsIgnoreCase("parquet"))
         throw new org.apache.spark.sql.AnalysisException(
@@ -259,9 +259,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             ("EXPORT DATABASE runs with FORMAT PARQUET here (the " +
               "self-describing format IMPORT can restore without " +
               "schema.sql parsing); re-run with (FORMAT PARQUET).")))
-      Some(s"SELECT * FROM export_database('$dir')")
+      Some(ExportDatabaseCommand(DuckLiterals.literalValue(dir)))
     case importDbRe(dir) =>
-      Some(s"SELECT * FROM import_database('$dir')")
+      Some(ImportDatabaseCommand(DuckLiterals.literalValue(dir)))
     case _ => None
   }
   /** Replace depth-any `//` with ` div ` outside strings/quotes/
@@ -1154,14 +1154,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   // intercepted PRE-delegation (indexRewrite, from preRewrite); the
   // rest genuinely fail to parse and ride the hint chain
   // (maintenanceRewrite).
-  private def indexRewrite(sql: String): Option[String] = sql match {
+  private def indexRewrite(sql: String): Option[DuckCommand] = sql match {
     case createIndexRe() =>
-      Some("SELECT * FROM maintenance_noop('CREATE INDEX', " +
-        "'Spark has no secondary indexes; scans prune via partitioning, " +
-        "bucketing, and parquet zone maps')")
+      Some(MaintenanceNoopCommand("CREATE INDEX", "Spark has no secondary " +
+        "indexes; scans prune via partitioning, bucketing, and parquet zone maps"))
     case dropIndexRe() =>
-      Some("SELECT * FROM maintenance_noop('DROP INDEX', " +
-        "'Spark has no secondary indexes')")
+      Some(MaintenanceNoopCommand("DROP INDEX", "Spark has no secondary indexes"))
     case _ => None
   }
   private val truncateRe =
@@ -1215,7 +1213,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val seqNoMaxRe = "(?i)NO\\s+MAXVALUE".r
   private val seqCycleRe = "(?i)(?<!NO\\s)CYCLE".r
   private val seqNoCycleRe = "(?i)NO\\s+CYCLE".r
-  private def sequenceRewrite(sql: String): Option[String] = sql match {
+  private def sequenceRewrite(sql: String): Option[DuckCommand] = sql match {
     case createSeqRe(replace, ifNot, name, opts) =>
       val start = seqStartRe.findFirstMatchIn(opts).map(_.group(1).toLong)
       val inc = seqIncRe.findFirstMatchIn(opts).map(_.group(1).toLong)
@@ -1233,14 +1231,10 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             (s"CREATE SEQUENCE: unsupported option(s) '$leftover' — " +
               "START [WITH] n, INCREMENT [BY] n, MINVALUE/MAXVALUE n, " +
               "NO MINVALUE/MAXVALUE, and [NO] CYCLE run here.")))
-      def enc(o: Option[Long]) = o.map(_.toString).getOrElse("")
-      Some(s"SELECT * FROM seq_ctl('create', '$name', " +
-        s"'${enc(start)}', '${inc.getOrElse(1L)}', " +
-        s"'${enc(minV)}', '${enc(maxV)}', $cycle, " +
-        s"${replace != null}, ${ifNot != null})")
+      Some(CreateSequenceCommand(name, start, inc.getOrElse(1L), minV, maxV,
+        cycle, replace != null, ifNot != null))
     case dropSeqRe(ifExists, name) =>
-      Some(s"SELECT * FROM seq_ctl('drop', '$name', '', '', '', '', " +
-        s"false, false, ${ifExists != null})")
+      Some(DropSequenceCommand(name, ifExists != null))
     case _ => None
   }
   // COMMENT ON (temp tables route through the Comments registry; the
@@ -1252,44 +1246,51 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val commentColumnRe =
     ("(?is)\\A\\s*COMMENT\\s+ON\\s+COLUMN\\s+([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)" +
       "\\s+IS\\s+(NULL|'(?:[^']|'')*')\\s*;?\\s*\\z").r
-  private def commentColumnRewrite(sql: String): Option[String] = sql match {
+  private def commentColumnRewrite(sql: String): Option[DuckCommand] = sql match {
     case commentColumnRe(tbl, colName, lit) =>
-      Some(s"SELECT * FROM comment_ctl('column', '$tbl', '$colName', $lit)")
+      Some(CommentOnCommand(tbl, Some(colName), commentText(lit)))
     case _ => None
   }
-  private def maintenanceRewrite(sql: String): Option[String] = sql match {
-    case beginTxnRe() => Some("SELECT * FROM txn_ctl('begin')")
-    case commitTxnRe() => Some("SELECT * FROM txn_ctl('commit')")
-    case rollbackTxnRe() => Some("SELECT * FROM txn_ctl('rollback')")
-    case pragmaTableInfoRe(tbl) => Some(s"SELECT * FROM pragma_table_info('$tbl')")
-    case pragmaShowTablesRe() => Some("SELECT * FROM duck_show_tables()")
+  /** A COMMENT ON literal's value: None for NULL. */
+  private def commentText(lit: String): Option[String] =
+    if (lit.equalsIgnoreCase("NULL")) None
+    else Some(DuckLiterals.literalValue(lit.substring(1, lit.length - 1)))
+  /** Left(command) or Right(statement text to parse). */
+  private def maintenanceRewrite(sql: String): Option[Either[LogicalPlan, String]] = sql match {
+    case beginTxnRe() => Some(Left(TransactionCommand(TransactionOp.Begin)))
+    case commitTxnRe() => Some(Left(TransactionCommand(TransactionOp.Commit)))
+    case rollbackTxnRe() => Some(Left(TransactionCommand(TransactionOp.Rollback)))
+    case pragmaTableInfoRe(tbl) => Some(Right(s"SELECT * FROM pragma_table_info('$tbl')"))
+    case pragmaShowTablesRe() => Some(Right("SELECT * FROM duck_show_tables()"))
     case checkpointRe() =>
-      Some("SELECT * FROM maintenance_noop('CHECKPOINT', " +
-        "'storage is immutable parquet snapshots here; there is no WAL to flush')")
+      Some(Left(MaintenanceNoopCommand("CHECKPOINT",
+        "storage is immutable parquet snapshots here; there is no WAL to flush")))
     case pragmaDatabaseListRe() =>
-      Some("SELECT * FROM maintenance_noop('PRAGMA (informational)', " +
-        "'database introspection beyond show_tables/table_info has no " +
-        "Spark counterpart; see SHOW TABLES / spark.catalog')")
+      Some(Left(MaintenanceNoopCommand("PRAGMA (informational)",
+        "database introspection beyond show_tables/table_info has no " +
+          "Spark counterpart; see SHOW TABLES / spark.catalog")))
     case pragmaOtherRe(name) =>
-      Some(s"SELECT * FROM maintenance_noop('PRAGMA $name', " +
-        "'engine tuning runs through Spark configuration: SET spark.sql.*')")
-    case truncateRe(tbl) => Some(s"TRUNCATE TABLE $tbl")
-    case describeQueryRe(q) => Some(s"DESCRIBE QUERY $q")
-    case showAllTablesRe() => Some("SHOW TABLES")
+      Some(Left(MaintenanceNoopCommand(s"PRAGMA $name",
+        "engine tuning runs through Spark configuration: SET spark.sql.*")))
+    case truncateRe(tbl) => Some(Right(s"TRUNCATE TABLE $tbl"))
+    case describeQueryRe(q) => Some(Right(s"DESCRIBE QUERY $q"))
+    case showAllTablesRe() => Some(Right("SHOW TABLES"))
     case analyzeTblRe(tbl) =>
-      Some(s"ANALYZE TABLE $tbl COMPUTE STATISTICS")
+      Some(Right(s"ANALYZE TABLE $tbl COMPUTE STATISTICS"))
     case analyzeBareRe() =>
-      Some("SELECT * FROM maintenance_noop('ANALYZE', " +
-        "'statistics refresh runs per table here: ANALYZE TABLE <t> COMPUTE STATISTICS')")
+      Some(Left(MaintenanceNoopCommand("ANALYZE",
+        "statistics refresh runs per table here: ANALYZE TABLE <t> COMPUTE STATISTICS")))
     case vacuumRe() =>
-      Some("SELECT * FROM maintenance_noop('VACUUM', " +
-        "'storage is immutable parquet here; nothing to vacuum')")
+      Some(Left(MaintenanceNoopCommand("VACUUM",
+        "storage is immutable parquet here; nothing to vacuum")))
     case _ => None
   }
   private val distinctOnRe =
     "(?is).*\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(.*".r
+  private val timestampTzRe = "(?i)\\bTIMESTAMPTZ\\s+'([^']*)'".r
 
-  private def withHint[T](sqlText: String, reparse: String => T)(body: => T): T =
+  private def withHint(sqlText: String, reparse: String => LogicalPlan)(
+      body: => LogicalPlan): LogicalPlan =
     try body catch {
       case pe: ParseException =>
         // Tier 1: mechanical rewrites that make the statement RUN.
@@ -1302,7 +1303,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         // a belt). NonFatal only: an OOM or interrupt during the
         // re-parse must propagate, not masquerade as "the rewrite
         // didn't apply".
-        def reparseOrChain(text: String, depth: Int): Option[T] =
+        def reparseOrChain(text: String, depth: Int): Option[LogicalPlan] =
           try Some(reparse(text)) catch {
             case scala.util.control.NonFatal(_) =>
               // Cap 8 (round 18, was 4): each rewrite consumes its
@@ -1312,7 +1313,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               // five layers (q156).
               if (depth >= 8) None else chain(text, depth)
           }
-        def chain(text: String, depth: Int): Option[T] = {
+        def chain(text: String, depth: Int): Option[LogicalPlan] = {
           // Every applicable rewrite is a candidate (one may decline a
           // shape another unblocks); first candidate whose output
           // eventually parses wins. Guarded regex matches keep the
@@ -1322,68 +1323,73 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           // after an earlier one already won — and MacroRewrite's
           // registration SIDE EFFECT must not fire unless the macro
           // rewrite is actually the one taken.
-          val candidates: Seq[() => Option[String]] = Seq(
+          // A rewrite's text is parsed again (and may chain on); a claim
+          // that yields a command ([[DuckCommands]]) is the plan.
+          def claimed(c: Either[LogicalPlan, String]): Option[LogicalPlan] =
+            c.fold(Some(_), reparseOrChain(_, depth + 1))
+          def sql(rewrite: => Option[String]): () => Option[LogicalPlan] =
+            () => rewrite.flatMap(reparseOrChain(_, depth + 1))
+          val candidates: Seq[() => Option[LogicalPlan]] = Seq(
             // FIRST: dollar-quoted literals — converting them often
             // makes the statement parse outright, and if another
             // construct remains the rewritten text recurses through
             // this chain with ordinary literals the other scanners'
             // masking understands.
-            () => dollarQuoteRewrite(text),
+            sql(dollarQuoteRewrite(text)),
             // Bare quoted-path table refs (FROM 'x.parquet') — early,
             // like dollar quotes: the spliced readers usually make the
             // statement parse outright, and any remaining construct
             // recurses through the chain.
-            () => bareFilePathRewrite(text),
-            () => text match { case summarizeTableRe(tbl) =>
-              Some(s"SELECT * FROM summarize('$tbl')"); case _ => None },
-            () => text match { case summarizeQueryRe(q) =>
+            sql(bareFilePathRewrite(text)),
+            sql(text match { case summarizeTableRe(tbl) =>
+              Some(s"SELECT * FROM summarize('$tbl')"); case _ => None }),
+            sql(text match { case summarizeQueryRe(q) =>
               Some(s"SELECT * FROM summarize('${q.replace("'", "''")}')")
-              case _ => None },
-            () => text match { case usingKeyRe() =>
-              UsingKeyRewrite.rewrite(text); case _ => None },
-            () => text match { case asofRe() =>
+              case _ => None }),
+            sql(text match { case usingKeyRe() =>
+              UsingKeyRewrite.rewrite(text); case _ => None }),
+            sql(text match { case asofRe() =>
               AsofJoinRewrite.rewrite(text)
-                .orElse(AsofJoinRewrite.rewriteNested(text)); case _ => None },
-            () => text match { case excludeRe() =>
-              ExcludeRewrite.rewrite(text); case _ => None },
-            () => text match { case replaceStarRe() =>
-              ReplaceRewrite.rewrite(text); case _ => None },
-            () => text match { case ReplaceRewrite.starRenameRe() =>
-              ReplaceRewrite.rewriteRename(text); case _ => None },
+                .orElse(AsofJoinRewrite.rewriteNested(text)); case _ => None }),
+            sql(text match { case excludeRe() =>
+              ExcludeRewrite.rewrite(text); case _ => None }),
+            sql(text match { case replaceStarRe() =>
+              ReplaceRewrite.rewrite(text); case _ => None }),
+            sql(text match { case ReplaceRewrite.starRenameRe() =>
+              ReplaceRewrite.rewriteRename(text); case _ => None }),
             // DuckDB's `//` integer-division operator → Spark's `div`
             // (same truncation-toward-zero on integers — 7//2=3,
             // -7//2=-3, pinned). Only ever seen on parse failure, so a
             // native statement can't be claimed; quote/comment-aware.
-            () => intDivRewrite(text),
+            sql(intDivRewrite(text)),
             // DuckDB's `**` power operator → power(l, r) (left-assoc,
             // DOUBLE, unary-minus-on-base precedence pinned on 1.0).
             // Parse-failure only — `**` is never Spark syntax.
-            () => powerOpRewrite(text),
+            sql(powerOpRewrite(text)),
             // Postgres-style match operators ~ / !~ / ~~ / !~~ →
             // regexp_full_match / [NOT] LIKE. Parse-failure only —
             // Spark's ~ is unary, so infix uses never parse.
-            () => tildeOpRewrite(text),
+            sql(tildeOpRewrite(text)),
             // AT TIME ZONE → to_utc_timestamp/from_utc_timestamp by the
             // operand's syntactic source (DuckDB's two type-directions).
             // Parse-failure only — Spark has no AT TIME ZONE grammar.
-            () => text match { case atTimeZoneRe() =>
-              atTimeZoneRewrite(text); case _ => None },
+            sql(text match { case atTimeZoneRe() =>
+              atTimeZoneRewrite(text); case _ => None }),
             // [NOT] SIMILAR TO '<re>' → [NOT] RLIKE with full-match
             // anchors (DuckDB's SIMILAR TO = regexp_full_match). Only
             // ever seen on parse failure; literal patterns and
             // constant-folded `'a' || 'b'` literal concat chains.
-            () => text match { case similarToRe() =>
-              similarToRewrite(text); case _ => None },
+            sql(text match { case similarToRe() =>
+              similarToRewrite(text); case _ => None }),
             // BIT '<bits>' typed literal → graft_bit (parse-failure
             // only: UNSUPPORTED_TYPED_LITERAL is a parse rejection).
-            () => bitLiteralRewrite(text),
+            sql(bitLiteralRewrite(text)),
             // TIMESTAMPTZ '<ts>' typed literal → a TIMESTAMP cast
             // (UNSUPPORTED_TYPED_LITERAL; the UTC session pin makes
             // Spark's LTZ carry the same instant).
-            () => {
-              val re = "(?i)\\bTIMESTAMPTZ\\s+'([^']*)'".r
+            sql({
               val masked = ReplaceRewrite.maskLiterals(text)
-              val ms = re.findAllMatchIn(text)
+              val ms = timestampTzRe.findAllMatchIn(text)
                 .filter(m2 => masked.charAt(m2.start) != ' ').toList
               if (ms.isEmpty) None
               else {
@@ -1397,42 +1403,42 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                 sb.append(text.substring(pos))
                 Some(sb.toString)
               }
-            },
+            }),
             // Length-less VARCHAR/TEXT/BPCHAR (→ STRING) and BLOB
             // (→ BINARY) in CAST / :: position (parse-failure only:
             // DATATYPE_MISSING_SIZE / UNSUPPORTED_DATATYPE).
-            () => typeSpellRewrite(text),
+            sql(typeSpellRewrite(text)),
             // Window-frame EXCLUDE clauses (parse-failure only: Spark's
             // frame grammar has no EXCLUDE) — frame-splitting /
             // peer-subtraction decomposition onto stock window aggs.
-            () => ExcludeFrameRewrite.rewrite(text),
-            () => text match { case columnsRe() =>
-              ColumnsRewrite.rewrite(text); case _ => None },
-            () => text match { case fromFirstRe() =>
-              FromFirstRewrite.rewrite(text); case _ => None },
+            sql(ExcludeFrameRewrite.rewrite(text)),
+            sql(text match { case columnsRe() =>
+              ColumnsRewrite.rewrite(text); case _ => None }),
+            sql(text match { case fromFirstRe() =>
+              FromFirstRewrite.rewrite(text); case _ => None }),
             // Fourteenth probe (round-20 close): FROM-first inside a
             // parenthesized subquery (EXISTS (FROM t WHERE ...)).
-            () => FromFirstRewrite.rewriteSubquery(text),
-            () => text match { case pivotStmtRe() =>
-              PivotRewrite.rewrite(text); case _ => None },
-            () => text match { case unpivotStmtRe() =>
-              UnpivotRewrite.rewrite(text); case _ => None },
-            () => text match { case insertByNameRe() =>
-              InsertByNameRewrite.rewrite(text); case _ => None },
-            () => text match { case unionByNameRe() =>
-              UnionByNameRewrite.rewrite(text); case _ => None },
-            () => text match { case usingSampleRe() =>
-              SampleRewrite.rewrite(text); case _ => None },
+            sql(FromFirstRewrite.rewriteSubquery(text)),
+            sql(text match { case pivotStmtRe() =>
+              PivotRewrite.rewrite(text); case _ => None }),
+            sql(text match { case unpivotStmtRe() =>
+              UnpivotRewrite.rewrite(text); case _ => None }),
+            sql(text match { case insertByNameRe() =>
+              InsertByNameRewrite.rewrite(text); case _ => None }),
+            sql(text match { case unionByNameRe() =>
+              UnionByNameRewrite.rewrite(text); case _ => None }),
+            sql(text match { case usingSampleRe() =>
+              SampleRewrite.rewrite(text); case _ => None }),
             // Fourteenth probe: TABLESAMPLE bernoulli(10%) method form
             // and ANSI OFFSET ... FETCH FIRST/NEXT ... ROWS ONLY.
-            () => SampleRewrite.rewriteTablesampleMethod(text),
-            () => ListOpRewrite.rewriteFetch(text),
-            () => text match { case duckDateRe() =>
-              duckDateRewrite(text); case _ => None },
+            sql(SampleRewrite.rewriteTablesampleMethod(text)),
+            sql(ListOpRewrite.rewriteFetch(text)),
+            sql(text match { case duckDateRe() =>
+              duckDateRewrite(text); case _ => None }),
             // multi-unit interval strings → make_interval (parse-failure
             // only; Spark wants typed units).
-            () => intervalLiteralRewrite(text),
-            () => maintenanceRewrite(text),
+            sql(intervalLiteralRewrite(text)),
+            () => maintenanceRewrite(text).flatMap(claimed),
             () => sequenceRewrite(text),
             () => commentColumnRewrite(text),
             () => exportImportRewrite(text),
@@ -1442,90 +1448,85 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // a prepared UPDATE/DELETE/COLUMNS statement — shapes that
             // PARSE natively but need the pre-delegation rewrites —
             // executes too.
-            () => text match { case prepareStmtRe() =>
-              PrepareRewrite.rewrite(text).map(preRewrite); case _ => None },
-            () => text match { case distinctOnRe() =>
-              DistinctOnRewrite.rewrite(text); case _ => None },
+            () => text match {
+              case prepareStmtRe() =>
+                PrepareRewrite.rewrite(text).flatMap(t => claimed(preRewrite(t)))
+              case _ => None },
+            sql(text match { case distinctOnRe() =>
+              DistinctOnRewrite.rewrite(text); case _ => None }),
             () => text match { case copyStmtRe() =>
               CopyToRewrite.rewrite(text); case _ => None },
-            () => text match { case macroRe() =>
-              MacroRewrite.rewrite(text, delegate); case _ => None },
+            sql(text match { case macroRe() =>
+              MacroRewrite.rewrite(text, delegate); case _ => None }),
             // struct_pack(a := 1) → named_struct — before the macro
             // named-call lowering (struct_pack has no macro signature
             // and would decline there).
-            () => structPackRewrite(text),
-            () => structInsertRewrite(text),
+            sql(structPackRewrite(text)),
+            sql(structInsertRewrite(text)),
             // Named-argument macro CALL sites (`f(x, b := 1)`): `:=` is
             // not Spark syntax, so the statement only ever arrives here;
             // lowered to positional against the registered signature.
-            () => MacroRewrite.namedCallRewrite(text),
+            sql(MacroRewrite.namedCallRewrite(text)),
             // DuckDB's in-argument ordered aggregates — string_agg(x,
             // ',' ORDER BY y), list(x ORDER BY y DESC) — onto WITHIN
             // GROUP / the sort-struct lowering. Parse-failure only.
-            () => OrderedAggRewrite.rewrite(text),
-            () => text match { case qualifyRe() =>
-              QualifyRewrite.rewrite(text); case _ => None },
+            sql(OrderedAggRewrite.rewrite(text)),
+            sql(text match { case qualifyRe() =>
+              QualifyRewrite.rewrite(text); case _ => None }),
             // Round-18 sixth-sweep operators (all parse-failure-only;
             // BEFORE the bracket rewrite so list-literal operands are
             // still intact — their brackets re-enter the chain after
             // the operator splice).
-            () => ListOpRewrite.rewriteOps(text),
-            () => ListOpRewrite.rewriteQuantified(text),
-            () => ListOpRewrite.rewriteIgnoreNulls(text),
-            () => ListOpRewrite.rewriteLimitPercent(text),
+            sql(ListOpRewrite.rewriteOps(text)),
+            sql(ListOpRewrite.rewriteQuantified(text)),
+            sql(ListOpRewrite.rewriteIgnoreNulls(text)),
+            sql(ListOpRewrite.rewriteLimitPercent(text)),
             // Thirteenth sweep: `expr GLOB 'pattern'` (parse-failure
             // only — Spark has no GLOB token) and function-chaining
             // `(expr).fn(args)` / `'lit'.fn()`.
-            () => ListOpRewrite.rewriteGlob(text),
-            () => ListOpRewrite.rewriteDotCall(text),
+            sql(ListOpRewrite.rewriteGlob(text)),
+            sql(ListOpRewrite.rewriteDotCall(text)),
             // Seventh sweep: JSON arrow operators (-> / ->>, lambda-
             // guarded) and the FILTER-without-WHERE shorthand.
-            () => ListOpRewrite.rewriteJsonArrows(text),
-            () => ListOpRewrite.rewriteFilterShorthand(text),
+            sql(ListOpRewrite.rewriteJsonArrows(text)),
+            sql(ListOpRewrite.rewriteFilterShorthand(text)),
             // Eighth sweep: postfix `!` factorial, prefix `@` absolute
             // value, the non-literal INTERVAL (expr) UNIT constructor,
             // and unnest({...}) struct expansion.
-            () => ListOpRewrite.rewriteFactorial(text),
-            () => ListOpRewrite.rewriteAbsOp(text),
-            () => ListOpRewrite.rewriteIntervalExpr(text),
+            sql(ListOpRewrite.rewriteFactorial(text)),
+            sql(ListOpRewrite.rewriteAbsOp(text)),
+            sql(ListOpRewrite.rewriteIntervalExpr(text)),
             // Thirteenth sweep: bare clock interval INTERVAL '1:02:03'.
-            () => ListOpRewrite.rewriteIntervalClock(text),
-            () => ListOpRewrite.rewriteUnnestStruct(text),
+            sql(ListOpRewrite.rewriteIntervalClock(text)),
+            sql(ListOpRewrite.rewriteUnnestStruct(text)),
             // Registered-enum casts (x::mood, CAST(x AS mood),
             // enum_range folding — parse-failure only: the type word
             // is UNSUPPORTED_DATATYPE).
-            () => EnumTypes.castRewrite(text),
+            sql(EnumTypes.castRewrite(text)),
             // ::JSON / CAST(x AS JSON) — validate-and-preserve for
             // strings, convert-to-JSON-text otherwise.
-            () => ListOpRewrite.rewriteJsonCast(text),
+            sql(ListOpRewrite.rewriteJsonCast(text)),
             // Postgres-style `SET key TO value` → Spark's `SET key = value`.
-            () => "(?is)\\A(\\s*SET\\s+\\w+)\\s+TO\\s+(.+)\\z".r
+            sql("(?is)\\A(\\s*SET\\s+\\w+)\\s+TO\\s+(.+)\\z".r
               .findFirstMatchIn(text)
-              .map(m2 => m2.group(1) + " = " + m2.group(2)),
-            // EXPLAIN ANALYZE → EXPLAIN (the host's profile text is
-            // engine-specific anyway; the plan still renders).
-            () => "(?is)\\A(\\s*)EXPLAIN\\s+ANALYZE\\b(.*)\\z".r
-              .findFirstMatchIn(text)
-              .map(m2 => m2.group(1) + "EXPLAIN" + m2.group(2)),
+              .map(m2 => m2.group(1) + " = " + m2.group(2))),
             // Bare `SHOW <table>` (DuckDB's DESCRIBE alias — Spark's
             // SHOW grammar rejects it, so parse-failure only).
-            () => "(?is)\\A\\s*SHOW\\s+([A-Za-z_]\\w*)\\s*;?\\s*\\z".r
+            sql("(?is)\\A\\s*SHOW\\s+([A-Za-z_]\\w*)\\s*;?\\s*\\z".r
               .findFirstMatchIn(text)
               .filterNot(m2 => Set("TABLES", "DATABASES", "VIEWS",
                 "FUNCTIONS", "SCHEMAS", "COLUMNS", "CATALOGS",
                 "PARTITIONS", "ALL").contains(m2.group(1).toUpperCase))
-              .map(m2 => s"SELECT * FROM duck_describe('${m2.group(1)}')"),
+              .map(m2 => s"SELECT * FROM duck_describe('${m2.group(1)}')")),
             // LAST deliberately: bracket/brace literal syntax only ever
             // appears in statements stock Spark cannot parse at all, and
             // running it after the structural rewrites lets e.g. a
             // QUALIFY+bracket statement fix QUALIFY first and recurse
             // here for the brackets.
-            () => if (DuckLiteralRewrite.isShaped(text))
-              DuckLiteralRewrite.rewrite(text) else None
+            sql(if (DuckLiteralRewrite.isShaped(text))
+              DuckLiteralRewrite.rewrite(text) else None)
           )
-          candidates.view
-            .flatMap(c => c().flatMap(reparseOrChain(_, depth + 1)))
-            .headOption
+          candidates.view.flatMap(_()).headOption
         }
         val rewritten = chain(sqlText, 0)
         rewritten match {
@@ -1564,10 +1565,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                   "execute too (1:1 DataFrame reader/writer options); " +
                   "other formats and options decline: " +
                   "use the DataFrame writer/reader directly " +
-                  "(df.write.parquet(path), spark.read.csv(path)), or " +
-                  "the copy_to('src', 'path', 'format'[, header[, " +
-                  "'partition_csv']]) / copy_from('tbl', 'path'[, " +
-                  "'format'[, header]]) table functions.")
+                  "(df.write.parquet(path), spark.read.csv(path)).")
               case unpivotStmtRe() =>
                 Some("If you meant DuckDB's UNPIVOT statement: the common " +
                   "forms (UNPIVOT t ON c1, c2 [INTO NAME k VALUE v] and " +
@@ -1896,7 +1894,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val namedReaderNameRe =
     "(?i)\\b(read_(?:csv(?:_auto)?|json(?:_auto)?|parquet))\\s*\\(".r
   private def namedReaderCallRewrite(text: String): Option[String] = {
-    if (!text.contains("=")) return None
+    if (!text.contains("=") || namedReaderNameRe.findFirstIn(text).isEmpty)
+      return None
     val masked = ReplaceRewrite.maskLiterals(text)
     if (namedReaderNameRe.findFirstIn(masked).isEmpty) return None
     val sb = new StringBuilder
@@ -2005,6 +2004,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     ("(?i)\\b(?:date_part|datepart)\\s*\\(\\s*'(" + duckExtractFields +
       ")'\\s*,").r
   private def extractFieldRewrite(text: String): Option[String] = {
+    if (extractFieldRe.findFirstIn(text).isEmpty &&
+      datePartFieldRe.findFirstIn(text).isEmpty) return None
     val masked = ReplaceRewrite.maskLiterals(text)
     // EXTRACT(field FROM e): field is a bare word, match on masked;
     // date_part('field', e): field is a literal (masked to spaces), so
@@ -2040,7 +2041,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     */
   private val duckCollateRe =
     "(?i)(\\bCOLLATE\\s+)(NOCASE\\.NOACCENT|NOACCENT\\.NOCASE|NOCASE|NOACCENT)\\b".r
+  private val collateNoRe = "(?i)\\bCOLLATE\\s+NO".r
   private def duckCollateRewrite(text: String): Option[String] = {
+    if (collateNoRe.findFirstIn(text).isEmpty) return None
     val masked = ReplaceRewrite.maskLiterals(text)
     val ms = duckCollateRe.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
@@ -2059,27 +2062,38 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     Some(sb.toString)
   }
 
-  private def preRewrite(sqlText: String): String = sqlText match {
-    case _ if "(?i)\\bCOLLATE\\s+NO".r.findFirstIn(sqlText).isDefined &&
-        duckCollateRewrite(sqlText).isDefined =>
-      preRewrite(duckCollateRewrite(sqlText).get)
-    case _ if sqlText.contains("=") &&
-        namedReaderNameRe.findFirstIn(sqlText).isDefined &&
-        namedReaderCallRewrite(sqlText).isDefined =>
-      preRewrite(namedReaderCallRewrite(sqlText).get)
-    case _ if (extractFieldRe.findFirstIn(sqlText).isDefined ||
-        datePartFieldRe.findFirstIn(sqlText).isDefined) &&
-        extractFieldRewrite(sqlText).isDefined =>
-      preRewrite(extractFieldRewrite(sqlText).get)
+  /** Single-evaluation pattern for an Option-returning claim: an arm's
+    * match and its body share one call of the rewrite.
+    */
+  private final class Claim[A](rewrite: String => Option[A]) {
+    def unapply(sql: String): Option[A] = rewrite(sql)
+  }
+  private val DuckCollated = new Claim(duckCollateRewrite)
+  private val NamedReaderCall = new Claim(namedReaderCallRewrite)
+  private val ExtractField = new Claim(extractFieldRewrite)
+  private val WindowFilter = new Claim(t => {
+    val u = t.toUpperCase
+    if (u.contains("FILTER") && u.contains("OVER")) ListOpRewrite.rewriteWindowFilter(t)
+    else None
+  })
+  private val EnumDdl = new Claim(EnumTypes.ddlRewrite)
+  private val AlteredTempTable = new Claim(AlterTableRewrite.rewrite)
+  private val IndexStatement = new Claim(indexRewrite)
+
+  /** The pre-delegation claims: Left(command) for a DuckDB statement
+    * Spark runs as a command ([[DuckCommands]]) — building it has no
+    * side effect — or Right(the statement text to parse).
+    */
+  private def preRewrite(sqlText: String): Either[LogicalPlan, String] = sqlText match {
+    case DuckCollated(r) => preRewrite(r)
+    case NamedReaderCall(r) => preRewrite(r)
+    case ExtractField(r) => preRewrite(r)
     // Window FILTER: `agg(x) FILTER (WHERE p) OVER w`. Spark PARSES the
     // clause and dies in a BUILT-IN analyzer rule ("not supported
     // yet"), which runs before any injected resolution rule — so the
     // CASE-rewrite must claim pre-delegation too. Non-whitelisted
     // shapes pass through untouched and keep Spark's loud error.
-    case _ if { val u = sqlText.toUpperCase
-        u.contains("FILTER") && u.contains("OVER") } &&
-        ListOpRewrite.rewriteWindowFilter(sqlText).isDefined =>
-      preRewrite(ListOpRewrite.rewriteWindowFilter(sqlText).get)
+    case WindowFilter(r) => preRewrite(r)
     // DuckDB's `**` power operator. Spark PARSES `a ** b` — as
     // multiply(a, star) — and only dies later in analysis with a
     // confusing INVALID_USAGE_OF_STAR_OR_REGEX, so the parse-failure
@@ -2103,7 +2117,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               "directly — and beware ^ is XOR in Spark, not power.")))
       }
     case describeRe(tbl) if duckDescribeEnabled =>
-      s"SELECT * FROM duck_describe('$tbl')"
+      Right(s"SELECT * FROM duck_describe('$tbl')")
     case columnsSelectRe() =>
       // A session that really has a `columns` function of its own keeps
       // it: the guard runs BEFORE the rewrite, so a user UDF call
@@ -2112,14 +2126,14 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         try org.apache.spark.sql.SparkSession.active.sessionState
           .functionRegistry.functionExists(FunctionIdentifier("columns"))
         catch { case scala.util.control.NonFatal(_) => false }
-      if (userHasColumnsFn) sqlText
+      if (userHasColumnsFn) Right(sqlText)
       // Re-enter: each pass expands ONE select-list item, so several
       // COLUMNS-bearing items resolve across passes (q137's shape).
       else ColumnsRewrite.rewrite(sqlText).map(preRewrite).getOrElse {
         // Hint only when the statement genuinely IS the DuckDB construct
         // (a select-list COLUMNS the rewrite declined) — a raw string
         // literal containing the text passes through untouched.
-        if (!ColumnsRewrite.isColumnsShaped(sqlText)) sqlText
+        if (!ColumnsRewrite.isColumnsShaped(sqlText)) Right(sqlText)
         else throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION",
           Map("errorMessage" ->
@@ -2167,37 +2181,33 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // DuckDB temp-table DML (CREATE TEMP TABLE [AS], INSERT INTO a
     // registered temp table or INSERT ... RETURNING, DROP TABLE of a
     // temp table) — materialized-snapshot semantics via TempTables.
-    // Evaluated ONCE via the extractor: DROP performs its registry
-    // side effect inside rewrite, so a guard-then-get double call
-    // would drop on the first evaluation and None.get on the second.
     // MUST run before the ASOF arm: `CREATE TEMP TABLE t AS SELECT ...
     // ASOF JOIN ...` is temp-table shaped first — the body re-enters
-    // preRewrite when the TVF executes it, so the ASOF inside is still
-    // rewritten; matched the other way round the asof splice would
+    // preRewrite when the command executes it, so the ASOF inside is
+    // still rewritten; matched the other way round the asof splice would
     // produce text TempTableRewrite can no longer claim.
     // COMMENT ON TABLE parses natively (a v2 command) and then rejects
     // temp views in analysis — claim it pre-delegation for graft temp
     // tables; catalog tables keep Spark's native comment machinery
     // (duckdb_tables() reads their description as fallback).
     case commentTableRe(tbl, lit) if TempTables.exists(tbl) =>
-      s"SELECT * FROM comment_ctl('table', '$tbl', '', $lit)"
+      Left(CommentOnCommand(tbl, None, commentText(lit)))
     // CREATE TABLE with PRIMARY KEY / UNIQUE: Spark 4.1 parses the
     // constraint but v1 tables reject it in analysis — strip it,
     // register the key columns (the conflict target INSERT OR REPLACE /
     // ON CONFLICT resolve against, catalog path), and re-enter with the
     // constraint-free DDL.
-    // The ctl TVF executes the stripped DDL and registers the keys only
+    // The command executes the stripped DDL and registers the keys only
     // after the CREATE succeeds (round 18, ADVICE — the old eager
     // setKeys left stale registrations behind failed CREATEs).
     case CatalogPkRewritten(stripped, name, keys) =>
-      s"SELECT * FROM catalog_pk_ctl('${name.replace("'", "''")}', " +
-        s"'${keys.mkString(",")}', '${stripped.replace("'", "''")}')"
+      Left(CreateTableWithKeyCommand(name, keys, DuckLiterals.halveBackslashes(stripped)))
     case TempTableRewritten(r) => r
     // CREATE TYPE ... AS ENUM / DROP TYPE (round 18 — sql/EnumTypes):
     // session enum registry; casts claim in the failure chain.
-    case EnumDdlRewritten(r) => r
+    case EnumDdl(cmd) => Left(cmd)
     // ATTACH '<dir>' AS name / DETACH name (round 19): parquet
-    // directories become session-catalog databases (attach_db TVF);
+    // directories become session-catalog databases;
     // .duckdb-file attaches keep the targeted hint below.
     case attachStmtRe(ifne, path, alias, _) =>
       val lower = path.toLowerCase
@@ -2211,15 +2221,15 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               ".duckdb reader here). ATTACH '<directory>' AS name runs " +
               "automatically — every parquet file under the directory " +
               "registers as name.<table>.")))
+      val dir = DuckLiterals.literalValue(path)
       val dbName = Option(alias).map(_.trim).filter(_.nonEmpty).getOrElse {
-        val base = path.replaceAll("[/\\\\]+$", "")
+        val base = dir.replaceAll("[/\\\\]+$", "")
         base.substring(base.lastIndexOf('/').max(base.lastIndexOf('\\')) + 1)
           .replaceAll("\\.[A-Za-z0-9]+$", "")
       }
-      s"SELECT * FROM attach_db('${path.replace("'", "''")}', " +
-        s"'${dbName.replace("'", "''")}', '${ifne != null}')"
+      Left(AttachDatabaseCommand(dir, dbName, ifne != null))
     case detachStmtRe(ife, name) =>
-      s"SELECT * FROM detach_db('$name', '${ife != null}')"
+      Left(DetachDatabaseCommand(name, ife != null))
     // ASOF JOIN must ALSO be caught before delegation, not only in the
     // parse-failure chain: without an explicit left alias Spark PARSES
     // `FROM l ASOF JOIN r ...` with `l` aliased "ASOF" — the ON form
@@ -2249,9 +2259,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               "'payload_csv'[, strict[, inner[, forward]]])."))))
     // ALTER TABLE parses natively (v2 syntax) but dies in analysis on
     // a temp view — the graft temp-table forms re-materialize the
-    // snapshot pre-delegation; catalog tables keep Spark's own ALTER.
-    // Evaluated once via the extractor (the rewrite mutates).
-    case AlterTableRewrite.Rewritten(r) => r
+    // snapshot as a command; catalog tables keep Spark's own ALTER.
+    case AlteredTempTable(cmd) => Left(cmd)
     // CREATE OR REPLACE TABLE (non-TEMP — the TEMP form is claimed
     // above) is v2-only in Spark; for an absent or plain-v1 target the
     // DuckDB idiom runs as drop-then-create (atomicity of the native
@@ -2269,47 +2278,17 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               .forall(UpdateDeleteRewrite.v1FileProviders.contains)
           }
         } catch { case scala.util.control.NonFatal(_) => false }
-      if (!claim) sqlText
-      else {
-        try {
-          // MANAGED data location to clear (an in-memory catalog's
-          // default warehouse dir survives session crashes, and the
-          // catalog-API drop does not clear it — a leftover dir would
-          // fail the CREATE with LOCATION_ALREADY_EXISTS). EXTERNAL
-          // tables and LOCATION-bearing statements keep their data.
-          val managedLoc: Option[java.net.URI] =
-            if (cat.tableExists(ident)) {
-              val meta = cat.getTableMetadata(ident)
-              if (meta.tableType ==
-                org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED)
-                Some(meta.location)
-              else None
-            } else Some(cat.defaultTablePath(ident))
-          cat.dropTable(ident, ignoreIfNotExists = true, purge = false)
-          // The catalog-API drop also bypasses DropTableCommand's cache
-          // invalidation — refresh, or the relation cache would serve
-          // the replaced table's OLD schema after a column-def CREATE.
-          cat.refreshTable(ident)
-          if (!"(?i)\\bLOCATION\\b".r.findFirstIn(rest).isDefined)
-            managedLoc.foreach { uri =>
-              val p = new org.apache.hadoop.fs.Path(uri)
-              val fs = p.getFileSystem(
-                spark.sessionState.newHadoopConf())
-              if (fs.exists(p)) { fs.delete(p, true); () }
-            }
-        } catch { case scala.util.control.NonFatal(_) => () }
-        s"CREATE TABLE $name$rest"
-      }
+      if (!claim) Right(sqlText)
+      else Left(CreateOrReplaceTableCommand(name, DuckLiterals.halveBackslashes(rest)))
     case _ if UpdateDeleteRewrite.isShaped(sqlText) =>
       // UPDATE/DELETE parse natively but fail analysis on every v1
       // table ("does not support row-level operations") — rewrite the
       // plain-catalog-table forms (and graft temp tables) onto the
-      // staged-overwrite TVFs; anything else (plain temp views, DSv2
+      // staged-overwrite commands; anything else (plain temp views, DSv2
       // tables, multipart names) keeps Spark's native path and
       // semantics.
-      UpdateDeleteRewrite.rewrite(sqlText).getOrElse(sqlText)
-    case _ if indexRewrite(sqlText).isDefined =>
-      indexRewrite(sqlText).get
+      UpdateDeleteRewrite.rewrite(sqlText).getOrElse(Right(sqlText))
+    case IndexStatement(cmd) => Left(cmd)
     // DuckDB's session variables (host ≥1.1): SET VARIABLE both creates
     // and replaces, so it maps to Spark 4's DECLARE OR REPLACE VARIABLE
     // (native SET VAR/VARIABLE would error on the first use — a pasted
@@ -2317,9 +2296,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // documented divergence from a pre-DECLAREd typed variable). RESET
     // VARIABLE removes. The read side is the getvariable() alias.
     case setVariableRe(name, value) =>
-      s"DECLARE OR REPLACE VARIABLE $name DEFAULT $value"
+      Right(s"DECLARE OR REPLACE VARIABLE $name DEFAULT $value")
     case resetVariableRe(name) =>
-      s"DROP TEMPORARY VARIABLE IF EXISTS $name"
+      Right(s"DROP TEMPORARY VARIABLE IF EXISTS $name")
     case distinctOnRe() if DistinctOnRewrite.isShaped(sqlText) =>
       // SELECT DISTINCT ON (...) PARSES as plain Spark (ON(...) is an
       // ordinary function call), so like COLUMNS it must be caught
@@ -2327,7 +2306,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // UNRESOLVED_ROUTINE for `ON`. isShaped keys on the top-level
       // word sequence (quote-/comment-/paren-aware), so a string
       // literal containing the text passes through untouched.
-      DistinctOnRewrite.rewrite(sqlText).getOrElse {
+      DistinctOnRewrite.rewrite(sqlText).map(Right(_)).getOrElse {
         throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION",
           Map("errorMessage" ->
@@ -2343,7 +2322,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               "row_number() OVER (PARTITION BY exprs ORDER BY " +
               "tiebreak) rn FROM t) WHERE rn = 1.")))
       }
-    case _ => sqlText
+    case _ => Right(sqlText)
   }
 
   /** Parse with DuckDB's default null ordering (round 18): the text
@@ -2354,7 +2333,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * reparse too, so rewritten statements' spliced orderings carry the
     * host's null placement.
     */
-  private def parseDuckOrdered[T](text: String, parse: String => T): T = {
+  private def parseDuckOrdered(text: String, parse: String => LogicalPlan): LogicalPlan = {
     val plan = parse(text)
     DuckNullOrder.rewrite(text) match {
       case Some(t2) =>
@@ -2363,29 +2342,71 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       case None => plan
     }
   }
-  // Entry points double literal backslashes ONCE (sql/DuckLiterals):
-  // the one unescape at parse consumes the doubling, so values carry
-  // DuckDB's raw-literal semantics; rewrites and TVF re-entries stay
-  // level-consistent (see DuckLiterals' scaladoc).
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    val pre = preRewrite(DuckLiterals.doubleBackslashes(sqlText))
-    withHint(pre, parseDuckOrdered(_, delegate.parsePlan))(
-      parseDuckOrdered(pre, delegate.parsePlan))
+  /** `EXPLAIN [mode] <statement>`. DuckDB's EXPLAIN ANALYZE renders as
+    * the simple mode (the host's profile text is engine-specific anyway;
+    * the plan still renders), unless ANALYZE begins Spark's own ANALYZE
+    * TABLE(S) statement. LOGICAL stays with Spark (which rejects it).
+    */
+  private val explainRe =
+    ("(?is)\\A\\s*EXPLAIN\\s+(?:(EXTENDED|FORMATTED|CODEGEN|COST|" +
+      "ANALYZE(?!\\s+TABLES?\\b))\\s+)?((?!LOGICAL\\b).+)\\z").r
+
+  /** The table functions behind UPDATE/DELETE/INSERT ... RETURNING:
+    * they write while they are analysed, and EXPLAIN analyses its
+    * statement, so EXPLAIN refuses a plan that calls one.
+    */
+  private val writingTableFunctions =
+    Set("update_returning", "delete_returning", "insert_returning")
+
+  private def callsWriter(plan: LogicalPlan): Boolean = plan match {
+    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
+        if writingTableFunctions(u.name.last.toLowerCase(java.util.Locale.ROOT)) => true
+    case p =>
+      (p.children ++ p.innerChildren ++ p.subqueries).exists {
+        case q: LogicalPlan => callsWriter(q)
+        case _ => false
+      }
   }
-  override def parseQuery(sqlText: String): LogicalPlan = {
-    val pre = preRewrite(DuckLiterals.doubleBackslashes(sqlText))
-    withHint(pre, parseDuckOrdered(_, delegate.parseQuery))(
-      parseDuckOrdered(pre, delegate.parseQuery))
-  }
+
+  /** One entry for every parse: EXPLAIN wraps graft's own parse of its
+    * statement, so a DuckDB statement explains as the command it runs
+    * as, without running it (Spark's EXPLAIN plans in SKIP mode);
+    * everything else is claimed by [[preRewrite]] or parsed by the
+    * delegate, with the hint chain on parse failure. Literal
+    * backslashes are doubled ONCE here (sql/DuckLiterals): the one
+    * unescape at parse consumes the doubling, so values carry DuckDB's
+    * raw-literal semantics; rewrites and command re-entries stay
+    * level-consistent (see DuckLiterals' scaladoc).
+    */
+  private def parseWith(sqlText: String, parse: String => LogicalPlan): LogicalPlan =
+    sqlText match {
+      case explainRe(mode, statement) =>
+        val plan = parseWith(statement, parse)
+        if (callsWriter(plan))
+          DuckCommands.fail("EXPLAIN of UPDATE, DELETE or INSERT ... RETURNING is " +
+            "not supported: those statements write while they are planned")
+        org.apache.spark.sql.execution.command.ExplainCommand(
+          plan,
+          org.apache.spark.sql.execution.ExplainMode.fromString(
+            Option(mode).filterNot(_.equalsIgnoreCase("ANALYZE")).getOrElse("simple")))
+      case _ =>
+        preRewrite(DuckLiterals.doubleBackslashes(sqlText)) match {
+          case Left(command) => command
+          case Right(pre) =>
+            withHint(pre, parseDuckOrdered(_, parse))(parseDuckOrdered(pre, parse))
+        }
+    }
+  override def parsePlan(sqlText: String): LogicalPlan =
+    parseWith(sqlText, delegate.parsePlan)
+  override def parseQuery(sqlText: String): LogicalPlan =
+    parseWith(sqlText, delegate.parseQuery)
   override def parsePlanWithParameters(
-      sqlText: String, parameters: ParameterContext): LogicalPlan = {
-    val pre = preRewrite(DuckLiterals.doubleBackslashes(sqlText))
-    withHint(pre, parseDuckOrdered(_, delegate.parsePlanWithParameters(_, parameters)))(
-      parseDuckOrdered(pre, delegate.parsePlanWithParameters(_, parameters)))
-  }
-  // Expression fragments (TVF-spliced SET/WHERE texts, df.selectExpr)
+      sqlText: String, parameters: ParameterContext): LogicalPlan =
+    parseWith(sqlText, delegate.parsePlanWithParameters(_, parameters))
+  // Expression fragments (commands' SET/WHERE texts, df.selectExpr)
   // get the same treatment: by the time a fragment reaches expr() it is
-  // back at DuckDB level (its embedding literal was unescaped once).
+  // back at DuckDB level (a command's fields are halved back; a table
+  // function's literal argument was unescaped once).
   override def parseExpression(sqlText: String) =
     delegate.parseExpression(DuckLiterals.doubleBackslashes(sqlText))
   override def parseTableIdentifier(sqlText: String) = delegate.parseTableIdentifier(sqlText)
@@ -4491,10 +4512,12 @@ object GraftSparkExtensions {
     case other => other.toString.toDouble
   }
 
-  /** A table function whose arguments must be constant-foldable (the
-    * reference's bind phase extracts constants the same way,
-    * highs_extension.cpp:229-258). The side effect runs here, at analysis;
-    * the result becomes a LocalRelation.
+  /** The reference's four HiGHS table functions (highs_create_variables,
+    * highs_create_constraints, highs_set_coefficients, highs_solve):
+    * arguments must be constant-foldable (the reference's bind phase
+    * extracts constants the same way, highs_extension.cpp:229-258); the
+    * model-registry effect runs here, at analysis, and the rows become a
+    * LocalRelation.
     */
   private def tvf(name: String, arity: Int, schema: StructType)(
       exec: IndexedSeq[Any] => Seq[org.apache.spark.sql.Row])
@@ -4629,7 +4652,7 @@ object GraftSparkExtensions {
     * form the USING KEY rewrite needs, since a textual rewrite cannot
     * register views.
     */
-  private def tableOrSql(spark: org.apache.spark.sql.SparkSession,
+  private[sql] def tableOrSql(spark: org.apache.spark.sql.SparkSession,
       s: String): org.apache.spark.sql.DataFrame = {
     val t = s.trim
     val up = t.toUpperCase
@@ -5339,225 +5362,6 @@ object GraftSparkExtensions {
         DataTypeUtils.toAttributes(describeSchema), rows)
     })
 
-  /** DuckDB's `COPY ... TO` as an eager table function: run the source
-    * (view/catalog name or SQL text), write it to `path` as `format`,
-    * and return DuckDB's one-row result — `Count BIGINT`, the rows
-    * written. The count rides the write's OWN pass via the Observation
-    * API (no second scan — at 100 TB a separate count() is another full
-    * read). The target is a Spark datasource DIRECTORY of part files,
-    * not DuckDB's single file: the distributed-writer contract (1000
-    * executors write in parallel; a single-file export is the
-    * `coalesce(1)` anti-pattern at scale), re-readable by both engines
-    * via glob. `mode=overwrite` matches COPY's replace behavior. Runs at
-    * analysis (the solver TVFs' eagerness contract — COPY is a
-    * statement; its effect must not depend on whether the result row is
-    * consumed). The literal COPY statement lands here via
-    * [[CopyToRewrite]].
-    */
-  val copyToFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("copy_to"), info("copy_to"), (args: Seq[Expression]) => {
-      if (args.size < 3 || args.size > 6)
-        throw new IllegalArgumentException(
-          "copy_to(table_or_sql, path, format[, header[, partition_csv" +
-            s"[, opts]]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "copy_to arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "copy_to arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val src = tableOrSql(spark, asString(v(0)))
-      val path = asString(v(1))
-      val fmt = asString(v(2)).toLowerCase
-      val header = if (args.size >= 4) asBool(v(3)) else true
-      val partition =
-        if (args.size >= 5)
-          asString(v(4)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        else Seq.empty
-      val opts = if (args.size >= 6) parseCopyOpts(asString(v(5))) else Map.empty[String, String]
-      val obs = org.apache.spark.sql.Observation()
-      val instrumented = src.observe(obs,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      // Host parity (round 20): DuckDB's un-partitioned COPY TO writes
-      // ONE FILE at exactly `path`; Spark's writers emit a part-file
-      // DIRECTORY, which breaks any script that hands the path to a
-      // file consumer (q172's round-trip had DuckDB refusing to
-      // overwrite the engine's directory). A file-extension target with
-      // no PARTITION_BY therefore stages a single-writer output
-      // (coalesce(1) — the same single-file cost the host pays) and
-      // renames the part file onto the path. PARTITION_BY keeps the
-      // parallel hive-layout directory — the 100 TB export path.
-      val singleFile = partition.isEmpty &&
-        path.matches("(?i).*\\.(parquet|parq|csv|tsv|json|jsonl|ndjson)\\z")
-      val outPath = if (singleFile) path + ".__graft_stage__" else path
-      val frame = if (singleFile) instrumented.coalesce(1) else instrumented
-      val writer0 = frame.write.mode("overwrite")
-      val writer1 =
-        if (partition.isEmpty) writer0 else writer0.partitionBy(partition: _*)
-      val writer = opts.get("compression")
-        .map(c => writer1.option("compression", c)).getOrElse(writer1)
-      fmt match {
-        case "parquet" => writer.parquet(outPath)
-        case "csv" =>
-          val w = csvOptionKeys.foldLeft(writer) { case (wr, (k, opt)) =>
-            opts.get(k).map(x => wr.option(opt, x)).getOrElse(wr) }
-          w.option("header", header.toString).csv(outPath)
-        case "json" =>
-          // DuckDB's FORMAT JSON export is newline-delimited objects --
-          // exactly Spark's json writer (compression already applied).
-          writer.json(outPath)
-        case other => throw new IllegalArgumentException(
-          s"copy_to: unsupported format '$other' (parquet, csv, json)")
-      }
-      if (singleFile) {
-        val conf = spark.sessionState.newHadoopConf()
-        val sp = new org.apache.hadoop.fs.Path(outPath)
-        val fs = sp.getFileSystem(conf)
-        val parts = fs.listStatus(sp).filter(s =>
-          s.isFile && s.getPath.getName.startsWith("part-"))
-        require(parts.length == 1,
-          s"copy_to: expected one staged part file, found ${parts.length}")
-        val tp = new org.apache.hadoop.fs.Path(path)
-        if (fs.exists(tp)) fs.delete(tp, true)
-        if (!fs.rename(parts.head.getPath, tp))
-          throw new IllegalStateException(s"copy_to: rename to $path failed")
-        fs.delete(sp, true)
-      }
-      val n = obs.get("n") match {
-        case l: java.lang.Number => l.longValue()
-        case x => x.toString.toLong
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq(org.apache.spark.sql.Row(n)))
-    })
-
-  /** DuckDB's `COPY tbl FROM 'path'` import direction — the landing pad
-    * for [[CopyToRewrite]]'s FROM branch. Appends the file's rows into an
-    * EXISTING catalog table via `insertInto` (by-position mapping, same
-    * as DuckDB's default import), eagerly at analysis like every writing
-    * TVF here, and returns DuckDB's one-row Count. CSV parses under the
-    * TARGET table's schema (DuckDB reads the file against the table's
-    * declared types the same way); parquet arrives self-described. The
-    * count rides the write's own pass via an Observation — no second
-    * scan of the file.
-    */
-  val copyFromFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("copy_from"), info("copy_from"), (args: Seq[Expression]) => {
-      if (args.size < 2 || args.size > 5)
-        throw new IllegalArgumentException(
-          "copy_from(table, path[, format[, header[, opts]]])" +
-            s" — got ${args.size} arguments")
-      require(args.forall(_.foldable), "copy_from arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "copy_from arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val table = asString(v(0))
-      val path = asString(v(1))
-      val fmt = if (args.size >= 3) asString(v(2)).toLowerCase else {
-        val lower = path.toLowerCase
-        if (lower.endsWith(".csv")) "csv" else "parquet"
-      }
-      val header = if (args.size >= 4) asBool(v(3)) else true
-      val opts = if (args.size >= 5) parseCopyOpts(asString(v(4))) else Map.empty[String, String]
-      val target = spark.table(table)
-      val src = fmt match {
-        case "parquet" => spark.read.parquet(path)
-        case "csv" =>
-          val r0 = spark.read.option("header", header.toString)
-          val r = csvOptionKeys.foldLeft(r0) { case (rd, (k, opt)) =>
-            opts.get(k).map(x => rd.option(opt, x)).getOrElse(rd) }
-          r.schema(target.schema).csv(path)
-        case "json" => spark.read.schema(target.schema).json(path)
-        case other => throw new IllegalArgumentException(
-          s"copy_from: unsupported format '$other' (parquet, csv, json)")
-      }
-      val obs = org.apache.spark.sql.Observation()
-      val instrumented = src.observe(obs,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      instrumented.write.mode("append").insertInto(table)
-      val n = obs.get("n") match {
-        case l: java.lang.Number => l.longValue()
-        case x => x.toString.toLong
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq(org.apache.spark.sql.Row(n)))
-    })
-
-  /** Landing pads for [[UpdateDeleteRewrite]] — DuckDB's UPDATE/DELETE
-    * against v1 catalog tables as the staged overwrite q53 demonstrates
-    * by hand: transform → scratch materialization (a table cannot be
-    * overwritten by a plan reading it) → INSERT OVERWRITE, returning
-    * DuckDB's one-row Count (rows updated / deleted). The affected-row
-    * count rides the mutation pass via an Observation placed BEFORE the
-    * transform (its predicate reads the pre-update columns) — no second
-    * scan. Every SET assignment evaluates against the OLD row (one
-    * projection, standard SQL UPDATE semantics).
-    */
-  val updateTableFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("update_table"), info("update_table"), (args: Seq[Expression]) => {
-      if (args.size != 3)
-        throw new IllegalArgumentException(
-          s"update_table(table, set_assignments, where_or_empty) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "update_table arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "update_table arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, sum, when}
-      val table = asString(v(0))
-      val setText = asString(v(1))
-      val whereText = asString(v(2)).trim
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
-        val eq = topLevelEq(a)
-        require(eq > 0, s"update_table: assignment without '=': $a")
-        val name = a.substring(0, eq).trim
-        val rhs = a.substring(eq + 1).trim
-        require(name.matches("[A-Za-z_]\\w*"),
-          s"update_table: assignment target must be a plain column name, got '$name'")
-        require(rhs.nonEmpty, s"update_table: empty expression for '$name'")
-        name -> rhs
-      }
-      // Duplicate targets (any case) are an error, as in DuckDB — a
-      // map would silently keep one arbitrary assignment.
-      val dupTargets = assignments.groupBy(_._1.toLowerCase)
-        .collect { case (n, as) if as.size > 1 => n }
-      require(dupTargets.isEmpty,
-        s"update_table: column(s) assigned more than once: ${dupTargets.mkString(", ")}")
-      val base = spark.table(table)
-      val missing = assignments.map(_._1).filterNot(n =>
-        base.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      require(missing.isEmpty,
-        s"update_table: no such column(s): ${missing.mkString(", ")}")
-      val obs = org.apache.spark.sql.Observation()
-      val matched =
-        if (whereText.isEmpty) count(lit(1)).as("n")
-        else sum(when(expr(whereText), 1L).otherwise(0L)).as("n")
-      val projected = base.observe(obs, matched).select(
-        base.schema.fieldNames.toIndexedSeq.map { f =>
-          assignments.collectFirst {
-            case (n, rhs) if n.equalsIgnoreCase(f) =>
-              val newV = expr(rhs)
-              (if (whereText.isEmpty) newV
-               else when(expr(whereText), newV).otherwise(col(f))).as(f)
-          }.getOrElse(col(f))
-        }: _*)
-      if (TempTables.exists(table)) TempTables.put(table, projected)
-      else {
-        val (staged, stageDir) = graft.operators.Scratch.materialize(projected, "update_stage")
-        staged.write.mode("overwrite").insertInto(table)
-        graft.operators.Scratch.delete(spark, stageDir)
-      }
-      val n = obs.get("n") match {
-        case null => 0L
-        case l: java.lang.Number => l.longValue()
-        case x => x.toString.toLong
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq(org.apache.spark.sql.Row(n)))
-    })
-
   /** DELETE ... RETURNING exprs (round-20 fourteenth probe): the host
     * returns the DELETED rows projected through the RETURNING list.
     * The projection is captured to scratch BEFORE the staged overwrite
@@ -5591,13 +5395,7 @@ object GraftSparkExtensions {
         if (whereText.isEmpty) lit(false)
         else !coalesce(expr(whereText), lit(false))
       val kept = base.filter(keepPred)
-      if (TempTables.exists(table)) TempTables.put(table, kept)
-      else {
-        val (staged, stageDir) =
-          graft.operators.Scratch.materialize(kept, "delete_stage")
-        staged.write.mode("overwrite").insertInto(table)
-        graft.operators.Scratch.delete(spark, stageDir)
-      }
+      DuckCommands.overwrite(spark, table, kept, "delete_stage")
       cap.queryExecution.analyzed
     })
 
@@ -5616,758 +5414,54 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "update_returning arguments must be non-NULL constants")
       val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{col, expr, when}
+      import org.apache.spark.sql.functions.expr
       val table = asString(v(0))
-      val setText = asString(v(1))
       val whereText = asString(v(2)).trim
       val retText = asString(v(3)).trim
       require(retText.nonEmpty, "update_returning: empty RETURNING list")
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
-        val eq = topLevelEq(a)
-        require(eq > 0, s"update_returning: assignment without '=': $a")
-        (a.substring(0, eq).trim, a.substring(eq + 1).trim)
-      }
       val base = spark.table(table)
+      val as = DuckCommands.assignments(asString(v(1)), base.schema)
       val matchedOld =
         if (whereText.isEmpty) base else base.filter(expr(whereText))
-      val newRows = matchedOld.select(
-        base.schema.fieldNames.toIndexedSeq.map { f =>
-          assignments.collectFirst {
-            case (n, rhs) if n.equalsIgnoreCase(f) => expr(rhs).as(f)
-          }.getOrElse(col(f))
-        }: _*)
+      val newRows = matchedOld.select(DuckCommands.updatedColumns(base.schema, as, ""): _*)
       val returned = newRows.selectExpr(
         ReplaceRewrite.splitTop(retText).map(_.trim): _*)
       val (cap, _) =
         graft.operators.Scratch.materialize(returned, "update_returning")
-      // the mutation itself: identical to update_table's projection
-      val projected = base.select(
-        base.schema.fieldNames.toIndexedSeq.map { f =>
-          assignments.collectFirst {
-            case (n, rhs) if n.equalsIgnoreCase(f) =>
-              val newV = expr(rhs)
-              (if (whereText.isEmpty) newV
-               else when(expr(whereText), newV).otherwise(col(f))).as(f)
-          }.getOrElse(col(f))
-        }: _*)
-      if (TempTables.exists(table)) TempTables.put(table, projected)
-      else {
-        val (staged, stageDir) =
-          graft.operators.Scratch.materialize(projected, "update_stage")
-        staged.write.mode("overwrite").insertInto(table)
-        graft.operators.Scratch.delete(spark, stageDir)
-      }
+      DuckCommands.overwrite(spark, table,
+        base.select(DuckCommands.updatedColumns(base.schema, as, whereText): _*),
+        "update_stage")
       cap.queryExecution.analyzed
     })
 
-  val deleteFromFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("delete_from"), info("delete_from"), (args: Seq[Expression]) => {
-      if (args.size != 2)
-        throw new IllegalArgumentException(
-          s"delete_from(table, where_or_empty) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "delete_from arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "delete_from arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{coalesce, count, expr, lit, sum, when}
-      val table = asString(v(0))
-      val whereText = asString(v(1)).trim
-      val base = spark.table(table)
-      // A WHERE with an IN/EXISTS subquery is legal in DELETE's Filter,
-      // but NOT inside the Observation's counting CASE (CollectMetrics
-      // rejects predicate subqueries) — for that shape, count as
-      // before-minus-after instead of riding the mutation pass.
-      val hasSubquery = whereText.nonEmpty &&
-        "(?is)\\b(?:IN|EXISTS)\\s*\\(\\s*SELECT\\b".r
-          .findFirstIn(whereText).isDefined
-      val obs = org.apache.spark.sql.Observation()
-      val matched =
-        if (whereText.isEmpty) count(lit(1)).as("n")
-        else sum(when(expr(whereText), 1L).otherwise(0L)).as("n")
-      // DELETE removes rows where the predicate is TRUE; NULL keeps.
-      val keepPred =
-        if (whereText.isEmpty) lit(false)
-        else !coalesce(expr(whereText), lit(false))
-      val kept =
-        if (hasSubquery) base.filter(keepPred)
-        else base.observe(obs, matched).filter(keepPred)
-      val nBefore = if (hasSubquery) base.count() else 0L
-      var nKept = 0L
-      if (TempTables.exists(table)) {
-        TempTables.put(table, kept)
-        if (hasSubquery) nKept = spark.table(table).count()
-      } else {
-        val (staged, stageDir) = graft.operators.Scratch.materialize(kept, "delete_stage")
-        if (hasSubquery) nKept = staged.count() // parquet metadata count
-        staged.write.mode("overwrite").insertInto(table)
-        graft.operators.Scratch.delete(spark, stageDir)
-      }
-      val n =
-        if (hasSubquery) nBefore - nKept
-        else obs.get("n") match {
-          case null => 0L
-          case l: java.lang.Number => l.longValue()
-          case x => x.toString.toLong
-        }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq(org.apache.spark.sql.Row(n)))
-    })
-
-  /** DuckDB's joined UPDATE — `UPDATE t SET ... FROM <source> [WHERE
-    * pred]` (round 18, via [[UpdateDeleteRewrite]]). Semantics pinned
-    * on 1.0: a target row matching ANY source row under the predicate
-    * is updated ONCE, from an arbitrary matching source row (DuckDB
-    * picks its scan-order first; `first()` over the per-row group is
-    * the same contract); rows without a match keep their values; the
-    * Count is the number of DISTINCT target rows updated.
-    *
-    * Shape: the target is stamped with a row id and MATERIALIZED once
-    * (monotonically_increasing_id is nondeterministic — two plans
-    * would disagree), the matched (rid, new values) pairs come from one
-    * join of the stamped snapshot against the source text spliced
-    * verbatim (so `t.col` / `s.col` references resolve exactly as
-    * written), reduced to one row per rid, and joined back — two
-    * shuffles of O(matched), one pass of the target, never target².
+  /** `INSERT INTO t [(cols)] <query> RETURNING exprs` into a graft temp
+    * table or a catalog table (via [[TempTableRewrite]]): appends, then
+    * returns the inserted rows projected through the RETURNING list,
+    * DuckDB's contract.
     */
-  val updateFromFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("update_from"), info("update_from"), (args: Seq[Expression]) => {
+  val insertReturningFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
+    (FunctionIdentifier("insert_returning"), info("insert_returning"), (args: Seq[Expression]) => {
       require(args.size == 4 && args.forall(_.foldable),
-        "update_from(table, set_assignments, source, where_or_empty) — constants")
+        "insert_returning(name, source_query, cols_csv, returning_csv) — constants")
       val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "update_from arguments must be non-NULL")
+      require(v.forall(_ != null), "insert_returning arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{col, first, lit, when}
-      val table = asString(v(0))
-      val setText = asString(v(1))
-      val srcText = asString(v(2)).trim
-      val whereText = asString(v(3)).trim
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
-        val eq = topLevelEq(a)
-        require(eq > 0, s"update_from: assignment without '=': $a")
-        val n = a.substring(0, eq).trim
-        require(n.matches("[A-Za-z_]\\w*"),
-          s"update_from: assignment target must be a plain column name, got '$n'")
-        n -> a.substring(eq + 1).trim
-      }
-      val target = spark.table(table)
-      val missing = assignments.map(_._1).filterNot(n =>
-        target.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      require(missing.isEmpty,
-        s"update_from: no such column(s): ${missing.mkString(", ")}")
-      val (stamped, stampDir) = graft.operators.Scratch.materialize(
-        target.withColumn("__graft_rid",
-          org.apache.spark.sql.functions.monotonically_increasing_id()),
-        s"updf_$table")
-      stamped.createOrReplaceTempView("__graft_upd_stamped")
-      try {
-        val setSel = assignments.zipWithIndex.map { case ((_, rhs), i) =>
-          s"($rhs) AS __graft_set_$i" }
-        val matchedSql =
-          s"SELECT $table.__graft_rid AS __graft_rid, ${setSel.mkString(", ")} " +
-            s"FROM __graft_upd_stamped AS $table, $srcText" +
-            (if (whereText.isEmpty) "" else s" WHERE $whereText")
-        val matched = spark.sql(matchedSql)
-          .groupBy("__graft_rid")
-          .agg(first(col("__graft_set_0")).as("__graft_set_0"),
-            assignments.indices.drop(1).map(i =>
-              first(col(s"__graft_set_$i")).as(s"__graft_set_$i")): _*)
-          .withColumn("__graft_hit", lit(true))
-        val joined = stamped.join(matched, Seq("__graft_rid"), "left")
-        val projected = joined.select(
-          target.schema.fields.toIndexedSeq.map { f =>
-            assignments.zipWithIndex.collectFirst {
-              case ((n, _), i) if n.equalsIgnoreCase(f.name) =>
-                when(col("__graft_hit"),
-                  col(s"__graft_set_$i").cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-            }.getOrElse(col(f.name))
-          }: _*)
-        val nMatched = matched.count()
-        if (TempTables.exists(table)) TempTables.put(table, projected)
-        else {
-          val (staged, stageDir) =
-            graft.operators.Scratch.materialize(projected, "update_from_stage")
-          staged.write.mode("overwrite").insertInto(table)
-          graft.operators.Scratch.delete(spark, stageDir)
-        }
-        LocalRelation.fromExternalRows(
-          DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-          Seq(org.apache.spark.sql.Row(nMatched)))
-      } finally {
-        spark.catalog.dropTempView("__graft_upd_stamped")
-        graft.operators.Scratch.delete(spark, stampDir)
-      }
-    })
-
-  /** DuckDB's joined DELETE — `DELETE FROM t USING <source> [WHERE
-    * pred]` (round 18): rows with ANY predicate match against the
-    * source are removed; the kept set is one correlated NOT EXISTS
-    * (a null-safe anti-join — Spark plans it without target²).
-    */
-  val deleteUsingFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("delete_using"), info("delete_using"), (args: Seq[Expression]) => {
-      require(args.size == 3 && args.forall(_.foldable),
-        "delete_using(table, source, where_or_empty) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "delete_using arguments must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val table = asString(v(0))
-      val srcText = asString(v(1)).trim
-      val whereText = asString(v(2)).trim
-      val target = spark.table(table)
-      val keptSql =
-        s"SELECT $table.* FROM $table WHERE NOT EXISTS " +
-          s"(SELECT 1 FROM $srcText" +
-          (if (whereText.isEmpty) "" else s" WHERE $whereText") + ")"
-      val kept = spark.sql(keptSql)
-      val nBefore = target.count()
-      var nKept = 0L
-      if (TempTables.exists(table)) {
-        TempTables.put(table, kept)
-        nKept = spark.table(table).count()
-      } else {
-        val (staged, stageDir) =
-          graft.operators.Scratch.materialize(kept, "delete_using_stage")
-        nKept = staged.count()
-        staged.write.mode("overwrite").insertInto(table)
-        graft.operators.Scratch.delete(spark, stageDir)
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq(org.apache.spark.sql.Row(nBefore - nKept)))
-    })
-
-  /** Landing pads for [[TempTableRewrite]] — DuckDB's temp-table DML
-    * over [[TempTables]] (materialized scratch-parquet snapshots fronted
-    * by same-named temp views). All eager at analysis like every
-    * mutating TVF here.
-    */
-  private def tempCountRow(n: Long): LogicalPlan =
-    LocalRelation.fromExternalRows(
-      DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-      Seq(org.apache.spark.sql.Row(n)))
-
-  val tempTableAsFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("temp_table_as"), info("temp_table_as"), (args: Seq[Expression]) => {
-      require(args.size == 3 && args.forall(_.foldable),
-        "temp_table_as(name, query, or_replace) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "temp_table_as arguments must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val name = asString(v(0))
-      if (!asBool(v(2)) && (TempTables.exists(name) ||
-        spark.catalog.tableExists(name)))
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"""Table with name "$name" already exists!"""))
-      TempTables.put(name, spark.sql(asString(v(1))))
-      tempCountRow(spark.table(name).count()) // parquet metadata count
-    })
-
-  val tempTableEmptyFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("temp_table_empty"), info("temp_table_empty"), (args: Seq[Expression]) => {
-      require(args.size == 3 && args.forall(_.foldable),
-        "temp_table_empty(name, col_defs, or_replace) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "temp_table_empty arguments must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val name = asString(v(0))
-      if (!asBool(v(2)) && (TempTables.exists(name) ||
-        spark.catalog.tableExists(name)))
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"""Table with name "$name" already exists!"""))
-      // PRIMARY KEY declarations (inline `col TYPE PRIMARY KEY` or the
-      // table-constraint `PRIMARY KEY (a, b)`) are stripped before the
-      // Spark schema parse and recorded as the table's conflict target
-      // for INSERT OR REPLACE / OR IGNORE. NOT NULL drops too (Spark's
-      // DDL parser accepts neither; both are advisory here).
-      val inlinePkRe = "(?is)\\bPRIMARY\\s+KEY\\s*\\z".r
-      val constraintPkRe =
-        "(?is)\\A\\s*PRIMARY\\s+KEY\\s*\\(([^)]*)\\)\\s*\\z".r
-      // DEFAULT <expr> (round 18): stripped from the def — Spark's
-      // parseTableSchema rejects it — and recorded as raw SQL text the
-      // INSERT paths compile per statement (DuckDB's evaluation point).
-      // The expr runs to the def's end minus trailing constraint words,
-      // so `DEFAULT upper('x') NOT NULL PRIMARY KEY` parses all three.
-      val defaultRe = "(?is)\\bDEFAULT\\s+(.+)\\z".r
-      val tailConstraintRe =
-        "(?is)\\s+(NOT\\s+NULL|PRIMARY\\s+KEY|UNIQUE)\\s*\\z".r
-      var pkCols = Seq.empty[String]
-      var defaults = Map.empty[String, String]
-      val defs = ReplaceRewrite.splitTop(asString(v(1))).flatMap { part0 =>
-        val part = defaultRe.findFirstMatchIn(part0) match {
-          case Some(dm) =>
-            var ex = dm.group(1).trim
-            var tail = ""
-            var hit = tailConstraintRe.findFirstMatchIn(ex)
-            while (hit.isDefined) {
-              tail = ex.substring(hit.get.start) + tail
-              ex = ex.substring(0, hit.get.start)
-              hit = tailConstraintRe.findFirstMatchIn(ex)
-            }
-            val colName = part0.trim.split("\\s+").headOption.getOrElse("")
-            if (colName.nonEmpty && ex.trim.nonEmpty)
-              defaults += colName.toLowerCase -> ex.trim
-            part0.substring(0, dm.start) + tail
-          case None => part0
-        }
-        constraintPkRe.findFirstMatchIn(part) match {
-          case Some(m) =>
-            pkCols ++= m.group(1).split(",").map(_.trim).filter(_.nonEmpty)
-            None
-          case None =>
-            val noNull = "(?is)\\s+NOT\\s+NULL\\b".r.replaceAllIn(part, "")
-            inlinePkRe.findFirstIn(noNull) match {
-              case Some(_) =>
-                val stripped = inlinePkRe.replaceAllIn(noNull, "").trim
-                pkCols ++= stripped.split("\\s+").headOption
-                Some(stripped)
-              case None => Some(noNull)
-            }
-        }
-      }
-      // DuckDB's length-less string spellings → Spark's STRING (Spark
-      // demands a length on bare VARCHAR); parenthesized forms pass
-      // through to Spark's own VARCHAR(n). Unsigned widths widen to
-      // the next signed type, HUGEINT to DECIMAL(38,0), BLOB to BINARY
-      // (round 18 — same table as typeSpellRewrite).
-      val normalized = defs.map { d0 =>
-        // Registered ENUM type names in column position → STRING (the
-        // enum model's storage type; membership validation lives in the
-        // cast path, round 18). Only the def's TYPE word (second token)
-        // is considered — a column merely NAMED like an enum is safe.
-        val d = {
-          val toks = d0.trim.split("\\s+", 3)
-          if (toks.length >= 2 && EnumTypes.get(toks(1)).isDefined)
-            (Seq(toks(0), "STRING") ++ toks.drop(2)).mkString(" ")
-          else d0
-        }
-        ("(?i)\\b(?:VARCHAR|TEXT|BPCHAR|BLOB|UTINYINT|USMALLINT|" +
-          "UINTEGER|UBIGINT|UHUGEINT|HUGEINT)\\b(?!\\s*\\()").r
-          .replaceAllIn(d, m => m.matched.toUpperCase match {
-            case "BLOB" => "BINARY"
-            case "UTINYINT" => "SMALLINT"
-            case "USMALLINT" => "INT"
-            case "UINTEGER" => "BIGINT"
-            case "UBIGINT" => "DECIMAL(20,0)"
-            case "UHUGEINT" | "HUGEINT" => "DECIMAL(38,0)"
-            case _ => "STRING"
-          })
-      }
-      val schema = spark.sessionState.sqlParser.parseTableSchema(
-        normalized.mkString(", "))
-      TempTables.put(name, spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
-      if (pkCols.nonEmpty) TempTables.setKeys(name, pkCols)
-      TempTables.setDefaults(name, defaults)
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  /** Align an INSERT source to the target schema: positional when
-    * `cols` is empty (arity must match), else the listed columns take
-    * the source's outputs positionally and unlisted target columns are
-    * NULL — both with insert-style casts to the target types.
-    */
-  /** Textual DEFAULT-keyword substitution in a `VALUES (...), (...)`
-    * insert body (round 18): each bare DEFAULT item becomes the
-    * target column's declared default expression (parenthesized — it
-    * is spliced into an expression position), or a typed NULL when the
-    * column declares none — DuckDB's contract. Position maps through
-    * the statement's column list when one was given. Non-VALUES bodies
-    * pass through untouched (DEFAULT inside a SELECT keeps the native
-    * error, as in DuckDB).
-    */
-  private def substituteDefaultKeyword(body0: String,
-      target: org.apache.spark.sql.types.StructType, cols: Seq[String],
-      defaults: Map[String, String]): String = {
-    val body = body0.trim
-    if (!body.regionMatches(true, 0, "VALUES", 0, 6)) return body0
-    if (!"(?i)\\bDEFAULT\\b".r.findFirstIn(
-      ReplaceRewrite.maskLiterals(body)).isDefined) return body0
-    val rowsText = body.substring(6)
-    val fieldAt: Int => Option[org.apache.spark.sql.types.StructField] =
-      i => if (cols.nonEmpty)
-        cols.lift(i).flatMap(c =>
-          target.fields.find(_.name.equalsIgnoreCase(c)))
-      else target.fields.lift(i)
-    val rows = ReplaceRewrite.splitTop(rowsText).map(_.trim).map { row =>
-      if (!row.startsWith("(")) row
-      else {
-        val close = ReplaceRewrite.closeOf(row, 0)
-        if (close != row.length) row
-        else {
-          val items = ReplaceRewrite.splitTop(row.substring(1, close - 1))
-          val out = items.zipWithIndex.map { case (item, i) =>
-            if (!item.trim.equalsIgnoreCase("DEFAULT")) item
-            else fieldAt(i) match {
-              case Some(f) => defaults.get(f.name.toLowerCase) match {
-                case Some(d) => s"($d)"
-                case None => s"CAST(NULL AS ${f.dataType.sql})"
-              }
-              case None => item // arity mismatch: surface downstream
-            }
-          }
-          "(" + out.mkString(", ") + ")"
-        }
-      }
-    }
-    "VALUES " + rows.mkString(", ")
-  }
-
-  private def alignInsert(target: org.apache.spark.sql.DataFrame,
-      src: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      defaults: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
-    // Source column names can carry dots (an unaliased `CAST(-1.0 AS
-    // DOUBLE)` select item) — quote them so col() doesn't split a
-    // nested-field path.
-    def q(c: String): org.apache.spark.sql.Column =
-      col("`" + c.replace("`", "``") + "`")
-    val tf = target.schema.fields
-    if (cols.isEmpty) {
-      require(src.columns.length == tf.length,
-        s"INSERT: ${src.columns.length} column(s) provided, table has ${tf.length}")
-      src.select(src.columns.toIndexedSeq.zip(tf.toIndexedSeq).map { case (c, f) =>
-        q(c).cast(f.dataType).as(f.name) }: _*)
-    } else {
-      require(src.columns.length == cols.length,
-        s"INSERT: column list has ${cols.length} name(s), query produces ${src.columns.length}")
-      val byPos = cols.map(_.toLowerCase).zip(src.columns).toMap
-      val unknown = cols.filterNot(c => tf.exists(_.name.equalsIgnoreCase(c)))
-      require(unknown.isEmpty, s"INSERT: no such column(s): ${unknown.mkString(", ")}")
-      src.select(tf.toIndexedSeq.map { f =>
-        byPos.get(f.name.toLowerCase) match {
-          case Some(sc) => q(sc).cast(f.dataType).as(f.name)
-          case None => defaults.get(f.name.toLowerCase) match {
-            // Unlisted column with a declared DEFAULT: compile the
-            // expression here (per-insert evaluation, as in DuckDB).
-            case Some(d) => expr(d).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        }
-      }: _*)
-    }
-  }
-
-  private def insertReturningImpl(intoTemp: Boolean)(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 4 && args.forall(_.foldable),
-      "(name, source_query, cols_csv, returning_csv) — constants")
-    val v = args.map(_.eval(null)).toIndexedSeq
-    require(v.forall(_ != null), "insert arguments must be non-NULL")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val name = asString(v(0))
-    val cols = asString(v(2)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val ret = asString(v(3)).trim
-    val target = spark.table(name)
-    val defaults = TempTables.defaultsOf(name)
-    val aligned = alignInsert(target,
-      spark.sql(substituteDefaultKeyword(
-        asString(v(1)), target.schema, cols, defaults)), cols, defaults)
-    // A pure-literal source (VALUES → LocalRelation after optimization)
-    // is already immutable: skip the stage write entirely and append it
-    // lazily — an ingest script of N VALUES-INSERTs then costs N
-    // metadata updates instead of N full-table parquet rewrites
-    // (round 19, verdict-18 #8). Query sources still stage once (their
-    // inputs could mutate later), then append lazily too: the staged
-    // dir is frozen, so the union plan stays snapshot-stable.
-    // Register the OPTIMIZED LocalRelation itself, not `aligned`: the
-    // eligibility check runs AFTER ComputeCurrentTime folds
-    // now()/current_timestamp/current_date, so re-registering the
-    // unoptimized plan would re-evaluate those on every later read of
-    // the union view — inserted values drifting per query (round-19
-    // ADVICE). The LocalRelation's rows are frozen, like the old
-    // parquet stage froze them.
-    val localRel: Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
-      if (!intoTemp) None else (try {
-        aligned.queryExecution.optimizedPlan match {
-          case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            Some(lr)
-          case _ => None
-        }
-      } catch { case scala.util.control.NonFatal(_) => None })
-    val localRows: Option[Long] = localRel.map(_.data.length.toLong)
-    // Staged sources: the inserted-row count rides the stage write as an
-    // Observation instead of a second count() pass over the staged files.
-    // Attached only in this branch — an observe() on `aligned` itself
-    // would wrap the optimized plan in CollectMetrics and defeat the
-    // LocalRelation lazy-append match above.
-    val obsN = org.apache.spark.sql.Observation()
-    val staged = localRel match {
-      case Some(lr) => org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, lr)
-      case None => graft.operators.Scratch.materialize(
-        aligned.observe(obsN,
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n")),
-        s"ins_$name")._1
-    }
-    if (intoTemp) TempTables.putLazy(name, target.union(staged))
-    else staged.write.mode("append").insertInto(name)
-    // Literal sources know their row count without a job.
-    if (ret.isEmpty) tempCountRow(localRows.getOrElse(
-      obsN.get("n").asInstanceOf[Long]))
-    else
-      // Project directly on the staged frame (no throwaway temp view —
-      // a RETURNING-per-row ingest loop would grow the catalog forever).
-      staged.selectExpr(ReplaceRewrite.splitTop(ret).map(_.trim): _*)
-        .queryExecution.analyzed
-  }
-
-  val tempInsertFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("temp_insert"), info("temp_insert"),
-      insertReturningImpl(intoTemp = true) _)
-
-  /** DuckDB's keyed-ingest INSERTs over graft temp tables:
-    * `INSERT OR REPLACE INTO t ...`, `INSERT OR IGNORE INTO t ...`, and
-    * `INSERT INTO t ... ON CONFLICT [(cols)] DO NOTHING` (via
-    * [[TempTableRewrite]]). The conflict target is the statement's
-    * column list when given, else the table's declared PRIMARY KEY.
-    * Semantics pinned against DuckDB 1.0: REPLACE Count = all input
-    * rows; IGNORE/DO NOTHING Count = rows actually inserted; duplicate
-    * keys WITHIN one REPLACE increment raise the constraint error (no
-    * silent arbitrary winner). The new state is one keyed anti-join +
-    * union over the snapshot — at scale the cost tracks the increment
-    * and one pass of the target, never target²; the anti-join shuffles
-    * on the key like any upsert merge.
-    */
-  val tempUpsertFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("temp_upsert"), info("temp_upsert"), (args: Seq[Expression]) => {
-      require((args.size == 5 || args.size == 7) && args.forall(_.foldable),
-        "temp_upsert(name, source_query, cols_csv, keys_csv, mode" +
-          "[, set_csv, where]) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "temp_upsert arguments must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{col, count => fCount, lit}
       val name = asString(v(0))
       val cols = asString(v(2)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val mode = asString(v(4))
-      def fail(msg: String): Nothing =
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
-      val isTemp = TempTables.exists(name)
-      // Catalog (non-temp) tables execute too (round 17): the upsert is
-      // the staged-INSERT-OVERWRITE recipe run mechanically. tableExists
-      // on the session catalog sees persistent tables, not temp views —
-      // an unclaimed name keeps DuckDB's error shape.
-      val isCatalog = !isTemp &&
-        (try spark.sessionState.catalog.tableExists(
-          org.apache.spark.sql.catalyst.TableIdentifier(name))
-        catch { case scala.util.control.NonFatal(_) => false })
-      if (!isTemp && !isCatalog)
-        fail(s"INSERT OR ${mode.toUpperCase} / ON CONFLICT: '$name' is " +
-          "neither a graft temp table nor a catalog table (views cannot " +
-          "be upserted).")
-      val target = spark.table(name)
-      // Temp path: atomic view re-registration (snapshot semantics).
-      // Catalog path: materialize the merged state OUTSIDE the table
-      // first — overwriting a table from a plan that reads the same
-      // table is unsafe — then INSERT OVERWRITE, positionally aligned.
-      // At scale both are one keyed anti-join + union + one table
-      // rewrite; the ignore mode appends only the fresh rows instead.
-      //
-      // DURABILITY CAVEAT (documented divergence, round 18): v1 INSERT
-      // OVERWRITE truncates the target before writing, so a crash
-      // mid-write can lose the table's prior rows — weaker than
-      // DuckDB's transactional ON CONFLICT. The staged materialize
-      // above guards only the self-read, not durability. A v1
-      // file-source table offers no atomic commit to build on (its
-      // location is fixed metadata; a scratch-write + rename still
-      // races readers); production deployments point this at a table
-      // format with a real commit protocol (Iceberg/Delta MERGE), where
-      // the same staged plan commits atomically.
-      def commit(df: org.apache.spark.sql.DataFrame): Unit =
-        if (isTemp) TempTables.put(name, df)
-        else {
-          val (merged, _) = graft.operators.Scratch.materialize(
-            df.select(target.columns.map(col).toIndexedSeq: _*),
-            s"cat_$name")
-          merged.write.mode("overwrite").insertInto(name)
-        }
-      val keys = {
-        val stated = asString(v(3)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        if (stated.nonEmpty) stated
-        else TempTables.keysOf(name).getOrElse(fail(
-          s"'$name' has no PRIMARY KEY declared and the statement names no " +
-            "conflict target — declare one (CREATE [TEMP] TABLE t (id " +
-            "INTEGER PRIMARY KEY, ...)) or use ON CONFLICT (cols) DO " +
-            "NOTHING."))
-      }
-      val missing = keys.filterNot(k =>
-        target.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
-      if (missing.nonEmpty)
-        fail(s"conflict target column(s) not in '$name': ${missing.mkString(", ")}")
-      val upsDefaults = TempTables.defaultsOf(name)
-      val aligned = alignInsert(target,
-        spark.sql(substituteDefaultKeyword(
-          asString(v(1)), target.schema, cols, upsDefaults)),
-        cols, upsDefaults)
-      val (staged, _) = graft.operators.Scratch.materialize(aligned, s"ups_$name")
-      val keyCols = keys.map(col)
-      // Duplicate-key check + input count in ONE aggregate job (they were
-      // two separate full passes over the staged increment — a groupBy +
-      // collect and a count — and the ignore mode paid the groupBy without
-      // ever reading it). count_distinct skips tuples with a NULL key
-      // column, so a mismatch is only a dup SUSPICION: the exact groupBy
-      // probe (below, suspicion-only) decides, keeping null-keyed rows'
-      // semantics identical. Both values are lazy — ignore mode runs
-      // neither job.
-      lazy val (nInput, dupSuspected) = {
-        val r = staged.select(fCount(lit(1)).as("__graft_n"),
-          org.apache.spark.sql.functions.count_distinct(
-            keyCols.head, keyCols.tail: _*).as("__graft_nd")).head()
-        (r.getLong(0), r.getLong(1) < r.getLong(0))
-      }
-      def failIfDupKeys(): Unit = if (dupSuspected) {
-        val dupKeys = staged.groupBy(keyCols: _*)
-          .agg(fCount(lit(1)).as("__graft_n")).filter(col("__graft_n") > 1)
-          .limit(1).collect()
-        if (dupKeys.nonEmpty)
-          fail("PRIMARY KEY or UNIQUE constraint violated: duplicate key " +
-            s"in the inserted rows (${keys.mkString(", ")} = " +
-            s"${dupKeys.head.toSeq.init.mkString(", ")})")
-      }
-      val n = mode match {
-        case "replace" =>
-          failIfDupKeys()
-          commit(target.join(staged.select(keyCols: _*), keys, "left_anti")
-            .unionByName(staged))
-          nInput
-        case "ignore" =>
-          // Conflicts lose silently — against the target AND within the
-          // increment itself (DuckDB inserts sequentially; an arbitrary
-          // per-key representative matches its any-order file scan).
-          // The fresh-row count rides the materializing write as an
-          // Observation instead of a second pass over the fresh set.
-          val obsF = org.apache.spark.sql.Observation()
-          val fresh = staged
-            .dropDuplicates(keys)
-            .join(target.select(keyCols: _*), keys, "left_anti")
-            .observe(obsF, fCount(lit(1)).as("n"))
-          val (freshStaged, _) =
-            graft.operators.Scratch.materialize(fresh, s"upsf_$name")
-          val nFresh = obsF.get("n").asInstanceOf[Long]
-          if (isTemp) TempTables.put(name, target.unionByName(freshStaged))
-          else // catalog: conflicts lose, so only the fresh rows APPEND
-            freshStaged.select(target.columns.map(col).toIndexedSeq: _*)
-              .write.mode("append").insertInto(name)
-          nFresh
-        case "update" =>
-          // ON CONFLICT DO UPDATE SET ... [WHERE ...] — DuckDB 1.0
-          // pinned: bare refs in SET/WHERE are the TARGET row,
-          // EXCLUDED.c is the incoming row, assigning a conflict-target
-          // column is a binder error, a duplicate key WITHIN the
-          // increment is a constraint error, and the Count is
-          // inserted + actually-updated (WHERE-failing conflicts keep
-          // the old row and do not count).
-          import org.apache.spark.sql.functions.{expr, when}
-          failIfDupKeys()
-          val setText = asString(v(5))
-          val whereText = asString(v(6)).trim
-          // EXCLUDED.c / <name>.c → the renamed staged column / the
-          // bare target column (quote-aware via the literal mask).
-          def rewriteRefs(s: String): String = {
-            val refRe = ("(?i)\\b(excluded|" +
-              java.util.regex.Pattern.quote(name) +
-              ")\\s*\\.\\s*([A-Za-z_]\\w*)").r
-            val masked = graft.sql.ReplaceRewrite.maskLiterals(s)
-            val sb = new StringBuilder
-            var pos = 0
-            refRe.findAllMatchIn(masked).foreach { m =>
-              sb.append(s.substring(pos, m.start))
-              val c = s.substring(m.start(2), m.end(2))
-              if (m.group(1).equalsIgnoreCase("excluded"))
-                sb.append("__exc_").append(c)
-              else sb.append('`').append(c).append('`')
-              pos = m.end
-            }
-            sb.append(s.substring(pos))
-            sb.toString
-          }
-          val assigns = graft.sql.ReplaceRewrite.splitTop(setText).map { a =>
-            val eq = {
-              val masked = graft.sql.ReplaceRewrite.maskLiterals(a)
-              masked.indexOf('=')
-            }
-            if (eq <= 0) fail(s"DO UPDATE SET: cannot parse assignment '$a'")
-            val c = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
-            if (!target.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-              fail(s"DO UPDATE SET: column '$c' not in '$name'")
-            if (keys.exists(_.equalsIgnoreCase(c)))
-              fail(s"Can not assign to column '$c' because it is the " +
-                "conflict target (UNIQUE/PRIMARY KEY)")
-            c -> rewriteRefs(a.substring(eq + 1).trim)
-          }.toMap
-          val excluded = staged.select(staged.columns.map(c =>
-            col(c).as(s"__exc_$c")).toIndexedSeq: _*)
-          val joinCond = keys.map(k => col(k) === col(s"__exc_$k"))
-            .reduce(_ && _)
-          val cond = if (whereText.isEmpty) lit(true)
-            else expr(rewriteRefs(whereText))
-          // The updated-row count rides the commit's own execution as an
-          // Observation on the conflict join (counting the rows cond
-          // updates, exactly what the old separate filter(cond).count()
-          // job scanned again); the fresh-row count likewise rides the
-          // fresh set's materializing write. Two fewer passes per
-          // statement; CollectMetrics is row-transparent and forwards
-          // maxRows, so the temp-table local-snapshot gate still sees
-          // the bounded plan.
-          val obsU = org.apache.spark.sql.Observation()
-          val conflicted = target.join(excluded, joinCond, "inner")
-            .observe(obsU,
-              org.apache.spark.sql.functions.sum(
-                when(cond, 1L).otherwise(0L)).as("n"))
-          val updated = conflicted.select(target.columns.map { c =>
-            assigns.find(_._1.equalsIgnoreCase(c)) match {
-              case Some((_, e)) =>
-                // Assignments cast to the COLUMN's type (DuckDB's
-                // contract) — without it the union would silently
-                // widen the whole column.
-                val dt = target.schema(target.schema.fieldIndex(c)).dataType
-                when(cond, expr(e).cast(dt)).otherwise(col(c)).as(c)
-              case None => col(c).as(c)
-            }
-          }.toIndexedSeq: _*)
-          val untouched = target.join(
-            staged.select(keyCols: _*), keys, "left_anti")
-          val obsF = org.apache.spark.sql.Observation()
-          val fresh = staged.join(target.select(keyCols: _*), keys, "left_anti")
-            .observe(obsF, fCount(lit(1)).as("n"))
-          val (freshStaged, _) =
-            graft.operators.Scratch.materialize(fresh, s"upsu_$name")
-          val nFresh = obsF.get("n").asInstanceOf[Long]
-          commit(untouched.unionByName(updated).unionByName(freshStaged))
-          val nUpdated = obsU.get("n") match {
-            case null => 0L // empty conflict set: sum over zero rows
-            case x => x.asInstanceOf[Long]
-          }
-          nFresh + nUpdated
-        case other => fail(s"temp_upsert: unknown mode '$other'")
-      }
-      tempCountRow(n)
+      val ret = asString(v(3)).trim
+      val (staged, n) = DuckCommands.insert(spark, name, asString(v(1)), cols,
+        intoTemp = TempTables.exists(name))
+      if (ret.isEmpty)
+        LocalRelation.fromExternalRows(
+          DataTypeUtils.toAttributes(DuckCommands.countSchema),
+          Seq(org.apache.spark.sql.Row(n())))
+      else
+        // Project directly on the staged frame (no throwaway temp view —
+        // a RETURNING-per-row ingest loop would grow the catalog forever).
+        staged.selectExpr(ReplaceRewrite.splitTop(ret).map(_.trim): _*)
+          .queryExecution.analyzed
     })
 
-  val insertReturningFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("insert_returning"), info("insert_returning"),
-      insertReturningImpl(intoTemp = false) _)
-
-  /** DuckDB's `EXPORT DATABASE 'dir' (FORMAT PARQUET)` / `IMPORT
-    * DATABASE 'dir'` — the whole-catalog snapshot statements. EXPORT
-    * writes every v1 catalog table and every graft temp table
-    * ([[TempTables]]) as `dir/<name>.parquet` plus DuckDB-runnable
-    * `schema.sql`/`load.sql` manifests — the COPY lines glob the part
-    * files, and executing the two scripts in DuckDB restores the data
-    * (verified; DuckDB's own IMPORT DATABASE wrapper additionally
-    * globs `*.parquet` directly under the dir and skips directory
-    * entries, so use the scripts for cross-engine restore). IMPORT
-    * restores every `<name>.parquet` entry as a graft temp table —
-    * session-scoped where DuckDB restores to the main schema
-    * (documented divergence; queries resolve the names identically).
-    * Both parse-fail in Spark and ride the hint chain.
-    */
   /** Spark → DuckDB type spelling for the exported schema.sql manifest.
     * Spark's own `DataType.sql` emits ARRAY<INT> / STRUCT<a: INT> /
     * STRING, none of which DuckDB's parser accepts — the manifest's
@@ -6376,7 +5470,7 @@ object GraftSparkExtensions {
     * UTC-adjusted in parquet) maps to TIMESTAMPTZ; TIMESTAMP_NTZ to
     * DuckDB's plain TIMESTAMP.
     */
-  private def duckTypeOf(dt: org.apache.spark.sql.types.DataType): String = {
+  private[sql] def duckTypeOf(dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types._
     dt match {
       case StringType => "VARCHAR"
@@ -6403,106 +5497,11 @@ object GraftSparkExtensions {
     }
   }
 
-  val exportDatabaseFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("export_database"), info("export_database"), (args: Seq[Expression]) => {
-      require(args.size == 1 && args.forall(_.foldable),
-        "export_database(dir) — a constant path")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "export_database path must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val dir = asString(v(0)).stripSuffix("/")
-      val catalogTables = spark.sessionState.catalog
-        .listTables(spark.sessionState.catalog.getCurrentDatabase)
-        .filter(_.database.isDefined).map(_.table)
-      val tempTables = TempTables.names()
-      val all = (catalogTables ++ tempTables).distinct.sorted
-      // Tables export as INDEPENDENT concurrent jobs (guide §2.6): a
-      // serial per-table loop leaves the cluster idle in every table's
-      // write tail; 3 writes in flight back-fill it. Submission-bounded
-      // pool — compute still runs on Spark's scheduler. Manifests are
-      // built in sorted name order after all writes land, so
-      // schema.sql/load.sql stay deterministic.
-      val exportEc = scala.concurrent.ExecutionContext.fromExecutorService(
-        java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(3, math.max(1, all.size)),
-          (r: Runnable) => {
-            val t = new Thread(r, "graft-export-db"); t.setDaemon(true); t
-          }))
-      val writes = all.map { name =>
-        val df = spark.table(name) // resolve on the caller thread
-        name -> scala.concurrent.Future {
-          df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
-          df.schema
-        }(exportEc)
-      }
-      val schemaSql = new StringBuilder
-      val loadSql = new StringBuilder
-      try writes.foreach { case (name, f) =>
-        val schema = scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration(3600, "s"))
-        val cols = schema.fields.map(f2 =>
-          s""""${f2.name}" ${duckTypeOf(f2.dataType)}""").mkString(", ")
-        schemaSql.append(s"CREATE TABLE $name ($cols);\n")
-        loadSql.append(
-          s"COPY $name FROM '$dir/$name.parquet/*.parquet' (FORMAT 'parquet');\n")
-      } finally exportEc.shutdown()
-      val conf = spark.sparkContext.hadoopConfiguration
-      def writeText(path: String, text: String): Unit = {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val out = p.getFileSystem(conf).create(p, true)
-        try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      writeText(s"$dir/schema.sql", schemaSql.toString)
-      writeText(s"$dir/load.sql", loadSql.toString)
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  val importDatabaseFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("import_database"), info("import_database"), (args: Seq[Expression]) => {
-      require(args.size == 1 && args.forall(_.foldable),
-        "import_database(dir) — a constant path")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "import_database path must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val dir = asString(v(0)).stripSuffix("/")
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).sorted
-      require(entries.nonEmpty, s"import_database: no *.parquet entries under $dir")
-      entries.foreach { e =>
-        val name = e.stripSuffix(".parquet")
-        TempTables.put(name, spark.read.parquet(s"$dir/$e"))
-      }
-      // DuckDB's IMPORT reports the last restored table's row count —
-      // one metadata-only parquet count, not one per table.
-      tempCountRow(
-        spark.table(entries.last.stripSuffix(".parquet")).count())
-    })
-
-  /** Warn-once no-op landing pad for DuckDB maintenance statements
-    * (CREATE/DROP INDEX, VACUUM, bare ANALYZE): prints one stderr line
-    * per statement kind per JVM naming the Spark equivalent, returns
-    * DuckDB's empty result (zero rows).
+  /** Statement kinds already warned about as no-ops (one stderr line
+    * per kind per JVM).
     */
-  private val warnedMaintenance =
+  private[sql] val warnedMaintenance =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  val maintenanceNoopFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("maintenance_noop"), info("maintenance_noop"), (args: Seq[Expression]) => {
-      require(args.size == 2 && args.forall(_.foldable),
-        "maintenance_noop(kind, message) — constant strings")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "maintenance_noop arguments must be non-NULL")
-      val kind = asString(v(0))
-      if (warnedMaintenance.add(kind))
-        System.err.println(s"graft: $kind is a no-op on this engine — ${asString(v(1))}")
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
 
   private val tableInfoSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("cid",
@@ -6549,175 +5548,6 @@ object GraftSparkExtensions {
       LocalRelation.fromExternalRows(
         DataTypeUtils.toAttributes(StructType.fromDDL("name STRING")),
         names.toIndexedSeq.map(n => org.apache.spark.sql.Row(n)))
-    })
-
-  /** BEGIN/COMMIT/ROLLBACK over the graft temp-table layer
-    * ([[TempTables]] — the multi-version mutation protocol makes a
-    * transaction a saved registry state; see the txn* scaladoc there).
-    * Returns DuckDB's empty result; error texts mirror DuckDB's
-    * TransactionContext errors (nested BEGIN, bare COMMIT/ROLLBACK —
-    * pinned on 1.0).
-    */
-  val txnCtlFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("txn_ctl"), info("txn_ctl"), (args: Seq[Expression]) => {
-      require(args.size == 1 && args.head.foldable,
-        "txn_ctl(op) — one constant string: begin|commit|rollback")
-      asString(args.head.eval(null)) match {
-        case "begin" => TempTables.txnBegin()
-        case "commit" => TempTables.txnCommit()
-        case "rollback" => TempTables.txnRollback()
-        case other => throw new IllegalArgumentException(
-          s"txn_ctl: unknown operation '$other' (begin|commit|rollback)")
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  /** COMMENT ON TABLE/COLUMN side effects for temp tables
-    * ([[Comments]]); empty result like DuckDB's DDL. Missing
-    * table/column errors mirror DuckDB's Catalog Error.
-    */
-  val commentCtlFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("comment_ctl"), info("comment_ctl"), (args: Seq[Expression]) => {
-      require(args.size == 4 && args.forall(_.foldable),
-        "comment_ctl(kind, table, column, comment) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      val (kind, tbl, colName) = (asString(v(0)), asString(v(1)), asString(v(2)))
-      val comment = Option(v(3)).map(asString)
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!spark.catalog.tableExists(tbl))
-        throw new IllegalStateException(
-          s"Catalog Error: Table with name $tbl does not exist!")
-      kind match {
-        case "table" => Comments.setTable(tbl, comment)
-        case "column" =>
-          if (!spark.table(tbl).schema.fieldNames
-              .exists(_.equalsIgnoreCase(colName)))
-            throw new IllegalStateException(
-              s"""Catalog Error: Column with name $colName does not exist!""")
-          Comments.setColumn(tbl, colName, comment)
-        case other => throw new IllegalArgumentException(
-          s"comment_ctl: unknown kind '$other'")
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  /** Constraint-stripped catalog CREATE TABLE ([[CatalogPkRewrite]]):
-    * executes the stripped DDL and registers the key columns ONLY after
-    * it succeeds — a failing CREATE must not leave a stale/garbage key
-    * registration behind (round 18, ADVICE). Empty result like DuckDB's
-    * DDL.
-    */
-  val catalogPkCtlFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("catalog_pk_ctl"), info("catalog_pk_ctl"), (args: Seq[Expression]) => {
-      require(args.size == 3 && args.forall(_.foldable),
-        "catalog_pk_ctl(table, keysCsv, strippedDdl) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      val (name, keysCsv, ddl) = (asString(v(0)), asString(v(1)), asString(v(2)))
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.sql(ddl).collect() // throws on failure; keys stay unregistered
-      TempTables.setKeys(name, keysCsv.split(",").map(_.trim).toSeq)
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  /** ATTACH '<dir>' AS name (round 19, verdict-18 #4): registers every
-    * parquet file (and dataset subdirectory) under <dir> as an EXTERNAL
-    * table `name.<base>` in a session-catalog database, so pasted
-    * multi-database scripts address `name.tbl` exactly as in DuckDB.
-    * `.duckdb`-file attaches have no reader here and keep the targeted
-    * hint (raised at the preRewrite claim). READ_ONLY is accepted and
-    * recorded only in spirit — external parquet tables take no writes
-    * through this lane anyway. DETACH drops the database (CASCADE;
-    * external tables: files untouched). Eager ctl TVFs, the
-    * TempTables/catalog_pk_ctl pattern: work happens once at analysis,
-    * result is DuckDB's empty Count shape.
-    */
-  /** Names attach_db created, keyed per session. DETACH may only drop
-    * names in this set: the host refuses to DETACH anything that was
-    * not ATTACHed ("Failed to detach database with name "s1": database
-    * not found" — probed v1.0.0, including for CREATE SCHEMA schemas),
-    * and without the registry a DETACH of a user-created database would
-    * DROP ... CASCADE managed table data (round-19 ADVICE).
-    */
-  private val attachedDbs: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def attachKey(spark: org.apache.spark.sql.SparkSession,
-      name: String): String =
-    java.lang.System.identityHashCode(spark) + "/" + name.toLowerCase
-
-  val attachDbFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("attach_db"), info("attach_db"), (args: Seq[Expression]) => {
-      require(args.size == 3 && args.forall(_.foldable),
-        "attach_db(path, name, ifNotExists) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      val path = asString(v(0)); val name = asString(v(1))
-      val ifNotExists = asString(v(2)) == "true"
-      val spark = org.apache.spark.sql.SparkSession.active
-      def fail(msg: String): Nothing =
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
-      if (spark.catalog.databaseExists(name)) {
-        if (!ifNotExists)
-          fail(s"""Unique file handle conflict: Database "$name" is already attached!""")
-      } else {
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(hPath) || !fs.getFileStatus(hPath).isDirectory)
-          fail(s"ATTACH: '$path' is not a readable directory (this " +
-            "engine attaches DIRECTORIES of parquet files as databases; " +
-            ".duckdb files have no reader here)")
-        val entries = fs.listStatus(hPath).toSeq
-        val tables = entries.flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) None
-          else if (st.isFile &&
-            (n.toLowerCase.endsWith(".parquet") || n.toLowerCase.endsWith(".parq")))
-            Some(n.replaceAll("(?i)\\.(parquet|parq)$", "") -> st.getPath)
-          else if (st.isDirectory) Some(n -> st.getPath)
-          else None
-        }.filter(_._1.matches("[A-Za-z_]\\w*"))
-        if (tables.isEmpty)
-          fail(s"ATTACH: no parquet tables found under '$path'")
-        spark.sql(s"CREATE DATABASE `$name`")
-        tables.foreach { case (tbl, p) =>
-          spark.sql(s"CREATE TABLE `$name`.`$tbl` USING parquet " +
-            s"LOCATION '${p.toString.replace("'", "''")}'")
-        }
-        attachedDbs.add(attachKey(spark, name))
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  val detachDbFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("detach_db"), info("detach_db"), (args: Seq[Expression]) => {
-      require(args.size == 2 && args.forall(_.foldable),
-        "detach_db(name, ifExists) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      val name = asString(v(0)); val ifExists = asString(v(1)) == "true"
-      val spark = org.apache.spark.sql.SparkSession.active
-      // Only databases THIS session attached are detachable — a
-      // user-created database (CREATE SCHEMA + managed tables) gets the
-      // host's not-found error instead of a silent CASCADE drop of its
-      // managed data (round-19 ADVICE; host message probed v1.0.0).
-      if (!attachedDbs.contains(attachKey(spark, name)) ||
-          !spark.catalog.databaseExists(name)) {
-        if (!ifExists) throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"""Failed to detach database with name "$name": database not found"""))
-      } else {
-        spark.sql(s"DROP DATABASE `$name` CASCADE")
-        attachedDbs.remove(attachKey(spark, name))
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
     })
 
   private val duckdbTablesSchema = StructType.fromDDL(
@@ -6773,58 +5603,10 @@ object GraftSparkExtensions {
         DataTypeUtils.toAttributes(duckdbColumnsSchema), rows.toIndexedSeq)
     })
 
-  /** CREATE/DROP SEQUENCE side effects ([[Sequences]]); empty result
-    * like DuckDB's DDL.
-    */
-  val seqCtlFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("seq_ctl"), info("seq_ctl"), (args: Seq[Expression]) => {
-      require(args.size == 9 && args.forall(_.foldable),
-        "seq_ctl(op, name, start, increment, min, max, cycle, replace, " +
-          "ifClause) — constants; ''-encoded optionals")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      def optLong(x: Any): Option[Long] = {
-        val s = asString(x); if (s.isEmpty) None else Some(s.toLong)
-      }
-      asString(v(0)) match {
-        case "create" => Sequences.create(asString(v(1)),
-          start = optLong(v(2)),
-          increment = asString(v(3)).toLong,
-          minValue = optLong(v(4)), maxValue = optLong(v(5)),
-          cycle = v(6).toString.toBoolean,
-          orReplace = v(7).toString.toBoolean,
-          ifNotExists = v(8).toString.toBoolean)
-        case "drop" => Sequences.drop(asString(v(1)),
-          ifExists = v(8).toString.toBoolean)
-        case other => throw new IllegalArgumentException(
-          s"seq_ctl: unknown operation '$other'")
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
-        Seq.empty)
-    })
-
-  /** DuckDB COPY CSV option → DataFrameReader/Writer option name
-    * (1:1 passthrough; applied on both directions).
-    */
-  private val csvOptionKeys = Seq(
-    "delimiter" -> "sep", "quote" -> "quote",
-    "escape" -> "escape", "nullstr" -> "nullValue")
-
-  /** The 'k=v;k=v' extra-options argument of copy_to/copy_from
-    * ([[CopyToRewrite]] encodes DELIMITER/COMPRESSION/QUOTE/ESCAPE/NULL
-    * this way so the TVF arities stay stable).
-    */
-  private def parseCopyOpts(s: String): Map[String, String] =
-    s.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
-      val i = kv.indexOf('=')
-      require(i > 0, s"copy options: expected k=v, got '$kv'")
-      kv.substring(0, i) -> kv.substring(i + 1)
-    }.toMap
-
   /** First top-level `=` that is an assignment operator (not ==, <=,
     * >=, !=, <>), outside strings/quotes/parens; -1 when absent.
     */
-  private def topLevelEq(s: String): Int = {
+  private[sql] def topLevelEq(s: String): Int = {
     var i = 0
     var depth = 0
     val n = s.length
@@ -6857,23 +5639,16 @@ object GraftSparkExtensions {
 
   import org.apache.spark.sql.Row
 
-  private val createVariablesSchema = StructType.fromDDL(
-    "variable_name STRING, variable_index STRING, status STRING")
-  private val createConstraintsSchema = StructType.fromDDL(
-    "constraint_name STRING, constraint_index STRING, status STRING")
-  private val setCoefficientsSchema = StructType.fromDDL(
-    "constraint_name STRING, variable_name STRING, coefficient DOUBLE, status STRING")
-
   val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = Seq(
-    tvf("highs_create_variables", 6, createVariablesSchema) { v =>
+    tvf("highs_create_variables", 6, HighsFunctions.createVariablesSchema) { v =>
       HighsFunctions.createVariablesRows(asString(v(0)), asString(v(1)),
         asDouble(v(2)), asDouble(v(3)), asDouble(v(4)), asString(v(5)))
     },
-    tvf("highs_create_constraints", 4, createConstraintsSchema) { v =>
+    tvf("highs_create_constraints", 4, HighsFunctions.createConstraintsSchema) { v =>
       HighsFunctions.createConstraintsRows(asString(v(0)), asString(v(1)),
         asDouble(v(2)), asDouble(v(3)))
     },
-    tvf("highs_set_coefficients", 4, setCoefficientsSchema) { v =>
+    tvf("highs_set_coefficients", 4, HighsFunctions.setCoefficientsSchema) { v =>
       HighsFunctions.setCoefficientsRows(asString(v(0)), asString(v(1)),
         asString(v(2)), asDouble(v(3)))
     },
@@ -6890,32 +5665,13 @@ object GraftSparkExtensions {
     unionByNameFn,
     setopByNameFn,
     positionalJoinFn,
-    copyToFn,
-    copyFromFn,
-    updateTableFn,
-    deleteFromFn,
     deleteReturningFn,
     updateReturningFn,
-    updateFromFn,
-    deleteUsingFn,
-    maintenanceNoopFn,
-    txnCtlFn,
-    seqCtlFn,
-    commentCtlFn,
-    catalogPkCtlFn,
-    attachDbFn,
-    detachDbFn,
     duckdbTablesFn,
     duckdbColumnsFn,
     tableInfoFn,
     showTablesFn,
-    tempTableAsFn,
-    tempTableEmptyFn,
-    tempInsertFn,
-    tempUpsertFn,
     insertReturningFn,
-    exportDatabaseFn,
-    importDatabaseFn,
     readParquetFn,
     readCsvFn,
     readCsvAutoFn,

@@ -2,6 +2,10 @@ package graft.sql
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+import DuckLiterals.{halveBackslashes, quote}
+
 /** DuckDB's temp-table DML surface executing — the backbone of pasted
   * ETL scripts:
   *
@@ -19,26 +23,20 @@ import scala.util.control.NonFatal
   *
   * Spark has no temp TABLES (CREATE TEMPORARY TABLE is rejected;
   * TEMPORARY VIEWs are lazy plans, not snapshots), so these intercept
-  * PRE-delegation and land on eager TVFs backed by [[TempTables]] —
-  * materialized scratch-parquet snapshots fronted by a same-named temp
-  * view. INSERT ... RETURNING also works against CATALOG tables (the
-  * insert_returning TVF appends and returns the projected inserted
-  * rows, DuckDB's contract).
+  * PRE-delegation and become commands ([[DuckCommands]]) over
+  * [[TempTables]] — materialized scratch-parquet snapshots fronted by a
+  * same-named temp view. INSERT ... RETURNING returns rows, so it stays
+  * a query: the insert_returning table function appends (to a temp or a
+  * CATALOG table) and returns the projected inserted rows, DuckDB's
+  * contract.
   *
   * Scope guards: single-part plain names; INSERT/DROP claim only names
   * in the temp-table registry (catalog tables keep Spark's native
-  * INSERT path — except when RETURNING forces the TVF); `BY NAME`
-  * inserts into temp tables decline to the hint. DROP TABLE on a temp
-  * table performs the registry drop directly in the rewrite (a
-  * pre-delegation side effect, like POSITIONAL JOIN's collapse) and
-  * returns DuckDB's empty result via a zero-row marker.
-  */
-/** Single-evaluation extractor for the pre-delegation match (DROP's
-  * registry removal is a side effect — the rewrite must run exactly
-  * once per statement).
+  * INSERT path — except when RETURNING forces the table function);
+  * `BY NAME` inserts into temp tables decline to the hint.
   */
 object TempTableRewritten {
-  def unapply(sql: String): Option[String] =
+  def unapply(sql: String): Option[Either[LogicalPlan, String]] =
     if (TempTableRewrite.isShaped(sql)) TempTableRewrite.rewrite(sql)
     else None
 }
@@ -62,15 +60,11 @@ object TempTableRewrite {
   private val dropRe =
     """(?is)\A\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
 
-  def isShaped(sql: String): Boolean =
+  private val shapeRe =
     """(?is)\A\s*(CREATE\s+(OR\s+REPLACE\s+)?TEMP|INSERT\s+(OR\s+(REPLACE|IGNORE)\s+)?INTO|DROP\s+TABLE)\b""".r
-      .findFirstIn(sql).isDefined
 
-  // Quote-doubling only: the spliced slice already carries this
-  // level's backslash doubling (DuckLiterals entry transform); the
-  // one unescape at re-parse consumes it.
-  private def esc(s: String) =
-    s.replace("'", "''")
+  def isShaped(sql: String): Boolean = shapeRe.findFirstIn(sql).isDefined
+
 
   /** Persistent-catalog presence (NOT temp views — a view upsert must
     * keep DuckDB's error shape, raised by the TVF).
@@ -100,24 +94,22 @@ object TempTableRewrite {
       else Some((Seq.empty[String], body0))
     } else Some((Seq.empty[String], body0))
 
-  def rewrite(sql: String): Option[String] =
+  /** Left(command), Right(insert_returning call text), or None →
+    * Spark's native path.
+    */
+  def rewrite(sql: String): Option[Either[LogicalPlan, String]] =
     try {
       sql match {
         case createRe(orReplace, name, query) =>
-          Some(s"SELECT * FROM temp_table_as('${esc(name)}', " +
-            s"'${esc(query.trim)}', ${orReplace != null})")
+          Some(Left(CreateTempTableAsCommand(name, halveBackslashes(query.trim), orReplace != null)))
         case createColsRe(orReplace, name, colDefs) =>
-          Some(s"SELECT * FROM temp_table_empty('${esc(name)}', " +
-            s"'${esc(colDefs.trim)}', ${orReplace != null})")
-        case dropRe(ifExists, name) if TempTables.exists(name) =>
-          // Side effect here (pre-delegation is deterministic); the
-          // marker select returns DuckDB's empty result.
-          TempTables.drop(name)
-          Some("SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0")
+          Some(Left(CreateTempTableCommand(name, halveBackslashes(colDefs.trim), orReplace != null)))
+        case dropRe(_, name) if TempTables.exists(name) =>
+          Some(Left(DropTempTableCommand(name)))
         case insertOrRe(modeWord, name, rest) =>
           // INSERT OR REPLACE / OR IGNORE — keyed upsert against the
           // declared PRIMARY KEY: graft temp tables AND (round 17)
-          // catalog tables (the upsert TVF runs the staged
+          // catalog tables (the upsert command runs the staged
           // INSERT-OVERWRITE recipe there; the PK comes from the
           // constraint-stripping CREATE TABLE claim).
           if (!TempTables.exists(name) && !catalogHas(name)) return None
@@ -128,8 +120,9 @@ object TempTableRewrite {
           if (words.exists(w => w._1 == "RETURNING" || w._1 == "CONFLICT"))
             return None
           val (cols, body) = splitColsBody(rest.trim).getOrElse(return None)
-          Some(s"SELECT * FROM temp_upsert('${esc(name)}', '${esc(body)}', " +
-            s"'${esc(cols.mkString(","))}', '', '${modeWord.toLowerCase}')")
+          Some(Left(UpsertCommand(name, halveBackslashes(body), cols, Nil,
+            if (modeWord.equalsIgnoreCase("REPLACE")) ConflictAction.Replace
+            else ConflictAction.Ignore)))
         case insertRe(name, rest) =>
           // RETURNING split: last top-level RETURNING word.
           val words = QualifyRewrite.topLevelWords(rest)
@@ -168,9 +161,8 @@ object TempTableRewrite {
               val tail = clause.substring(m.end).trim
               if (m.group(2).equalsIgnoreCase("NOTHING")) {
                 if (tail.nonEmpty) return None
-                Some(s"SELECT * FROM temp_upsert('${esc(name)}', " +
-                  s"'${esc(body)}', '${esc(cols.mkString(","))}', " +
-                  s"'${esc(keys.mkString(","))}', 'ignore')")
+                Some(Left(UpsertCommand(name, halveBackslashes(body), cols, keys,
+                  ConflictAction.Ignore)))
               } else {
                 // DO UPDATE SET a = expr, ... [WHERE cond] — the WHERE
                 // split uses the quote/comment-aware word scan (a
@@ -187,10 +179,8 @@ object TempTableRewrite {
                   case None => (setAll.trim, "")
                 }
                 if (setText.isEmpty) return None
-                Some(s"SELECT * FROM temp_upsert('${esc(name)}', " +
-                  s"'${esc(body)}', '${esc(cols.mkString(","))}', " +
-                  s"'${esc(keys.mkString(","))}', 'update', " +
-                  s"'${esc(setText)}', '${esc(whereText)}')")
+                Some(Left(UpsertCommand(name, halveBackslashes(body), cols, keys,
+                  ConflictAction.Update(halveBackslashes(setText), halveBackslashes(whereText)))))
               }
             case None =>
               if (!isTemp && returning.isEmpty) return None // native INSERT
@@ -204,10 +194,12 @@ object TempTableRewrite {
                 if (!cat) return None
               }
               val (cols, body) = splitColsBody(body0).getOrElse(return None)
-              val fn = if (isTemp) "temp_insert" else "insert_returning"
-              Some(s"SELECT * FROM $fn('${esc(name)}', '${esc(body)}', " +
-                s"'${esc(cols.mkString(","))}', " +
-                s"'${esc(returning.getOrElse(""))}')")
+              returning match {
+                case None => Some(Left(InsertIntoTempCommand(name, halveBackslashes(body), cols)))
+                case Some(ret) =>
+                  Some(Right(s"SELECT * FROM insert_returning(${quote(name)}, " +
+                    s"${quote(body)}, ${quote(cols.mkString(","))}, ${quote(ret)})"))
+              }
           }
         case _ => None
       }

@@ -2,6 +2,10 @@ package graft.sql
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+import DuckLiterals.{halveBackslashes, quote}
+
 /** Literal `UPDATE t SET ... [WHERE ...]` and `DELETE FROM t [WHERE ...]`
   * statements EXECUTING against v1 catalog tables — DuckDB's mutation
   * DML, pasted unchanged.
@@ -14,10 +18,13 @@ import scala.util.control.NonFatal
   * stage (a table cannot be overwritten by a plan that reads it) →
   * INSERT OVERWRITE. This rewrite does that mechanically: the statement
   * is intercepted PRE-delegation (parse succeeds, so the
-  * ParseException-driven hint chain never sees it) and rewritten onto
-  * the eager `update_table()` / `delete_from()` TVFs, which run the
-  * staged overwrite at analysis and return DuckDB's one-row `Count`
-  * (rows updated / deleted).
+  * ParseException-driven hint chain never sees it) and becomes an
+  * [[UpdateTableCommand]] / [[DeleteFromCommand]] (joined forms:
+  * [[UpdateFromCommand]] / [[DeleteUsingCommand]]), which Spark runs
+  * once as a command: the staged overwrite, returning DuckDB's one-row
+  * `Count` (rows updated / deleted). The RETURNING forms return rows,
+  * so they stay queries over the update_returning / delete_returning
+  * table functions.
   *
   * Scope guard: ONLY single-part names that resolve to an existing
   * non-temporary v1 session-catalog table are claimed. Temp views,
@@ -63,19 +70,18 @@ object UpdateDeleteRewrite {
       }
     } catch { case NonFatal(_) => false }
 
-  // Quote-doubling only: the spliced slice already carries this
-  // level's backslash doubling (DuckLiterals entry transform), and the
-  // one unescape at re-parse consumes it — the TVF receives the
-  // fragment at DuckDB level and re-doubles via parseExpression.
-  private def esc(s: String): String = s.replace("'", "''")
+  /** An IN/EXISTS subquery in a predicate. */
+  private[sql] val subqueryRe = "(?is)\\b(?:IN|EXISTS)\\s*\\(\\s*SELECT\\b".r
 
   private def stripSemi(s: String): String = {
     val t = s.trim
     if (t.endsWith(";")) t.dropRight(1).trim else t
   }
 
-  /** The TVF call text, or None → delegate to Spark's native path. */
-  def rewrite(sql: String): Option[String] =
+  /** Left(command), Right(RETURNING table-function call text), or
+    * None → delegate to Spark's native path.
+    */
+  def rewrite(sql: String): Option[Either[LogicalPlan, String]] =
     try {
       val words = QualifyRewrite.topLevelWords(sql)
       if (words.isEmpty) return None
@@ -93,7 +99,7 @@ object UpdateDeleteRewrite {
           // the NEW values of matched rows.
           val retW = words.find(w => w._1 == "RETURNING" && w._2 > setStart)
           // Joined UPDATE (round 18): a top-level FROM between SET and
-          // WHERE routes to the update_from TVF (arbitrary-match-once
+          // WHERE routes to UpdateFromCommand (arbitrary-match-once
           // semantics, DuckDB-pinned).
           val fromW = words.find(w => w._1 == "FROM" && w._2 > setStart &&
             whereW.forall(w._2 < _._2) && retW.forall(w._2 < _._2))
@@ -109,27 +115,26 @@ object UpdateDeleteRewrite {
           if (setText.isEmpty) return None
           if (retW.isDefined) {
             if (fromW.isDefined || retText.isEmpty) return None
-            return Some(s"SELECT * FROM update_returning('${esc(tbl)}', " +
-              s"'${esc(setText)}', '${esc(whereText)}', '${esc(retText)}')")
+            return Some(Right(s"SELECT * FROM update_returning(${quote(tbl)}, " +
+              s"${quote(setText)}, ${quote(whereText)}, ${quote(retText)})"))
           }
           fromW match {
             case Some((_, fp)) =>
               val srcText = stripSemi(sql.substring(fp + "FROM".length,
                 whereW.map(_._2).getOrElse(sql.length)))
               if (srcText.isEmpty) return None
-              return Some(s"SELECT * FROM update_from('${esc(tbl)}', " +
-                s"'${esc(setText)}', '${esc(srcText)}', '${esc(whereText)}')")
+              return Some(Left(UpdateFromCommand(tbl, halveBackslashes(setText),
+                halveBackslashes(srcText), halveBackslashes(whereText))))
             case None =>
           }
-          // update_table compiles the predicate inside a Project
+          // UpdateTableCommand compiles the predicate inside a Project
           // (when(expr(where), ...)), where Spark forbids IN/EXISTS
           // subqueries ("only allowed in Filter") — the raw error
-          // surfaces from deep inside the TVF. Decline loudly with the
+          // would surface from deep inside the command. Decline loudly with the
           // workable rewrite instead. (DELETE is unaffected: its
           // predicate compiles to a real Filter, where subqueries ARE
           // legal.)
-          if ("(?is)\\b(?:IN|EXISTS)\\s*\\(\\s*SELECT\\b".r
-            .findFirstIn(whereText).isDefined)
+          if (subqueryRe.findFirstIn(whereText).isDefined)
             throw new org.apache.spark.sql.AnalysisException(
               "USER_RAISED_EXCEPTION",
               Map("errorMessage" ->
@@ -142,8 +147,8 @@ object UpdateDeleteRewrite {
                   "join-free predicate, or express the mutation as " +
                   "CREATE OR REPLACE TEMP TABLE t AS SELECT with a " +
                   "CASE over a LEFT SEMI-joined flag.")))
-          Some(s"SELECT * FROM update_table('${esc(tbl)}', " +
-            s"'${esc(setText)}', '${esc(whereText)}')")
+          Some(Left(UpdateTableCommand(tbl, halveBackslashes(setText),
+            halveBackslashes(whereText))))
         case "DELETE" =>
           if (words.length < 2 || words(1)._1 != "FROM") return None
           val fromEnd = words(1)._2 + "FROM".length
@@ -151,7 +156,7 @@ object UpdateDeleteRewrite {
           // RETURNING exprs (round 20): host returns the DELETED rows.
           val retW = words.find(w => w._1 == "RETURNING" && w._2 > fromEnd)
           // Joined DELETE (round 18): DELETE FROM t USING src WHERE ...
-          // routes to the delete_using TVF (NOT EXISTS anti-join).
+          // routes to DeleteUsingCommand (NOT EXISTS anti-join).
           val usingW = words.find(w => w._1 == "USING" && w._2 > fromEnd &&
             whereW.forall(w._2 < _._2) && retW.forall(w._2 < _._2))
           val tbl = stripSemi(sql.substring(fromEnd,
@@ -167,18 +172,18 @@ object UpdateDeleteRewrite {
             .getOrElse("")
           if (retW.isDefined) {
             if (usingW.isDefined || retText.isEmpty) return None
-            return Some(s"SELECT * FROM delete_returning('${esc(tbl)}', " +
-              s"'${esc(whereText)}', '${esc(retText)}')")
+            return Some(Right(s"SELECT * FROM delete_returning(${quote(tbl)}, " +
+              s"${quote(whereText)}, ${quote(retText)})"))
           }
           usingW match {
             case Some((_, up)) =>
               val srcText = stripSemi(sql.substring(up + "USING".length,
                 whereW.map(_._2).getOrElse(sql.length)))
               if (srcText.isEmpty) return None
-              Some(s"SELECT * FROM delete_using('${esc(tbl)}', " +
-                s"'${esc(srcText)}', '${esc(whereText)}')")
+              Some(Left(DeleteUsingCommand(tbl, halveBackslashes(srcText),
+                halveBackslashes(whereText))))
             case None =>
-              Some(s"SELECT * FROM delete_from('${esc(tbl)}', '${esc(whereText)}')")
+              Some(Left(DeleteFromCommand(tbl, halveBackslashes(whereText))))
           }
         case _ => None
       }

@@ -266,9 +266,17 @@ class Round19DialectSpec extends AnyFunSuite {
 
   test("backslash literals inside executed temp-table DML keep raw semantics") {
     spark.sql("DROP TABLE IF EXISTS t19_bs")
-    spark.sql("CREATE TEMP TABLE t19_bs AS SELECT 'a12b34' AS s")
+    spark.sql("CREATE TEMP TABLE t19_bs AS SELECT 'a12b34' AS s, '\\d+' AS p")
+    assert(one[String]("SELECT p FROM t19_bs") == "\\d+")
+    spark.sql("INSERT INTO t19_bs VALUES ('c56', '\\d+')")
+    assert(one[Long]("SELECT count(*) FROM t19_bs WHERE p = '\\d+'") == 2L)
     spark.sql("UPDATE t19_bs SET s = regexp_replace(s, '\\d+', '#', 'g')")
-    assert(one[String]("SELECT s FROM t19_bs") == "a#b#")
+    assert(rows("SELECT s FROM t19_bs ORDER BY s") == Seq(Seq("a#b#"), Seq("c#")))
+    val out = java.nio.file.Files.createTempDirectory("t19_bs")
+      .resolve("bs.parquet").toString
+    spark.sql(s"COPY (SELECT regexp_replace(s, '\\d+', '!') AS r FROM " +
+      s"(VALUES ('x12y')) v(s)) TO '$out'")
+    assert(spark.read.parquet(out).head().getString(0) == "x!y")
     spark.sql("DROP TABLE t19_bs")
   }
 }

@@ -224,6 +224,11 @@ class Round20Sweep13Spec extends AnyFunSuite {
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int])
     assert(d.toSeq == Seq(Seq(12, "y!"), Seq(13, "z!")))
     assert(rows("SELECT * FROM swret") == Seq(Seq(1, "x")))
+    // A column assigned twice is an error, as in plain UPDATE and DuckDB.
+    val dup = intercept[Exception](
+      spark.sql("UPDATE swret SET a = 1, A = 2 RETURNING a").collect())
+    assert(dup.getMessage.contains("assigned more than once"), dup.getMessage)
+    assert(rows("SELECT * FROM swret") == Seq(Seq(1, "x")))
     val i = spark.sql("INSERT INTO swret VALUES (5,'n') RETURNING b, a")
     assert(i.collect().map(_.toSeq).toSeq == Seq(Seq("n", 5)))
   }

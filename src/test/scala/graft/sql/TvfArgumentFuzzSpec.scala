@@ -66,6 +66,18 @@ class TvfArgumentFuzzSpec extends AnyFunSuite {
   }
 
   test("malformed TVF invocations fail as clean analysis errors (400 random draws)") {
+    // The registered set, pinned: a DuckDB statement runs as a command
+    // (DuckCommands), never as a callable table function.
+    assert(GraftSparkExtensions.tableFunctions.map(_._1.funcName).sorted == Seq(
+      "asof_join", "delete_returning", "dedup", "duck_describe",
+      "duck_show_tables", "duckdb_columns", "duckdb_tables", "fixpoint",
+      "fixpoint_keyed", "generate_series", "glob", "highs_create_constraints",
+      "highs_create_variables", "highs_set_coefficients", "highs_solve",
+      "insert_returning", "parquet_file_metadata", "parquet_metadata",
+      "parquet_schema", "pivot_auto", "positional_join", "pragma_table_info",
+      "read_csv", "read_csv_auto", "read_json", "read_json_auto",
+      "read_parquet", "setop_by_name", "span_scrub", "summarize",
+      "union_by_name", "update_returning").sorted)
     (1 to 400).foreach { _ =>
       val name = tvfs(rnd.nextInt(tvfs.size))
       val arity = rnd.nextInt(10) // 0..9 spans below/at/above every TVF's range
