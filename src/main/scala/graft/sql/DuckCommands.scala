@@ -527,6 +527,91 @@ case class InsertIntoTempCommand(name: String, query: String, columns: Seq[Strin
     Seq(Row(insert(spark, name, query, columns, intoTemp = true)._2()))
 }
 
+/** DuckDB's `UPDATE/DELETE/INSERT ... RETURNING exprs`: the write, plus
+  * the written rows projected through the RETURNING list, which `run`
+  * collects to the driver and returns as the statement's result. Only
+  * the parser builds these ([[UpdateDeleteRewrite]], [[TempTableRewrite]]),
+  * so the rewrites' scope guards always hold. `output` is the
+  * projection's schema, empty until [[withOutput]] analyses the
+  * projection over the table; the rewrites call it when the statement is
+  * parsed (nothing runs), so EXPLAIN renders the schema.
+  */
+sealed trait ReturningCommand extends LeafRunnableCommand {
+  def withOutput(spark: SparkSession): ReturningCommand
+
+  protected def project(rows: DataFrame, returning: String): DataFrame =
+    rows.selectExpr(ReplaceRewrite.splitTop(returning).map(_.trim): _*)
+
+  /** The schema of `projected`, nullable. A failure to analyse it is
+    * the statement's error: the rewrites hand any other exception back
+    * to Spark's own parser.
+    */
+  protected def outputOf(projected: => DataFrame): Seq[Attribute] =
+    try DataTypeUtils.toAttributes(StructType(projected.schema.map(_.copy(nullable = true))))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException => throw e
+      case scala.util.control.NonFatal(e) => fail(e.getMessage)
+    }
+}
+
+/** DELETE ... RETURNING: returns the deleted rows, captured before the
+  * staged overwrite.
+  */
+case class DeleteReturningCommand(table: String, where: String, returning: String,
+    override val output: Seq[Attribute] = Nil) extends ReturningCommand {
+  private def returned(base: DataFrame): DataFrame = project(
+    if (where.isEmpty) base else base.filter(coalesce(expr(where), lit(false))), returning)
+
+  override def withOutput(spark: SparkSession): DeleteReturningCommand =
+    copy(output = outputOf(returned(spark.table(table))))
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    val base = spark.table(table)
+    val rows = returned(base).collect().toSeq
+    val keepPred = if (where.isEmpty) lit(false) else !coalesce(expr(where), lit(false))
+    overwrite(spark, table, base.filter(keepPred), "delete_stage")
+    rows
+  }
+}
+
+/** UPDATE ... RETURNING: returns the matched rows' NEW values (the SET
+  * list evaluated over the old row, as the update itself does),
+  * captured before the staged overwrite.
+  */
+case class UpdateReturningCommand(table: String, set: String, where: String,
+    returning: String, override val output: Seq[Attribute] = Nil) extends ReturningCommand {
+  private def returned(base: DataFrame): DataFrame = project(
+    (if (where.isEmpty) base else base.filter(expr(where)))
+      .select(updatedColumns(base.schema, assignments(set, base.schema), ""): _*),
+    returning)
+
+  override def withOutput(spark: SparkSession): UpdateReturningCommand =
+    copy(output = outputOf(returned(spark.table(table))))
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    val base = spark.table(table)
+    val rows = returned(base).collect().toSeq
+    overwrite(spark, table,
+      base.select(updatedColumns(base.schema, assignments(set, base.schema), where): _*),
+      "update_stage")
+    rows
+  }
+}
+
+/** `INSERT INTO t [(cols)] <query> RETURNING exprs` into a graft temp
+  * table or a catalog table: appends, then returns the inserted rows.
+  */
+case class InsertReturningCommand(name: String, query: String, columns: Seq[String],
+    returning: String, override val output: Seq[Attribute] = Nil) extends ReturningCommand {
+  override def withOutput(spark: SparkSession): InsertReturningCommand =
+    copy(output = outputOf(project(spark.table(name), returning)))
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    val (staged, _) = insert(spark, name, query, columns, intoTemp = TempTables.exists(name))
+    project(staged, returning).collect().toSeq
+  }
+}
+
 /** What an upsert does with an incoming row whose key is already
   * present: replace the row, keep it, or update it by `set` (the
   * `a = expr, ...` list) where `where` holds (empty: always).

@@ -182,12 +182,6 @@ object DuckLiterals {
     (value.toString, i)
   }
 
-  /** `s` as a SQL string literal of transformed text: quotes doubled
-    * only — the slice already carries this level's backslash doubling,
-    * which the one unescape at re-parse consumes.
-    */
-  def quote(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** The value of a '...' literal's body sliced from transformed text. */
   def literalValue(body: String): String =
     body.replace("''", "'").replace("\\\\", "\\")

@@ -48,7 +48,7 @@ object EnumTypes {
   def ddlRewrite(sql: String): Option[DuckCommand] = sql match {
     case createTypeRe(name, body) =>
       val vals = ReplaceRewrite.splitTop(body).map(_.trim).map {
-        case litRe(v) => v.replace("''", "'")
+        case litRe(v) => DuckLiterals.literalValue(v)
         case other => return None // non-literal member: decline
       }
       if (vals.isEmpty) None else Some(CreateEnumTypeCommand(name, vals.toSeq))
@@ -76,8 +76,11 @@ object EnumTypes {
     var changed = cur ne text
     var m = ReplaceRewrite.maskLiterals(cur)
 
+    // Members are raw values; the text carries the entry's doubled
+    // backslashes (DuckLiterals), so a member's backslashes double too.
     def arrayLit(vals: Seq[String]): String =
-      "array(" + vals.map(v => s"'${v.replace("'", "''")}'").mkString(", ") + ")"
+      "array(" + vals.map(v =>
+        s"'${v.replace("\\", "\\\\").replace("'", "''")}'").mkString(", ") + ")"
 
     // enum_range(NULL::name) — fold first, before the cast claim eats
     // the `::name`.

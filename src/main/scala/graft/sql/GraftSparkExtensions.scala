@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,11 +19,15 @@ import graft.highs.HighsFunctions
   * Usage: `.config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")`
   * or `SparkSession.builder.withExtensions(new GraftSparkExtensions)`.
   *
-  * Eagerness contract: `spark.sql(...)` analyzes its plan eagerly, and the
-  * TVF builder below runs at analysis — so each statement mutates the model
-  * registry exactly when the statement is issued, preserving the
-  * reference's statement-at-a-time semantics (SURVEY.md §3 E2) inside
-  * Spark's otherwise-lazy evaluation.
+  * Execution contract: a table function's builder only checks its
+  * constant arguments ([[GraftSparkExtensions.constArgs]]) and returns a
+  * plan; the work runs when the statement executes ([[DriverRows]]). The
+  * HiGHS model builders write, so they return commands: Spark runs each
+  * once when the statement is issued — the reference's
+  * statement-at-a-time semantics (SURVEY.md §3 E2) — and EXPLAIN runs
+  * nothing. The exceptions are `fixpoint`, `fixpoint_keyed`, `dedup` and
+  * `pivot_auto`: their result is a distributed plan whose schema comes
+  * from running user SQL, so they run while the call is analysed.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,6 +38,7 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftSparkExtensions.vectorNormFn)
     GraftSparkExtensions.duckdbAliasFns.foreach(ext.injectFunction)
     GraftSparkExtensions.tableFunctions.foreach(ext.injectTableFunction)
+    ext.injectPlannerStrategy(_ => DriverRowsStrategy)
     ext.injectParser((_, delegate) => new GraftHintParser(delegate))
     // Grouped 1-arg bitstring_agg → column-wide range (ADVICE-18 #1).
     ext.injectOptimizerRule(_ => BitstringGlobalRange)
@@ -2202,7 +2207,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // setKeys left stale registrations behind failed CREATEs).
     case CatalogPkRewritten(stripped, name, keys) =>
       Left(CreateTableWithKeyCommand(name, keys, DuckLiterals.halveBackslashes(stripped)))
-    case TempTableRewritten(r) => r
+    case TempTableRewritten(cmd) => Left(cmd)
     // CREATE TYPE ... AS ENUM / DROP TYPE (round 18 — sql/EnumTypes):
     // session enum registry; casts claim in the failure chain.
     case EnumDdl(cmd) => Left(cmd)
@@ -2287,7 +2292,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // staged-overwrite commands; anything else (plain temp views, DSv2
       // tables, multipart names) keeps Spark's native path and
       // semantics.
-      UpdateDeleteRewrite.rewrite(sqlText).getOrElse(Right(sqlText))
+      UpdateDeleteRewrite.rewrite(sqlText).map(Left(_)).getOrElse(Right(sqlText))
     case IndexStatement(cmd) => Left(cmd)
     // DuckDB's session variables (host ≥1.1): SET VARIABLE both creates
     // and replaces, so it maps to Spark 4's DECLARE OR REPLACE VARIABLE
@@ -2351,23 +2356,6 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     ("(?is)\\A\\s*EXPLAIN\\s+(?:(EXTENDED|FORMATTED|CODEGEN|COST|" +
       "ANALYZE(?!\\s+TABLES?\\b))\\s+)?((?!LOGICAL\\b).+)\\z").r
 
-  /** The table functions behind UPDATE/DELETE/INSERT ... RETURNING:
-    * they write while they are analysed, and EXPLAIN analyses its
-    * statement, so EXPLAIN refuses a plan that calls one.
-    */
-  private val writingTableFunctions =
-    Set("update_returning", "delete_returning", "insert_returning")
-
-  private def callsWriter(plan: LogicalPlan): Boolean = plan match {
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
-        if writingTableFunctions(u.name.last.toLowerCase(java.util.Locale.ROOT)) => true
-    case p =>
-      (p.children ++ p.innerChildren ++ p.subqueries).exists {
-        case q: LogicalPlan => callsWriter(q)
-        case _ => false
-      }
-  }
-
   /** One entry for every parse: EXPLAIN wraps graft's own parse of its
     * statement, so a DuckDB statement explains as the command it runs
     * as, without running it (Spark's EXPLAIN plans in SKIP mode);
@@ -2381,12 +2369,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private def parseWith(sqlText: String, parse: String => LogicalPlan): LogicalPlan =
     sqlText match {
       case explainRe(mode, statement) =>
-        val plan = parseWith(statement, parse)
-        if (callsWriter(plan))
-          DuckCommands.fail("EXPLAIN of UPDATE, DELETE or INSERT ... RETURNING is " +
-            "not supported: those statements write while they are planned")
         org.apache.spark.sql.execution.command.ExplainCommand(
-          plan,
+          parseWith(statement, parse),
           org.apache.spark.sql.execution.ExplainMode.fromString(
             Option(mode).filterNot(_.equalsIgnoreCase("ANALYZE")).getOrElse("simple")))
       case _ =>
@@ -4432,14 +4416,8 @@ object GraftSparkExtensions {
     * sorted ascending like DuckDB's output; bounded by the match count
     * (file LISTING, not file contents).
     */
-  val globFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("glob"), info("glob"), (args: Seq[Expression]) => {
-      if (args.size != 1)
-        throw new IllegalArgumentException(s"glob(pattern) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "glob arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "glob arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
+  val globFn = driverFn("glob(pattern)", 1 to 1, StructType.fromDDL("file STRING")) {
+    (spark, v) =>
       val pattern = asString(v(0))
       val p = new org.apache.hadoop.fs.Path(pattern)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -4451,10 +4429,8 @@ object GraftSparkExtensions {
       val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
         .map(st => if (schemed) st.getPath.toString else st.getPath.toUri.getPath)
         .sorted
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("file STRING")),
-        matches.map(org.apache.spark.sql.Row(_)))
-    })
+      matches.map(org.apache.spark.sql.Row(_))
+  }
 
   /** DuckDB's parquet introspection TVFs ([[graft.sources.ParquetIntrospect]]):
     * footer reads fan out across executors; only the file LISTING runs
@@ -4464,11 +4440,7 @@ object GraftSparkExtensions {
       build: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier(name), info(name), (args: Seq[Expression]) => {
-      if (args.size != 1)
-        throw new IllegalArgumentException(s"$name(path_glob) — got ${args.size} arguments")
-      require(args.forall(_.foldable), s"$name arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), s"$name arguments must be non-NULL constants")
+      val v = constArgs(s"$name(path_glob)", args, 1 to 1)
       val spark = org.apache.spark.sql.SparkSession.active
       build(spark, asString(v(0))).queryExecution.analyzed
     })
@@ -4512,25 +4484,38 @@ object GraftSparkExtensions {
     case other => other.toString.toDouble
   }
 
-  /** The reference's four HiGHS table functions (highs_create_variables,
-    * highs_create_constraints, highs_set_coefficients, highs_solve):
-    * arguments must be constant-foldable (the reference's bind phase
-    * extracts constants the same way, highs_extension.cpp:229-258); the
-    * model-registry effect runs here, at analysis, and the rows become a
-    * LocalRelation.
+  /** The one argument check of graft's table functions (the reference's
+    * bind phase, highs_extension.cpp:229-258): an argument count within
+    * `arity`, each argument a constant that is not NULL. Returns their
+    * values; `signature` names the function in the errors.
     */
-  private def tvf(name: String, arity: Int, schema: StructType)(
-      exec: IndexedSeq[Any] => Seq[org.apache.spark.sql.Row])
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier(name), info(name), (args: Seq[Expression]) => {
-      if (args.size != arity)
-        throw new IllegalArgumentException(
-          s"$name expects $arity arguments, got ${args.size}")
-      require(args.forall(_.foldable), s"$name arguments must be constants")
-      val vals = args.map(_.eval(null)).toIndexedSeq
-      require(vals.forall(_ != null), s"$name arguments must be non-NULL constants")
-      LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema), exec(vals))
+  private[sql] def constArgs(signature: String, args: Seq[Expression],
+      arity: Range): IndexedSeq[Any] = {
+    val name = signature.takeWhile(_ != '(')
+    if (!arity.contains(args.size))
+      throw new IllegalArgumentException(s"$signature — got ${args.size} arguments")
+    require(args.forall(_.foldable), s"$name arguments must be constants")
+    val v = args.map(_.eval(null)).toIndexedSeq
+    require(v.forall(_ != null), s"$name arguments must be non-NULL constants")
+    v
+  }
+
+  /** A table function whose rows are computed on the driver
+    * ([[DriverTableFunction]]): the builder checks the arguments and
+    * returns a [[DriverRows]] node, or a [[TableFunctionCommand]] when
+    * the function `writes`.
+    */
+  private def driverFn(signature: String, arity: Range, schema: StructType,
+      writes: Boolean = false)(
+      rows: (org.apache.spark.sql.SparkSession, IndexedSeq[Any]) => Seq[org.apache.spark.sql.Row])
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = {
+    val f = new DriverTableFunction(signature.takeWhile(_ != '('), schema)(rows)
+    (FunctionIdentifier(f.name), info(f.name), (args: Seq[Expression]) => {
+      val v = constArgs(signature, args, arity)
+      val output = DataTypeUtils.toAttributes(schema)
+      if (writes) TableFunctionCommand(f, v, output) else DriverRows(f, v, output)
     })
+  }
 
   private def asBool(v: Any): Boolean = v match {
     case b: java.lang.Boolean => b.booleanValue()
@@ -4554,7 +4539,8 @@ object GraftSparkExtensions {
     *                         'ts', 'ot', 'last_order'[, strict[, inner]])
     * }}}
     *
-    * Unlike the solver TVFs this does NOT collect anything: the builder
+    * Unlike the driver-side functions ([[DriverRows]]) this collects
+    * nothing and computes no rows: the builder
     * resolves the two table names against the session catalog, constructs
     * the linear union+window as-of plan ([[graft.operators.AsOfJoin]] —
     * one hash shuffle, no pair inflation), and splices that DISTRIBUTED
@@ -4563,13 +4549,9 @@ object GraftSparkExtensions {
     */
   val asofJoinFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("asof_join"), info("asof_join"), (args: Seq[Expression]) => {
-      if (args.size < 6 || args.size > 9)
-        throw new IllegalArgumentException(
-          "asof_join(left_table, right_table, on, left_order, right_order, " +
-            s"payload_csv[, strict[, inner[, forward]]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "asof_join arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "asof_join arguments must be non-NULL constants")
+      val v = constArgs("asof_join(left_table, right_table, on, left_order, right_order, " +
+          "payload_csv[, strict[, inner[, forward]]])",
+        args, 6 to 9)
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.operators.AsOfJoin.asofJoinMulti(
         left = spark.table(asString(v(0))),
@@ -4597,19 +4579,23 @@ object GraftSparkExtensions {
     *
     * Semi-naive evaluation, same engine as the Scala API: the step SQL is
     * re-analyzed each round against that round's materialized frontier,
-    * rounds run at analysis time of the outer statement (the same
-    * eagerness contract as the solver TVFs), and the returned plan is the
-    * flat multi-scan of the disjoint frontier files — distributed, never
-    * collected.
+    * rounds run at analysis time of the outer statement, and the returned
+    * plan is the flat multi-scan of the disjoint frontier files —
+    * distributed, never collected.
+    *
+    * `fixpoint`, `fixpoint_keyed`, `dedup` and `pivot_auto` are the table
+    * functions that still work while their call is analysed (EXPLAIN runs
+    * them too): their result is a distributed plan whose SCHEMA comes from
+    * running user SQL, so no node can carry their output before they run.
+    * Every other graft table function checks its arguments
+    * ([[constArgs]]) and at most builds a plan at analysis; of those,
+    * only `positional_join` starts jobs there (`zipWithIndex` sizes its
+    * inputs' partitions).
     */
   val fixpointFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("fixpoint"), info("fixpoint"), (args: Seq[Expression]) => {
-      if (args.size < 2 || args.size > 4)
-        throw new IllegalArgumentException(
-          s"fixpoint(seed_table, step_sql[, max_rounds[, buckets]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "fixpoint arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "fixpoint arguments must be non-NULL constants")
+      val v = constArgs("fixpoint(seed_table, step_sql[, max_rounds[, buckets]])",
+        args, 2 to 4)
       val spark = org.apache.spark.sql.SparkSession.active
       val stepSql = asString(v(1))
       require(stepSql.contains("__frontier"),
@@ -4675,20 +4661,16 @@ object GraftSparkExtensions {
     *
     * The literal DuckDB `WITH RECURSIVE r USING KEY (...)` statement also
     * lands here via the hint parser's tier-1 rewrite
-    * ([[UsingKeyRewrite]]). Same eagerness and distribution contract as
-    * `fixpoint`: rounds run at analysis, the returned plan unions the
+    * ([[UsingKeyRewrite]]). Same contract as `fixpoint`: rounds run at
+    * analysis, the returned plan unions the
     * round tables with per-key latest-round resolution, nothing is
     * collected.
     */
   val fixpointKeyedFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("fixpoint_keyed"), info("fixpoint_keyed"), (args: Seq[Expression]) => {
-      if (args.size < 3 || args.size > 5)
-        throw new IllegalArgumentException(
-          "fixpoint_keyed(seed_table_or_sql, step_sql, key_csv" +
-            s"[, max_rounds[, buckets]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "fixpoint_keyed arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "fixpoint_keyed arguments must be non-NULL constants")
+      val v = constArgs("fixpoint_keyed(seed_table_or_sql, step_sql, key_csv" +
+          "[, max_rounds[, buckets]])",
+        args, 3 to 5)
       val spark = org.apache.spark.sql.SparkSession.active
       val stepSql = asString(v(1))
       // __recurring = DuckDB's `recurring.<name>` relation: the
@@ -4734,22 +4716,18 @@ object GraftSparkExtensions {
     * SELECT doc_id FROM dedup('docs_v', 0.8[, max_rounds])
     * }}}
     *
-    * The propagation runs at analysis time (the solver TVFs' eagerness
-    * contract — an iterative pipeline cannot be a lazy plan); the spliced
-    * result is the corpus anti-joined against the materialized drop set,
-    * distributed, nothing collected. Threshold 1.0 takes the one-shuffle
+    * The propagation runs at analysis time (an iterative pipeline cannot
+    * be a lazy plan — one of the four exceptions named at
+    * [[fixpointFn]]); the spliced result is the corpus anti-joined
+    * against the materialized drop set, distributed, nothing collected. Threshold 1.0 takes the one-shuffle
     * exact-hash path. Component labels are memoized per (canonicalized
     * corpus plan, threshold), so SQL and Scala calls over the same corpus
     * share a single LSH + propagation run.
     */
   val dedupFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("dedup"), info("dedup"), (args: Seq[Expression]) => {
-      if (args.size < 2 || args.size > 3)
-        throw new IllegalArgumentException(
-          s"dedup(table, threshold[, max_rounds]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "dedup arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "dedup arguments must be non-NULL constants")
+      val v = constArgs("dedup(table, threshold[, max_rounds])",
+        args, 2 to 3)
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.operators.Dedup.deduplicate(
         spark.table(asString(v(0))), asDouble(v(1)),
@@ -4770,12 +4748,8 @@ object GraftSparkExtensions {
     */
   val spanScrubFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("span_scrub"), info("span_scrub"), (args: Seq[Expression]) => {
-      if (args.isEmpty || args.size > 3)
-        throw new IllegalArgumentException(
-          s"span_scrub(table[, n[, min_df]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "span_scrub arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "span_scrub arguments must be non-NULL constants")
+      val v = constArgs("span_scrub(table[, n[, min_df]])",
+        args, 1 to 3)
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.operators.TextAnalysis.scrubDupSpans(
         spark.table(asString(v(0))),
@@ -4786,32 +4760,22 @@ object GraftSparkExtensions {
 
   /** DuckDB-style `SUMMARIZE` as a table function
     * ([[graft.operators.Summarize]]): row per column, exact counts/min/max,
-    * one aggregate job over the named (temp-view or catalog) table. The
-    * literal statement `SUMMARIZE t` also lands here via the hint parser's
-    * rewrite to `SELECT * FROM summarize('t')`. The stats job runs at
-    * analysis (the result is a bounded LocalRelation — one row per COLUMN,
-    * never per data row), matching the solver TVFs' eagerness contract.
+    * one aggregate job over the named (temp-view or catalog) table or
+    * query. The literal statement `SUMMARIZE t` also lands here via the
+    * hint parser's rewrite to `SELECT * FROM summarize('t')`. The result
+    * is one row per COLUMN, computed on the driver when the statement
+    * executes ([[DriverRows]]); EXPLAIN runs no stats job.
     */
-  val summarizeFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("summarize"), info("summarize"), (args: Seq[Expression]) => {
-      if (args.size != 1)
-        throw new IllegalArgumentException(
-          s"summarize(table) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "summarize arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "summarize arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(graft.operators.Summarize.schema),
-        graft.operators.Summarize.rows(tableOrSql(spark, asString(v(0)))))
-    })
+  val summarizeFn = driverFn("summarize(table)", 1 to 1, graft.operators.Summarize.schema) {
+    (spark, v) => graft.operators.Summarize.rows(tableOrSql(spark, asString(v(0))))
+  }
 
   /** DuckDB's `PIVOT` STATEMENT (`PIVOT t ON c USING agg [GROUP BY g]`)
     * as a table function — dynamic pivot-column discovery, which Spark's
     * SQL PIVOT cannot do (it demands an IN list) but the Dataset API can
     * (`groupBy().pivot(col)` collects the distinct values itself: one
-    * bounded distinct job at analysis, the solver TVFs' eagerness
-    * contract — the COLUMN set must exist before the plan does).
+    * bounded distinct job at analysis — the COLUMN set must exist before
+    * the plan does; one of the four exceptions named at [[fixpointFn]]).
     * Omitting `group_csv` reproduces DuckDB's default: group by every
     * column that is neither pivoted nor consumed by the aggregate
     * (detected textually against the source schema). The literal PIVOT
@@ -4819,13 +4783,9 @@ object GraftSparkExtensions {
     */
   val pivotAutoFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("pivot_auto"), info("pivot_auto"), (args: Seq[Expression]) => {
-      if (args.size < 2 || args.size > 5)
-        throw new IllegalArgumentException(
-          "pivot_auto(table_or_sql, on_col[, agg_sql[, group_csv[, " +
-            s"in_values_csv]]]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "pivot_auto arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "pivot_auto arguments must be non-NULL constants")
+      val v = constArgs("pivot_auto(table_or_sql, on_col[, agg_sql[, group_csv[, " +
+          "in_values_csv]]])",
+        args, 2 to 5)
       val spark = org.apache.spark.sql.SparkSession.active
       val src = tableOrSql(spark, asString(v(0)))
       // ON may be a CSV of columns (DuckDB's multi-ON pivot): the pivot
@@ -4936,12 +4896,8 @@ object GraftSparkExtensions {
     */
   val unionByNameFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("union_by_name"), info("union_by_name"), (args: Seq[Expression]) => {
-      if (args.size < 2 || args.size > 3)
-        throw new IllegalArgumentException(
-          s"union_by_name(left_table_or_sql, right_table_or_sql[, all]) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "union_by_name arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "union_by_name arguments must be non-NULL constants")
+      val v = constArgs("union_by_name(left_table_or_sql, right_table_or_sql[, all])",
+        args, 2 to 3)
       val spark = org.apache.spark.sql.SparkSession.active
       val merged = tableOrSql(spark, asString(v(0)))
         .unionByName(tableOrSql(spark, asString(v(1))), allowMissingColumns = true)
@@ -4961,13 +4917,9 @@ object GraftSparkExtensions {
     */
   val setopByNameFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("setop_by_name"), info("setop_by_name"), (args: Seq[Expression]) => {
-      if (args.size != 3)
-        throw new IllegalArgumentException(
-          "setop_by_name(left_table_or_sql, right_table_or_sql, " +
-            s"'intersect|intersect_all|except|except_all') — got ${args.size} arguments")
-      require(args.forall(_.foldable), "setop_by_name arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "setop_by_name arguments must be non-NULL constants")
+      val v = constArgs("setop_by_name(left_table_or_sql, right_table_or_sql, " +
+          "'intersect|intersect_all|except|except_all')",
+        args, 3 to 3)
       val spark = org.apache.spark.sql.SparkSession.active
       val l = tableOrSql(spark, asString(v(0)))
       val r = tableOrSql(spark, asString(v(1)))
@@ -5001,12 +4953,8 @@ object GraftSparkExtensions {
     */
   val positionalJoinFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("positional_join"), info("positional_join"), (args: Seq[Expression]) => {
-      if (args.size != 2)
-        throw new IllegalArgumentException(
-          s"positional_join(left_table_or_sql, right_table_or_sql) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "positional_join arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "positional_join arguments must be non-NULL constants")
+      val v = constArgs("positional_join(left_table_or_sql, right_table_or_sql)",
+        args, 2 to 2)
       val spark = org.apache.spark.sql.SparkSession.active
       import org.apache.spark.sql.{DataFrame, Row}
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -5030,36 +4978,6 @@ object GraftSparkExtensions {
         .queryExecution.analyzed
     })
 
-  /** DuckDB's file-reading table functions (`read_parquet`, `read_csv`,
-    * `read_csv_auto`, `read_json`, `read_json_auto` — the first line of
-    * most pasted DuckDB scripts) as PURE lazy plan splices: the path
-    * (globs included — Spark's reader expands them) becomes a normal
-    * distributed datasource scan that Catalyst keeps optimizing through,
-    * pushdown and pruning intact. CSV/JSON get schema inference
-    * (DuckDB's auto-detection equivalent; one extra sampling pass at
-    * plan time — at 100 TB declare the schema instead:
-    * spark.read.schema(...)). DuckDB's named parameters
-    * (`header=true`, `hive_partitioning=...`) don't parse in Spark SQL;
-    * the positional forms here are read_csv(path[, header[, delim]]) —
-    * unsupported extras raise a clear signature error naming the
-    * DataFrameReader options.
-    */
-  private def readerFn(name: String, maxArity: Int)(
-      build: (org.apache.spark.sql.SparkSession, IndexedSeq[Any]) => org.apache.spark.sql.DataFrame)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier(name), info(name), (args: Seq[Expression]) => {
-      if (args.isEmpty || args.size > maxArity)
-        throw new IllegalArgumentException(
-          s"$name(path[, ...]) expects 1-$maxArity constant arguments, got " +
-            s"${args.size}; for reader options beyond that use " +
-            "spark.read.option(...) directly")
-      require(args.forall(_.foldable), s"$name arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), s"$name arguments must be non-NULL constants")
-      build(org.apache.spark.sql.SparkSession.active, v)
-        .queryExecution.analyzed
-    })
-
   /** The marker + separators [[namedReaderCallRewrite]] uses to ship
     * DuckDB named reader options (`read_csv('f', header = true)`)
     * through one ordinary string argument: the named pairs cannot stay
@@ -5072,10 +4990,7 @@ object GraftSparkExtensions {
 
   private def namedReaderArgs(name: String, args: Seq[Expression],
       maxPositional: Int): (IndexedSeq[Any], Map[String, Any]) = {
-    require(args.forall(_.foldable), s"$name arguments must be constants " +
-      "or key = constant options")
-    val vs = args.map(_.eval(null)).toIndexedSeq
-    require(vs.forall(_ != null), s"$name arguments must be non-NULL")
+    val vs = constArgs(s"$name(path[, ...])", args, 1 to Int.MaxValue)
     val (pos, named) = vs.lastOption.collect {
       case s if asString(s).startsWith(NamedOptsMarker) =>
         val body = asString(s).stripPrefix(NamedOptsMarker)
@@ -5119,13 +5034,23 @@ object GraftSparkExtensions {
     }
   }
 
+  /** DuckDB's file-reading table functions (`read_parquet`, `read_csv`,
+    * `read_csv_auto`, `read_json`, `read_json_auto` — the first line of
+    * most pasted DuckDB scripts) as PURE lazy plan splices: the path
+    * (globs included — Spark's reader expands them) becomes a normal
+    * distributed datasource scan that Catalyst keeps optimizing through,
+    * pushdown and pruning intact. CSV/JSON get schema inference
+    * (DuckDB's auto-detection equivalent; one extra sampling pass at
+    * plan time — at 100 TB declare the schema instead:
+    * spark.read.schema(...)). DuckDB's named options arrive folded by
+    * [[namedReaderCallRewrite]]; unsupported ones raise a clear error
+    * naming the DataFrameReader options.
+    */
   private def namedReaderFn(name: String, maxPositional: Int)(
       build: (org.apache.spark.sql.SparkSession, IndexedSeq[Any],
         Map[String, Any]) => org.apache.spark.sql.DataFrame)
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier(name), info(name), (args: Seq[Expression]) => {
-      if (args.isEmpty) throw new IllegalArgumentException(
-        s"$name(path[, ...]) expects at least the path argument")
       val (pos, named) = namedReaderArgs(name, args, maxPositional)
       require(pos.nonEmpty, s"$name: the path must be positional")
       build(org.apache.spark.sql.SparkSession.active, pos, named)
@@ -5242,9 +5167,6 @@ object GraftSparkExtensions {
   val generateSeriesFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("generate_series"), info("generate_series"),
       (args: Seq[Expression]) => {
-        if (args.isEmpty || args.size > 3)
-          throw new IllegalArgumentException(
-            s"generate_series([start,] stop[, step]) — got ${args.size} arguments")
         // Temporal form: DATE/TIMESTAMP bounds with an INTERVAL step —
         // DuckDB returns TIMESTAMPs even for DATE bounds (pinned on
         // 1.0), so both bounds cast to TIMESTAMP and the series
@@ -5270,9 +5192,7 @@ object GraftSparkExtensions {
               s"CAST(${args(1).sql} AS TIMESTAMP), ${args(2).sql})) " +
               "AS generate_series").queryExecution.analyzed
         } else {
-        require(args.forall(_.foldable), "generate_series arguments must be constants")
-        val v = args.map(_.eval(null)).toIndexedSeq
-        require(v.forall(_ != null), "generate_series arguments must be non-NULL constants")
+        val v = constArgs("generate_series([start,] stop[, step])", args, 1 to 3)
         def asLong(x: Any): Long = x match {
           case n: java.lang.Number => n.longValue()
           case other => other.toString.toLong
@@ -5330,13 +5250,8 @@ object GraftSparkExtensions {
     }
   }
 
-  private val describeSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("column_name", StringType),
-    org.apache.spark.sql.types.StructField("column_type", StringType),
-    org.apache.spark.sql.types.StructField("null", StringType),
-    org.apache.spark.sql.types.StructField("key", StringType),
-    org.apache.spark.sql.types.StructField("default", StringType),
-    org.apache.spark.sql.types.StructField("extra", StringType)))
+  private val describeSchema = StructType.fromDDL("column_name STRING, " +
+    "column_type STRING, `null` STRING, key STRING, `default` STRING, extra STRING")
 
   /** DuckDB-shaped DESCRIBE as a table function: one row per column
     * with DuckDB's exact six-column header and type spellings. The
@@ -5345,122 +5260,12 @@ object GraftSparkExtensions {
     * DESCRIBE output, and hijacking it by default would change stock
     * behavior; the TVF itself is always callable.
     */
-  val duckDescribeFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("duck_describe"), info("duck_describe"), (args: Seq[Expression]) => {
-      if (args.size != 1)
-        throw new IllegalArgumentException(
-          s"duck_describe(table) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "duck_describe arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "duck_describe arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val rows = spark.table(asString(v(0))).schema.map { f =>
-        org.apache.spark.sql.Row(f.name, duckTypeName(f.dataType),
-          if (f.nullable) "YES" else "NO", null, null, null)
-      }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(describeSchema), rows)
-    })
-
-  /** DELETE ... RETURNING exprs (round-20 fourteenth probe): the host
-    * returns the DELETED rows projected through the RETURNING list.
-    * The projection is captured to scratch BEFORE the staged overwrite
-    * mutates the table (the returned plan is a plain parquet scan of
-    * that snapshot — the scratch dir stays for the session, like every
-    * eager-TVF result that outlives its statement).
-    */
-  val deleteReturningFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("delete_returning"), info("delete_returning"), (args: Seq[Expression]) => {
-      if (args.size != 3)
-        throw new IllegalArgumentException(
-          s"delete_returning(table, where_or_empty, returning_exprs) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "delete_returning arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "delete_returning arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{coalesce, expr, lit}
-      val table = asString(v(0))
-      val whereText = asString(v(1)).trim
-      val retText = asString(v(2)).trim
-      require(retText.nonEmpty, "delete_returning: empty RETURNING list")
-      val base = spark.table(table)
-      val doomed =
-        if (whereText.isEmpty) base
-        else base.filter(coalesce(expr(whereText), lit(false)))
-      val returned = doomed.selectExpr(
-        ReplaceRewrite.splitTop(retText).map(_.trim): _*)
-      val (cap, _) =
-        graft.operators.Scratch.materialize(returned, "delete_returning")
-      val keepPred =
-        if (whereText.isEmpty) lit(false)
-        else !coalesce(expr(whereText), lit(false))
-      val kept = base.filter(keepPred)
-      DuckCommands.overwrite(spark, table, kept, "delete_stage")
-      cap.queryExecution.analyzed
-    })
-
-  /** UPDATE ... RETURNING exprs: the host returns the NEW row values of
-    * matched rows. The capture projects matched OLD rows through the
-    * SET overrides (evaluated over old values — standard UPDATE
-    * semantics) and then the RETURNING list, snapshotted to scratch
-    * before the overwrite.
-    */
-  val updateReturningFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("update_returning"), info("update_returning"), (args: Seq[Expression]) => {
-      if (args.size != 4)
-        throw new IllegalArgumentException(
-          s"update_returning(table, set_assignments, where_or_empty, returning_exprs) — got ${args.size} arguments")
-      require(args.forall(_.foldable), "update_returning arguments must be constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "update_returning arguments must be non-NULL constants")
-      val spark = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.expr
-      val table = asString(v(0))
-      val whereText = asString(v(2)).trim
-      val retText = asString(v(3)).trim
-      require(retText.nonEmpty, "update_returning: empty RETURNING list")
-      val base = spark.table(table)
-      val as = DuckCommands.assignments(asString(v(1)), base.schema)
-      val matchedOld =
-        if (whereText.isEmpty) base else base.filter(expr(whereText))
-      val newRows = matchedOld.select(DuckCommands.updatedColumns(base.schema, as, ""): _*)
-      val returned = newRows.selectExpr(
-        ReplaceRewrite.splitTop(retText).map(_.trim): _*)
-      val (cap, _) =
-        graft.operators.Scratch.materialize(returned, "update_returning")
-      DuckCommands.overwrite(spark, table,
-        base.select(DuckCommands.updatedColumns(base.schema, as, whereText): _*),
-        "update_stage")
-      cap.queryExecution.analyzed
-    })
-
-  /** `INSERT INTO t [(cols)] <query> RETURNING exprs` into a graft temp
-    * table or a catalog table (via [[TempTableRewrite]]): appends, then
-    * returns the inserted rows projected through the RETURNING list,
-    * DuckDB's contract.
-    */
-  val insertReturningFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("insert_returning"), info("insert_returning"), (args: Seq[Expression]) => {
-      require(args.size == 4 && args.forall(_.foldable),
-        "insert_returning(name, source_query, cols_csv, returning_csv) — constants")
-      val v = args.map(_.eval(null)).toIndexedSeq
-      require(v.forall(_ != null), "insert_returning arguments must be non-NULL")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val name = asString(v(0))
-      val cols = asString(v(2)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val ret = asString(v(3)).trim
-      val (staged, n) = DuckCommands.insert(spark, name, asString(v(1)), cols,
-        intoTemp = TempTables.exists(name))
-      if (ret.isEmpty)
-        LocalRelation.fromExternalRows(
-          DataTypeUtils.toAttributes(DuckCommands.countSchema),
-          Seq(org.apache.spark.sql.Row(n())))
-      else
-        // Project directly on the staged frame (no throwaway temp view —
-        // a RETURNING-per-row ingest loop would grow the catalog forever).
-        staged.selectExpr(ReplaceRewrite.splitTop(ret).map(_.trim): _*)
-          .queryExecution.analyzed
-    })
+  val duckDescribeFn = driverFn("duck_describe(table)", 1 to 1, describeSchema) { (spark, v) =>
+    spark.table(asString(v(0))).schema.map { f =>
+      org.apache.spark.sql.Row(f.name, duckTypeName(f.dataType),
+        if (f.nullable) "YES" else "NO", null, null, null)
+    }
+  }
 
   /** Spark → DuckDB type spelling for the exported schema.sql manifest.
     * Spark's own `DataType.sql` emits ARRAY<INT> / STRUCT<a: INT> /
@@ -5503,16 +5308,8 @@ object GraftSparkExtensions {
   private[sql] val warnedMaintenance =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private val tableInfoSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("cid",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("name", StringType),
-    org.apache.spark.sql.types.StructField("type", StringType),
-    org.apache.spark.sql.types.StructField("notnull",
-      org.apache.spark.sql.types.BooleanType, nullable = false),
-    org.apache.spark.sql.types.StructField("dflt_value", StringType),
-    org.apache.spark.sql.types.StructField("pk",
-      org.apache.spark.sql.types.BooleanType, nullable = false)))
+  private val tableInfoSchema = StructType.fromDDL("cid INT, name STRING, " +
+    "type STRING, notnull BOOLEAN NOT NULL, dflt_value STRING, pk BOOLEAN NOT NULL")
 
   /** DuckDB's `pragma_table_info` table function (also the target of the
     * `PRAGMA table_info('t')` statement rewrite): one row per column with
@@ -5521,34 +5318,42 @@ object GraftSparkExtensions {
     * PK columns are NOT NULL in DuckDB — plus the relation's own
     * nullability; declared DEFAULTs aren't tracked (dflt_value NULL).
     */
-  val tableInfoFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("pragma_table_info"), info("pragma_table_info"), (args: Seq[Expression]) => {
-      require(args.size == 1 && args.head.foldable,
-        "pragma_table_info(table) — one constant string")
-      val tbl = asString(args.head.eval(null))
-      val spark = org.apache.spark.sql.SparkSession.active
+  val tableInfoFn = driverFn("pragma_table_info(table)", 1 to 1, tableInfoSchema) {
+    (spark, v) =>
+      val tbl = asString(v(0))
       val pkCols = TempTables.keysOf(tbl).getOrElse(Nil).map(_.toLowerCase).toSet
-      val rows = spark.table(tbl).schema.zipWithIndex.map { case (f, i) =>
+      spark.table(tbl).schema.zipWithIndex.map { case (f, i) =>
         val isPk = pkCols.contains(f.name.toLowerCase)
         org.apache.spark.sql.Row(i, f.name, duckTypeName(f.dataType),
           isPk || !f.nullable, null, isPk)
       }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(tableInfoSchema), rows)
-    })
+  }
 
   /** `PRAGMA show_tables` — DuckDB's one-column (name) listing of the
     * session's tables, sorted.
     */
-  val showTablesFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("duck_show_tables"), info("duck_show_tables"), (args: Seq[Expression]) => {
-      require(args.isEmpty, "duck_show_tables() takes no arguments")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val names = spark.catalog.listTables().collect().map(_.name).sorted
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(StructType.fromDDL("name STRING")),
-        names.toIndexedSeq.map(n => org.apache.spark.sql.Row(n)))
-    })
+  val showTablesFn = driverFn("duck_show_tables()", 0 to 0, StructType.fromDDL("name STRING")) {
+    (spark, _) => listTables(spark).map(t => org.apache.spark.sql.Row(t.name))
+  }
+
+  /** A table as `spark.catalog.listTables()` reports it. */
+  private case class ListedTable(name: String, temporary: Boolean, database: String,
+      description: Option[String])
+
+  /** The tables `spark.catalog.listTables()` lists — the current
+    * database's and the local temp views — sorted by name, read from the
+    * session catalog: `listTables()` itself runs a Spark job to list them.
+    */
+  private def listTables(spark: org.apache.spark.sql.SparkSession): Seq[ListedTable] = {
+    val cat = spark.sessionState.catalog
+    cat.listTables(cat.getCurrentDatabase).map { id =>
+      val temp = cat.isTempView(id)
+      val description =
+        if (temp) None
+        else scala.util.Try(cat.getTableMetadata(id).comment).toOption.flatten
+      ListedTable(id.table, temp, id.database.getOrElse("memory"), description)
+    }.sortBy(_.name)
+  }
 
   private val duckdbTablesSchema = StructType.fromDDL(
     "database_name STRING, schema_name STRING, table_name STRING, " +
@@ -5559,21 +5364,15 @@ object GraftSparkExtensions {
     * Temp views report DuckDB's (temp, main) address; catalog tables
     * their own database, with Spark's table-level comment as fallback.
     */
-  val duckdbTablesFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("duckdb_tables"), info("duckdb_tables"), (args: Seq[Expression]) => {
-      require(args.isEmpty, "duckdb_tables() takes no arguments")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val rows = spark.catalog.listTables().collect().sortBy(_.name).map { t =>
+  val duckdbTablesFn = driverFn("duckdb_tables()", 0 to 0, duckdbTablesSchema) {
+    (spark, _) =>
+      listTables(spark).map { t =>
         val comment = Comments.tableComment(t.name)
-          .orElse(Option(t.description).filter(_.nonEmpty))
-        org.apache.spark.sql.Row(
-          if (t.isTemporary) "temp" else Option(t.database).getOrElse("memory"),
-          if (t.isTemporary) "main" else "main",
-          t.name, t.isTemporary, comment.orNull)
+          .orElse(t.description.filter(_.nonEmpty))
+        org.apache.spark.sql.Row(if (t.temporary) "temp" else t.database, "main",
+          t.name, t.temporary, comment.orNull)
       }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(duckdbTablesSchema), rows.toIndexedSeq)
-    })
+  }
 
   private val duckdbColumnsSchema = StructType.fromDDL(
     "database_name STRING, schema_name STRING, table_name STRING, " +
@@ -5583,25 +5382,20 @@ object GraftSparkExtensions {
     * visible table, 1-based column_index, DuckDB type spellings, COMMENT
     * ON text.
     */
-  val duckdbColumnsFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier("duckdb_columns"), info("duckdb_columns"), (args: Seq[Expression]) => {
-      require(args.isEmpty, "duckdb_columns() takes no arguments")
-      val spark = org.apache.spark.sql.SparkSession.active
-      val rows = spark.catalog.listTables().collect().sortBy(_.name).flatMap { t =>
+  val duckdbColumnsFn = driverFn("duckdb_columns()", 0 to 0, duckdbColumnsSchema) {
+    (spark, _) =>
+      listTables(spark).flatMap { t =>
         val schema =
           try spark.table(t.name).schema
           catch { case scala.util.control.NonFatal(_) =>
             org.apache.spark.sql.types.StructType(Nil) }
         schema.zipWithIndex.map { case (f, i) =>
-          org.apache.spark.sql.Row(
-            if (t.isTemporary) "temp" else Option(t.database).getOrElse("memory"),
+          org.apache.spark.sql.Row(if (t.temporary) "temp" else t.database,
             "main", t.name, f.name, i + 1, duckTypeName(f.dataType),
             Comments.columnComment(t.name, f.name).orNull)
         }
       }
-      LocalRelation.fromExternalRows(
-        DataTypeUtils.toAttributes(duckdbColumnsSchema), rows.toIndexedSeq)
-    })
+  }
 
   /** First top-level `=` that is an assignment operator (not ==, <=,
     * >=, !=, <>), outside strings/quotes/parens; -1 when absent.
@@ -5640,19 +5434,23 @@ object GraftSparkExtensions {
   import org.apache.spark.sql.Row
 
   val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = Seq(
-    tvf("highs_create_variables", 6, HighsFunctions.createVariablesSchema) { v =>
+    driverFn("highs_create_variables(model_name, variable_name, lower_bound, " +
+        "upper_bound, objective_coefficient, variable_type)", 6 to 6,
+        HighsFunctions.createVariablesSchema, writes = true) { (_, v) =>
       HighsFunctions.createVariablesRows(asString(v(0)), asString(v(1)),
         asDouble(v(2)), asDouble(v(3)), asDouble(v(4)), asString(v(5)))
     },
-    tvf("highs_create_constraints", 4, HighsFunctions.createConstraintsSchema) { v =>
+    driverFn("highs_create_constraints(model_name, constraint_name, lower_bound, " +
+        "upper_bound)", 4 to 4, HighsFunctions.createConstraintsSchema, writes = true) { (_, v) =>
       HighsFunctions.createConstraintsRows(asString(v(0)), asString(v(1)),
         asDouble(v(2)), asDouble(v(3)))
     },
-    tvf("highs_set_coefficients", 4, HighsFunctions.setCoefficientsSchema) { v =>
+    driverFn("highs_set_coefficients(model_name, constraint_name, variable_name, " +
+        "coefficient)", 4 to 4, HighsFunctions.setCoefficientsSchema, writes = true) { (_, v) =>
       HighsFunctions.setCoefficientsRows(asString(v(0)), asString(v(1)),
         asString(v(2)), asDouble(v(3)))
     },
-    tvf("highs_solve", 1, HighsFunctions.solveSchema) { v =>
+    driverFn("highs_solve(model_name)", 1 to 1, HighsFunctions.solveSchema) { (_, v) =>
       HighsFunctions.solveRows(asString(v(0)))
     },
     asofJoinFn,
@@ -5665,13 +5463,10 @@ object GraftSparkExtensions {
     unionByNameFn,
     setopByNameFn,
     positionalJoinFn,
-    deleteReturningFn,
-    updateReturningFn,
     duckdbTablesFn,
     duckdbColumnsFn,
     tableInfoFn,
     showTablesFn,
-    insertReturningFn,
     readParquetFn,
     readCsvFn,
     readCsvAutoFn,

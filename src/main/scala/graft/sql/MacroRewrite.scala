@@ -52,8 +52,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DuckDB's catalog would instead of silently replacing.
   *
   * The returned replacement text is a 1-row marker statement (the
-  * registration side effect already happened — same eagerness contract as
-  * the solver TVFs); DDL results are not part of any oracle comparison.
+  * registration side effect already happened, while the statement was
+  * parsed); DDL results are not part of any oracle comparison.
   */
 object MacroRewrite {
 

@@ -4,7 +4,9 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import DuckLiterals.{halveBackslashes, quote}
+import org.apache.spark.sql.SparkSession
+
+import DuckLiterals.halveBackslashes
 
 /** DuckDB's temp-table DML surface executing — the backbone of pasted
   * ETL scripts:
@@ -25,18 +27,17 @@ import DuckLiterals.{halveBackslashes, quote}
   * TEMPORARY VIEWs are lazy plans, not snapshots), so these intercept
   * PRE-delegation and become commands ([[DuckCommands]]) over
   * [[TempTables]] — materialized scratch-parquet snapshots fronted by a
-  * same-named temp view. INSERT ... RETURNING returns rows, so it stays
-  * a query: the insert_returning table function appends (to a temp or a
-  * CATALOG table) and returns the projected inserted rows, DuckDB's
-  * contract.
+  * same-named temp view. INSERT ... RETURNING becomes an
+  * [[InsertReturningCommand]]: it appends (to a temp or a CATALOG table)
+  * and returns the projected inserted rows, DuckDB's contract.
   *
   * Scope guards: single-part plain names; INSERT/DROP claim only names
   * in the temp-table registry (catalog tables keep Spark's native
-  * INSERT path — except when RETURNING forces the table function);
+  * INSERT path — except when RETURNING forces the command);
   * `BY NAME` inserts into temp tables decline to the hint.
   */
 object TempTableRewritten {
-  def unapply(sql: String): Option[Either[LogicalPlan, String]] =
+  def unapply(sql: String): Option[LogicalPlan] =
     if (TempTableRewrite.isShaped(sql)) TempTableRewrite.rewrite(sql)
     else None
 }
@@ -94,18 +95,16 @@ object TempTableRewrite {
       else Some((Seq.empty[String], body0))
     } else Some((Seq.empty[String], body0))
 
-  /** Left(command), Right(insert_returning call text), or None →
-    * Spark's native path.
-    */
-  def rewrite(sql: String): Option[Either[LogicalPlan, String]] =
+  /** The statement's command, or None → Spark's native path. */
+  def rewrite(sql: String): Option[LogicalPlan] =
     try {
       sql match {
         case createRe(orReplace, name, query) =>
-          Some(Left(CreateTempTableAsCommand(name, halveBackslashes(query.trim), orReplace != null)))
+          Some(CreateTempTableAsCommand(name, halveBackslashes(query.trim), orReplace != null))
         case createColsRe(orReplace, name, colDefs) =>
-          Some(Left(CreateTempTableCommand(name, halveBackslashes(colDefs.trim), orReplace != null)))
+          Some(CreateTempTableCommand(name, halveBackslashes(colDefs.trim), orReplace != null))
         case dropRe(_, name) if TempTables.exists(name) =>
-          Some(Left(DropTempTableCommand(name)))
+          Some(DropTempTableCommand(name))
         case insertOrRe(modeWord, name, rest) =>
           // INSERT OR REPLACE / OR IGNORE — keyed upsert against the
           // declared PRIMARY KEY: graft temp tables AND (round 17)
@@ -120,9 +119,9 @@ object TempTableRewrite {
           if (words.exists(w => w._1 == "RETURNING" || w._1 == "CONFLICT"))
             return None
           val (cols, body) = splitColsBody(rest.trim).getOrElse(return None)
-          Some(Left(UpsertCommand(name, halveBackslashes(body), cols, Nil,
+          Some(UpsertCommand(name, halveBackslashes(body), cols, Nil,
             if (modeWord.equalsIgnoreCase("REPLACE")) ConflictAction.Replace
-            else ConflictAction.Ignore)))
+            else ConflictAction.Ignore))
         case insertRe(name, rest) =>
           // RETURNING split: last top-level RETURNING word.
           val words = QualifyRewrite.topLevelWords(rest)
@@ -161,8 +160,8 @@ object TempTableRewrite {
               val tail = clause.substring(m.end).trim
               if (m.group(2).equalsIgnoreCase("NOTHING")) {
                 if (tail.nonEmpty) return None
-                Some(Left(UpsertCommand(name, halveBackslashes(body), cols, keys,
-                  ConflictAction.Ignore)))
+                Some(UpsertCommand(name, halveBackslashes(body), cols, keys,
+                  ConflictAction.Ignore))
               } else {
                 // DO UPDATE SET a = expr, ... [WHERE cond] — the WHERE
                 // split uses the quote/comment-aware word scan (a
@@ -179,8 +178,8 @@ object TempTableRewrite {
                   case None => (setAll.trim, "")
                 }
                 if (setText.isEmpty) return None
-                Some(Left(UpsertCommand(name, halveBackslashes(body), cols, keys,
-                  ConflictAction.Update(halveBackslashes(setText), halveBackslashes(whereText)))))
+                Some(UpsertCommand(name, halveBackslashes(body), cols, keys,
+                  ConflictAction.Update(halveBackslashes(setText), halveBackslashes(whereText))))
               }
             case None =>
               if (!isTemp && returning.isEmpty) return None // native INSERT
@@ -195,13 +194,17 @@ object TempTableRewrite {
               }
               val (cols, body) = splitColsBody(body0).getOrElse(return None)
               returning match {
-                case None => Some(Left(InsertIntoTempCommand(name, halveBackslashes(body), cols)))
+                case None => Some(InsertIntoTempCommand(name, halveBackslashes(body), cols))
                 case Some(ret) =>
-                  Some(Right(s"SELECT * FROM insert_returning(${quote(name)}, " +
-                    s"${quote(body)}, ${quote(cols.mkString(","))}, ${quote(ret)})"))
+                  Some(InsertReturningCommand(name, halveBackslashes(body), cols,
+                    halveBackslashes(ret)).withOutput(SparkSession.active))
               }
           }
         case _ => None
       }
-    } catch { case NonFatal(_) => None }
+    } catch {
+      // A RETURNING list that does not analyse must surface as itself.
+      case e: org.apache.spark.sql.AnalysisException => throw e
+      case NonFatal(_) => None
+    }
 }

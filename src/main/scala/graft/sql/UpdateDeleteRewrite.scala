@@ -4,7 +4,9 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import DuckLiterals.{halveBackslashes, quote}
+import org.apache.spark.sql.SparkSession
+
+import DuckLiterals.halveBackslashes
 
 /** Literal `UPDATE t SET ... [WHERE ...]` and `DELETE FROM t [WHERE ...]`
   * statements EXECUTING against v1 catalog tables — DuckDB's mutation
@@ -22,9 +24,9 @@ import DuckLiterals.{halveBackslashes, quote}
   * [[UpdateTableCommand]] / [[DeleteFromCommand]] (joined forms:
   * [[UpdateFromCommand]] / [[DeleteUsingCommand]]), which Spark runs
   * once as a command: the staged overwrite, returning DuckDB's one-row
-  * `Count` (rows updated / deleted). The RETURNING forms return rows,
-  * so they stay queries over the update_returning / delete_returning
-  * table functions.
+  * `Count` (rows updated / deleted). The RETURNING forms become
+  * [[UpdateReturningCommand]] / [[DeleteReturningCommand]], which also
+  * return the written rows.
   *
   * Scope guard: ONLY single-part names that resolve to an existing
   * non-temporary v1 session-catalog table are claimed. Temp views,
@@ -78,10 +80,8 @@ object UpdateDeleteRewrite {
     if (t.endsWith(";")) t.dropRight(1).trim else t
   }
 
-  /** Left(command), Right(RETURNING table-function call text), or
-    * None → delegate to Spark's native path.
-    */
-  def rewrite(sql: String): Option[Either[LogicalPlan, String]] =
+  /** The statement's command, or None → delegate to Spark's native path. */
+  def rewrite(sql: String): Option[LogicalPlan] =
     try {
       val words = QualifyRewrite.topLevelWords(sql)
       if (words.isEmpty) return None
@@ -115,16 +115,16 @@ object UpdateDeleteRewrite {
           if (setText.isEmpty) return None
           if (retW.isDefined) {
             if (fromW.isDefined || retText.isEmpty) return None
-            return Some(Right(s"SELECT * FROM update_returning(${quote(tbl)}, " +
-              s"${quote(setText)}, ${quote(whereText)}, ${quote(retText)})"))
+            return Some(UpdateReturningCommand(tbl, halveBackslashes(setText),
+              halveBackslashes(whereText), halveBackslashes(retText)).withOutput(SparkSession.active))
           }
           fromW match {
             case Some((_, fp)) =>
               val srcText = stripSemi(sql.substring(fp + "FROM".length,
                 whereW.map(_._2).getOrElse(sql.length)))
               if (srcText.isEmpty) return None
-              return Some(Left(UpdateFromCommand(tbl, halveBackslashes(setText),
-                halveBackslashes(srcText), halveBackslashes(whereText))))
+              return Some(UpdateFromCommand(tbl, halveBackslashes(setText),
+                halveBackslashes(srcText), halveBackslashes(whereText)))
             case None =>
           }
           // UpdateTableCommand compiles the predicate inside a Project
@@ -147,8 +147,8 @@ object UpdateDeleteRewrite {
                   "join-free predicate, or express the mutation as " +
                   "CREATE OR REPLACE TEMP TABLE t AS SELECT with a " +
                   "CASE over a LEFT SEMI-joined flag.")))
-          Some(Left(UpdateTableCommand(tbl, halveBackslashes(setText),
-            halveBackslashes(whereText))))
+          Some(UpdateTableCommand(tbl, halveBackslashes(setText),
+            halveBackslashes(whereText)))
         case "DELETE" =>
           if (words.length < 2 || words(1)._1 != "FROM") return None
           val fromEnd = words(1)._2 + "FROM".length
@@ -172,18 +172,18 @@ object UpdateDeleteRewrite {
             .getOrElse("")
           if (retW.isDefined) {
             if (usingW.isDefined || retText.isEmpty) return None
-            return Some(Right(s"SELECT * FROM delete_returning(${quote(tbl)}, " +
-              s"${quote(whereText)}, ${quote(retText)})"))
+            return Some(DeleteReturningCommand(tbl, halveBackslashes(whereText),
+              halveBackslashes(retText)).withOutput(SparkSession.active))
           }
           usingW match {
             case Some((_, up)) =>
               val srcText = stripSemi(sql.substring(up + "USING".length,
                 whereW.map(_._2).getOrElse(sql.length)))
               if (srcText.isEmpty) return None
-              Some(Left(DeleteUsingCommand(tbl, halveBackslashes(srcText),
-                halveBackslashes(whereText))))
+              Some(DeleteUsingCommand(tbl, halveBackslashes(srcText),
+                halveBackslashes(whereText)))
             case None =>
-              Some(Left(DeleteFromCommand(tbl, halveBackslashes(whereText))))
+              Some(DeleteFromCommand(tbl, halveBackslashes(whereText)))
           }
         case _ => None
       }

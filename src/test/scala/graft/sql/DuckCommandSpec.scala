@@ -9,10 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** DuckDB statements run as Spark commands ([[DuckCommands]]): EXPLAIN
-  * renders each command without running it (no Spark job, no change to
-  * the table or the session registries), parsing alone mutates nothing,
-  * and no statement is reachable as a table function.
+/** DuckDB statements run as Spark commands ([[DuckCommands]]) and graft
+  * table functions run when their statement executes ([[DriverRows]]):
+  * EXPLAIN renders each command or node without running it (no Spark
+  * job, no change to the tables or the session and model registries),
+  * parsing alone mutates nothing, no statement is reachable as a table
+  * function, and driver-side rows come back without a Spark job.
   */
 class DuckCommandSpec extends AnyFunSuite {
 
@@ -96,7 +98,7 @@ class DuckCommandSpec extends AnyFunSuite {
     spark.sql("DROP TABLE cmd_k")
   }
 
-  test("EXPLAIN refuses the RETURNING forms without running them") {
+  test("EXPLAIN renders the RETURNING commands without running them") {
     spark.sql("CREATE OR REPLACE TEMP TABLE cmd_r AS SELECT * FROM " +
       "(VALUES (1, 10.0), (2, 20.0)) AS v(k, amount)")
     spark.sql("DROP TABLE IF EXISTS cmd_rc")
@@ -105,21 +107,100 @@ class DuckCommandSpec extends AnyFunSuite {
       rows("SELECT k FROM cmd_rc ORDER BY k"), TempTables.names())
     val before = state
     Seq(
-      "EXPLAIN UPDATE cmd_r SET amount = 0 WHERE k = 1 RETURNING k",
-      "EXPLAIN DELETE FROM cmd_r RETURNING *",
-      "EXPLAIN INSERT INTO cmd_r VALUES (3, 30.0) RETURNING k",
-      "EXPLAIN UPDATE cmd_rc SET k = 0 RETURNING k",
-      "EXPLAIN DELETE FROM cmd_rc RETURNING k",
-      "EXPLAIN INSERT INTO cmd_rc VALUES (3) RETURNING k",
-      "EXPLAIN EXTENDED SELECT * FROM delete_returning('cmd_rc', '', 'k')"
-    ).foreach { stmt =>
-      val (e, jobs) = jobsDuring(intercept[AnalysisException](spark.sql(stmt)))
-      assert(e.getMessage.contains("RETURNING is not supported"), s"$stmt: ${e.getMessage}")
+      "EXPLAIN UPDATE cmd_r SET amount = 0 WHERE k = 1 RETURNING k" -> "UpdateReturningCommand",
+      "EXPLAIN DELETE FROM cmd_r RETURNING *" -> "DeleteReturningCommand",
+      "EXPLAIN INSERT INTO cmd_r VALUES (3, 30.0) RETURNING k" -> "InsertReturningCommand",
+      "EXPLAIN UPDATE cmd_rc SET k = 0 RETURNING k" -> "UpdateReturningCommand",
+      "EXPLAIN EXTENDED DELETE FROM cmd_rc RETURNING k" -> "DeleteReturningCommand",
+      "EXPLAIN INSERT INTO cmd_rc VALUES (3) RETURNING k" -> "InsertReturningCommand"
+    ).foreach { case (stmt, command) =>
+      val (text, jobs) = jobsDuring(
+        spark.sql(stmt).collect().map(_.getString(0)).mkString("\n"))
+      assert(text.contains("== Physical Plan ==") && text.contains(command),
+        s"$stmt rendered:\n$text")
       assert(jobs == 0, s"$stmt ran $jobs Spark job(s)")
     }
     assert(state == before)
+    // The statements themselves still run once and return their rows.
+    assert(rows("DELETE FROM cmd_r WHERE k = 2 RETURNING k") == Seq(Seq(2)))
+    assert(rows("SELECT k FROM cmd_r") == Seq(Seq(1)))
+    assert(rows("INSERT INTO cmd_rc VALUES (3) RETURNING k * 10 AS k10") == Seq(Seq(30)))
+    assert(rows("SELECT k FROM cmd_rc ORDER BY k") == Seq(Seq(1), Seq(2), Seq(3)))
     spark.sql("DROP TABLE cmd_r")
     spark.sql("DROP TABLE cmd_rc")
+  }
+
+  /** Every model's variables, constraints and coefficients. */
+  private def registryState =
+    graft.highs.ModelRegistry.names.sorted.map { n =>
+      val m = graft.highs.ModelRegistry.get(n).get
+      (n, m.varNames.toList, m.conNames.toList, m.coeffs.toList)
+    }
+
+  test("EXPLAIN of the table functions runs nothing and changes no registry") {
+    spark.sql("SELECT * FROM highs_create_variables('cmd_m', 'x', 0, 10, 1, 'continuous')")
+    spark.sql("SELECT * FROM highs_create_constraints('cmd_m', 'c', 1, 5)")
+    spark.sql("CREATE OR REPLACE TEMP TABLE cmd_s AS SELECT 1 AS k, 'x' AS s")
+    val before = registryState
+    Seq(
+      "EXPLAIN SELECT * FROM highs_create_variables('cmd_m', 'y', 0, 1, 1, 'continuous')" ->
+        "TableFunctionCommand highs_create_variables",
+      "EXPLAIN SELECT * FROM highs_create_variables('cmd_new', 'x', 0, 1, 1, 'integer')" ->
+        "TableFunctionCommand highs_create_variables",
+      "EXPLAIN SELECT * FROM highs_create_constraints('cmd_m', 'd', 0, 1)" ->
+        "TableFunctionCommand highs_create_constraints",
+      "EXPLAIN SELECT status FROM highs_set_coefficients('cmd_m', 'c', 'x', 2.0)" ->
+        "TableFunctionCommand highs_set_coefficients",
+      "EXPLAIN SELECT * FROM highs_solve('cmd_m')" -> "DriverRows highs_solve",
+      "EXPLAIN SELECT * FROM summarize('cmd_s')" -> "DriverRows summarize",
+      "EXPLAIN SUMMARIZE cmd_s" -> "DriverRows summarize",
+      "EXPLAIN SELECT * FROM summarize('no_such_table')" -> "DriverRows summarize",
+      "EXPLAIN SELECT * FROM duck_describe('cmd_s')" -> "DriverRows duck_describe",
+      "EXPLAIN SELECT * FROM pragma_table_info('cmd_s')" -> "DriverRows pragma_table_info",
+      "EXPLAIN SELECT * FROM duck_show_tables()" -> "DriverRows duck_show_tables",
+      "EXPLAIN SELECT * FROM duckdb_tables()" -> "DriverRows duckdb_tables",
+      "EXPLAIN SELECT * FROM duckdb_columns()" -> "DriverRows duckdb_columns",
+      "EXPLAIN SELECT * FROM glob('/nonexistent/*.parquet')" -> "DriverRows glob"
+    ).foreach { case (stmt, node) =>
+      val (text, jobs) = jobsDuring(
+        spark.sql(stmt).collect().map(_.getString(0)).mkString("\n"))
+      assert(text.contains(node), s"$stmt rendered:\n$text")
+      assert(!text.contains("Error occurred"), s"$stmt rendered:\n$text")
+      assert(jobs == 0, s"$stmt ran $jobs Spark job(s)")
+    }
+    assert(registryState == before)
+    // Issued for real, a writer runs once.
+    spark.sql("SELECT * FROM highs_create_variables('cmd_m', 'y', 0, 1, 1, 'continuous')")
+    assert(graft.highs.ModelRegistry.get("cmd_m").get.varNames.toList == List("x", "y"))
+    graft.highs.ModelRegistry.remove("cmd_m")
+    spark.sql("DROP TABLE cmd_s")
+  }
+
+  test("reading, projecting and filtering driver-side rows runs no Spark job") {
+    spark.sql("SELECT * FROM highs_create_variables('cmd_q', 'x', 0, 4, -1, 'continuous')")
+    spark.sql("SELECT * FROM highs_create_variables('cmd_q', 'y', 0, 3, -1, 'continuous')")
+    spark.sql("CREATE OR REPLACE TEMP TABLE cmd_c AS SELECT 1 AS k, 'x' AS s")
+    Seq(
+      "SELECT * FROM highs_solve('cmd_q')" -> Seq(
+        Seq("x", "x_0", 4.0, -1.0, "Optimal"), Seq("y", "y_1", 3.0, -1.0, "Optimal")),
+      "SELECT variable_name, solution_value * 2 AS v2 FROM highs_solve('cmd_q')" ->
+        Seq(Seq("x", 8.0), Seq("y", 6.0)),
+      "SELECT solution_value FROM highs_solve('cmd_q') WHERE variable_name = 'y'" ->
+        Seq(Seq(3.0)),
+      "SELECT * FROM duckdb_columns() WHERE table_name = 'cmd_c'" -> Seq(
+        Seq("temp", "main", "cmd_c", "k", 1, "INTEGER", null),
+        Seq("temp", "main", "cmd_c", "s", 2, "VARCHAR", null)),
+      "SELECT column_name, column_index + 1 FROM duckdb_columns() WHERE table_name = 'cmd_c'" ->
+        Seq(Seq("k", 2), Seq("s", 3)),
+      "SELECT column_name FROM duckdb_columns() WHERE table_name = 'cmd_c' AND column_index = 2" ->
+        Seq(Seq("s"))
+    ).foreach { case (stmt, expected) =>
+      val (got, jobs) = jobsDuring(rows(stmt))
+      assert(got == expected, stmt)
+      assert(jobs == 0, s"$stmt ran $jobs Spark job(s)")
+    }
+    graft.highs.ModelRegistry.remove("cmd_q")
+    spark.sql("DROP TABLE cmd_c")
   }
 
   test("parsing a statement mutates nothing") {
@@ -145,7 +226,17 @@ class DuckCommandSpec extends AnyFunSuite {
   test("a statement is not callable as a table function") {
     spark.sql("DROP TABLE IF EXISTS cmd_victim")
     spark.sql("CREATE TABLE cmd_victim USING parquet AS SELECT 1 AS x UNION ALL SELECT 2")
-    intercept[AnalysisException](spark.sql("SELECT * FROM delete_from('cmd_victim', '')"))
+    Seq(
+      "SELECT * FROM delete_from('cmd_victim', '')",
+      "SELECT * FROM delete_returning('cmd_victim', '', 'x')",
+      "SELECT * FROM update_returning('cmd_victim', 'x = 0', '', 'x')",
+      "SELECT * FROM insert_returning('cmd_victim', 'VALUES (3)', '', 'x')"
+    ).foreach { stmt =>
+      val e = intercept[AnalysisException](spark.sql(stmt).collect())
+      assert(e.getMessage.contains("UNRESOLVABLE_TABLE_VALUED_FUNCTION"), s"$stmt: ${e.getMessage}")
+    }
+    assert(rows("EXPLAIN EXTENDED SELECT * FROM delete_returning('cmd_victim', '', 'x')")
+      .head.head.toString.contains("UNRESOLVABLE_TABLE_VALUED_FUNCTION"))
     assert(rows("SELECT x FROM cmd_victim ORDER BY x") == Seq(Seq(1), Seq(2)))
     spark.sql("DROP TABLE cmd_victim")
   }

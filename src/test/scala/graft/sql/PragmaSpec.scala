@@ -33,6 +33,14 @@ class PragmaSpec extends AnyFunSuite {
     spark.sql("DROP TABLE pragma_b")
   }
 
+  test("pragma_table_info(NULL) is an argument error, not a table named null") {
+    spark.range(1).createOrReplaceTempView("null")
+    val e = intercept[IllegalArgumentException](
+      spark.sql("SELECT * FROM pragma_table_info(NULL)").collect())
+    assert(e.getMessage.contains("pragma_table_info arguments must be non-NULL"), e.getMessage)
+    spark.catalog.dropTempView("null")
+  }
+
   test("PRAGMA show_tables lists the created table") {
     spark.sql("DROP TABLE IF EXISTS pragma_c")
     spark.sql("CREATE OR REPLACE TEMP TABLE pragma_c (x INTEGER)")

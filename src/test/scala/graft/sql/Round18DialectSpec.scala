@@ -638,6 +638,14 @@ class Round18DialectSpec extends AnyFunSuite {
     spark.sql("DROP TYPE IF EXISTS t18mood").collect()
   }
 
+  test("enum members keep their backslashes as written") {
+    // DuckDB 1.0: CREATE TYPE bs AS ENUM ('a\b', 'c'); CAST('a\b' AS bs) → a\b
+    spark.sql("CREATE TYPE t18bs AS ENUM ('a\\b', 'c')").collect()
+    assert(rows("SELECT CAST('a\\b' AS t18bs)") == Seq(Seq("a\\b")))
+    assert(rows("SELECT array_to_string(enum_range(NULL::t18bs), ',')") == Seq(Seq("a\\b,c")))
+    spark.sql("DROP TYPE t18bs").collect()
+  }
+
   test("registered enum as a temp-table column type maps to its VARCHAR model") {
     spark.sql("CREATE TYPE t18col AS ENUM ('a', 'b')").collect()
     spark.sql("DROP TABLE IF EXISTS t18et")

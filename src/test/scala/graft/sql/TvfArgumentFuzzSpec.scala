@@ -6,9 +6,10 @@ import graft.SparkTestSession
 /** Randomized differential fuzz of the injected table functions' hand-
   * parsed argument surface (GraftSparkExtensions): whatever malformed
   * arity, type, literal, or name a SQL user throws at them, the failure
-  * must be a CLEAN analysis-time error (AnalysisException — which
-  * includes ParseException — or the TVF's own IllegalArgument/
-  * require message surfaced at analysis), never a planner internals leak
+  * must be a CLEAN error (AnalysisException — which includes
+  * ParseException — or the TVF's own IllegalArgument/require message,
+  * at analysis or, for the driver-side functions' work, at execution),
+  * never a planner internals leak
   * (MatchError, NPE, ClassCast, StackOverflow). Seeded: failures
   * reproduce.
   */
@@ -37,10 +38,14 @@ class TvfArgumentFuzzSpec extends AnyFunSuite {
     case 11 => "x'DEAD'"
   }
 
+  // The driver-side functions (summarize, duck_describe,
+  // pragma_table_info, duckdb_columns) fail in their work when the
+  // statement executes, not while it is analysed: cleanFailure collects.
   private val tvfs = Seq(
     "asof_join", "fixpoint", "dedup", "span_scrub",
     "highs_create_variables", "highs_create_constraints",
-    "highs_set_coefficients", "highs_solve")
+    "highs_set_coefficients", "highs_solve",
+    "summarize", "duck_describe", "pragma_table_info", "duckdb_columns")
 
   private def cleanFailure(name: String, sql: String): Unit = {
     val r = scala.util.Try(spark.sql(sql).collect())
@@ -66,18 +71,19 @@ class TvfArgumentFuzzSpec extends AnyFunSuite {
   }
 
   test("malformed TVF invocations fail as clean analysis errors (400 random draws)") {
-    // The registered set, pinned: a DuckDB statement runs as a command
-    // (DuckCommands), never as a callable table function.
+    // The registered set, pinned: a DuckDB statement, RETURNING forms
+    // included, runs as a command (DuckCommands), never as a callable
+    // table function.
     assert(GraftSparkExtensions.tableFunctions.map(_._1.funcName).sorted == Seq(
-      "asof_join", "delete_returning", "dedup", "duck_describe",
+      "asof_join", "dedup", "duck_describe",
       "duck_show_tables", "duckdb_columns", "duckdb_tables", "fixpoint",
       "fixpoint_keyed", "generate_series", "glob", "highs_create_constraints",
       "highs_create_variables", "highs_set_coefficients", "highs_solve",
-      "insert_returning", "parquet_file_metadata", "parquet_metadata",
+      "parquet_file_metadata", "parquet_metadata",
       "parquet_schema", "pivot_auto", "positional_join", "pragma_table_info",
       "read_csv", "read_csv_auto", "read_json", "read_json_auto",
       "read_parquet", "setop_by_name", "span_scrub", "summarize",
-      "union_by_name", "update_returning").sorted)
+      "union_by_name").sorted)
     (1 to 400).foreach { _ =>
       val name = tvfs(rnd.nextInt(tvfs.size))
       val arity = rnd.nextInt(10) // 0..9 spans below/at/above every TVF's range
