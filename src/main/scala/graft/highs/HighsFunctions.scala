@@ -154,8 +154,8 @@ object HighsFunctions {
     * clean values HiGHS reports on the reference's test models.
     *
     * DELIBERATE OUTPUT-CONTRACT DIVERGENCE from the reference (which emits
-    * raw HiGHS col_value/col_dual): our dense-LU simplex accumulates ~1e-12
-    * float noise the native solver doesn't, and the sqllogictest golden rows
+    * raw HiGHS col_value/col_dual): our simplex accumulates ~1e-12 float
+    * noise the native solver doesn't, and the sqllogictest golden rows
     * (test/sql/highs.test:94-98) pin exact 0.0/1.0 literals. The 1e-9
     * tolerance is far below any meaningful reduced cost in the reference's
     * model corpus; a genuinely tiny nonzero reduced cost would be masked —
@@ -166,18 +166,22 @@ object HighsFunctions {
     if (math.abs(v - r) < 1e-9) (if (r == 0.0) 0.0 else r) else v
   }
 
-  /** The dense-LU simplex allocates an (n+m)x(m) working matrix and
-    * refactorizes O(m³) per iteration — correct for the reference's
-    * KB-scale models, but a runaway model would pin an executor core for
-    * hours. Above this dimension we fail fast with an ERROR row (the
-    * engine's error-as-data convention) instead of spinning.
+  /** Size cap of one solve. The simplex keeps a sparse LU of its basis
+    * (refactored every 32 basis changes, eta updates between), so an
+    * iteration costs about the nonzeros of the columns, factor and etas it
+    * touches: a planted 400×800 LP with 3 nonzeros per column takes ~3,000
+    * iterations and ~0.11 s on one core (`graft.tools.SolverBench`,
+    * `BENCH_solver.json`). Iterations and the eta work per iteration both
+    * grow with the model, and B&B multiplies the solves, so above 2000
+    * variables or constraints we fail fast with an ERROR row (the engine's
+    * error-as-data convention) rather than let a runaway model hold a core.
     */
   val MaxDenseDim = 2000
 
   private[highs] def sizeGuard(info: ModelInfo): Option[String] = {
     val (nv, nc) = (info.varNames.size, info.conNames.size)
     if (nv > MaxDenseDim || nc > MaxDenseDim)
-      Some(s"ERROR: Model '${info.name}' too large for the dense simplex " +
+      Some(s"ERROR: Model '${info.name}' too large for the embedded simplex " +
         s"($nv variables, $nc constraints; limit $MaxDenseDim)")
     else None
   }

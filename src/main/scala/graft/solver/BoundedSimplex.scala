@@ -38,8 +38,16 @@ final case class LpSolution(
   * basic variables outside their bounds get a +-1 infeasibility cost and
   * their violated bound becomes the blocking bound in the ratio test, so
   * feasibility is restored while the same pivot machinery runs. Dantzig
-  * pricing with a Bland's-rule fallback for anti-cycling; dense LU
-  * refactorization every iteration (models are tiny — see DenseLU).
+  * pricing with a Bland's-rule fallback for anti-cycling.
+  *
+  * The revised simplex runs over [A | -I] in sparse columns ([[SparseLp]])
+  * and a basis factor kept across iterations ([[BasisFactor]]: a sparse LU
+  * refactored every 32 basis changes, product-form etas between). Each
+  * iteration recomputes the basic values from the nonbasic ones, the duals
+  * and every reduced cost over the sparse columns. A terminal decision
+  * (optimal, infeasible, unbounded) taken on a factor that carries etas is
+  * taken again on a fresh factor, so statuses, duals and reduced costs
+  * never carry eta drift.
   *
   * This is a from-scratch implementation: neither breeze nor commons-math3
   * (the only optimizers on the classpath) exposes reduced costs, bounded
@@ -47,7 +55,7 @@ final case class LpSolution(
   * contract requires.
   */
 object BoundedSimplex {
-  import LinearModel.{Inf, isFinite}
+  import LinearModel.Inf
 
   private val FeasTol = 1e-7
   private val DualTol = 1e-7
@@ -59,19 +67,21 @@ object BoundedSimplex {
   private val Free = 3
 
   def solve(model: LinearModel): LpSolution =
-    solve(model, model.colLower, model.colUpper)
+    solve(new SparseLp(model), model.colLower, model.colUpper)
 
-  /** Solve with overridden column bounds (used by branch-and-bound). */
-  def solve(model: LinearModel, loIn: Array[Double], hiIn: Array[Double]): LpSolution = {
-    val n = model.nCols
-    val m = model.nRows
+  /** Solve with overridden column bounds. */
+  def solve(model: LinearModel, loIn: Array[Double], hiIn: Array[Double]): LpSolution =
+    solve(new SparseLp(model), loIn, hiIn)
+
+  /** Solve over prepared columns with the given column bounds
+    * (branch-and-bound passes each node's bounds over one [[SparseLp]]).
+    */
+  def solve(lp: SparseLp, loIn: Array[Double], hiIn: Array[Double]): LpSolution = {
+    val model = lp.model
+    val n = lp.nCols
+    val m = lp.nRows
     val nTot = n + m
-
-    // Dense columns of [A | -I]; duplicates in the COO input are summed.
-    val cols = Array.fill(nTot)(new Array[Double](m))
-    for ((r, c, v) <- model.entries) cols(c)(r) += v
-    var i = 0
-    while (i < m) { cols(n + i)(i) = -1.0; i += 1 }
+    val cStart = lp.start; val cRow = lp.row; val cVal = lp.value
 
     val lo = new Array[Double](nTot)
     val hi = new Array[Double](nTot)
@@ -81,7 +91,7 @@ object BoundedSimplex {
       hi(j) = if (hiIn(j) >= Inf) Double.PositiveInfinity else hiIn(j)
       j += 1
     }
-    i = 0
+    var i = 0
     while (i < m) {
       lo(n + i) = if (model.rowLower(i) <= -Inf) Double.NegativeInfinity else model.rowLower(i)
       hi(n + i) = if (model.rowUpper(i) >= Inf) Double.PositiveInfinity else model.rowUpper(i)
@@ -113,168 +123,166 @@ object BoundedSimplex {
     i = 0
     while (i < m) { basis(i) = n + i; vstat(n + i) = Basic; i += 1 }
 
+    val factor = new BasisFactor(lp, basis)
+    val xB = new Array[Double](m) // basic values, by basis position
+    val y = new Array[Double](m)  // c_B by position, then (BTRAN in place) duals by row
+    val w = new Array[Double](m)  // entering column through the factor
+
     val maxIter = 20000 + 200 * nTot
     val blandAfter = 5000 + 20 * nTot
     var iter = 0
-    var finalDuals: Array[Double] = null
-
-    var done = false
     var resultStatus: LpStatus = LpStatus.Unknown
+    var done = !factor.refactor()
+
+    // A terminal decision is only final on a factor without etas; otherwise
+    // refactor and take the same iteration again, uncounted.
+    def finish(status: LpStatus): Unit =
+      if (factor.etaCount == 0) { resultStatus = status; done = true }
+      else if (!factor.refactor()) done = true
+      else iter -= 1
 
     while (!done) {
       iter += 1
-      if (iter > maxIter) { resultStatus = LpStatus.Unknown; done = true }
+      if (iter > maxIter) done = true
       else {
-        // Refactorize the basis and recompute basic values from scratch.
-        val bMat = Array.tabulate(m, m)((r, k) => cols(basis(k))(r))
-        val lu = new DenseLU(bMat)
-        if (lu.singular) { resultStatus = LpStatus.Unknown; done = true }
-        else {
-          val rhs = new Array[Double](m) // b - N x_N with b = 0
-          j = 0
-          while (j < nTot) {
-            if (vstat(j) != Basic && xval(j) != 0.0) {
-              val colJ = cols(j)
-              var r = 0
-              while (r < m) { rhs(r) -= colJ(r) * xval(j); r += 1 }
-            }
-            j += 1
+        // Basic values from scratch: B xB = b - N x_N with b = 0.
+        java.util.Arrays.fill(xB, 0.0)
+        j = 0
+        while (j < nTot) {
+          val xj = xval(j)
+          if (vstat(j) != Basic && xj != 0.0) {
+            var e = cStart(j)
+            while (e < cStart(j + 1)) { xB(cRow(e)) -= cVal(e) * xj; e += 1 }
           }
-          val xB = lu.solve(rhs)
-          var k = 0
-          while (k < m) { xval(basis(k)) = xB(k); k += 1 }
+          j += 1
+        }
+        factor.ftran(xB)
+        var k = 0
+        while (k < m) { xval(basis(k)) = xB(k); k += 1 }
 
-          // Phase detection + objective-row costs for the basis.
-          var infeas = 0.0
-          val cB = new Array[Double](m)
+        // Phase detection + objective-row costs for the basis, then the
+        // duals y = B⁻ᵀ c_B.
+        var infeas = 0.0
+        k = 0
+        while (k < m) {
+          val bj = basis(k); val v = xB(k)
+          if (v > hi(bj) + FeasTol) { infeas += v - hi(bj); y(k) = 1.0 }
+          else if (v < lo(bj) - FeasTol) { infeas += lo(bj) - v; y(k) = -1.0 }
+          else y(k) = 0.0
+          k += 1
+        }
+        val phase1 = infeas > FeasTol
+        if (!phase1) {
+          k = 0
+          while (k < m) { y(k) = cost(basis(k)); k += 1 }
+        }
+        factor.btran(y)
+
+        // Pricing.
+        val useBland = iter > blandAfter
+        var enter = -1
+        var enterDir = 0
+        var bestScore = DualTol
+        j = 0
+        while (j < nTot && (enter == -1 || !useBland)) {
+          val st = vstat(j)
+          if (st != Basic) {
+            var d = if (phase1) 0.0 else cost(j)
+            var e = cStart(j)
+            while (e < cStart(j + 1)) { d -= y(cRow(e)) * cVal(e); e += 1 }
+            if ((st == AtLower || st == Free) && d < -DualTol && -d > bestScore) {
+              enter = j; enterDir = 1
+              if (!useBland) bestScore = -d
+            } else if ((st == AtUpper || st == Free) && d > DualTol && d > bestScore) {
+              enter = j; enterDir = -1
+              if (!useBland) bestScore = d
+            }
+          }
+          j += 1
+        }
+
+        if (enter == -1) finish(if (phase1) LpStatus.Infeasible else LpStatus.Optimal)
+        else {
+          java.util.Arrays.fill(w, 0.0)
+          var e = cStart(enter)
+          while (e < cStart(enter + 1)) { w(cRow(e)) = cVal(e); e += 1 }
+          factor.ftran(w)
+          // Ratio test. t = step of the entering variable in direction
+          // enterDir; basic k moves at rate -enterDir * w(k).
+          var t = if (!lo(enter).isInfinity && !hi(enter).isInfinity)
+            hi(enter) - lo(enter) // bound-flip distance
+          else Double.PositiveInfinity
+          var blockK = -1
+          var blockStat = AtLower
+          var blockVal = 0.0
+          var blockMag = 0.0
           k = 0
           while (k < m) {
-            val bj = basis(k); val v = xB(k)
-            if (v > hi(bj) + FeasTol) { infeas += v - hi(bj); cB(k) = 1.0 }
-            else if (v < lo(bj) - FeasTol) { infeas += lo(bj) - v; cB(k) = -1.0 }
-            else cB(k) = 0.0
+            val delta = -enterDir * w(k)
+            if (math.abs(delta) > PivTol) {
+              val bj = basis(k); val v = xB(k)
+              // Working bounds: an infeasible basic blocks only at the
+              // bound it violates (composite phase 1).
+              var wlo = lo(bj); var whi = hi(bj)
+              var hitStatLo = AtLower; var hitStatHi = AtUpper
+              if (v > hi(bj) + FeasTol) { wlo = hi(bj); whi = Double.PositiveInfinity; hitStatLo = AtUpper }
+              else if (v < lo(bj) - FeasTol) { whi = lo(bj); wlo = Double.NegativeInfinity; hitStatHi = AtLower }
+              var tk = Double.PositiveInfinity
+              var stat = AtLower; var tgt = 0.0
+              if (delta < 0 && !wlo.isNegInfinity) {
+                tk = (v - wlo) / (-delta); stat = hitStatLo; tgt = wlo
+              } else if (delta > 0 && !whi.isPosInfinity) {
+                tk = (whi - v) / delta; stat = hitStatHi; tgt = whi
+              }
+              if (tk < t - 1e-12 ||
+                  (tk < t + 1e-12 && blockK != -1 &&
+                    (if (useBland) basis(k) < basis(blockK)
+                     else math.abs(delta) > blockMag))) {
+                t = math.max(tk, 0.0); blockK = k; blockStat = stat
+                blockVal = tgt; blockMag = math.abs(delta)
+              }
+            }
             k += 1
           }
-          val phase1 = infeas > FeasTol
-          if (!phase1) {
-            k = 0
-            while (k < m) { cB(k) = cost(basis(k)); k += 1 }
-          }
-          val y = lu.solveT(cB)
 
-          // Pricing.
-          val useBland = iter > blandAfter
-          var enter = -1
-          var enterDir = 0
-          var bestScore = DualTol
-          j = 0
-          while (j < nTot && (enter == -1 || !useBland)) {
-            if (vstat(j) != Basic) {
-              val cj = if (phase1) 0.0 else cost(j)
-              var d = cj
-              val colJ = cols(j)
-              var r = 0
-              while (r < m) { d -= y(r) * colJ(r); r += 1 }
-              val st = vstat(j)
-              if ((st == AtLower || st == Free) && d < -DualTol && -d > bestScore) {
-                enter = j; enterDir = 1
-                if (!useBland) bestScore = -d
-              } else if ((st == AtUpper || st == Free) && d > DualTol && d > bestScore) {
-                enter = j; enterDir = -1
-                if (!useBland) bestScore = d
-              }
-            }
-            j += 1
-          }
-
-          if (enter == -1) {
-            if (phase1) { resultStatus = LpStatus.Infeasible; finalDuals = y; done = true }
-            else { resultStatus = LpStatus.Optimal; finalDuals = y; done = true }
+          if (t.isPosInfinity) {
+            // Phase 1's objective is bounded below by 0 with blocking at
+            // violated bounds, so an unbounded ray here is phase 2.
+            finish(if (phase1) LpStatus.Unknown else LpStatus.Unbounded)
+          } else if (blockK == -1) {
+            // Bound flip: entering runs to its opposite bound.
+            if (enterDir > 0) { vstat(enter) = AtUpper; xval(enter) = hi(enter) }
+            else { vstat(enter) = AtLower; xval(enter) = lo(enter) }
           } else {
-            val w = lu.solve(cols(enter))
-            // Ratio test. t = step of the entering variable in direction
-            // enterDir; basic k moves at rate -enterDir * w(k).
-            var t = if (!lo(enter).isInfinity && !hi(enter).isInfinity)
-              hi(enter) - lo(enter) // bound-flip distance
-            else Double.PositiveInfinity
-            var blockK = -1
-            var blockStat = AtLower
-            var blockVal = 0.0
-            var blockMag = 0.0
-            k = 0
-            while (k < m) {
-              val delta = -enterDir * w(k)
-              if (math.abs(delta) > PivTol) {
-                val bj = basis(k); val v = xB(k)
-                // Working bounds: an infeasible basic blocks only at the
-                // bound it violates (composite phase 1).
-                var wlo = lo(bj); var whi = hi(bj)
-                var hitStatLo = AtLower; var hitStatHi = AtUpper
-                if (v > hi(bj) + FeasTol) { wlo = hi(bj); whi = Double.PositiveInfinity; hitStatLo = AtUpper }
-                else if (v < lo(bj) - FeasTol) { whi = lo(bj); wlo = Double.NegativeInfinity; hitStatHi = AtLower }
-                var tk = Double.PositiveInfinity
-                var stat = AtLower; var tgt = 0.0
-                if (delta < 0 && !wlo.isNegInfinity) {
-                  tk = (v - wlo) / (-delta); stat = hitStatLo; tgt = wlo
-                } else if (delta > 0 && !whi.isPosInfinity) {
-                  tk = (whi - v) / delta; stat = hitStatHi; tgt = whi
-                }
-                if (tk < t - 1e-12 ||
-                    (tk < t + 1e-12 && blockK != -1 &&
-                      (if (useBland) basis(k) < basis(blockK)
-                       else math.abs(delta) > blockMag))) {
-                  t = math.max(tk, 0.0); blockK = k; blockStat = stat
-                  blockVal = tgt; blockMag = math.abs(delta)
-                }
-              }
-              k += 1
-            }
-
-            if (t.isPosInfinity) {
-              // Phase 1's objective is bounded below by 0 with blocking at
-              // violated bounds, so an unbounded ray here is phase 2.
-              resultStatus = if (phase1) LpStatus.Unknown else LpStatus.Unbounded
-              finalDuals = y
-              done = true
-            } else if (blockK == -1) {
-              // Bound flip: entering runs to its opposite bound.
-              if (enterDir > 0) { vstat(enter) = AtUpper; xval(enter) = hi(enter) }
-              else { vstat(enter) = AtLower; xval(enter) = lo(enter) }
-            } else {
-              xval(enter) = xval(enter) + enterDir * t
-              val leaving = basis(blockK)
-              vstat(leaving) = blockStat
-              xval(leaving) = blockVal
-              basis(blockK) = enter
-              vstat(enter) = Basic
-            }
+            xval(enter) = xval(enter) + enterDir * t
+            val leaving = basis(blockK)
+            vstat(leaving) = blockStat
+            xval(leaving) = blockVal
+            vstat(enter) = Basic
+            if (!factor.pivot(blockK, enter, w)) done = true
           }
         }
       }
     }
 
-    // Assemble outputs in the structural space.
-    val x = new Array[Double](n)
-    j = 0
-    while (j < n) { x(j) = xval(j); j += 1 }
+    // Assemble outputs in the structural space. Duals and reduced costs
+    // are reported for Optimal only; y then comes from a fresh factor.
+    val x = java.util.Arrays.copyOf(xval, n)
     val rc = new Array[Double](n)
     val rowDual = new Array[Double](m)
-    if (finalDuals != null && resultStatus == LpStatus.Optimal) {
+    if (resultStatus == LpStatus.Optimal) {
       j = 0
       while (j < n) {
-        if (vstat(j) == Basic) rc(j) = 0.0
-        else {
+        if (vstat(j) != Basic) {
           var d = cost(j)
-          val colJ = cols(j)
-          var r = 0
-          while (r < m) { d -= finalDuals(r) * colJ(r); r += 1 }
+          var e = cStart(j)
+          while (e < cStart(j + 1)) { d -= y(cRow(e)) * cVal(e); e += 1 }
           rc(j) = d
         }
         j += 1
       }
       // Row dual = reduced cost of the slack with our [A | -I] convention.
-      i = 0
-      while (i < m) { rowDual(i) = finalDuals(i); i += 1 }
+      System.arraycopy(y, 0, rowDual, 0, m)
     }
     var obj = 0.0
     j = 0

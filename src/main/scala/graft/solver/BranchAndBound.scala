@@ -18,7 +18,8 @@ final case class MipSolution(
   * Binary columns are clamped to [0,1] before solving, matching
   * highs_extension.cpp:577-583. Branching: most-fractional column; the
   * child nearer the LP value is explored first (diving), with best-objective
-  * pruning against the incumbent.
+  * pruning against the incumbent. The model's sparse columns are built
+  * once ([[SparseLp]]) and every node solves over them with its own bounds.
   */
 object BranchAndBound {
   private val IntTol = 1e-6
@@ -26,8 +27,9 @@ object BranchAndBound {
 
   def solve(model: LinearModel): MipSolution = {
     val (lo0, hi0) = model.effectiveBounds
+    val cols = new SparseLp(model)
     if (!model.hasIntegers) {
-      val lp = BoundedSimplex.solve(model, lo0, hi0)
+      val lp = BoundedSimplex.solve(cols, lo0, hi0)
       return MipSolution(lp.status, lp.x, lp.reducedCost, lp.objective, 1)
     }
     val intCols = model.kinds.zipWithIndex.collect {
@@ -48,7 +50,7 @@ object BranchAndBound {
       nodes += 1
       if (nodes > MaxNodes) hitLimit = true
       else {
-        val lp = BoundedSimplex.solve(model, lo, hi)
+        val lp = BoundedSimplex.solve(cols, lo, hi)
         lp.status match {
           case LpStatus.Infeasible => // prune
           case LpStatus.Unbounded =>

@@ -76,3 +76,60 @@ object LinearModel {
 
   def isFinite(v: Double): Boolean = v > -Inf && v < Inf
 }
+
+/** The constraint matrix of a model with one slack column per row,
+  * [A | -I], in compressed sparse columns: column j holds rows
+  * `row(start(j) until start(j + 1))` (ascending) with values `value(…)`.
+  * Duplicate (row, col) entries of the COO input are summed and exact
+  * zeros dropped. Built once per model; branch-and-bound solves every node
+  * over the same columns.
+  */
+final class SparseLp(val model: LinearModel) {
+  val nCols: Int = model.nCols
+  val nRows: Int = model.nRows
+
+  val (start, row, value): (Array[Int], Array[Int], Array[Double]) = {
+    val n = nCols; val m = nRows
+    val es = model.entries; val nnz = es.length
+    // Bucket by row, then by column in row order: the second counting sort
+    // leaves every column's rows ascending, so duplicates are adjacent.
+    val rowStart = new Array[Int](m + 1)
+    es.foreach(e => rowStart(e._1 + 1) += 1)
+    var i = 0
+    while (i < m) { rowStart(i + 1) += rowStart(i); i += 1 }
+    val rc = new Array[Int](nnz); val rv = new Array[Double](nnz)
+    es.foreach { case (r, c, v) => rc(rowStart(r)) = c; rv(rowStart(r)) = v; rowStart(r) += 1 }
+    // rowStart(r) is now row r's end, which is row r + 1's start.
+    val colStart = new Array[Int](n + 1)
+    rc.foreach(c => colStart(c + 1) += 1)
+    var j = 0
+    while (j < n) { colStart(j + 1) += colStart(j); j += 1 }
+    val cr = new Array[Int](nnz); val cv = new Array[Double](nnz)
+    val fill = colStart.clone()
+    var e = 0
+    i = 0
+    while (i < m) {
+      while (e < rowStart(i)) {
+        val c = rc(e); cr(fill(c)) = i; cv(fill(c)) = rv(e); fill(c) += 1; e += 1
+      }
+      i += 1
+    }
+    val st = new Array[Int](n + m + 1)
+    val ro = new Array[Int](nnz + m); val va = new Array[Double](nnz + m)
+    var k = 0
+    j = 0
+    while (j < n) {
+      e = colStart(j)
+      while (e < colStart(j + 1)) {
+        val r = cr(e); var v = cv(e); e += 1
+        while (e < colStart(j + 1) && cr(e) == r) { v += cv(e); e += 1 }
+        if (v != 0.0) { ro(k) = r; va(k) = v; k += 1 }
+      }
+      j += 1
+      st(j) = k
+    }
+    i = 0
+    while (i < m) { ro(k) = i; va(k) = -1.0; k += 1; st(n + i + 1) = k; i += 1 }
+    (st, java.util.Arrays.copyOf(ro, k), java.util.Arrays.copyOf(va, k))
+  }
+}

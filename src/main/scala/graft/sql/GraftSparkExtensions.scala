@@ -71,8 +71,8 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   *     becomes `fixpoint_keyed()` ([[UsingKeyRewrite]]), `* EXCLUDE`
   *     swaps to `* EXCEPT` ([[ExcludeRewrite]]), `* REPLACE (...)`
   *     expands the star against the catalog schema ([[ReplaceRewrite]]),
-  *     scalar `CREATE MACRO` registers a lazy-bound session function
-  *     ([[MacroRewrite]]), and `SUMMARIZE t`
+  *     `CREATE MACRO` becomes a command that registers a lazy-bound
+  *     session function ([[MacroRewrite]]), and `SUMMARIZE t`
   *     becomes `SELECT * FROM summarize('t')` — the pasted DuckDB
   *     statement executes instead of erroring, and rewrites CHAIN
   *     (depth-capped) so statements combining constructs (`* EXCLUDE`
@@ -1325,9 +1325,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           // scanners off statements that can't contain their construct.
           // Candidates are LAZY thunks, forced one at a time by the view:
           // a strict Seq would run every rewrite during enumeration even
-          // after an earlier one already won — and MacroRewrite's
-          // registration SIDE EFFECT must not fire unless the macro
-          // rewrite is actually the one taken.
+          // after an earlier one already won.
           // A rewrite's text is parsed again (and may chain on); a claim
           // that yields a command ([[DuckCommands]]) is the plan.
           def claimed(c: Either[LogicalPlan, String]): Option[LogicalPlan] =
@@ -1461,8 +1459,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
               DistinctOnRewrite.rewrite(text); case _ => None }),
             () => text match { case copyStmtRe() =>
               CopyToRewrite.rewrite(text); case _ => None },
-            sql(text match { case macroRe() =>
-              MacroRewrite.rewrite(text, delegate); case _ => None }),
+            () => text match { case macroRe() =>
+              MacroRewrite.rewrite(text, delegate); case _ => None },
             // struct_pack(a := 1) → named_struct — before the macro
             // named-call lowering (struct_pack has no macro signature
             // and would decline there).

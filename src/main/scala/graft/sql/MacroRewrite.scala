@@ -2,11 +2,14 @@ package graft.sql
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Exists, Expression, ExpressionInfo, ListQuery, NamedExpression, PlanExpression, ScalarSubquery}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Exists, Expression, ExpressionInfo, ListQuery, NamedExpression, PlanExpression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.types.StringType
 
 /** Tier-1 landing for DuckDB's `CREATE MACRO` (the reference host's
   * capability — DuckDB ≥1.3, MainDistributionPipeline.yml:29): the first
@@ -51,9 +54,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * multipart names, and bodies Spark's parser rejects. A plain CREATE over an existing name errors like
   * DuckDB's catalog would instead of silently replacing.
   *
-  * The returned replacement text is a 1-row marker statement (the
-  * registration side effect already happened, while the statement was
-  * parsed); DDL results are not part of any oracle comparison.
+  * Parsing registers nothing: each form becomes one
+  * [[CreateMacroCommand]], whose `run` does the existence check and the
+  * registration when the statement executes, so `EXPLAIN CREATE MACRO`
+  * only renders it. Its result is one `macro` row naming the macro; DDL
+  * results are not part of any oracle comparison.
   */
 object MacroRewrite {
 
@@ -104,13 +109,11 @@ object MacroRewrite {
   private val signatures = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), Vector[(String, Option[String])]]()
 
-  private def recordSignature(
-      name: String, params: Vector[(String, Option[String])]): Unit =
-    try {
-      signatures.put(
-        (org.apache.spark.sql.SparkSession.active, name.toLowerCase), params)
-      ()
-    } catch { case NonFatal(_) => () }
+  private[sql] def recordSignature(spark: SparkSession,
+      name: String, params: Vector[(String, Option[String])]): Unit = {
+    signatures.put((spark, name.toLowerCase), params)
+    ()
+  }
 
   private def signatureOf(name: String): Option[Vector[(String, Option[String])]] =
     try Option(signatures.get(
@@ -207,7 +210,7 @@ object MacroRewrite {
     if (changed) Some(cur) else None
   }
 
-  def rewrite(sql: String, delegate: ParserInterface): Option[String] = {
+  def rewrite(sql: String, delegate: ParserInterface): Option[LogicalPlan] = {
     val m = headRe.findFirstMatchIn(sql).getOrElse(return None)
     val orReplace = m.group(1) != null
     val name = m.group(2)
@@ -337,16 +340,6 @@ object MacroRewrite {
       Map("errorMessage" ->
         s"macro '$name' references itself — recursive macros are not supported"))
 
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.functionRegistry
-    val fid = FunctionIdentifier(name.toLowerCase)
-    if (!orReplace && registry.functionExists(fid))
-      throw new org.apache.spark.sql.AnalysisException(
-        "USER_RAISED_EXCEPTION",
-        Map("errorMessage" ->
-          s"macro '$name' already exists — use CREATE OR REPLACE MACRO"))
-
     val lowered = params.map(_.name.toLowerCase)
     val nRequired = if (firstDefault < 0) params.size else firstDefault
     val builder: Seq[Expression] => Expression = { args =>
@@ -378,10 +371,8 @@ object MacroRewrite {
         case l: ListQuery => l.copy(exprId = NamedExpression.newExprId)
       }
     }
-    registry.registerFunction(fid,
-      new ExpressionInfo(classOf[GraftSparkExtensions].getName, name), builder)
-    recordSignature(name, params.map(p => (p.name, p.default)))
-    Some(s"SELECT '$name' AS `macro`")
+    Some(CreateMacroCommand(name, orReplace, Left(builder),
+      Some(params.map(p => (p.name, p.default)))))
   }
 
   /** Overload list `name(a) AS body1, (a, b := 1) AS body2, …` (DuckDB
@@ -396,7 +387,7 @@ object MacroRewrite {
     * the single form, applied per overload.
     */
   private def overloads(name: String, orReplace: Boolean, segs: Vector[String],
-      delegate: ParserInterface): Option[String] = {
+      delegate: ParserInterface): Option[LogicalPlan] = {
     val identRe = """\A[A-Za-z_][A-Za-z0-9_]*\z""".r
     // One overload: ordered parameter names, default templates for the
     // trailing optional run, required-arity floor, body template — the
@@ -470,16 +461,6 @@ object MacroRewrite {
       if (ranges(i)._1 <= ranges(j)._2 && ranges(j)._1 <= ranges(i)._2)
         return None
 
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.functionRegistry
-    val fid = FunctionIdentifier(name.toLowerCase)
-    if (!orReplace && registry.functionExists(fid))
-      throw new org.apache.spark.sql.AnalysisException(
-        "USER_RAISED_EXCEPTION",
-        Map("errorMessage" ->
-          s"macro '$name' already exists — use CREATE OR REPLACE MACRO"))
-
     val arities = ranges.sorted.map { case (a, b) =>
       if (a == b) s"$a" else s"$a-$b" }.mkString(", ")
     val builder: Seq[Expression] => Expression = { args =>
@@ -499,9 +480,7 @@ object MacroRewrite {
           full(lowered.indexOf(a.nameParts.head.toLowerCase))
       }
     }
-    registry.registerFunction(fid,
-      new ExpressionInfo(classOf[GraftSparkExtensions].getName, name), builder)
-    Some(s"SELECT '$name' AS `macro`")
+    Some(CreateMacroCommand(name, orReplace, Left(builder), None))
   }
 
   /** `CREATE MACRO name(a[, b := d]) AS TABLE <query>`: DuckDB call
@@ -523,7 +502,7 @@ object MacroRewrite {
     */
   private def tableMacro(name: String, orReplace: Boolean, query: String,
       params: Vector[(String, Option[String])],
-      delegate: ParserInterface): Option[String] = {
+      delegate: ParserInterface): Option[LogicalPlan] = {
     if (query.isEmpty) return None
     val plan = try delegate.parsePlan(query) catch { case NonFatal(_) => return None }
     // Direct self-reference would expand forever at every call site's
@@ -557,45 +536,72 @@ object MacroRewrite {
       val i = params.indexWhere(_._2.isDefined)
       if (i < 0) params.size else i
     }
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.tableFunctionRegistry
-    val fid = FunctionIdentifier(name.toLowerCase)
-    if (!orReplace && registry.functionExists(fid))
-      throw new org.apache.spark.sql.AnalysisException(
-        "USER_RAISED_EXCEPTION",
-        Map("errorMessage" ->
-          s"macro '$name' already exists — use CREATE OR REPLACE MACRO"))
-    registry.registerFunction(fid,
-      new ExpressionInfo(classOf[GraftSparkExtensions].getName, name),
-      (args: Seq[Expression]) => {
-        if (args.size < nRequired || args.size > params.size) {
-          val arity = if (nRequired == params.size) s"${params.size}"
-            else s"$nRequired to ${params.size}"
-          throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION",
-            Map("errorMessage" ->
-              s"table macro '$name' expects $arity argument(s), got ${args.size}"))
-        }
-        if (params.isEmpty) plan
-        else {
-          val full = args ++ lowered.drop(args.size).map(defaultTemplates)
-          // transformExpressionsUp per node (bottom-up, replacements
-          // never revisited) — a transformDown-based walk would re-enter
-          // the substituted expression and re-match a call-site attribute
-          // that happens to share a parameter name (`f(k + 1)` with
-          // parameter k loops forever; `g(b + 1, 10)` silently rewrites
-          // the caller's b), exactly why the scalar path uses transformUp.
-          plan.transformUpWithSubqueries {
-            case p => p.transformExpressionsUp {
-              case a: UnresolvedAttribute if a.nameParts.size == 1 &&
-                  paramSet(a.nameParts.head.toLowerCase) =>
-                full(lowered.indexOf(a.nameParts.head.toLowerCase))
-            }
+    val builder = (args: Seq[Expression]) => {
+      if (args.size < nRequired || args.size > params.size) {
+        val arity = if (nRequired == params.size) s"${params.size}"
+          else s"$nRequired to ${params.size}"
+        throw new org.apache.spark.sql.AnalysisException(
+          "USER_RAISED_EXCEPTION",
+          Map("errorMessage" ->
+            s"table macro '$name' expects $arity argument(s), got ${args.size}"))
+      }
+      if (params.isEmpty) plan
+      else {
+        val full = args ++ lowered.drop(args.size).map(defaultTemplates)
+        // transformExpressionsUp per node (bottom-up, replacements
+        // never revisited) — a transformDown-based walk would re-enter
+        // the substituted expression and re-match a call-site attribute
+        // that happens to share a parameter name (`f(k + 1)` with
+        // parameter k loops forever; `g(b + 1, 10)` silently rewrites
+        // the caller's b), exactly why the scalar path uses transformUp.
+        plan.transformUpWithSubqueries {
+          case p => p.transformExpressionsUp {
+            case a: UnresolvedAttribute if a.nameParts.size == 1 &&
+                paramSet(a.nameParts.head.toLowerCase) =>
+              full(lowered.indexOf(a.nameParts.head.toLowerCase))
           }
         }
-      })
-    recordSignature(name, params)
-    Some(s"SELECT '$name' AS `macro`")
+      }
+    }
+    Some(CreateMacroCommand(name, orReplace, Right(builder), Some(params)))
+  }
+}
+
+/** `CREATE [OR REPLACE] MACRO` as a Spark command ([[MacroRewrite]] builds
+  * it while parsing and registers nothing): `run` checks that a plain
+  * CREATE does not replace an existing function, registers the builder in
+  * the session's function registry (scalar macros and overload lists,
+  * `Left`) or table function registry (table macros, `Right`), and records
+  * the parameter signature that named call sites are lowered against.
+  */
+case class CreateMacroCommand(
+    name: String,
+    orReplace: Boolean,
+    builder: Either[Seq[Expression] => Expression, Seq[Expression] => LogicalPlan],
+    signature: Option[Vector[(String, Option[String])]])
+    extends LeafRunnableCommand {
+
+  override val output: Seq[Attribute] =
+    Seq(AttributeReference("macro", StringType, nullable = false)())
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(name, if (builder.isLeft) "scalar" else "table") ++
+      (if (orReplace) Iterator("or replace") else Iterator.empty)
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    val fid = FunctionIdentifier(name.toLowerCase)
+    val info = new ExpressionInfo(classOf[GraftSparkExtensions].getName, name)
+    val exists = builder.fold(
+      _ => spark.sessionState.functionRegistry.functionExists(fid),
+      _ => spark.sessionState.tableFunctionRegistry.functionExists(fid))
+    if (!orReplace && exists)
+      throw new AnalysisException("USER_RAISED_EXCEPTION",
+        Map("errorMessage" -> s"macro '$name' already exists — use CREATE OR REPLACE MACRO"))
+    builder match {
+      case Left(b) => spark.sessionState.functionRegistry.registerFunction(fid, info, b)
+      case Right(b) => spark.sessionState.tableFunctionRegistry.registerFunction(fid, info, b)
+    }
+    signature.foreach(MacroRewrite.recordSignature(spark, name, _))
+    Seq(Row(name))
   }
 }

@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
   * Spark parses none of the three, so all ride the hint parser's
   * failure chain. PREPARE stores the statement TEXT as a session-keyed
   * template (replacing silently, as DuckDB does) and returns a 1-row
-  * marker like [[MacroRewrite]]'s DDL forms; EXECUTE splices the call's
+  * marker; EXECUTE splices the call's
   * argument expression texts into the template's `$N` / positional `?`
   * markers (quote/comment-aware, each argument parenthesized) and hands
   * the substituted statement back to the parse chain — so a prepared

@@ -42,8 +42,9 @@ class SolverPropertySpec extends AnyFunSuite {
         case LpStatus.Unknown    => fail("solver returned Unknown on a tiny model")
       }
     }
-    // The generator must actually exercise all three outcomes.
-    assert(optimal > 50 && infeasible > 5 && unbounded > 5,
-      s"degenerate generator: $optimal/$infeasible/$unbounded")
+    // Pinned to the counts a fresh dense LU per iteration gives on this
+    // seed (the kept factor must not change a status); all three occur.
+    assert((optimal, infeasible, unbounded) == ((422, 9, 69)),
+      s"optimal/infeasible/unbounded: $optimal/$infeasible/$unbounded")
   }
 }

@@ -6,23 +6,81 @@ class SolverSpec extends AnyFunSuite {
   val Inf = 1e30
   val tol = 1e-6
 
-  test("DenseLU solves A x = b and A' x = b") {
-    val a = Array(
-      Array(2.0, 1.0, 0.0),
-      Array(-1.0, 3.0, 2.0),
-      Array(0.5, 0.0, 1.0))
-    val lu = new DenseLU(a.map(_.clone()))
-    val b = Array(3.0, 4.0, 1.5)
-    val x = lu.solve(b)
-    for (i <- 0 until 3) {
-      val got = (0 until 3).map(j => a(i)(j) * x(j)).sum
-      assert(math.abs(got - b(i)) < 1e-10)
+  test("basis factor: FTRAN and BTRAN match the explicit basis across eta updates and a refactor") {
+    val rng = new scala.util.Random(7)
+    val (m, n) = (12, 30)
+    val entries = for {
+      i <- 0 until m; j <- 0 until n if rng.nextDouble() < 0.3
+    } yield (i, j, rng.nextDouble() * 4 - 2)
+    val lp = new SparseLp(LinearModel(n, m, new Array[Double](n), new Array[Double](n),
+      Array.fill(n)(1.0), Array.fill(m)(-Inf), Array.fill(m)(Inf), entries.toArray,
+      Array.fill(n)(VarKind.Continuous)))
+    def column(j: Int): Array[Double] = {
+      val a = new Array[Double](m)
+      for (e <- lp.start(j) until lp.start(j + 1)) a(lp.row(e)) = lp.value(e)
+      a
     }
-    val xt = lu.solveT(b)
-    for (i <- 0 until 3) {
-      val got = (0 until 3).map(j => a(j)(i) * xt(j)).sum
-      assert(math.abs(got - b(i)) < 1e-10)
+    val factor = new BasisFactor(lp, Array.tabulate(m)(n + _))
+    assert(factor.refactor())
+    var etasSeen, refactorsSeen = 0
+    for (step <- 1 to BasisFactor.RefactorEvery + 8) {
+      // A nonbasic column entering at the position of its largest B⁻¹a_q
+      // entry, as the ratio test would pick on a well-scaled model.
+      val basic = factor.basis.toSet
+      val (q, w, pos) = rng.shuffle((0 until n + m).filterNot(basic).toList).iterator.map { q =>
+        val w = column(q); factor.ftran(w)
+        (q, w, w.indices.maxBy(i => math.abs(w(i))))
+      }.find { case (_, w, pos) => math.abs(w(pos)) > 0.5 }.get
+      assert(factor.pivot(pos, q, w))
+      if (factor.etaCount == 0) refactorsSeen += 1 else etasSeen = math.max(etasSeen, factor.etaCount)
+      val b = Array.tabulate(m, m)((r, p) => column(factor.basis(p))(r))
+      val rhs = Array.fill(m)(rng.nextDouble() * 2 - 1)
+      val x = rhs.clone(); factor.ftran(x)
+      val y = rhs.clone(); factor.btran(y)
+      for ((got, want, what) <- Seq((x, denseSolve(b, rhs), "ftran"), (y, denseSolve(b.transpose, rhs), "btran")))
+        for (i <- 0 until m)
+          assert(math.abs(got(i) - want(i)) <= 1e-10 * (1 + math.abs(want(i))),
+            s"step $step $what($i): ${got(i)} vs ${want(i)} with ${factor.etaCount} etas")
     }
+    assert(refactorsSeen == 1 && etasSeen == BasisFactor.RefactorEvery - 1 && factor.etaCount == 8)
+  }
+
+  test("sparse columns sum duplicate entries, sort rows and append the slack columns") {
+    // Entries out of order, (0,0) given twice, (1,0) cancelling to zero.
+    val m = LinearModel(2, 2, Array(1.0, 1.0), Array(0.0, 0.0), Array(Inf, Inf),
+      Array(3.0, 2.0), Array(Inf, Inf),
+      Array((1, 1, 2.0), (0, 0, 1.0), (1, 0, 0.5), (0, 0, 2.0), (1, 0, -0.5), (0, 1, 1.0)),
+      Array(VarKind.Continuous, VarKind.Continuous))
+    val lp = new SparseLp(m)
+    def col(j: Int) = (lp.start(j) until lp.start(j + 1)).map(e => (lp.row(e), lp.value(e)))
+    assert((0 until 4).map(col) == Seq(Seq((0, 3.0)), Seq((0, 1.0), (1, 2.0)), Seq((0, -1.0)), Seq((1, -1.0))))
+    val sol = BoundedSimplex.solve(m)
+    assert(sol.status == LpStatus.Optimal && math.abs(sol.objective - 5.0 / 3) < tol) // x = 2/3, y = 1
+  }
+
+  test("planted-optimum LPs from 50x100 to 200x400 reach the planted objective with a KKT certificate") {
+    val rng = new scala.util.Random(3)
+    for ((m, n) <- Seq((50, 100), (100, 200), (200, 400)); k <- 0 until 2) {
+      val (model, opt) = graft.tools.SolverBench.plantedLp(rng, m, n)
+      val sol = BoundedSimplex.solve(model)
+      assert(sol.status == LpStatus.Optimal, s"${m}x$n #$k")
+      assert(math.abs(sol.objective - opt) <= 1e-6 * (1 + math.abs(opt)),
+        s"${m}x$n #$k: objective ${sol.objective} vs planted $opt")
+      checkKkt(model, sol, s"${m}x$n #$k")
+    }
+  }
+
+  test("a seeded 100x200 solve allocates under 4 MB on the calling thread") {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val (model, opt) = graft.tools.SolverBench.plantedLp(new scala.util.Random(11), 100, 200)
+    BoundedSimplex.solve(model) // loads the classes
+    val tid = Thread.currentThread.getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val sol = BoundedSimplex.solve(model)
+    val bytes = mx.getThreadAllocatedBytes(tid) - before
+    assert(sol.status == LpStatus.Optimal && math.abs(sol.objective - opt) <= 1e-6 * (1 + math.abs(opt)))
+    assert(bytes < 4L * 1024 * 1024, s"allocated $bytes bytes in ${sol.iterations} iterations")
   }
 
   test("golden LP from highs.test: x=0 rc=1, y=1 rc=1, Optimal") {
@@ -168,6 +226,26 @@ class SolverSpec extends AnyFunSuite {
       assert(math.abs(m.colCost(j) - atl(j) - sol.reducedCost(j)) <= t ||
         sol.reducedCost(j) == 0.0 && math.abs(m.colCost(j) - atl(j)) <= t,
         s"$ctx col $j rc identity")
+  }
+
+  /** x with a x = b, by Gaussian elimination with partial pivoting. */
+  private def denseSolve(a0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {
+    val n = b0.length
+    val a = a0.map(_.clone()); val b = b0.clone()
+    for (k <- 0 until n) {
+      val p = (k until n).maxBy(i => math.abs(a(i)(k)))
+      val tr = a(p); a(p) = a(k); a(k) = tr
+      val tb = b(p); b(p) = b(k); b(k) = tb
+      for (i <- k + 1 until n) {
+        val f = a(i)(k) / a(k)(k)
+        for (j <- k until n) a(i)(j) -= f * a(k)(j)
+        b(i) -= f * b(k)
+      }
+    }
+    val x = new Array[Double](n)
+    for (k <- n - 1 to 0 by -1)
+      x(k) = (b(k) - (k + 1 until n).map(j => a(k)(j) * x(j)).sum) / a(k)(k)
+    x
   }
 
   private def rowActivity(m: LinearModel, x: Array[Double]): Array[Double] = {

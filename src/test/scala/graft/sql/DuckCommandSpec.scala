@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -201,6 +202,40 @@ class DuckCommandSpec extends AnyFunSuite {
     }
     graft.highs.ModelRegistry.remove("cmd_q")
     spark.sql("DROP TABLE cmd_c")
+  }
+
+  test("EXPLAIN CREATE MACRO registers nothing; the statement then registers the macro") {
+    val scalar = spark.sessionState.functionRegistry
+    val table = spark.sessionState.tableFunctionRegistry
+    def registries = (scalar.listFunction().toSet, table.listFunction().toSet)
+    val before = registries
+    val stmts = Seq(
+      "CREATE MACRO cmd_mac(a, b := 1) AS a + b",
+      "CREATE MACRO cmd_ovl(a) AS a * 10, (a, b) AS a * b",
+      "CREATE MACRO cmd_tm(k) AS TABLE SELECT k AS v")
+    stmts.foreach { stmt =>
+      val (text, jobs) = jobsDuring(
+        spark.sql(s"EXPLAIN $stmt").collect().map(_.getString(0)).mkString("\n"))
+      assert(text.contains("CreateMacroCommand"), s"$stmt rendered:\n$text")
+      assert(!text.contains("Error occurred"), s"$stmt rendered:\n$text")
+      assert(jobs == 0, s"$stmt ran $jobs Spark job(s)")
+    }
+    assert(registries == before)
+    assert(intercept[AnalysisException](spark.sql("SELECT cmd_mac(1)").collect())
+      .getMessage.contains("cmd_mac"))
+    // Issued for real, each registers once and answers its name.
+    stmts.zip(Seq("cmd_mac", "cmd_ovl", "cmd_tm")).foreach { case (stmt, name) =>
+      assert(rows(stmt) == Seq(Seq(name)))
+    }
+    assert(rows("SELECT cmd_mac(1), cmd_mac(1, b := 5), cmd_ovl(2), cmd_ovl(2, 3)") ==
+      Seq(Seq(2, 6, 20, 6)))
+    assert(rows("SELECT v FROM cmd_tm(7)") == Seq(Seq(7)))
+    // A plain CREATE over an existing name fails when it runs.
+    assert(intercept[AnalysisException](spark.sql("CREATE MACRO cmd_mac(a) AS a"))
+      .getMessage.contains("already exists"))
+    Seq("cmd_mac", "cmd_ovl").foreach(n => scalar.dropFunction(FunctionIdentifier(n)))
+    table.dropFunction(FunctionIdentifier("cmd_tm"))
+    assert(registries == before)
   }
 
   test("parsing a statement mutates nothing") {
