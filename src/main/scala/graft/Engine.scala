@@ -45,11 +45,24 @@ object Engine {
       // TYPE at parse); DuckDB has TIME unconditionally, so pasted
       // scripts expect it.
       .config("spark.sql.timeType.enabled", "true")
+      .config(CodegenCacheKey, CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Size of Spark's per-JVM cache of compiled generated classes (a
+    * static setting: the cache is built once, with the first session's
+    * value). Spark's default of 100 is smaller than one pass of a short
+    * DML script: the 15-statement `sql_etl` script generates 91–117
+    * distinct classes per pass, so at 100 it evicted and recompiled
+    * almost all of them every pass (7.9 Janino compiles per statement on
+    * a traced pass, 0 at 2000). The cache keys on the generated source,
+    * so a repeated statement hits; each entry holds one compiled class.
+    */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries = 2000
 
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",

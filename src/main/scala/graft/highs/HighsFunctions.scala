@@ -176,13 +176,13 @@ object HighsFunctions {
     * variables or constraints we fail fast with an ERROR row (the engine's
     * error-as-data convention) rather than let a runaway model hold a core.
     */
-  val MaxDenseDim = 2000
+  val MaxModelDim = 2000
 
   private[highs] def sizeGuard(info: ModelInfo): Option[String] = {
     val (nv, nc) = (info.varNames.size, info.conNames.size)
-    if (nv > MaxDenseDim || nc > MaxDenseDim)
+    if (nv > MaxModelDim || nc > MaxModelDim)
       Some(s"ERROR: Model '${info.name}' too large for the embedded simplex " +
-        s"($nv variables, $nc constraints; limit $MaxDenseDim)")
+        s"($nv variables, $nc constraints; limit $MaxModelDim)")
     else None
   }
 

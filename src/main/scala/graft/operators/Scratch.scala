@@ -3,6 +3,7 @@ package graft.operators
 import graft.GraftConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Scratch-parquet lifecycle for operators that checkpoint intermediates
   * (see [[Dedup]]). Three guarantees:
@@ -56,7 +57,31 @@ private[graft] object Scratch {
     val spark = df.sparkSession
     val dir = s"${sessionRoot(spark)}/${prefix}_${java.util.UUID.randomUUID()}"
     df.write.mode("overwrite").parquet(dir)
-    (spark.read.parquet(dir), dir)
+    (readBack(spark, dir, df.schema), dir)
+  }
+
+  /** Read a parquet dir the engine wrote itself with the schema it wrote.
+    * A bare `read.parquet` would run a Spark job to read the schema back
+    * out of a footer (~35 ms warm); the declared read runs none and
+    * reports the same schema (`TempTableParitySpec` pins it type by type).
+    */
+  def readBack(spark: SparkSession, dir: String, written: StructType): DataFrame =
+    spark.read.schema(nullableSchema(written)).parquet(dir)
+
+  /** Recursively nullable schema — what a parquet read-back reports. */
+  def nullableSchema(s: StructType): StructType = {
+    def widen(dt: DataType): DataType = dt match {
+      case st: StructType =>
+        StructType(st.fields.map(f =>
+          f.copy(dataType = widen(f.dataType), nullable = true)))
+      case at: ArrayType =>
+        at.copy(elementType = widen(at.elementType), containsNull = true)
+      case mt: MapType =>
+        mt.copy(keyType = widen(mt.keyType), valueType = widen(mt.valueType),
+          valueContainsNull = true)
+      case o => o
+    }
+    widen(s).asInstanceOf[StructType]
   }
 
   /** A fresh directory path under the session scratch root, for callers

@@ -3335,10 +3335,10 @@ object AnalyticsQueries {
        FROM lineitem WHERE l_returnflag = 'R'
        GROUP BY 1 ORDER BY 1""") { (spark, sfDir) =>
     val dir = graft.operators.Scratch.freshDir(spark, "part48")
-    t(spark, sfDir, "lineitem")
+    val src = t(spark, sfDir, "lineitem")
       .select("l_returnflag", "l_linestatus", "l_extendedprice")
-      .write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
-    spark.read.parquet(dir)
+    src.write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
+    graft.operators.Scratch.readBack(spark, dir, src.schema)
       .filter(col("l_returnflag") === "R")
       .groupBy("l_linestatus")
       .agg(count(lit(1)).as("n"),

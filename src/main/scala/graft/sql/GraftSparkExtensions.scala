@@ -1446,14 +1446,16 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             () => commentColumnRewrite(text),
             () => exportImportRewrite(text),
             // PREPARE/EXECUTE/DEALLOCATE (none parse in Spark; EXECUTE
-            // IMMEDIATE is native and never reaches this chain). The
-            // substituted EXECUTE output runs back through preRewrite so
-            // a prepared UPDATE/DELETE/COLUMNS statement — shapes that
-            // PARSE natively but need the pre-delegation rewrites —
-            // executes too.
+            // IMMEDIATE is native and never reaches this chain). PREPARE
+            // and DEALLOCATE are commands; the substituted EXECUTE output
+            // runs back through preRewrite so a prepared
+            // UPDATE/DELETE/COLUMNS statement — shapes that PARSE
+            // natively but need the pre-delegation rewrites — executes
+            // too.
             () => text match {
               case prepareStmtRe() =>
-                PrepareRewrite.rewrite(text).flatMap(t => claimed(preRewrite(t)))
+                PrepareRewrite.rewrite(text).flatMap(_.fold(Some(_),
+                  t => claimed(preRewrite(t))))
               case _ => None },
             sql(text match { case distinctOnRe() =>
               DistinctOnRewrite.rewrite(text); case _ => None }),

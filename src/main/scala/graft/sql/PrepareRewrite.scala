@@ -1,6 +1,10 @@
 package graft.sql
 
-import scala.util.control.NonFatal
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.types.StringType
 
 /** DuckDB's `PREPARE name AS <statement>` / `EXECUTE name(args)` /
   * `DEALLOCATE [PREPARE] name` executing — the scripted
@@ -8,9 +12,11 @@ import scala.util.control.NonFatal
   * DuckDB 1.0 oracle too, so the lane is literal-oracle-able).
   *
   * Spark parses none of the three, so all ride the hint parser's
-  * failure chain. PREPARE stores the statement TEXT as a session-keyed
-  * template (replacing silently, as DuckDB does) and returns a 1-row
-  * marker; EXECUTE splices the call's
+  * failure chain. PREPARE and DEALLOCATE parse to commands
+  * ([[PrepareCommand]], [[DeallocateCommand]]) that store or remove the
+  * statement TEXT as a session-keyed template when they run (PREPARE
+  * replaces silently, as DuckDB does) and return a 1-row marker, so
+  * EXPLAIN of either changes nothing; EXECUTE splices the call's
   * argument expression texts into the template's `$N` / positional `?`
   * markers (quote/comment-aware, each argument parenthesized) and hands
   * the substituted statement back to the parse chain — so a prepared
@@ -36,24 +42,23 @@ object PrepareRewrite {
   private val deallocateRe =
     """(?is)\A\s*DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
+  private[sql] val registry = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), String]()
 
   private def fail(msg: String): Nothing =
     throw new org.apache.spark.sql.AnalysisException(
       "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
 
-  def rewrite(sql: String): Option[String] = sql match {
+  /** PREPARE and DEALLOCATE as their command (Left); EXECUTE as the
+    * substituted statement text (Right), which the caller parses.
+    */
+  def rewrite(sql: String): Option[Either[LogicalPlan, String]] = sql match {
     case prepareRe(name, body) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      registry.put((spark, name.toLowerCase), body.trim)
-      Some(s"SELECT '${name.toLowerCase}' AS `prepare`")
+      Some(Left(PrepareCommand(name.toLowerCase, body.trim)))
     case deallocateRe(name) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      registry.remove((spark, name.toLowerCase))
-      Some(s"SELECT '${name.toLowerCase}' AS `deallocate`")
+      Some(Left(DeallocateCommand(name.toLowerCase)))
     case executeRe(name, argText) =>
-      val spark = org.apache.spark.sql.SparkSession.active
+      val spark = SparkSession.active
       val template = registry.get((spark, name.toLowerCase))
       if (template == null)
         fail(s"""Prepared statement "${name.toLowerCase}" does not exist""")
@@ -61,7 +66,7 @@ object PrepareRewrite {
         if (argText == null || argText.trim.isEmpty) Vector.empty[String]
         else ReplaceRewrite.splitTop(argText).map(_.trim)
       if (args.exists(_.isEmpty)) fail(s"EXECUTE $name: empty argument")
-      Some(substitute(name.toLowerCase, template, args))
+      Some(Right(substitute(name.toLowerCase, template, args)))
     case _ => None
   }
 
@@ -124,5 +129,27 @@ object PrepareRewrite {
       fail(s"EXECUTE $name: ${args.length} argument(s) supplied but the " +
         s"statement uses ${used.size}")
     out.toString
+  }
+}
+
+/** `PREPARE name AS <statement>`: stores the template when it runs. */
+case class PrepareCommand(name: String, statement: String) extends LeafRunnableCommand {
+  override val output: Seq[Attribute] =
+    Seq(AttributeReference("prepare", StringType, nullable = false)())
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    PrepareRewrite.registry.put((spark, name), statement)
+    Seq(Row(name))
+  }
+}
+
+/** `DEALLOCATE [PREPARE] name`: removes the template when it runs. */
+case class DeallocateCommand(name: String) extends LeafRunnableCommand {
+  override val output: Seq[Attribute] =
+    Seq(AttributeReference("deallocate", StringType, nullable = false)())
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    PrepareRewrite.registry.remove((spark, name))
+    Seq(Row(name))
   }
 }

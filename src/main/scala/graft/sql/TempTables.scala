@@ -22,11 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TempTables {
 
-  /** Table content: Left(scratch dir) for parquet-backed snapshots,
-    * Right(frozen LocalRelation DataFrame) for small ones (see [[put]]).
+  /** Table content: the DataFrame the fronting view is registered from,
+    * and the scratch dir behind it (None for the LocalRelation snapshots
+    * of small tables, see [[put]]).
     */
+  private final case class Snapshot(df: DataFrame, dir: Option[String])
+
   private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Either[String, DataFrame]]()
+    (SparkSession, String), Snapshot]()
 
   /** Declared PRIMARY KEY columns (CREATE TEMP TABLE ... PRIMARY KEY) —
     * the conflict target INSERT OR REPLACE / OR IGNORE resolve against
@@ -84,61 +87,38 @@ object TempTables {
     * keeps every mutation plan executed EXACTLY once, like the write
     * path — a probe would re-execute nondeterministic content (nextval,
     * random) when it overflows. The schema is widened asNullable to
-    * match what the parquet read-back used to report, so downstream
-    * schemas are unchanged. Snapshot semantics are preserved trivially:
+    * match what the parquet read-back reports, so downstream schemas do
+    * not depend on the arm. Snapshot semantics are preserved trivially:
     * a LocalRelation is immutable, so a DataFrame captured before the
     * mutation keeps its rows exactly like a superseded scratch dir.
+    *
+    * The parquet arm fronts the view with the DataFrame
+    * [[graft.operators.Scratch.materialize]] read back with the written
+    * schema: the write is the statement's only Spark job.
     */
   def put(name: String, df: DataFrame): Unit = {
     val spark = df.sparkSession
     val cap = graft.GraftConf.TempTableLocalRows(spark)
-    val content: Either[String, DataFrame] =
+    val content =
       if (cap > 0 &&
           df.queryExecution.optimizedPlan.maxRows.exists(_ <= cap)) {
         val rows = df.collect()
-        Right(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), nullableSchema(df.schema)))
+        Snapshot(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          graft.operators.Scratch.nullableSchema(df.schema)), None)
       } else {
         // The superseded dir is NOT deleted eagerly: a DataFrame captured
         // before the mutation (or a query mid-flight) still reads it — the
         // snapshot contract. Superseded snapshots live until the scratch
         // root's JVM-exit cleanup; a mutation-heavy loop trades that disk
         // for never breaking a reader.
-        Left(graft.operators.Scratch.materialize(df, s"ttab_$name")._2)
+        val (back, dir) = graft.operators.Scratch.materialize(df, s"ttab_$name")
+        Snapshot(back, Some(dir))
       }
-    register(name, content)
+    content.df.createOrReplaceTempView(name)
     registry.put(key(name), content)
     pending.remove(key(name))
     ()
   }
-
-  /** Recursively nullable schema — what a parquet read-back reports, so
-    * local snapshots front the same schema the scratch path did.
-    */
-  private def nullableSchema(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    def widen(dt: DataType): DataType = dt match {
-      case st: StructType =>
-        StructType(st.fields.map(f =>
-          f.copy(dataType = widen(f.dataType), nullable = true)))
-      case at: ArrayType =>
-        at.copy(elementType = widen(at.elementType), containsNull = true)
-      case mt: MapType =>
-        mt.copy(keyType = widen(mt.keyType), valueType = widen(mt.valueType),
-          valueContainsNull = true)
-      case o => o
-    }
-    widen(s).asInstanceOf[StructType]
-  }
-
-  /** (Re-)point the fronting view at the given content. */
-  private def register(name: String, content: Either[String, DataFrame]): Unit =
-    content match {
-      case Left(dir) =>
-        SparkSession.active.read.parquet(dir).createOrReplaceTempView(name)
-      case Right(local) => local.createOrReplaceTempView(name)
-    }
 
   // --- Coalesced appends (round 19, verdict-18 #8) -------------------
   //
@@ -208,8 +188,8 @@ object TempTables {
       // target — deletion defers to the scratch root's JVM-exit
       // cleanup, the same lifecycle superseded mutation snapshots get.
       // (Local snapshots have no dir; the driver copy is GC'd.)
-      content match {
-        case Left(dir) if !txnActive =>
+      content.dir match {
+        case Some(dir) if !txnActive =>
           graft.operators.Scratch.delete(SparkSession.active, dir)
         case _ => ()
       }
@@ -232,7 +212,7 @@ object TempTables {
   // 1.0: nested BEGIN, bare COMMIT/ROLLBACK).
 
   private val txnRegistry = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, Map[String, (Either[String, DataFrame], Option[Seq[String]])]]()
+    SparkSession, Map[String, (Snapshot, Option[Seq[String]])]]()
 
   def txnActive: Boolean = txnRegistry.containsKey(SparkSession.active)
 
@@ -260,7 +240,7 @@ object TempTables {
         "TransactionContext Error: cannot rollback - no transaction is active")
     names().filterNot(snap.contains).foreach(drop)
     snap.foreach { case (n, (content, pk)) =>
-      register(n, content)
+      content.df.createOrReplaceTempView(n)
       registry.put(key(n), content)
       pending.remove(key(n))
       pk match {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Scratch}
 
 /** Streaming incremental near-dup dedup — the crawl-pipeline production
   * shape: increments arrive as micro-batches (files landing in a
@@ -92,10 +92,13 @@ object StreamingDedup {
     /** One standing table: a partitioned base (versioned so compaction
       * swaps atomically — probe and compact both run on the
       * foreachBatch thread, never concurrently) plus a flat delta dir.
+      * Both are read back with the schema that was written to them.
       */
     private final class Standing(name: String, bkt: Column) {
       private var baseVer = 0
       private var deltaFiles = 0
+      private var baseSchema: StructType = null
+      private var deltaSchema: StructType = null
       // The base is immutable between compactions — reuse one DataFrame
       // per version so its partition discovery (listing `buckets` dirs)
       // runs once, not once per probe per batch. Partition pruning
@@ -104,22 +107,31 @@ object StreamingDedup {
       private def basePath = root.resolve(s"$name-base-v$baseVer").toString
       private def deltaPath = root.resolve(s"$name-delta").toString
       private def base0: DataFrame = {
-        if (baseDf == null) baseDf = spark.read.parquet(basePath)
+        if (baseDf == null) baseDf = Scratch.readBack(spark, basePath, baseSchema)
         baseDf
       }
+      private def delta: DataFrame = Scratch.readBack(spark, deltaPath, deltaSchema)
 
-      def seed(df: DataFrame): Unit = {
+      /** Write `df` as the partitioned base at `path`. */
+      private def writeBase(df: DataFrame, path: String): Unit = {
+        val withBkt = df.withColumn(BK, bkt)
         // One shuffle partition per bucket: the write is one task and
         // one file per bucket dir, not `shuffle.partitions` tasks
         // hashing into `buckets` dirs.
-        df.withColumn(BK, bkt).repartition(buckets, col(BK))
-          .write.mode("overwrite").partitionBy(BK).parquet(basePath)
+        withBkt.repartition(buckets, col(BK))
+          .write.mode("overwrite").partitionBy(BK).parquet(path)
+        baseSchema = withBkt.schema
+      }
+
+      def seed(df: DataFrame): Unit = {
+        writeBase(df, basePath)
         baseDf = null
       }
 
       /** Micro-batch upsert: one flat file, O(batch). */
       def append(df: DataFrame): Unit = {
         df.coalesce(1).write.mode("append").parquet(deltaPath)
+        deltaSchema = df.schema
         deltaFiles += 1
       }
 
@@ -135,7 +147,7 @@ object StreamingDedup {
           case None => base0
         }).drop(BK)
         if (deltaFiles == 0) base
-        else base.unionByName(spark.read.parquet(deltaPath))
+        else base.unionByName(delta)
       }
 
       /** Fold the delta into a fresh one-file-per-bucket base. */
@@ -144,14 +156,12 @@ object StreamingDedup {
         val merged = {
           val b = base0.drop(BK)
           if (deltaFiles == 0) b
-          else b.unionByName(spark.read.parquet(deltaPath))
+          else b.unionByName(delta)
         }
         // Write the new base to the v+1 path BEFORE advancing the
         // version — a failed write must leave the session on the old,
         // intact base (round 18, ADVICE).
-        val next = root.resolve(s"$name-base-v${baseVer + 1}").toString
-        merged.withColumn(BK, bkt).repartition(buckets, col(BK))
-          .write.mode("overwrite").partitionBy(BK).parquet(next)
+        writeBase(merged, root.resolve(s"$name-base-v${baseVer + 1}").toString)
         baseVer += 1
         deltaFiles = 0
         baseDf = null
@@ -196,6 +206,7 @@ object StreamingDedup {
     private val bandsT = new Standing("bands", bandBkt)
     private val seenT = new Standing("seen", docBkt)
     private val keptDir = root.resolve("kept").toString
+    private var keptSchema: StructType = null
     private var batches = 0L
 
     /** An observed touched-bucket set as the probe's pruning argument:
@@ -218,6 +229,8 @@ object StreamingDedup {
     private[StreamingDedup] def seed(archive: DataFrame): Unit = {
       val a = archive.select(col("doc_id").cast("long").as("doc_id"),
         col("text"))
+      val keptSeed = a.select(col("doc_id")).limit(0)
+      keptSchema = keptSeed.schema
       // Four independent writes, each scanning the source itself (NOT a
       // checkpoint of the archive — at a 100 TB archive that
       // materialization is the thing to avoid), run concurrently: the
@@ -231,7 +244,7 @@ object StreamingDedup {
           StreamingDedup.actionEc),
         scala.concurrent.Future(seenT.seed(a))(StreamingDedup.actionEc),
         // kept starts empty, schema-stable
-        scala.concurrent.Future(a.select(col("doc_id")).limit(0)
+        scala.concurrent.Future(keptSeed
           .write.mode("overwrite").parquet(keptDir))(StreamingDedup.actionEc))
       seeds.foreach(f => scala.concurrent.Await.result(f,
         scala.concurrent.duration.Duration(3600, "s")))
@@ -395,7 +408,7 @@ object StreamingDedup {
       hashesT.compact(); bandsT.compact(); seenT.compact()
     }
 
-    def kept(): DataFrame = spark.read.parquet(keptDir)
+    def kept(): DataFrame = Scratch.readBack(spark, keptDir, keptSchema)
 
     /** Diagnostics for specs/probes: the probe scan processBatch would
       * perform for a batch's touched-bucket set (pruned base ∪ delta),

@@ -84,7 +84,7 @@ class SolveManySpec extends AnyFunSuite {
   test("oversized models fail fast with an ERROR row instead of spinning") {
     ModelRegistry.remove("huge")
     val info = ModelRegistry.getOrCreate("huge")
-    (0 to HighsFunctions.MaxDenseDim)
+    (0 to HighsFunctions.MaxModelDim)
       .foreach(i => info.addVariable(s"v$i", 0.0, 1.0, 1.0, "continuous"))
     val rows = HighsFunctions.solveRows("huge")
     assert(rows.length == 1)

@@ -1,9 +1,5 @@
 package graft.sql
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,30 +26,8 @@ class DuckCommandSpec extends AnyFunSuite {
   private def rows(sql: String): Seq[Seq[Any]] =
     spark.sql(sql).collect().toSeq.map(_.toSeq)
 
-  /** Spark jobs started while `body` runs. A marker job run afterwards
-    * drains the listener bus: once the listener sees it, it has seen
-    * every job `body` started.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null))
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      sc.setLocalProperty("graft.test.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.marker", null)
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    SparkTestSession.jobsDuring(spark)(body)
 
   test("EXPLAIN renders the command without running it") {
     spark.sql("CREATE OR REPLACE TEMP TABLE cmd_t AS SELECT * FROM " +
@@ -202,6 +176,24 @@ class DuckCommandSpec extends AnyFunSuite {
     }
     graft.highs.ModelRegistry.remove("cmd_q")
     spark.sql("DROP TABLE cmd_c")
+  }
+
+  test("EXPLAIN PREPARE and EXPLAIN DEALLOCATE change no prepared statement") {
+    val (prep, prepJobs) = jobsDuring(
+      spark.sql("EXPLAIN PREPARE cmd_p AS SELECT 41 + 1").collect().map(_.getString(0)).mkString("\n"))
+    assert(prep.contains("PrepareCommand"), prep)
+    assert(prepJobs == 0, s"EXPLAIN PREPARE ran $prepJobs Spark job(s)")
+    assert(intercept[AnalysisException](spark.sql("EXECUTE cmd_p").collect())
+      .getMessage.contains("does not exist"))
+    assert(rows("PREPARE cmd_p AS SELECT 41 + 1") == Seq(Seq("cmd_p")))
+    val (dealloc, deallocJobs) = jobsDuring(
+      spark.sql("EXPLAIN DEALLOCATE cmd_p").collect().map(_.getString(0)).mkString("\n"))
+    assert(dealloc.contains("DeallocateCommand"), dealloc)
+    assert(deallocJobs == 0, s"EXPLAIN DEALLOCATE ran $deallocJobs Spark job(s)")
+    assert(rows("EXECUTE cmd_p") == Seq(Seq(42)))
+    assert(rows("DEALLOCATE PREPARE cmd_p") == Seq(Seq("cmd_p")))
+    assert(intercept[AnalysisException](spark.sql("EXECUTE cmd_p").collect())
+      .getMessage.contains("does not exist"))
   }
 
   test("EXPLAIN CREATE MACRO registers nothing; the statement then registers the macro") {
