@@ -210,7 +210,7 @@ object Bench {
     // overlap_ratio < 1 is a genuine round-over-round improvement on
     // comparable work, independent of how many queries joined the sweep.
     // -1 = no prior map readable (first round on a machine).
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_full.json")
+    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     val prior: Map[String, Double] =
       try {
         val txt = new String(

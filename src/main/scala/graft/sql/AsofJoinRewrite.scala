@@ -55,59 +55,29 @@ object AsofJoinRewrite {
     * spanEnd, qualifier) — the span covers `qual . *` so a replacement
     * can splice over the whole reference.
     */
-  private def topLevelStars(s: String): Vector[(Int, Int, Option[String])] = {
-    val out = Vector.newBuilder[(Int, Int, Option[String])]
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '*' if depth == 0 =>
-          // Walk back: whitespace, '.', whitespace, identifier.
-          var j = i - 1
-          while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-          val qual =
-            if (j >= 0 && s.charAt(j) == '.') {
-              var k = j - 1
-              while (k >= 0 && s.charAt(k).isWhitespace) k -= 1
-              val e = k + 1
-              while (k >= 0 && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_')) k -= 1
-              if (e > k + 1 && !s.charAt(k + 1).isDigit)
-                Some((k + 1, s.substring(k + 1, e)))
-              else None
-            } else None
-          qual match {
-            case Some((qs, q)) => out += ((qs, i + 1, Some(q)))
-            case None => out += ((i, i + 1, None))
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && s.charAt(i + 1) == '-' =>
-          while (i < n && s.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case _ => i += 1
+  private def topLevelStars(s: String): Vector[(Int, Int, Option[String])] =
+    DuckLexer(s).topLevel()(s.charAt(_) == '*').map { i =>
+      // Walk back: whitespace, '.', whitespace, identifier.
+      var j = i - 1
+      while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
+      val qual =
+        if (j >= 0 && s.charAt(j) == '.') {
+          var k = j - 1
+          while (k >= 0 && s.charAt(k).isWhitespace) k -= 1
+          val e = k + 1
+          while (k >= 0 && DuckLexer.wordCh(s.charAt(k))) k -= 1
+          if (e > k + 1 && !s.charAt(k + 1).isDigit)
+            Some((k + 1, s.substring(k + 1, e)))
+          else None
+        } else None
+      qual match {
+        case Some((qs, q)) => (qs, i + 1, Some(q))
+        case None => (i, i + 1, None)
       }
     }
-    out.result()
-  }
 
   def rewrite(sql: String): Option[String] = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     if (words.count(_._1 == "ASOF") != 1) return None
     // Set operations: the splice targets ONE query block.
     if (words.exists(w => w._1 == "UNION" || w._1 == "INTERSECT" ||
@@ -309,16 +279,16 @@ object AsofJoinRewrite {
     * top-level arm.
     */
   def rewriteNested(sql: String): Option[String] = {
-    val mask = ReplaceRewrite.maskLiterals(sql)
+    val mask = DuckLexer(sql).masked
     var i = 0
     while (i < mask.length) {
       if (mask.charAt(i) == '(') {
-        val close = ReplaceRewrite.closeOf(sql, i)
+        val close = DuckLexer(sql).closeOf(i)
         if (close > 0 && close <= sql.length) {
           val inner = sql.substring(i + 1, close - 1)
           val startsSelect =
             """(?is)\A\s*SELECT\b""".r.findFirstIn(inner).isDefined
-          if (startsSelect && QualifyRewrite.allWords(inner).exists(_._1 == "ASOF")) {
+          if (startsSelect && DuckLexer(inner).words.exists(_._1 == "ASOF")) {
             rewrite(inner).orElse(rewriteNested(inner)) match {
               case Some(r) =>
                 return Some(sql.substring(0, i + 1) + r +

@@ -57,14 +57,14 @@ object CatalogPkRewrite {
 
   /** (strippedSql, tableName, keyCols); None = not claimed. */
   def rewrite(sql: String): Option[(String, String, Seq[String])] = try {
-    val mask = ReplaceRewrite.maskLiterals(sql)
+    val mask = DuckLexer(sql).masked
     val m = headRe.findFirstMatchIn(mask).getOrElse(return None)
     val name = sql.substring(m.start(3), m.end(3))
     val open = m.end - 1
-    val close = ReplaceRewrite.closeOf(sql, open)
+    val close = DuckLexer(sql).closeOf(open)
     if (close <= 0 || close > sql.length) return None
-    val rawDefs = ReplaceRewrite.splitTop(sql.substring(open + 1, close - 1))
-    val maskDefs = ReplaceRewrite.splitTop(mask.substring(open + 1, close - 1))
+    val rawDefs = DuckLexer(sql.substring(open + 1, close - 1)).split(',')
+    val maskDefs = DuckLexer(mask.substring(open + 1, close - 1)).split(',')
     if (rawDefs.length != maskDefs.length) return None
     val tail = sql.substring(close).trim.stripSuffix(";").trim
     if (tail.nonEmpty && !tail.matches("(?is)USING\\s+\\w+")) return None

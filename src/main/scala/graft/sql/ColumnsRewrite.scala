@@ -59,7 +59,7 @@ object ColumnsRewrite {
     */
   private def selectItems(sql: String): Option[(Int, Vector[String], Int)] = {
     if ("""(?i)\bCOLUMNS\s*\(""".r.findAllMatchIn(sql).isEmpty) return None
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     if (words.isEmpty || words.head._1 != "SELECT") return None
     if (sql.take(words.head._2).exists(!_.isWhitespace)) return None
     // No join/set-op: the expansion resolves ONE table's schema.
@@ -72,7 +72,7 @@ object ColumnsRewrite {
     // decline rather than guess.
     if ("""(?is)\A\s*(DISTINCT|ALL)\b""".r.findFirstIn(selectList).isDefined)
       return None
-    val items = ReplaceRewrite.splitTop(selectList).map(_.trim)
+    val items = DuckLexer(selectList).split(',').map(_.trim)
     if (items.isEmpty || items.exists(_.isEmpty)) return None
     Some((selStart, items, fromW._2))
   }
@@ -101,14 +101,14 @@ object ColumnsRewrite {
     */
   private def parseTemplate(item: String): Option[(String, String)] = {
     val occRe = """(?i)\bCOLUMNS\s*\(""".r
-    val masked = ReplaceRewrite.maskLiterals(item)
+    val masked = DuckLexer(item).masked
     val ms = occRe.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
     // Span of each full COLUMNS(...) call (masked offsets are raw
     // offsets: the mask is length-preserving).
     val spans = ms.map { m =>
       val open = masked.indexOf('(', m.start)
-      val close = ReplaceRewrite.closeOf(item, open)
+      val close = DuckLexer(item).closeOf(open)
       if (close < 0) return None
       (m.start, open, close)
     }
@@ -117,7 +117,7 @@ object ColumnsRewrite {
     val arg = args.head
     // A COLUMNS nested inside its own argument would break the span
     // arithmetic — no such DuckDB form exists; decline.
-    if (occRe.findFirstIn(ReplaceRewrite.maskLiterals(arg)).isDefined)
+    if (occRe.findFirstIn(DuckLexer(arg).masked).isDefined)
       return None
     val sb = new StringBuilder
     var pos = 0
@@ -279,7 +279,7 @@ object ColumnsRewrite {
     */
   private def rewriteWherePreds(sql: String): Option[String] = {
     val (_, _, fromPos) = selectItems(sql).getOrElse(return None)
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     val whereW = words.find(w => w._1 == "WHERE" && w._2 > fromPos)
       .getOrElse(return None)
     val endPos = words.find(w => Set("GROUP", "HAVING", "ORDER", "LIMIT",
@@ -288,7 +288,7 @@ object ColumnsRewrite {
     val secStart = whereW._2 + "WHERE".length
     val section = sql.substring(secStart, endPos)
     val colRe = """(?i)\bCOLUMNS\s*\(""".r
-    if (colRe.findFirstIn(ReplaceRewrite.maskLiterals(section)).isEmpty)
+    if (colRe.findFirstIn(DuckLexer(section).masked).isEmpty)
       return None
     val cols = tableCols(sql, fromPos).getOrElse(return None)
     // The AND closing a BETWEEN is part of that predicate, not a
@@ -296,7 +296,7 @@ object ColumnsRewrite {
     // cannot intervene (precedence makes that invalid SQL), so a single
     // pending flag suffices (NOT BETWEEN tokenizes the same way).
     var betweenPending = false
-    val seps = QualifyRewrite.topLevelWords(section)
+    val seps = DuckLexer(section).topLevelWords
       .filter { w =>
         if (w._1 == "BETWEEN") { betweenPending = true; false }
         else if (w._1 == "AND" && betweenPending) {
@@ -311,7 +311,7 @@ object ColumnsRewrite {
     bounds.grouped(2).foreach { g =>
       val (s, e) = (g(0), g(1))
       val seg = section.substring(s, e)
-      if (colRe.findFirstIn(ReplaceRewrite.maskLiterals(seg)).isDefined) {
+      if (colRe.findFirstIn(DuckLexer(seg).masked).isDefined) {
         val call = parsePred(seg.trim).getOrElse(return None)
         val kept = resolveCols(call.arg, cols).getOrElse(return None)
         if (kept.isEmpty) return None

@@ -44,7 +44,7 @@ object CopyToRewrite {
     // SELECT nor '(' once unwrapped.
     val (source, afterSrc) =
       if (sql.charAt(i0) == '(') {
-        val close = ReplaceRewrite.closeOf(sql, i0)
+        val close = DuckLexer(sql).closeOf(i0)
         if (close < 0) return None
         (sql.substring(i0, close).trim, close)
       } else {
@@ -87,9 +87,9 @@ object CopyToRewrite {
       val qm = """(?i)\AQUOTE\s+'((?:[^']|'')*)'\z""".r
       val em = """(?i)\AESCAPE\s+'((?:[^']|'')*)'\z""".r
       val nm = """(?i)\ANULL(?:STR)?\s+'((?:[^']|'')*)'\z""".r
-      // splitTop, not split(","): PARTITION_BY (a, b) carries commas
+      // A top-level split, not split(","): PARTITION_BY (a, b) carries commas
       // inside its own parens.
-      for (o <- ReplaceRewrite.splitTop(tail.substring(1, tail.length - 1))
+      for (o <- DuckLexer(tail.substring(1, tail.length - 1)).split(',')
              .map(_.trim) if o.nonEmpty) {
         o match {
           case fm(f) => format = Some(f.toLowerCase)

@@ -45,7 +45,7 @@ object DistinctOnRewrite {
     * UNRESOLVED_ROUTINE).
     */
   def isShaped(sql: String): Boolean = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     // ANY top-level block of a set-op chain may carry the construct
     // (round 18), so every top-level SELECT is a candidate, not just
     // the first.
@@ -83,7 +83,7 @@ object DistinctOnRewrite {
     if (n < 1 || n > items.length) return None
     val item = items(n - 1).trim
     if (item == "*" || item.endsWith(".*")) return None
-    val expr = QualifyRewrite.topLevelWords(item).reverse
+    val expr = DuckLexer(item).topLevelWords.reverse
       .find(_._1 == "AS") match {
       case Some((_, pos)) => item.substring(0, pos).trim
       case None => item
@@ -96,7 +96,7 @@ object DistinctOnRewrite {
   }
 
   def rewrite(sql: String): Option[String] = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     if (words.exists(_._1 == "?")) return None
     val selIdx = words.indexWhere(_._1 == "SELECT")
     if (selIdx < 0) return None
@@ -129,7 +129,7 @@ object DistinctOnRewrite {
         // Non-head blocks open with the operator words (UNION [ALL] /
         // BY NAME / ...): the body starts at the first top-level
         // SELECT or '('.
-        val bw = QualifyRewrite.topLevelWords(block)
+        val bw = DuckLexer(block).topLevelWords
         val bodyPos =
           if (i == 0) 0
           else bw.find(w => w._1 == "SELECT" || w._1 == "(").map(_._2)
@@ -138,7 +138,7 @@ object DistinctOnRewrite {
         val opText = block.substring(0, bodyPos)
         if (i == blocks.length - 1) {
           // Split the chain-global trail off the last block.
-          val tw = QualifyRewrite.topLevelWords(body)
+          val tw = DuckLexer(body).topLevelWords
           tw.find(w => trailing(w._1)).foreach { w =>
             globalTrail = body.substring(w._2)
             body = body.substring(0, w._2)
@@ -164,7 +164,7 @@ object DistinctOnRewrite {
     if (parenStart < 0) return None
     if (sql.substring(onPos + 2, parenStart).exists(!_.isWhitespace))
       return None
-    val parenClose = ReplaceRewrite.closeOf(sql, parenStart)
+    val parenClose = DuckLexer(sql).closeOf(parenStart)
     if (parenClose < 0) return None
     val ons = sql.substring(parenStart + 1, parenClose - 1).trim
     if (ons.isEmpty) return None
@@ -186,16 +186,16 @@ object DistinctOnRewrite {
     // Output-column ordinals resolve against the select list — inside
     // the OVER clause they would be constants (the outer trailing ORDER
     // BY keeps them: there they ARE positional).
-    val selItems = ReplaceRewrite.splitTop(rawList).map(_.trim).toVector
+    val selItems = DuckLexer(rawList).split(',').map(_.trim).toVector
     val winOrder = if (trail.toUpperCase.startsWith("ORDER")) {
       val t2 = trail
-      val stopIdx = QualifyRewrite.topLevelWords(t2)
+      val stopIdx = DuckLexer(t2).topLevelWords
         .find(w => w._1 == "LIMIT" || w._1 == "OFFSET" || w._1 == "FETCH")
         .map(_._2).getOrElse(t2.length)
       t2.substring("ORDER".length, stopIdx).trim
         .replaceFirst("(?i)\\Aby\\b", "").trim match {
         case "" => ons
-        case keys => ReplaceRewrite.splitTop(keys).map(_.trim).map(splitKey)
+        case keys => DuckLexer(keys).split(',').map(_.trim).map(splitKey)
           .map { case (e, d) =>
             resolveOrdinal(selItems, e).map(_ + d).getOrElse(return None)
           }.mkString(", ")
@@ -221,17 +221,17 @@ object DistinctOnRewrite {
     // block's own scope), partition/order/outer-sort all reference the
     // hidden names, and the outer projection EXCEPTs them away.
     if (rawList == "*") return None // star over an aggregate block
-    val onItems = ReplaceRewrite.splitTop(ons).map(_.trim).filter(_.nonEmpty)
+    val onItems = DuckLexer(ons).split(',').map(_.trim).filter(_.nonEmpty)
     if (onItems.isEmpty) return None
     val keyItems: Vector[(String, String)] =
       if (trail.toUpperCase.startsWith("ORDER")) {
-        val stopIdx = QualifyRewrite.topLevelWords(trail)
+        val stopIdx = DuckLexer(trail).topLevelWords
           .find(w => Set("LIMIT", "OFFSET", "FETCH")(w._1))
           .map(_._2).getOrElse(trail.length)
         val keysText = trail.substring("ORDER".length, stopIdx).trim
           .replaceFirst("(?i)\\Aby\\b", "").trim
         if (keysText.isEmpty) Vector.empty
-        else ReplaceRewrite.splitTop(keysText).map(_.trim).map(splitKey)
+        else DuckLexer(keysText).split(',').map(_.trim).map(splitKey)
           .map { case (e, d) =>
             // ordinals: hoisted verbatim they'd become constant hidden
             // columns (round 18, ADVICE) — resolve or decline
@@ -256,7 +256,7 @@ object DistinctOnRewrite {
     val hiddenNames = (onHidden.map(_._2) ++ keyHidden.map(_._3)).mkString(", ")
     val limTail =
       if (trail.toUpperCase.startsWith("ORDER")) {
-        val stopIdx = QualifyRewrite.topLevelWords(trail)
+        val stopIdx = DuckLexer(trail).topLevelWords
           .find(w => Set("LIMIT", "OFFSET", "FETCH")(w._1))
           .map(_._2).getOrElse(trail.length)
         trail.substring(stopIdx).trim

@@ -70,8 +70,8 @@ object DuckCommands {
     * targets are plain column names of `schema`, each assigned once.
     */
   private[sql] def assignments(setText: String, schema: StructType): Seq[(String, String)] = {
-    val as = ReplaceRewrite.splitTop(setText).map { a =>
-      val eq = GraftSparkExtensions.topLevelEq(a)
+    val as = DuckLexer(setText).split(',').map { a =>
+      val eq = DuckLexer(a).assignmentEq
       require(eq > 0, s"UPDATE: assignment without '=': $a")
       val name = a.substring(0, eq).trim
       val rhs = a.substring(eq + 1).trim
@@ -129,20 +129,20 @@ object DuckCommands {
     val body = body0.trim
     if (!body.regionMatches(true, 0, "VALUES", 0, 6)) return body0
     if (!"(?i)\\bDEFAULT\\b".r.findFirstIn(
-      ReplaceRewrite.maskLiterals(body)).isDefined) return body0
+      DuckLexer(body).masked).isDefined) return body0
     val rowsText = body.substring(6)
     val fieldAt: Int => Option[org.apache.spark.sql.types.StructField] =
       i => if (cols.nonEmpty)
         cols.lift(i).flatMap(c =>
           target.fields.find(_.name.equalsIgnoreCase(c)))
       else target.fields.lift(i)
-    val rows = ReplaceRewrite.splitTop(rowsText).map(_.trim).map { row =>
+    val rows = DuckLexer(rowsText).split(',').map(_.trim).map { row =>
       if (!row.startsWith("(")) row
       else {
-        val close = ReplaceRewrite.closeOf(row, 0)
+        val close = DuckLexer(row).closeOf(0)
         if (close != row.length) row
         else {
-          val items = ReplaceRewrite.splitTop(row.substring(1, close - 1))
+          val items = DuckLexer(row.substring(1, close - 1)).split(',')
           val out = items.zipWithIndex.map { case (item, i) =>
             if (!item.trim.equalsIgnoreCase("DEFAULT")) item
             else fieldAt(i) match {
@@ -448,7 +448,7 @@ case class CreateTempTableCommand(name: String, columns: String,
       "(?is)\\s+(NOT\\s+NULL|PRIMARY\\s+KEY|UNIQUE)\\s*\\z".r
     var pkCols = Seq.empty[String]
     var defaults = Map.empty[String, String]
-    val defs = ReplaceRewrite.splitTop(columns).flatMap { part0 =>
+    val defs = DuckLexer(columns).split(',').flatMap { part0 =>
       val part = defaultRe.findFirstMatchIn(part0) match {
         case Some(dm) =>
           var ex = dm.group(1).trim
@@ -540,7 +540,7 @@ sealed trait ReturningCommand extends LeafRunnableCommand {
   def withOutput(spark: SparkSession): ReturningCommand
 
   protected def project(rows: DataFrame, returning: String): DataFrame =
-    rows.selectExpr(ReplaceRewrite.splitTop(returning).map(_.trim): _*)
+    rows.selectExpr(DuckLexer(returning).split(',').map(_.trim): _*)
 
   /** The schema of `projected`, nullable. A failure to analyse it is
     * the statement's error: the rewrites hand any other exception back
@@ -756,7 +756,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
           val refRe = ("(?i)\\b(excluded|" +
             java.util.regex.Pattern.quote(name) +
             ")\\s*\\.\\s*([A-Za-z_]\\w*)").r
-          val masked = ReplaceRewrite.maskLiterals(s)
+          val masked = DuckLexer(s).masked
           val sb = new StringBuilder
           var pos = 0
           refRe.findAllMatchIn(masked).foreach { m =>
@@ -770,8 +770,8 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
           sb.append(s.substring(pos))
           sb.toString
         }
-        val assigns = ReplaceRewrite.splitTop(set).map { a =>
-          val eq = ReplaceRewrite.maskLiterals(a).indexOf('=')
+        val assigns = DuckLexer(set).split(',').map { a =>
+          val eq = DuckLexer(a).masked.indexOf('=')
           if (eq <= 0) fail(s"DO UPDATE SET: cannot parse assignment '$a'")
           val c = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
           if (!target.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
@@ -873,7 +873,7 @@ case class AlterTempTableCommand(name: String, change: String) extends DuckComma
           fail(s"""ALTER TABLE $name: column "$b" already exists""")
         TempTables.put(name, df.withColumnRenamed(real, b))
       case altTypeRe(c, tpe) if !"(?i)\\bUSING\\b".r
-          .findFirstIn(ReplaceRewrite.maskLiterals(tpe)).isDefined =>
+          .findFirstIn(DuckLexer(tpe).masked).isDefined =>
         val real = resolve(c).getOrElse(
           fail(s"""ALTER TABLE $name: column "$c" does not exist"""))
         val dt = parseType(tpe)

@@ -28,45 +28,18 @@ import scala.util.control.NonFatal
   * Spark's 0-based `[]` would be a silent off-by-one on every pasted
   * script, the worst failure mode.
   *
-  * The scanner is quote/comment-aware (same contract as
-  * [[QualifyRewrite.allWords]]) and recursive: nested literals,
-  * comprehensions inside slices, struct values holding lists all
-  * compose. Shapes it cannot place — a postfix bracket whose receiver
+  * The scan reads each text's [[DuckLexer]] view, so strings, quoted
+  * identifiers and comments are never rewritten, and it is recursive:
+  * nested literals, comprehensions inside slices, struct values holding
+  * lists all compose. Shapes it cannot place — a postfix bracket whose receiver
   * it cannot delimit (e.g. following an unbalanced construct) — decline
   * the whole statement (None), falling through to the landing-pad hint.
   */
 object DuckLiteralRewrite {
 
   /** Cheap guard: a `[` or `{` outside strings/quoted idents/comments. */
-  def isShaped(sql: String): Boolean = {
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      sql.charAt(i) match {
-        case '[' | '{' => return true
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else done = true
-            } else i += 1
-          }
-          i += 1
-        case '"' => i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i += 2
-        case _ => i += 1
-      }
-    }
-    false
-  }
+  def isShaped(sql: String): Boolean =
+    DuckLexer(sql).masked.exists(c => c == '[' || c == '{')
 
   private case class Decline(why: String) extends RuntimeException(why)
 
@@ -100,174 +73,94 @@ object DuckLiteralRewrite {
     // (uppercased word, start offset IN OUT) of the last bare word emitted.
     var lastWord: (String, Int) = null
     var lastSig: Char = 0 // last significant char emitted
+    val view = DuckLexer(s)
     var i = 0
     val n = s.length
-    def copyString(): Unit = { // '...' with '' escapes, verbatim
-      out.append('\''); i += 1
-      var done = false
-      while (i < n && !done) {
-        if (s.charAt(i) == '\'') {
-          if (i + 1 < n && s.charAt(i + 1) == '\'') { out.append("''"); i += 2 }
-          else { out.append('\''); i += 1; done = true }
-        } else { out.append(s.charAt(i)); i += 1 }
-      }
-      lastSig = '\''
-    }
-    def copyQuoted(q: Char): Unit = {
-      out.append(q); i += 1
-      while (i < n && s.charAt(i) != q) { out.append(s.charAt(i)); i += 1 }
-      if (i < n) { out.append(q); i += 1 }
-      lastSig = q
+    // Contents of the group opening at `i`; moves `i` past its close.
+    def group(): String = {
+      val close = view.closeOf(i)
+      if (close < 0) throw Decline(s"unbalanced ${s.charAt(i)}")
+      val inner = s.substring(i + 1, close - 1)
+      i = close
+      inner
     }
     while (i < n) {
       val c = s.charAt(i)
-      c match {
-        case '\'' => copyString()
-        case '"' => copyQuoted('"')
-        case '`' => copyQuoted('`')
-        case '-' if i + 1 < n && s.charAt(i + 1) == '-' =>
-          while (i < n && s.charAt(i) != '\n') { out.append(s.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) {
-            out.append(s.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
-        case '[' =>
-          val inner = sliceGroup(s, i, '[', ']')
-          i += inner.length + 2
-          val literalPos =
-            if (lastSig == 0) true
-            else if (lastSig == ')' || lastSig == ']' || lastSig == '\'' ||
-              lastSig == '"' || lastSig == '`') false
-            else if (lastSig.isLetterOrDigit || lastSig == '_')
-              lastWord != null && exprPositionWords(lastWord._1)
-            else true // operator, comma, paren-open, colon, …
-          if (literalPos) {
-            out.append(rewriteLiteralBracket(inner))
-          } else if (lastWord != null && lastWord._1 == "ARRAY" &&
-            out.substring(lastWord._2).matches("(?is)ARRAY\\s*")) {
-            // PG/DuckDB `ARRAY[1, 2]` — drop the keyword, emit array().
-            out.setLength(lastWord._2)
-            out.append(rewriteLiteralBracket(inner))
-          } else {
-            val rStart = receiverStart(out)
-            val recv = out.substring(rStart)
-            out.setLength(rStart)
-            out.append(rewritePostfixBracket(recv, inner))
-          }
-          lastSig = ')'; lastWord = null
-        case '{' =>
-          val inner = sliceGroup(s, i, '{', '}')
-          i += inner.length + 2
-          val isMap = lastWord != null && lastWord._1 == "MAP" &&
-            out.substring(lastWord._2).matches("(?is)MAP\\s*")
-          if (isMap) out.setLength(lastWord._2)
-          out.append(rewriteBrace(inner, isMap))
-          lastSig = ')'; lastWord = null
-        case ch if ch.isLetter || ch == '_' =>
-          val start = i
-          while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-          val w = s.substring(start, i)
-          lastWord = (w.toUpperCase, out.length)
-          out.append(w)
-          lastSig = w.last
-        case ch =>
-          out.append(ch); i += 1
-          if (!ch.isWhitespace) { lastSig = ch; if (!ch.isDigit) lastWord = null }
+      view.span(i) match {
+        case Some((_, end)) => // verbatim; strings and identifiers end an operand
+          out.append(s.substring(i, end))
+          if (!view.inComment(i)) lastSig = c
+          i = end
+        case None => c match {
+          case '[' =>
+            val inner = group()
+            val literalPos =
+              if (lastSig == 0) true
+              else if (lastSig == ')' || lastSig == ']' || lastSig == '\'' ||
+                lastSig == '"' || lastSig == '`') false
+              else if (lastSig.isLetterOrDigit || lastSig == '_')
+                lastWord != null && exprPositionWords(lastWord._1)
+              else true // operator, comma, paren-open, colon, …
+            if (literalPos) {
+              out.append(rewriteLiteralBracket(inner))
+            } else if (lastWord != null && lastWord._1 == "ARRAY" &&
+              out.substring(lastWord._2).matches("(?is)ARRAY\\s*")) {
+              // PG/DuckDB `ARRAY[1, 2]` — drop the keyword, emit array().
+              out.setLength(lastWord._2)
+              out.append(rewriteLiteralBracket(inner))
+            } else {
+              val rStart = receiverStart(out)
+              val recv = out.substring(rStart)
+              out.setLength(rStart)
+              out.append(rewritePostfixBracket(recv, inner))
+            }
+            lastSig = ')'; lastWord = null
+          case '{' =>
+            val inner = group()
+            val isMap = lastWord != null && lastWord._1 == "MAP" &&
+              out.substring(lastWord._2).matches("(?is)MAP\\s*")
+            if (isMap) out.setLength(lastWord._2)
+            out.append(rewriteBrace(inner, isMap))
+            lastSig = ')'; lastWord = null
+          case ch if ch.isLetter || ch == '_' =>
+            val start = i
+            while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
+            val w = s.substring(start, i)
+            lastWord = (w.toUpperCase, out.length)
+            out.append(w)
+            lastSig = w.last
+          case ch =>
+            out.append(ch); i += 1
+            if (!ch.isWhitespace) { lastSig = ch; if (!ch.isDigit) lastWord = null }
+        }
       }
     }
     out.toString
   }
 
-  /** Contents between the group opener at `start` and its matching
-    * closer — quote-aware, any nesting of (), [], {}.
-    */
-  private def sliceGroup(s: String, start: Int, open: Char, close: Char): String = {
-    var i = start + 1
-    var depth = 1
-    val n = s.length
-    while (i < n && depth > 0) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case _ => i += 1
-      }
-    }
-    if (depth != 0) throw Decline(s"unbalanced $open")
-    s.substring(start + 1, i - 1)
-  }
-
-  /** Split `s` at top-level occurrences of `sep` (quote/group-aware).
-    * With `word = true`, `sep` must be a bare word (case-insensitive);
-    * otherwise a single char. Returns the pieces (separators dropped).
-    */
-  private def splitTop(s: String, sep: String, word: Boolean): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    var depth = 0
-    var last = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      c match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case ch if word && depth == 0 && (ch.isLetter || ch == '_') =>
-          val start = i
-          while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-          if (s.substring(start, i).equalsIgnoreCase(sep) &&
-            (start == 0 || !s.charAt(start - 1).isLetterOrDigit)) {
-            out += s.substring(last, start); last = i
-          }
-        case ch if !word && depth == 0 && ch == sep.charAt(0) =>
-          // `::` (cast) and `:=` (named arg) are not the slice colon.
-          if (sep == ":" && ((i + 1 < n && (s.charAt(i + 1) == ':' ||
-            s.charAt(i + 1) == '=')) || (i > 0 && s.charAt(i - 1) == ':')))
-            i += 1
-          else { out += s.substring(last, i); last = i + 1; i += 1 }
-        case _ => i += 1
-      }
-    }
-    out += s.substring(last)
-    out.result()
+  /** The pieces of `s` between top-level `:` — not the `::` of a cast
+    * nor the `:=` of a named argument. */
+  private def splitColon(s: String): Vector[String] = {
+    val view = DuckLexer(s)
+    view.cutAt(view.topLevel(groups = true) { i =>
+      s.charAt(i) == ':' && !s.startsWith(":", i + 1) && !s.startsWith("=", i + 1) &&
+        (i == 0 || s.charAt(i - 1) != ':')
+    }, 1)
   }
 
   /** A literal-position bracket: list literal or comprehension. */
   private def rewriteLiteralBracket(inner: String): String = {
-    val forParts = splitTop(inner, "FOR", word = true)
+    val forParts = DuckLexer(inner).splitWord("FOR")
     if (forParts.length == 2) {
       // [expr FOR var IN src [IF cond]]
       val expr = transform(forParts(0).trim)
       val tail = forParts(1)
-      val inParts = splitTop(tail, "IN", word = true)
+      val inParts = DuckLexer(tail).splitWord("IN")
       if (inParts.length != 2) throw Decline("comprehension without IN")
       val v = inParts(0).trim
       if (!v.matches("[A-Za-z_][A-Za-z0-9_]*"))
         throw Decline(s"comprehension variable '$v'")
-      val ifParts = splitTop(inParts(1), "IF", word = true)
+      val ifParts = DuckLexer(inParts(1)).splitWord("IF")
       val src = transform(ifParts(0).trim)
       if (ifParts.length == 1)
         s"transform($src, $v -> ($expr))"
@@ -276,7 +169,7 @@ object DuckLiteralRewrite {
         s"transform(filter($src, $v -> ($cond)), $v -> ($expr))"
       } else throw Decline("multiple IF in comprehension")
     } else if (forParts.length == 1) {
-      val items = splitTop(inner, ",", word = false).map(_.trim)
+      val items = DuckLexer(inner).split(',', groups = true).map(_.trim)
       if (items == Vector("")) "array()"
       else "array(" + items.map(transform).mkString(", ") + ")"
     } else throw Decline("multiple FOR in comprehension")
@@ -284,7 +177,7 @@ object DuckLiteralRewrite {
 
   /** A postfix bracket on `recv`: index or slice. */
   private def rewritePostfixBracket(recv: String, inner: String): String = {
-    val parts = splitTop(inner, ":", word = false)
+    val parts = splitColon(inner)
     if (parts.length == 1)
       s"duck_index($recv, ${transform(inner.trim)})"
     else if (parts.length == 2) {
@@ -302,8 +195,8 @@ object DuckLiteralRewrite {
     if (inner.trim.isEmpty) {
       if (isMap) "map()" else throw Decline("empty struct literal")
     } else {
-      val pairs = splitTop(inner, ",", word = false).map { p =>
-        val kv = splitTop(p, ":", word = false)
+      val pairs = DuckLexer(inner).split(',', groups = true).map { p =>
+        val kv = splitColon(p)
         if (kv.length != 2) throw Decline("struct pair without ':'")
         val k = kv(0).trim
         // Struct keys are NAMES (string-quoted or bare identifiers);
@@ -327,49 +220,37 @@ object DuckLiteralRewrite {
     * nothing receiver-shaped precedes the bracket.
     */
   private def receiverStart(out: StringBuilder): Int = {
+    val view = DuckLexer(out.toString)
+    def wordCh(c: Char) = c.isLetterOrDigit || c == '_' || c == '$'
     var j = out.length - 1
     while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
     if (j < 0) throw Decline("bracket with no receiver")
-    var end = j + 1 // exclusive end of receiver (trailing ws excluded)
+    val end = j + 1 // exclusive end of receiver (trailing ws excluded)
     def declineIf(cond: Boolean, why: String): Unit =
       if (cond) throw Decline(why)
     var expectMore = true
     while (expectMore && j >= 0) {
       val c = out.charAt(j)
-      if (c.isLetterOrDigit || c == '_' || c == '$') {
-        while (j >= 0 && (out.charAt(j).isLetterOrDigit ||
-          out.charAt(j) == '_' || out.charAt(j) == '$')) j -= 1
-      } else if (c == '`' || c == '"') {
-        val q = c; j -= 1
-        while (j >= 0 && out.charAt(j) != q) j -= 1
-        declineIf(j < 0, "unbalanced quoted identifier"); j -= 1
-      } else if (c == '\'') {
-        j -= 1
-        while (j >= 0 && out.charAt(j) != '\'') j -= 1
-        declineIf(j < 0, "unbalanced string")
-        // '' escapes make backward string scans ambiguous — decline.
-        declineIf(j > 0 && out.charAt(j - 1) == '\'', "escaped quote receiver")
-        j -= 1
-      } else if (c == ')') {
-        var depth = 1; j -= 1
-        while (j >= 0 && depth > 0) {
-          out.charAt(j) match {
-            case '\'' =>
-              j -= 1
-              while (j >= 0 && out.charAt(j) != '\'') j -= 1
-              declineIf(j < 0, "unbalanced string in receiver")
-            case '(' => depth -= 1
-            case ')' => depth += 1
-            case _ =>
+      view.span(j) match {
+        case Some((start, _)) => // a string or quoted identifier
+          declineIf(view.inComment(j), "comment before bracket")
+          j = start - 1
+        case None if wordCh(c) =>
+          while (j >= 0 && wordCh(out.charAt(j))) j -= 1
+        case None if c == ')' =>
+          val m = view.masked
+          var depth = 1; j -= 1
+          while (j >= 0 && depth > 0) {
+            if (m.charAt(j) == '(') depth -= 1
+            else if (m.charAt(j) == ')') depth += 1
+            j -= 1
           }
-          j -= 1
-        }
-        declineIf(depth != 0, "unbalanced parens")
-        // A function name may precede the group; consume it if present.
-        if (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_'))
-          while (j >= 0 && (out.charAt(j).isLetterOrDigit ||
-            out.charAt(j) == '_' || out.charAt(j) == '$')) j -= 1
-      } else throw Decline(s"receiver boundary at '$c'")
+          declineIf(depth != 0, "unbalanced parens")
+          // A function name may precede the group; consume it if present.
+          if (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_'))
+            while (j >= 0 && wordCh(out.charAt(j))) j -= 1
+        case None => throw Decline(s"receiver boundary at '$c'")
+      }
       // Chain through a dot to the next segment; otherwise stop.
       if (j >= 0 && out.charAt(j) == '.') j -= 1 else expectMore = false
     }

@@ -24,162 +24,61 @@ package graft.sql
   * TVF like summarize()/fixpoint() receives original DuckDB text and
   * its execution-time spark.sql() re-enters the same transform; a
   * command ([[DuckCommands]]) gets its slices through
-  * [[halveBackslashes]] for the same reason. The
-  * ONE site embedding RAW (untransformed) content — the dollar-quote
-  * rewrite, whose $tag$...$tag$ innards the entry scan skips — doubles
-  * backslashes itself for the same reason.
+  * [[halveBackslashes]] for the same reason. Dollar-quoted strings
+  * hold RAW content; the same entry transform folds them into plain
+  * literals (backslashes doubled, quotes doubled), next to the E'...'
+  * fold, so no arm downstream ever sees a `$tag$` string. Which
+  * characters are literal is decided by [[DuckLexer]], the one lexer
+  * of the dialect layer.
   *
   * The transform no-ops (returns the same reference) on statements
-  * without a backslash anywhere, which is the entire internal query
-  * catalog (grep-verified) and virtually every statement at runtime:
-  * the scan costs one indexOf on the fast path.
+  * without a backslash, a `$` or an `E'` anywhere — virtually every
+  * statement at runtime: the fast path is four indexOf calls and no
+  * lex.
   */
 object DuckLiterals {
 
-  private def wordCh(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-  private def hexVal(c: Char): Int =
-    if (c >= '0' && c <= '9') c - '0'
-    else if (c >= 'a' && c <= 'f') c - 'a' + 10
-    else if (c >= 'A' && c <= 'F') c - 'A' + 10
-    else -1
-
   /** Double each backslash inside '...' string literals, and fold
-    * DuckDB's `E'...'` ESCAPED literals (round 19: C-style \n/\t/\r/
-    * \b/\f, octal \ooo, hex \xHH, unicode \uXXXX/\UXXXXXXXX, \\, \';
-    * an unknown escape drops the backslash, host-probed) into plain
-    * literals carrying the UNESCAPED value. Quoted identifiers
-    * ("..."/`...`), comments, and dollar-quoted strings pass through
-    * untouched (the dollar-quote rewrite handles its own embedding).
+    * DuckDB's `E'...'` ESCAPED literals and `$tag$...$tag$` dollar-quoted
+    * (raw) literals into plain literals carrying their value (decoded by
+    * [[DuckLexer]]). Quoted identifiers and comments pass through
+    * untouched.
     */
   def doubleBackslashes(text: String): String =
-    if (text.indexOf('\\') < 0 &&
+    if (text.indexOf('\\') < 0 && text.indexOf('$') < 0 &&
       text.indexOf("E'") < 0 && text.indexOf("e'") < 0) text
-    else mapLiterals(text, foldEscaped = true)(_.replace("\\", "\\\\"))
+    else mapStrings(text, fold = true)(_.replace("\\", "\\\\"))
 
   /** The inverse of [[doubleBackslashes]] on a slice of transformed
     * text: each doubled backslash inside a '...' literal is single
     * again. Commands ([[DuckCommands]]) hold their SQL fragments at this
     * DuckDB level, so the spark.sql()/expr() they run re-enters the
-    * doubling exactly once. Transformed text holds no E'...' literal
-    * (the doubling folded them all).
+    * doubling exactly once. Transformed text holds no E'...' or
+    * dollar-quoted literal (the doubling folded them all).
     */
   def halveBackslashes(text: String): String =
     if (text.indexOf("\\\\") < 0) text
-    else mapLiterals(text, foldEscaped = false)(_.replace("\\\\", "\\"))
+    else mapStrings(text, fold = false)(_.replace("\\\\", "\\"))
 
-  /** The one scan behind both transforms: each '...' literal's body
-    * (quotes still doubled) is replaced by `body` of it; with
-    * `foldEscaped`, an E'...' literal becomes a plain one whose body is
-    * `body` of its quote-doubled value. Quoted identifiers, `--` and
-    * block comments and dollar-quoted strings are copied verbatim. An
-    * unterminated literal runs to the end of the text, unclosed.
-    * Returns `text` itself when nothing changed.
+  /** Each '...' literal's body (quotes still doubled) is replaced by
+    * `body` of it; with `fold`, an E'...' or dollar-quoted literal
+    * becomes a plain one whose body is `body` of its quote-doubled
+    * value. An unterminated '...' literal stays unclosed. Returns `text`
+    * itself when nothing changed.
     */
-  private def mapLiterals(text: String, foldEscaped: Boolean)(
-      body: String => String): String = {
-    val n = text.length
-    val sb = new java.lang.StringBuilder(n + 8)
-    var i = 0
-    var changed = false
-    def copyTo(end: Int): Unit = { sb.append(text, i, end); i = end }
-    def emit(b: String, closed: Boolean): Unit = {
+  private def mapStrings(text: String, fold: Boolean)(body: String => String): String = {
+    val sb = new java.lang.StringBuilder(text.length + 8)
+    var pos = 0
+    for (lit <- DuckLexer(text).strings if lit.plain || fold) {
+      val b = if (lit.plain) lit.body else lit.value.replace("'", "''")
       val nb = body(b)
-      if (nb != b) changed = true
-      sb.append('\'').append(nb)
-      if (closed) sb.append('\'')
-    }
-    while (i < n) {
-      text.charAt(i) match {
-        case 'E' | 'e' if foldEscaped && text.startsWith("'", i + 1) &&
-            (i == 0 || !wordCh(text.charAt(i - 1))) =>
-          val (value, end) = escapedValue(text, i + 2)
-          emit(value.replace("'", "''"), closed = true)
-          changed = true
-          i = end
-        case '\'' =>
-          var j = i + 1
-          while (j < n && (text.charAt(j) != '\'' || text.startsWith("'", j + 1)))
-            j += (if (text.charAt(j) == '\'') 2 else 1)
-          emit(text.substring(i + 1, j min n), closed = j < n)
-          i = (j + 1) min n
-        case q @ ('"' | '`') =>
-          val close = text.indexOf(q, i + 1)
-          copyTo(if (close < 0) n else close + 1)
-        case '-' if text.startsWith("--", i) =>
-          val nl = text.indexOf('\n', i)
-          copyTo(if (nl < 0) n else nl)
-        case '/' if text.startsWith("/*", i) =>
-          val close = text.indexOf("*/", i + 2)
-          copyTo(if (close < 0) n else close + 2)
-        case '$' =>
-          // Dollar-quoted string: verbatim, so its raw innards keep
-          // single backslashes for the dollar-quote rewrite to escape.
-          dollarTagRe.findPrefixMatchOf(text.substring(i)) match {
-            case Some(m0) =>
-              val close = text.indexOf(m0.matched, i + m0.matched.length)
-              copyTo(if (close < 0) i + 1 else close + m0.matched.length)
-            case None => copyTo(i + 1)
-          }
-        case c => sb.append(c); i += 1
+      if (!lit.plain || nb != b) {
+        sb.append(text, pos, lit.start).append('\'').append(nb)
+        if (lit.closed || !lit.plain) sb.append('\'')
+        pos = lit.end
       }
     }
-    if (changed) sb.toString else text
-  }
-
-  private val dollarTagRe = "\\$([A-Za-z_]\\w*)?\\$".r
-
-  /** The value of the E'...' literal whose body starts at `from`, and
-    * the index just past its closing quote.
-    */
-  private def escapedValue(text: String, from: Int): (String, Int) = {
-    val n = text.length
-    val value = new java.lang.StringBuilder
-    var i = from
-    var done = false
-    while (i < n && !done) {
-      val d = text.charAt(i)
-      if (d == '\\' && i + 1 < n) {
-        val e2 = text.charAt(i + 1)
-        e2 match {
-          case 'n' => value.append('\n'); i += 2
-          case 't' => value.append('\t'); i += 2
-          case 'r' => value.append('\r'); i += 2
-          case 'b' => value.append('\b'); i += 2
-          case 'f' => value.append('\f'); i += 2
-          case '\\' => value.append('\\'); i += 2
-          case '\'' => value.append('\''); i += 2
-          case 'x' =>
-            var j = i + 2; var h = 0; var cnt = 0
-            while (j < n && cnt < 2 && hexVal(text.charAt(j)) >= 0) {
-              h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
-            }
-            if (cnt == 0) { value.append('x'); i += 2 }
-            else { value.append(h.toChar); i = j }
-          case 'u' | 'U' =>
-            val want = if (e2 == 'u') 4 else 8
-            var j = i + 2; var h = 0; var cnt = 0
-            while (j < n && cnt < want && hexVal(text.charAt(j)) >= 0) {
-              h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
-            }
-            if (cnt < want) { value.append(e2); i += 2 }
-            else { value.appendCodePoint(h); i = j }
-          case o if o >= '0' && o <= '7' =>
-            var j = i + 1; var v = 0; var cnt = 0
-            while (j < n && cnt < 3 && text.charAt(j) >= '0' &&
-              text.charAt(j) <= '7') {
-              v = v * 8 + (text.charAt(j) - '0'); j += 1; cnt += 1
-            }
-            value.append(v.toChar); i = j
-          case other => value.append(other); i += 2 // unknown: drop \
-        }
-      } else if (d == '\\') { value.append('\\'); i += 1 }
-      else if (d == '\'') {
-        if (i + 1 < n && text.charAt(i + 1) == '\'') {
-          value.append('\''); i += 2
-        } else { done = true; i += 1 }
-      } else { value.append(d); i += 1 }
-    }
-    (value.toString, i)
+    if (pos == 0) text else sb.append(text, pos, text.length).toString
   }
 
   /** The value of a '...' literal's body sliced from transformed text. */

@@ -41,41 +41,14 @@ object DuckNullOrder {
   private def wordChar(c: Char): Boolean =
     c.isLetterOrDigit || c == '_' || c == '$'
 
-  /** End of the last string literal in text[from, to) — literals and
-    * comments are the only things living there (see the call site);
-    * comments are skipped without extending the key.
+  /** End of the last string literal or quoted identifier in
+    * text[from, to) — literals and comments are the only things living
+    * there (see the call site); comments do not extend the key.
     */
-  private def rawKeyEnd(text: String, from: Int, to: Int): Int = {
-    var i = from
-    var last = from
-    while (i < to) {
-      val c = text.charAt(i)
-      if (c == '\'') {
-        i += 1
-        var done = false
-        while (i < to && !done) {
-          if (text.charAt(i) == '\'') {
-            if (i + 1 < to && text.charAt(i + 1) == '\'') i += 2
-            else { i += 1; done = true }
-          } else i += 1
-        }
-        last = i
-      } else if (c == '"' || c == '`') {
-        i += 1
-        while (i < to && text.charAt(i) != c) i += 1
-        if (i < to) i += 1
-        last = i
-      } else if (c == '-' && i + 1 < to && text.charAt(i + 1) == '-') {
-        while (i < to && text.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < to && text.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < to &&
-          !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) i += 1
-        if (i + 1 < to) i += 2 else i = to
-      } else i += 1
-    }
-    last
-  }
+  private def rawKeyEnd(view: DuckLexer, from: Int, to: Int): Int =
+    (to - 1 to from by -1)
+      .find(i => !view.text.charAt(i).isWhitespace && !view.inComment(i))
+      .flatMap(view.span).fold(from)(_._2 min to)
 
   /** Raw [start, end) spans of every ORDER BY sort key in the masked
     * text (whitespace-trimmed on the mask) — shared with EnumTypes'
@@ -122,7 +95,8 @@ object DuckNullOrder {
     * NULLS LAST; None when the statement has nothing to change.
     */
   def rewrite(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val view = DuckLexer(text)
+    val m = view.masked
     val inserts = scala.collection.mutable.ArrayBuffer.empty[Int]
     for (h <- orderByRe.findAllMatchIn(m)) {
       var i = h.end
@@ -151,7 +125,7 @@ object DuckNullOrder {
             // mask and moved ke), so walk it: the insertion point is
             // the end of the LAST literal (comments don't extend the
             // key; a pure-comment tail keeps ke).
-            inserts += rawKeyEnd(text, ke, endExclusive)
+            inserts += rawKeyEnd(view, ke, endExclusive)
           }
         }
       }

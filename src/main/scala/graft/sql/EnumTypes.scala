@@ -47,7 +47,7 @@ object EnumTypes {
     */
   def ddlRewrite(sql: String): Option[DuckCommand] = sql match {
     case createTypeRe(name, body) =>
-      val vals = ReplaceRewrite.splitTop(body).map(_.trim).map {
+      val vals = DuckLexer(body).split(',').map(_.trim).map {
         case litRe(v) => DuckLiterals.literalValue(v)
         case other => return None // non-literal member: decline
       }
@@ -74,7 +74,7 @@ object EnumTypes {
   def castRewrite(text: String): Option[String] = {
     var cur = ordRewrite(text).getOrElse(text)
     var changed = cur ne text
-    var m = ReplaceRewrite.maskLiterals(cur)
+    var m = DuckLexer(cur).masked
 
     // Members are raw values; the text carries the entry's doubled
     // backslashes (DuckLiterals), so a member's backslashes double too.
@@ -92,7 +92,7 @@ object EnumTypes {
       get(h.group(1)) match {
         case Some(vals) =>
           cur = cur.substring(0, h.start) + arrayLit(vals) + cur.substring(h.end)
-          m = ReplaceRewrite.maskLiterals(cur)
+          m = DuckLexer(cur).masked
           changed = true
           hit = rangeRe.findFirstMatchIn(m)
         case None => hit = None
@@ -106,7 +106,7 @@ object EnumTypes {
       scan = false
       for (h <- castRe.findAllMatchIn(m) if !scan) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close > 0) {
           val inner = cur.substring(open + 1, close - 1)
           val innerM = m.substring(open + 1, close - 1)
@@ -123,7 +123,7 @@ object EnumTypes {
                 cur = cur.substring(0, h.start) +
                   s"$fn('${am.group(1).toLowerCase}', $operand)" +
                   cur.substring(close)
-                m = ReplaceRewrite.maskLiterals(cur)
+                m = DuckLexer(cur).masked
                 changed = true
                 scan = true
               case None =>
@@ -150,7 +150,7 @@ object EnumTypes {
                   cur = cur.substring(0, ls) +
                     s"graft_enum('${h.group(1).toLowerCase}', $operand)" +
                     cur.substring(h.end)
-                  m = ReplaceRewrite.maskLiterals(cur)
+                  m = DuckLexer(cur).masked
                   changed = true
                   again = true
                 }
@@ -181,7 +181,7 @@ object EnumTypes {
     // One wrapped cast per pass; rescan (extents shift).
     while (changed) {
       changed = false
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val spans = DuckNullOrder.keySpans(m)
       // Enum casts present in the text: (start, end, name, operand).
       val casts = scala.collection.mutable.ArrayBuffer
@@ -194,7 +194,7 @@ object EnumTypes {
         }
       for (h <- """(?i)\b(TRY_)?CAST\s*\(""".r.findAllMatchIn(m)) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close > 0) {
           val innerM = m.substring(open + 1, close - 1)
           """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r.findFirstMatchIn(innerM)

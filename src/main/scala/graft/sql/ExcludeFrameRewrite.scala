@@ -45,10 +45,10 @@ object ExcludeFrameRewrite {
 
   /** Cheap shape guard for the hint arm: an unmasked window EXCLUDE. */
   def isShaped(sql: String): Boolean = {
-    val masked = ReplaceRewrite.maskLiterals(sql)
+    val masked = DuckLexer(sql).masked
     excludeRe.findFirstMatchIn(masked).exists { m =>
       overRe.findAllMatchIn(masked).exists { o =>
-        val close = ReplaceRewrite.closeOf(masked, masked.indexOf('(', o.start))
+        val close = DuckLexer(sql).closeOf(masked.indexOf('(', o.start))
         close > 0 && o.start < m.start && m.end <= close
       }
     }
@@ -89,12 +89,12 @@ object ExcludeFrameRewrite {
   }
 
   def rewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     if (excludeRe.findFirstMatchIn(masked).isEmpty) return None
     val repls = scala.collection.mutable.ListBuffer.empty[(Int, Int, String)]
     for (m <- overRe.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = ReplaceRewrite.closeOf(text, open) // index AFTER ')'
+      val close = DuckLexer(text).closeOf(open) // index AFTER ')'
       if (close < 0) return None
       val spec = text.substring(open + 1, close - 1)
       val specMasked = masked.substring(open + 1, close - 1)
@@ -142,7 +142,7 @@ object ExcludeFrameRewrite {
     val prefix = spec.substring(0, fm.start).trim
     val frameText = spec.substring(fm.start).trim
     val em = excludeRe.findFirstMatchIn(
-      ReplaceRewrite.maskLiterals(frameText)).getOrElse(return None)
+      DuckLexer(frameText).masked).getOrElse(return None)
     val mode = em.group(1).replaceAll("\\s+", " ").toUpperCase
     // EXCLUDE is the frame clause's final element; trailing text would
     // be a syntax error in DuckDB too.
@@ -168,7 +168,7 @@ object ExcludeFrameRewrite {
     val spansCurrent = lo <= 0L && 0L <= hi
     val hasOrderBy =
       "(?i)\\bORDER\\s+BY\\b".r.findFirstIn(
-        ReplaceRewrite.maskLiterals(prefix)).isDefined
+        DuckLexer(prefix).masked).isDefined
 
     val star = arg == "*"
     val supported = Set("sum", "count", "avg", "min", "max")
@@ -243,7 +243,7 @@ object ExcludeFrameRewrite {
             // sort key — the only shape where "strictly below/above
             // the peer group" is recoverable from plain windows.
             def norm(s: String) = s.toLowerCase.replaceAll("\\s+", " ").trim
-            val pm = ReplaceRewrite.maskLiterals(prefix)
+            val pm = DuckLexer(prefix).masked
             val ob = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(pm).toList
               .lastOption.getOrElse(return None)
             var keyText = prefix.substring(ob.end).trim

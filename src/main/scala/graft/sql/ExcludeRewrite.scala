@@ -25,71 +25,25 @@ object ExcludeRewrite {
     "RIGHT", "FULL", "CROSS", "NATURAL", "ON", "USING", "AS", "OFFSET")
 
   def rewrite(sql: String): Option[String] = {
+    val view = DuckLexer(sql)
     val n = sql.length
+    def significant(i: Int) = !sql.charAt(i).isWhitespace && !view.inComment(i)
     // (excludeStart, replaceEnd, bareName): parenthesized hits carry
     // bareName = None and replace just the keyword; bare-name hits
     // consume through the identifier and re-emit it parenthesized.
     val spans = Vector.newBuilder[(Int, Int, Option[String])]
-    var i = 0
-    var lastSig = ' ' // last significant char seen (outside skips)
-    while (i < n) {
-      sql.charAt(i) match {
-        case '\'' =>
-          lastSig = '\''
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          lastSig = '"'; i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' =>
-          lastSig = '`'; i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case c if c.isLetter || c == '_' =>
-          val s = i
-          while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-          val w = sql.substring(s, i)
-          if (w.equalsIgnoreCase("EXCLUDE") && lastSig == '*') {
-            // Next significant char must open the column list.
-            var j = i
-            var next = ' '
-            var scanning = true
-            while (j < n && scanning) {
-              val cj = sql.charAt(j)
-              if (cj.isWhitespace) j += 1
-              else if (cj == '-' && j + 1 < n && sql.charAt(j + 1) == '-') {
-                while (j < n && sql.charAt(j) != '\n') j += 1
-              } else if (cj == '/' && j + 1 < n && sql.charAt(j + 1) == '*') {
-                j += 2
-                while (j + 1 < n && !(sql.charAt(j) == '*' && sql.charAt(j + 1) == '/')) j += 1
-                j = math.min(n, j + 2)
-              } else { next = cj; scanning = false }
-            }
-            if (next == '(') spans += ((s, i, None))
-            else if (next.isLetter || next == '_') {
-              var k = j
-              while (k < n && (sql.charAt(k).isLetterOrDigit ||
-                sql.charAt(k) == '_')) k += 1
-              val name = sql.substring(j, k)
-              if (!keywords.contains(name.toUpperCase)) {
-                spans += ((s, k, Some(name)))
-                i = k
-              }
-            }
-          }
-          lastSig = sql.charAt(i - 1)
-        case c =>
-          if (!c.isWhitespace) lastSig = c
-          i += 1
+    for ((w, s) <- view.words if w == "EXCLUDE" &&
+        (s - 1 to 0 by -1).find(significant).exists(sql.charAt(_) == '*')) {
+      // Next significant char must open the column list.
+      val e = s + w.length
+      val j = (e until n).find(significant).getOrElse(n)
+      val next = if (j < n) sql.charAt(j) else ' '
+      if (next == '(') spans += ((s, e, None))
+      else if (next.isLetter || next == '_') {
+        var k = j
+        while (k < n && DuckLexer.wordCh(sql.charAt(k))) k += 1
+        val name = sql.substring(j, k)
+        if (!keywords.contains(name.toUpperCase)) spans += ((s, k, Some(name)))
       }
     }
     val hits = spans.result()

@@ -22,7 +22,7 @@ package graft.sql
 object FromFirstRewrite {
 
   def rewrite(sql: String): Option[String] = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     if (words.isEmpty || words.head._1 != "FROM") return None
     // The prefix before FROM may only be whitespace and comments —
     // pasted DuckDB snippets routinely start with a `-- comment` line,
@@ -44,11 +44,11 @@ object FromFirstRewrite {
     * rewrite, so the `FROM t SELECT cols` variant keeps declining.
     */
   def rewriteSubquery(sql: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(sql)
+    val masked = DuckLexer(sql).masked
     val re = "(?is)\\(\\s*FROM\\b".r
     for (h <- re.findAllMatchIn(masked)) {
       val open = h.start
-      val close = ReplaceRewrite.closeOf(sql, open)
+      val close = DuckLexer(sql).closeOf(open)
       if (close > 0) {
         val inner = sql.substring(open + 1, close - 1)
         rewrite(inner) match {

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.highs.HighsFunctions
+import graft.sql.DuckLexer.operandCh
 
 /** SQL parity layer (SURVEY.md §7 M3): registers the reference's two scalar
   * functions and four table functions into the Spark SQL catalog, so
@@ -140,22 +141,28 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * strings/comments (any depth) — a string literal containing the
     * text must pass through untouched. */
   private def positionalShaped(sql: String): Boolean =
-    QualifyRewrite.allWords(sql).sliding(2).exists {
+    DuckLexer(sql).words.sliding(2).exists {
       case Vector((a, _), (b, _)) => a == "POSITIONAL" && b == "JOIN"
       case _ => false
     }
   /** Adjacent bare words ASOF [LEFT] JOIN outside strings/comments. */
   private def asofShaped(sql: String): Boolean =
-    QualifyRewrite.allWords(sql).sliding(3).exists {
+    DuckLexer(sql).words.sliding(3).exists {
       case Vector((a, _), (b, _), (c, _)) =>
         a == "ASOF" && (b == "JOIN" || (b == "LEFT" && c == "JOIN"))
       case _ => false
     }
+  private val positionalPairRe =
+    "(?i)\\b([A-Za-z_]\\w*)\\s+POSITIONAL\\s+JOIN\\s+([A-Za-z_]\\w*)".r
   private def positionalPreRewrite(sql: String): String = {
-    val out = sql.replaceAll(
-      "(?i)\\b([A-Za-z_]\\w*)\\s+POSITIONAL\\s+JOIN\\s+([A-Za-z_]\\w*)",
-      "positional_join('$1', '$2')")
-    if (positionalRe.findFirstIn(out).isDefined)
+    val sb = new StringBuilder
+    var pos = 0
+    for (m <- positionalPairRe.findAllMatchIn(DuckLexer(sql).masked)) {
+      sb.append(sql.substring(pos, m.start)).append(s"positional_join('${m.group(1)}', '${m.group(2)}')")
+      pos = m.end
+    }
+    val out = sb.append(sql.substring(pos)).toString
+    if (positionalShaped(out))
       throw new org.apache.spark.sql.AnalysisException(
         "USER_RAISED_EXCEPTION",
         Map("errorMessage" ->
@@ -198,7 +205,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val mask = ReplaceRewrite.maskLiterals(cur)
+      val mask = DuckLexer(cur).masked
       val hit = kw.findAllMatchIn(mask).flatMap { km =>
         var q = km.end
         while (q < cur.length && cur.charAt(q).isWhitespace) q += 1
@@ -273,40 +280,17 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * comments. None when the text has no such operator.
     */
   private def intDivRewrite(text: String): Option[String] = {
-    if (!text.contains("//")) return None
-    val out = new StringBuilder
-    var i = 0
-    var changed = false
-    val n = text.length
-    while (i < n) {
-      text.charAt(i) match {
-        case '\'' =>
-          out.append('\''); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (text.charAt(i) == '\'') {
-              if (i + 1 < n && text.charAt(i + 1) == '\'') { out.append("''"); i += 2 }
-              else { out.append('\''); i += 1; done = true }
-            } else { out.append(text.charAt(i)); i += 1 }
-          }
-        case q @ ('"' | '`') =>
-          out.append(q); i += 1
-          while (i < n && text.charAt(i) != q) { out.append(text.charAt(i)); i += 1 }
-          if (i < n) { out.append(q); i += 1 }
-        case '-' if i + 1 < n && text.charAt(i + 1) == '-' =>
-          while (i < n && text.charAt(i) != '\n') { out.append(text.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && text.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) {
-            out.append(text.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
-        case '/' if i + 1 < n && text.charAt(i + 1) == '/' =>
-          out.append(" div "); i += 2; changed = true
-        case c => out.append(c); i += 1
-      }
+    val m = DuckLexer(text).masked
+    if (!m.contains("//")) return None
+    val sb = new StringBuilder
+    var pos = 0
+    var i = m.indexOf("//")
+    while (i >= 0) {
+      sb.append(text.substring(pos, i)).append(" div ")
+      pos = i + 2
+      i = m.indexOf("//", pos)
     }
-    if (changed) Some(out.toString) else None
+    Some(sb.append(text.substring(pos)).toString)
   }
 
   /** DuckDB's `**` power operator → `power(l, r)`. Semantics pinned on
@@ -331,13 +315,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       "case", "set", "limit", "offset", "in", "as", "distinct", "all",
       "union", "except", "intersect", "from", "join", "between",
       "like", "ilike", "is", "values")
-    def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '.' || c == '$'
     var cur = text
     var changed = false
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val n = m.length
       val idx = m.indexOf("**")
       if (idx < 0) return if (changed) Some(cur) else None
@@ -351,15 +334,15 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       }
       if (r >= n) return None
       if (m.charAt(r) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, r)
+        val c = DuckLexer(cur).closeOf(r)
         if (c < 0) return None
         r = c
-      } else if (wordChar(m.charAt(r))) {
-        while (r < n && wordChar(m.charAt(r))) r += 1
+      } else if (operandCh(m.charAt(r))) {
+        while (r < n && operandCh(m.charAt(r))) r += 1
         var k = r
         while (k < n && cur.charAt(k).isWhitespace) k += 1
         if (k < n && m.charAt(k) == '(') {
-          val c = ReplaceRewrite.closeOf(cur, k)
+          val c = DuckLexer(cur).closeOf(k)
           if (c < 0) return None
           r = c
         }
@@ -388,12 +371,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         val beforeParen = l
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
         val nameEnd = l
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
         if (nameEnd > l &&
             unaryKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
           l = beforeParen
-      } else if (wordChar(m.charAt(l))) {
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+      } else if (operandCh(m.charAt(l))) {
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
       } else return None
       var ls = l + 1
       // boundary sanity: a blanked literal abutting the operand means a
@@ -409,9 +392,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         val unary =
           if (p < 0) true
           else if ("(,=<>+-*/%|&~".indexOf(m.charAt(p)) >= 0) true
-          else if (wordChar(m.charAt(p))) {
+          else if (operandCh(m.charAt(p))) {
             var w = p
-            while (w >= 0 && wordChar(m.charAt(w))) w -= 1
+            while (w >= 0 && operandCh(m.charAt(w))) w -= 1
             unaryKeywords(cur.substring(w + 1, p + 1).toLowerCase)
           } else false
         if (unary) ls = s
@@ -455,13 +438,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
 
   private def tildeOpRewrite(text: String): Option[String] = {
     if (!text.contains("~")) return None
-    def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '.' || c == '$'
     var cur = text
     var changed = false
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val n = m.length
       val ti = m.indexOf('~')
       if (ti < 0) return if (changed) Some(cur) else None
@@ -478,25 +460,18 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       if (r >= n) return None
       val rs = r
       if (cur.charAt(r) == '\'') {
-        r += 1
-        var done = false
-        while (r < n && !done) {
-          if (cur.charAt(r) == '\'') {
-            if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-            else { r += 1; done = true }
-          } else r += 1
-        }
-        if (!done) return None
+        val lit = DuckLexer(cur).stringAt(r).filter(_.closed).getOrElse(return None)
+        r = lit.end
       } else if (m.charAt(r) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, r)
+        val c = DuckLexer(cur).closeOf(r)
         if (c < 0) return None
         r = c
-      } else if (wordChar(m.charAt(r))) {
-        while (r < n && wordChar(m.charAt(r))) r += 1
+      } else if (operandCh(m.charAt(r))) {
+        while (r < n && operandCh(m.charAt(r))) r += 1
         var k = r
         while (k < n && cur.charAt(k).isWhitespace) k += 1
         if (k < n && m.charAt(k) == '(') {
-          val c = ReplaceRewrite.closeOf(cur, k)
+          val c = DuckLexer(cur).closeOf(k)
           if (c < 0) return None
           r = c
         }
@@ -508,28 +483,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       if (l < 0) return None
       val le = l + 1
       if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a masked string literal: forward-scan the
-        // text's literal spans (the mask can't disambiguate doubled
-        // quotes or interior spaces) to find the one ending at l
-        var i = 0
-        var start = -1
-        while (i <= l) {
-          if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-            val s = i
-            i += 1
-            var done = false
-            while (i < n && !done) {
-              if (cur.charAt(i) == '\'') {
-                if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-                else { done = true }
-              } else i += 1
-            }
-            if (i == l) start = s
-            i += 1
-          } else i += 1
-        }
-        if (start < 0) return None
-        l = start - 1
+        // closing quote of a string literal: the operand is all of it
+        l = DuckLexer(cur).stringAt(l).filter(_.end == l + 1)
+          .getOrElse(return None).start - 1
       } else if (m.charAt(l) == ')') {
         var depth = 1
         l -= 1
@@ -547,12 +503,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         val beforeParen = l
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
         val nameEnd = l
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
         if (nameEnd == l ||
             tildeKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
           l = beforeParen
-      } else if (wordChar(m.charAt(l))) {
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+      } else if (operandCh(m.charAt(l))) {
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
       } else return None
       val ls = l + 1
       // ---- boundary guards (Postgres precedence, pinned on 1.0):
@@ -612,7 +568,6 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * (one-operand extraction would misgroup) to the landing-pad hint.
     */
   private def atTimeZoneRewrite(text: String): Option[String] = {
-    def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '.' || c == '$'
     val atRe = "(?is)\\bAT\\s+TIME\\s+ZONE\\b".r
     val instantHeadRe =
       "(?is)\\A(?:to_utc_timestamp|now|current_timestamp|get_current_timestamp)\\s*(?:\\(.*)?\\z".r
@@ -621,7 +576,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var rounds = 0
     while (rounds < 16) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val n = m.length
       val mt = atRe.findFirstMatchIn(m).getOrElse(
         return if (changed) Some(cur) else None)
@@ -629,49 +584,24 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       var r = mt.end
       while (r < n && cur.charAt(r).isWhitespace) r += 1
       if (r >= n || cur.charAt(r) != '\'') return None
-      val zs = r
-      r += 1
-      var zdone = false
-      while (r < n && !zdone) {
-        if (cur.charAt(r) == '\'') {
-          if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-          else { r += 1; zdone = true }
-        } else r += 1
-      }
-      if (!zdone) return None
-      val zone = cur.substring(zs, r)
-      val re0 = r
+      val zoneLit = DuckLexer(cur).stringAt(r).filter(_.closed).getOrElse(return None)
+      val zone = cur.substring(r, zoneLit.end)
+      val re0 = zoneLit.end
       // ---- left operand (ls, le] ----
       var l = mt.start - 1
       while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
       if (l < 0) return None
       val le = l + 1
       if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a masked literal: forward-scan literal spans
-        // to find the one ending here, then pull in a typed-literal
-        // keyword (TIMESTAMP '...' / DATE '...') if present.
-        var i = 0
-        var start = -1
-        while (i <= l) {
-          if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-            val s = i
-            i += 1
-            var done = false
-            while (i < n && !done) {
-              if (cur.charAt(i) == '\'') {
-                if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-                else done = true
-              } else i += 1
-            }
-            if (i == l) start = s
-            i += 1
-          } else i += 1
-        }
-        if (start < 0) return None
+        // closing quote of a string literal: the operand is all of it,
+        // with a typed-literal keyword (TIMESTAMP '...' / DATE '...')
+        // pulled in if present.
+        val start = DuckLexer(cur).stringAt(l).filter(_.end == l + 1)
+          .getOrElse(return None).start
         l = start - 1
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
         val kwEnd = l
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
         val kw = cur.substring(l + 1, kwEnd + 1).toLowerCase
         if (!Set("timestamp", "timestamp_ntz", "date").contains(kw))
           l = start - 1
@@ -690,12 +620,12 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         val beforeParen = l
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
         val nameEnd = l
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
         if (nameEnd == l ||
             tildeKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
           l = beforeParen
-      } else if (wordChar(m.charAt(l))) {
-        while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+      } else if (operandCh(m.charAt(l))) {
+        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
       } else return None
       val ls = l + 1
       // left-adjacent operator binds first in DuckDB — decline rather
@@ -708,7 +638,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // strip redundant outer parens to classify the operand's source
       var core = lText
       while (core.startsWith("(") && core.endsWith(")") &&
-          ReplaceRewrite.closeOf(core, 0) == core.length)
+          DuckLexer(core).closeOf(0) == core.length)
         core = core.substring(1, core.length - 1).trim
       val fn =
         if (instantHeadRe.findFirstIn(core).isDefined) "from_utc_timestamp"
@@ -718,73 +648,6 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       changed = true
     }
     None
-  }
-
-  /** DuckDB dollar-quoted string literals — `$$raw$$` and the tagged
-    * `$tag$raw$tag$` — converted to standard single-quoted literals
-    * (content is RAW in DuckDB: no escape processing; mirrored by
-    * doubling backslashes and quotes for Spark's escaping literal
-    * parser). `$` never opens a literal inside an ordinary
-    * string/identifier/comment (skipped by the scan), and an unclosed
-    * marker declines. Only ever runs on parse failure — `$` is not
-    * Spark syntax outside parameter markers, so a native statement
-    * can't be claimed.
-    */
-  private def dollarQuoteRewrite(text: String): Option[String] = {
-    if (!text.contains("$")) return None
-    val n = text.length
-    val tagRe = """\A\$([A-Za-z_]\w*)?\$""".r
-    val sb = new StringBuilder
-    var i = 0
-    var changed = false
-    def copyThrough(pred: Int => Boolean): Unit = {
-      while (i < n && !pred(i)) { sb.append(text.charAt(i)); i += 1 }
-      if (i < n) { sb.append(text.charAt(i)); i += 1 }
-    }
-    while (i < n) {
-      text.charAt(i) match {
-        case '\'' =>
-          sb.append('\''); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (text.charAt(i) == '\'') {
-              if (i + 1 < n && text.charAt(i + 1) == '\'') {
-                sb.append("''"); i += 2
-              } else { sb.append('\''); i += 1; done = true }
-            } else { sb.append(text.charAt(i)); i += 1 }
-          }
-        case q @ ('"' | '`') =>
-          sb.append(q); i += 1
-          copyThrough(j => text.charAt(j) == q)
-        case '-' if i + 1 < n && text.charAt(i + 1) == '-' =>
-          copyThrough(j => text.charAt(j) == '\n')
-        case '/' if i + 1 < n && text.charAt(i + 1) == '*' =>
-          sb.append("/*"); i += 2
-          copyThrough(j => j > 0 && text.charAt(j - 1) == '*' &&
-            text.charAt(j) == '/')
-        case '$' =>
-          tagRe.findFirstMatchIn(text.substring(i)) match {
-            case Some(m) =>
-              val marker = m.matched
-              val start = i + marker.length
-              val close = text.indexOf(marker, start)
-              if (close < 0) return None // unclosed — not the construct
-              val raw = text.substring(start, close)
-              // Dollar-quote innards are RAW (the DuckLiterals entry
-              // scan skips $...$), so this embedding doubles
-              // backslashes itself: the one unescape at re-parse
-              // restores them.
-              sb.append('\'')
-                .append(raw.replace("\\", "\\\\").replace("'", "''"))
-                .append('\'')
-              i = close + marker.length
-              changed = true
-            case None => sb.append('$'); i += 1
-          }
-        case c => sb.append(c); i += 1
-      }
-    }
-    if (changed) Some(sb.toString) else None
   }
 
   /** DuckDB's bare quoted-path table reference — `FROM 'data.parquet'`,
@@ -804,7 +667,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         .findFirstIn(text).isDefined => return None
       case _ =>
     }
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     val kw = "(?i)\\b(FROM|JOIN)\\b".r
     val hits = kw.findAllMatchIn(masked).flatMap { m =>
       var j = m.end
@@ -816,19 +679,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val sb = new StringBuilder
     var pos = 0
     for ((kwEnd, q) <- hits) {
-      // Extract the literal (with '' doubling) from the raw text.
-      val lit = new StringBuilder
-      var k = q + 1
-      var closed = false
-      while (k < text.length && !closed) {
-        if (text.charAt(k) == '\'') {
-          if (k + 1 < text.length && text.charAt(k + 1) == '\'') {
-            lit.append('\''); k += 2
-          } else { closed = true; k += 1 }
-        } else { lit.append(text.charAt(k)); k += 1 }
-      }
-      if (!closed) return None
-      val path = lit.toString
+      val lit = DuckLexer(text).stringAt(q).filter(_.closed).getOrElse(return None)
+      val path = lit.value
       val base = path.toLowerCase.stripSuffix(".gz").stripSuffix(".zst")
       val reader =
         if (base.endsWith(".parquet") || base.endsWith(".parq")) "read_parquet"
@@ -839,7 +691,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       val relit = path.replace("'", "''") // raw backslashes: DuckLiterals scope
       sb.append(text.substring(pos, kwEnd))
         .append(s" $reader('$relit')")
-      pos = k
+      pos = lit.end
     }
     sb.append(text.substring(pos))
     Some(sb.toString)
@@ -854,21 +706,21 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val structPackRe = "(?i)\\bstruct_pack\\s*\\(".r
   private def structPackRewrite(text: String): Option[String] = {
     if (structPackRe.findFirstIn(
-      ReplaceRewrite.maskLiterals(text)).isEmpty) return None
+      DuckLexer(text).masked).isEmpty) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = DuckLexer(cur).masked
       val hit = structPackRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
           if (structPackRe.findFirstIn(
-            ReplaceRewrite.maskLiterals(inner)).isDefined) None
+            DuckLexer(inner).masked).isDefined) None
           else Some((m.start, close, inner))
         }
       }.toSeq.headOption
@@ -877,7 +729,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           return if (changed) Some(cur) else None
         case Some((s, close, inner)) =>
           val namedRe = """(?s)\A([A-Za-z_]\w*)\s*:=\s*(.+)\z""".r
-          val body = ReplaceRewrite.splitTop(inner).map(_.trim).map { p =>
+          val body = DuckLexer(inner).split(',').map(_.trim).map { p =>
             val m = namedRe.findFirstMatchIn(p).getOrElse(return None)
             s"'${m.group(1)}', ${m.group(2).trim}"
           }.mkString(", ")
@@ -897,21 +749,21 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val structInsertRe = "(?i)\\bstruct_insert\\s*\\(".r
   private def structInsertRewrite(text: String): Option[String] = {
     if (structInsertRe.findFirstIn(
-      ReplaceRewrite.maskLiterals(text)).isEmpty) return None
+      DuckLexer(text).masked).isEmpty) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = DuckLexer(cur).masked
       val hit = structInsertRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
           if (structInsertRe.findFirstIn(
-              ReplaceRewrite.maskLiterals(inner)).isDefined ||
+              DuckLexer(inner).masked).isDefined ||
             !inner.contains(":=")) None
           else Some((m.start, close, inner))
         }
@@ -920,7 +772,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         case None =>
           return if (changed) Some(cur) else None
         case Some((s, close, inner)) =>
-          val parts = ReplaceRewrite.splitTop(inner).map(_.trim)
+          val parts = DuckLexer(inner).split(',').map(_.trim)
           if (parts.size < 2) return None
           val namedRe = """(?s)\A([A-Za-z_]\w*)\s*:=\s*(.+)\z""".r
           val pairs = parts.tail.map { p =>
@@ -946,7 +798,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * patterns (columns, concat) decline to the hint.
     */
   private def similarToRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val view = DuckLexer(text)
+    val masked = view.masked
     val op = "(?i)\\b(NOT\\s+)?SIMILAR\\s+TO\\b".r
     val ms = op.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
@@ -957,18 +810,14 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // The pattern literal must follow across whitespace only.
       var j = m.end
       while (j < text.length && text.charAt(j).isWhitespace) j += 1
-      if (j >= text.length || text.charAt(j) != '\'') return None
+      // A closed '...' literal at `at`, its body appended to the pattern.
       val lit = new StringBuilder
-      var k = j + 1
-      var closed = false
-      while (k < text.length && !closed) {
-        if (text.charAt(k) == '\'') {
-          if (k + 1 < text.length && text.charAt(k + 1) == '\'') {
-            lit.append("''"); k += 2
-          } else { closed = true; k += 1 }
-        } else { lit.append(text.charAt(k)); k += 1 }
+      def literal(at: Int): Int = {
+        if (at >= text.length || text.charAt(at) != '\'') return -1
+        view.stringAt(at).filter(_.closed).fold(-1) { l => lit.append(l.body); l.end }
       }
-      if (!closed) return None
+      var k = literal(j)
+      if (k < 0) return None
       // Constant-fold a `'a' || 'b' || ...` literal concat chain into
       // the pattern (round 18 — `||` binds tighter than SIMILAR TO in
       // DuckDB, so the real pattern is the concat result). Any
@@ -980,18 +829,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           text.charAt(t + 1) == '|') {
         t += 2
         while (t < text.length && text.charAt(t).isWhitespace) t += 1
-        if (t >= text.length || text.charAt(t) != '\'') return None
-        var kk = t + 1
-        var cl = false
-        while (kk < text.length && !cl) {
-          if (text.charAt(kk) == '\'') {
-            if (kk + 1 < text.length && text.charAt(kk + 1) == '\'') {
-              lit.append("''"); kk += 2
-            } else { cl = true; kk += 1 }
-          } else { lit.append(text.charAt(kk)); kk += 1 }
-        }
-        if (!cl) return None
-        k = kk
+        k = literal(t)
+        if (k < 0) return None
         t = k
         while (t < text.length && text.charAt(t).isWhitespace) t += 1
       }
@@ -1038,9 +877,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     */
   private val bitLiteralRe = "(?i)\\bBIT\\s+'([01]+)'".r
   private def bitLiteralRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
-    val ms = bitLiteralRe.findAllMatchIn(text)
-      .filter(m => masked.charAt(m.start) != ' ').toList
+    val view = DuckLexer(text)
+    val ms = bitLiteralRe.findAllMatchIn(text).filter(m => view.isCode(m.start)).toList
     if (ms.isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
@@ -1069,7 +907,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     ("(?i)::\\s*(VARCHAR|TEXT|BPCHAR|BLOB|UTINYINT|USMALLINT|" +
       "UINTEGER|UBIGINT|UHUGEINT|HUGEINT|TIMESTAMPTZ)\\b(?!\\s*\\()").r
   private def typeSpellRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     // Unsigned widths land on the next-wider signed Spark type (the
     // value range fits; typeof() reports the signed name — documented);
     // HUGEINT on DECIMAL(38,0), the same exact-integer envelope the
@@ -1089,7 +927,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val castExtents = "(?i)\\b(?:TRY_)?CAST\\s*\\(".r
       .findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(text, open)
+        val close = DuckLexer(text).closeOf(open)
         if (close < 0) None else Some((open, close))
       }.toList
     val repls = scala.collection.mutable.ListBuffer.empty[(Int, Int, String)]
@@ -1333,16 +1171,10 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           def sql(rewrite: => Option[String]): () => Option[LogicalPlan] =
             () => rewrite.flatMap(reparseOrChain(_, depth + 1))
           val candidates: Seq[() => Option[LogicalPlan]] = Seq(
-            // FIRST: dollar-quoted literals — converting them often
-            // makes the statement parse outright, and if another
-            // construct remains the rewritten text recurses through
-            // this chain with ordinary literals the other scanners'
-            // masking understands.
-            sql(dollarQuoteRewrite(text)),
-            // Bare quoted-path table refs (FROM 'x.parquet') — early,
-            // like dollar quotes: the spliced readers usually make the
-            // statement parse outright, and any remaining construct
-            // recurses through the chain.
+            // Bare quoted-path table refs (FROM 'x.parquet') — early:
+            // the spliced readers usually make the statement parse
+            // outright, and any remaining construct recurses through
+            // the chain.
             sql(bareFilePathRewrite(text)),
             sql(text match { case summarizeTableRe(tbl) =>
               Some(s"SELECT * FROM summarize('$tbl')"); case _ => None }),
@@ -1391,9 +1223,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // (UNSUPPORTED_TYPED_LITERAL; the UTC session pin makes
             // Spark's LTZ carry the same instant).
             sql({
-              val masked = ReplaceRewrite.maskLiterals(text)
+              val view = DuckLexer(text)
               val ms = timestampTzRe.findAllMatchIn(text)
-                .filter(m2 => masked.charAt(m2.start) != ' ').toList
+                .filter(m2 => view.isCode(m2.start)).toList
               if (ms.isEmpty) None
               else {
                 val sb = new StringBuilder
@@ -1901,7 +1733,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private def namedReaderCallRewrite(text: String): Option[String] = {
     if (!text.contains("=") || namedReaderNameRe.findFirstIn(text).isEmpty)
       return None
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     if (namedReaderNameRe.findFirstIn(masked).isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
@@ -1911,32 +1743,16 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val namedRe = """(?s)\A([A-Za-z_]\w*)\s*=(?!=)\s*(.+)\z""".r
     for (m <- namedReaderNameRe.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = DuckLexer(text).closeOf(open)
       if (close < 0 || open < pos) ()
       else {
-        // splitTop tracks parens but not braces: re-merge fragments of
-        // a brace-struct value (columns={'a': 'T', 'b': 'U'}) that the
-        // comma split tore apart (round 18).
-        val args0 = ReplaceRewrite.splitTop(text.substring(open + 1, close - 1))
-        val args = {
-          val merged = Vector.newBuilder[String]
-          val cur = new StringBuilder
-          var bal = 0
-          for (p <- args0) {
-            if (cur.nonEmpty) cur.append(',')
-            cur.append(p)
-            bal += ReplaceRewrite.maskLiterals(p)
-              .count(_ == '{') - ReplaceRewrite.maskLiterals(p).count(_ == '}')
-            if (bal <= 0) { merged += cur.toString; cur.clear(); bal = 0 }
-          }
-          if (cur.nonEmpty) merged += cur.toString
-          merged.result()
-        }.map(_.trim)
+        val args = DuckLexer(text.substring(open + 1, close - 1))
+          .split(',', groups = true).map(_.trim)
         val keep = Vector.newBuilder[String]
         val named = Vector.newBuilder[(String, String)]
         var ok = true
         for (a <- args if ok) {
-          val aMasked = ReplaceRewrite.maskLiterals(a)
+          val aMasked = DuckLexer(a).masked
           namedRe.findFirstMatchIn(aMasked) match {
             case Some(nm) if !aMasked.substring(0, nm.end(1)).contains("'") =>
               val key = a.substring(nm.start(1), nm.end(1))
@@ -1952,8 +1768,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                     v.startsWith("{") && v.endsWith("}") =>
                   val entryRe =
                     """\A'((?:[^']|'')*)'\s*:\s*'((?:[^']|'')*)'\z""".r
-                  val fields = ReplaceRewrite
-                    .splitTop(v.substring(1, v.length - 1))
+                  val fields = DuckLexer(v.substring(1, v.length - 1)).split(',')
                     .map(_.trim).filter(_.nonEmpty)
                     .map {
                       case entryRe(n, t) =>
@@ -2011,21 +1826,21 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private def extractFieldRewrite(text: String): Option[String] = {
     if (extractFieldRe.findFirstIn(text).isEmpty &&
       datePartFieldRe.findFirstIn(text).isEmpty) return None
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     // EXTRACT(field FROM e): field is a bare word, match on masked;
     // date_part('field', e): field is a literal (masked to spaces), so
     // match raw text and require the call keyword itself unmasked.
     val ms =
       (extractFieldRe.findAllMatchIn(masked).map(m => (m, true)) ++
         datePartFieldRe.findAllMatchIn(text).filter(m =>
-          masked.charAt(m.start) != ' ').map(m => (m, false)))
+          DuckLexer(text).isCode(m.start)).map(m => (m, false)))
         .toList.sortBy(_._1.start)
     if (ms.isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
     for ((m, _) <- ms if m.start >= pos) {
       val open = masked.indexOf('(', m.start)
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = DuckLexer(text).closeOf(open)
       if (close < 0) return None
       val inner = text.substring(m.end, close - 1).trim
       sb.append(text.substring(pos, m.start))
@@ -2049,7 +1864,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val collateNoRe = "(?i)\\bCOLLATE\\s+NO".r
   private def duckCollateRewrite(text: String): Option[String] = {
     if (collateNoRe.findFirstIn(text).isEmpty) return None
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = DuckLexer(text).masked
     val ms = duckCollateRe.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
     val sb = new StringBuilder
@@ -2107,7 +1922,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // native statement can be claimed; a shape the fold can't extract
     // throws the targeted hint instead of the star-usage error.
     case _ if sqlText.contains("**") &&
-        ReplaceRewrite.maskLiterals(sqlText).contains("**") =>
+        DuckLexer(sqlText).masked.contains("**") =>
       powerOpRewrite(sqlText) match {
         case Some(r) => preRewrite(r)
         case None => throw new org.apache.spark.sql.AnalysisException(
@@ -4805,12 +4620,12 @@ object GraftSparkExtensions {
       // those columns `<value>_<alias>`, and without an alias the two
       // engines' auto-generated names cannot match.
       def splitAlias(a: String): (String, Option[String]) =
-        QualifyRewrite.topLevelWords(a).reverse.find(_._1 == "AS") match {
+        DuckLexer(a).topLevelWords.reverse.find(_._1 == "AS") match {
           case Some((_, pos)) =>
             (a.take(pos).trim, Some(a.drop(pos + 2).trim))
           case None => (a.trim, None)
         }
-      val aggParts = ReplaceRewrite.splitTop(aggSql).map(splitAlias)
+      val aggParts = DuckLexer(aggSql).split(',').map(splitAlias)
       require(aggParts.size == 1 || aggParts.forall(_._2.isDefined),
         "pivot_auto: multiple USING aggregates each need an AS alias")
       val groups: Seq[String] =
@@ -4838,7 +4653,7 @@ object GraftSparkExtensions {
         else scala.util.Try[Any](s.toLong)
           .orElse(scala.util.Try[Any](s.toDouble)).getOrElse(s)
       }
-      val inValues = ReplaceRewrite.splitTop(valuesCsv)
+      val inValues = DuckLexer(valuesCsv).split(',')
         .map(_.trim).filter(_.nonEmpty).map(parseVal)
       import org.apache.spark.sql.functions.{col, concat_ws, expr}
       require(onCols.length == 1 || inValues.isEmpty,
@@ -5395,40 +5210,6 @@ object GraftSparkExtensions {
             Comments.columnComment(t.name, f.name).orNull)
         }
       }
-  }
-
-  /** First top-level `=` that is an assignment operator (not ==, <=,
-    * >=, !=, <>), outside strings/quotes/parens; -1 when absent.
-    */
-  private[sql] def topLevelEq(s: String): Int = {
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' => depth += 1; i += 1
-        case ')' | ']' => depth -= 1; i += 1
-        case '=' if depth == 0 =>
-          val prev = if (i > 0) s.charAt(i - 1) else ' '
-          val next = if (i + 1 < n) s.charAt(i + 1) else ' '
-          if (prev != '<' && prev != '>' && prev != '!' && prev != '=' &&
-            next != '=') return i
-          i += 1
-        case _ => i += 1
-      }
-    }
-    -1
   }
 
   import org.apache.spark.sql.Row

@@ -41,8 +41,7 @@ package graft.sql
   */
 object ListOpRewrite {
 
-  private def wordChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_' || c == '.' || c == '$'
+  import DuckLexer.operandCh
 
   /** End index (exclusive) of the right operand starting at/after
     * `from`: literal | paren group | word chain w/ optional call parens
@@ -54,38 +53,17 @@ object ListOpRewrite {
     var r = from
     while (r < n && cur.charAt(r).isWhitespace) r += 1
     if (r >= n) return None
-    if (cur.charAt(r) == '\'') {
-      r += 1
-      var done = false
-      while (r < n && !done) {
-        if (cur.charAt(r) == '\'') {
-          if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-          else { r += 1; done = true }
-        } else r += 1
-      }
-      if (!done) None else Some(r)
-    } else if (m.charAt(r) == '(') {
-      val c = ReplaceRewrite.closeOf(cur, r)
+    if (cur.charAt(r) == '\'') DuckLexer(cur).stringAt(r).filter(_.closed).map(_.end)
+    else if (m.charAt(r) == '(' || m.charAt(r) == '[') {
+      // a paren group, or a bracket list literal
+      val c = DuckLexer(cur).closeOf(r)
       if (c < 0) None else Some(c)
-    } else if (m.charAt(r) == '[') {
-      // bracket list literal: balanced [ ] scan on the masked text
-      var depth = 0
-      var i = r
-      while (i < n) {
-        m.charAt(i) match {
-          case '[' => depth += 1
-          case ']' => depth -= 1; if (depth == 0) return Some(i + 1)
-          case _ =>
-        }
-        i += 1
-      }
-      None
-    } else if (wordChar(m.charAt(r))) {
-      while (r < n && wordChar(m.charAt(r))) r += 1
+    } else if (operandCh(m.charAt(r))) {
+      while (r < n && operandCh(m.charAt(r))) r += 1
       var k = r
       while (k < n && cur.charAt(k).isWhitespace) k += 1
       if (k < n && m.charAt(k) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, k)
+        val c = DuckLexer(cur).closeOf(k)
         if (c < 0) None else Some(c)
       } else Some(r)
     } else None
@@ -113,26 +91,8 @@ object ListOpRewrite {
     while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
     if (l < 0) return None
     if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-      // closing quote of a masked literal: forward-scan literal spans
-      var i = 0
-      var start = -1
-      val n = m.length
-      while (i <= l) {
-        if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-          val s = i
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (cur.charAt(i) == '\'') {
-              if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-              else done = true
-            } else i += 1
-          }
-          if (i == l) start = s
-          i += 1
-        } else i += 1
-      }
-      if (start < 0) None else Some(start)
+      // closing quote of a string literal: the operand is all of it
+      DuckLexer(cur).stringAt(l).filter(_.end == l + 1).map(_.start)
     } else if (m.charAt(l) == ']') {
       var depth = 0
       var i = l
@@ -162,13 +122,13 @@ object ListOpRewrite {
       val beforeParen = l
       while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
       val nameEnd = l
-      while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+      while (l >= 0 && operandCh(m.charAt(l))) l -= 1
       if (nameEnd == l ||
         clauseKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
         Some(beforeParen + 1)
       else Some(l + 1)
-    } else if (wordChar(m.charAt(l))) {
-      while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+    } else if (operandCh(m.charAt(l))) {
+      while (l >= 0 && operandCh(m.charAt(l))) l -= 1
       Some(l + 1)
     } else None
   }
@@ -200,7 +160,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val hits = ops.flatMap { op =>
         val i = m.indexOf(op)
         if (i >= 0) Some((i, op)) else None
@@ -265,7 +225,7 @@ object ListOpRewrite {
     var l = open - 1
     while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
     val e = l
-    while (l >= 0 && wordChar(m.charAt(l))) l -= 1
+    while (l >= 0 && operandCh(m.charAt(l))) l -= 1
     if (e == l) "" else cur.substring(l + 1, e + 1).toLowerCase
   }
 
@@ -276,7 +236,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 256) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       var oi = m.indexOf("->")
       var applied = false
       while (oi >= 0 && !applied) {
@@ -342,7 +302,7 @@ object ListOpRewrite {
     * fails to re-parse (dead candidate branch).
     */
   def rewriteFilterShorthand(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = DuckLexer(text).masked
     val hits = filterShorthandRe.findAllMatchIn(m).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -383,7 +343,7 @@ object ListOpRewrite {
     while (progress && rounds < 64) {
       rounds += 1
       progress = false
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val hits = windowFilterRe.findAllMatchIn(m).toList
       var done = false
       for (h <- hits if !done) {
@@ -395,7 +355,7 @@ object ListOpRewrite {
           else {
             val aggClose = i
             val open = h.end - 1 // the FILTER clause's '('
-            val close = ReplaceRewrite.closeOf(cur, open)
+            val close = DuckLexer(cur).closeOf(open)
             if (close < 0) None
             else {
               var a = close
@@ -486,13 +446,13 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val hit = quantRe.findFirstMatchIn(m) match {
         case Some(h) => h
         case None => return if (changed) Some(cur) else None
       }
       val open = m.indexOf('(', hit.end - 1)
-      val close = ReplaceRewrite.closeOf(cur, open)
+      val close = DuckLexer(cur).closeOf(open)
       if (close < 0) return None
       val inner = cur.substring(open + 1, close - 1).trim
       if (inner.toUpperCase.startsWith("SELECT") ||
@@ -519,7 +479,7 @@ object ListOpRewrite {
     * grammar position). Parse-failure only.
     */
   def rewriteIgnoreNulls(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = DuckLexer(text).masked
     val hits = ignoreNullsInParensRe.findAllMatchIn(m).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -547,7 +507,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
@@ -585,13 +545,13 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
         if (m.charAt(i) == '@' &&
           (i + 1 >= m.length || m.charAt(i + 1) != '>') &&
-          (i == 0 || (m.charAt(i - 1) != '<' && !wordChar(m.charAt(i - 1))))) {
+          (i == 0 || (m.charAt(i - 1) != '<' && !operandCh(m.charAt(i - 1))))) {
           scanRight(cur, m, i + 1) match {
             case Some(re) if neighborsSafe(cur, m, i, re) =>
               val b = cur.substring(i + 1, re).trim
@@ -634,7 +594,7 @@ object ListOpRewrite {
   private val clockIntervalRe =
     "(?i)\\bINTERVAL\\s*('-?\\d+:\\d{1,2}:\\d{1,2}(?:\\.\\d+)?')".r
   def rewriteIntervalClock(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = DuckLexer(text).masked
     // literals are masked, so match positions come from the raw text
     // guarded by the INTERVAL keyword being unmasked in m
     val hits = clockIntervalRe.findAllMatchIn(text).filter { h =>
@@ -657,7 +617,7 @@ object ListOpRewrite {
   }
 
   def rewriteIntervalExpr(text: String): Option[String] = {
-    val m0 = ReplaceRewrite.maskLiterals(text)
+    val m0 = DuckLexer(text).masked
     val hits = intervalExprRe.findAllMatchIn(m0).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -665,7 +625,7 @@ object ListOpRewrite {
     var changed = false
     for (h <- hits if h.start >= pos) {
       val open = m0.indexOf('(', h.start)
-      val close = ReplaceRewrite.closeOf(text, open) // index AFTER ')'
+      val close = DuckLexer(text).closeOf(open) // index AFTER ')'
       if (close > 0) {
         var u = close
         while (u < text.length && text.charAt(u).isWhitespace) u += 1
@@ -699,14 +659,14 @@ object ListOpRewrite {
     * into explode and keeps Spark's own analysis error).
     */
   def rewriteUnnestStruct(text: String): Option[String] = {
-    val m0 = ReplaceRewrite.maskLiterals(text)
+    val m0 = DuckLexer(text).masked
     val hits = unnestBraceRe.findAllMatchIn(m0).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
     for (h <- hits if h.start >= pos) {
       val open = m0.indexOf('(', h.start)
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = DuckLexer(text).closeOf(open)
       if (close < 0) return None
       val inner = text.substring(open + 1, close - 1)
       sb.append(text.substring(pos, h.start))
@@ -725,7 +685,7 @@ object ListOpRewrite {
   def rewriteJsonCast(text: String): Option[String] = {
     if (!"(?i)\\bJSON\\b".r.findFirstIn(text).isDefined) return None
     var cur = text
-    var m = ReplaceRewrite.maskLiterals(cur)
+    var m = DuckLexer(cur).masked
     var changed = false
 
     val castRe = """(?i)\b(TRY_)?CAST\s*\(""".r
@@ -734,7 +694,7 @@ object ListOpRewrite {
       scan = false
       for (h <- castRe.findAllMatchIn(m) if !scan) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close > 0) {
           val inner = cur.substring(open + 1, close - 1)
           val innerM = m.substring(open + 1, close - 1)
@@ -746,7 +706,7 @@ object ListOpRewrite {
                 else "graft_json_cast"
               cur = cur.substring(0, h.start) + s"$fn($operand)" +
                 cur.substring(close)
-              m = ReplaceRewrite.maskLiterals(cur)
+              m = DuckLexer(cur).masked
               changed = true
               scan = true
             }
@@ -766,7 +726,7 @@ object ListOpRewrite {
             if (operand.nonEmpty) {
               cur = cur.substring(0, ls) + s"graft_json_cast($operand)" +
                 cur.substring(h.end)
-              m = ReplaceRewrite.maskLiterals(cur)
+              m = DuckLexer(cur).masked
               changed = true
               again = true
             }
@@ -798,7 +758,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 32) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val hit = globWordRe.findFirstMatchIn(m).getOrElse(
         return if (changed) Some(cur) else None)
       val re = scanRight(cur, m, hit.end).getOrElse(return None)
@@ -824,7 +784,7 @@ object ListOpRewrite {
       "FETCH\\s+(?:FIRST|NEXT)\\s+(?:(\\d+)\\s+)?ROWS?\\s+ONLY").r
   private val bareOffsetRowsRe = "(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\b".r
   def rewriteFetch(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = DuckLexer(text).masked
     fetchRe.findFirstMatchIn(m) match {
       case Some(h) =>
         val off = Option(h.group(1)).map(k => s" OFFSET $k").getOrElse("")
@@ -856,7 +816,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = DuckLexer(cur).masked
       val hitOpt = dotCallRe.findAllMatchIn(m).find { h =>
         var p = h.start - 1
         while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
@@ -870,7 +830,7 @@ object ListOpRewrite {
       val receiver = cur.substring(ls, p + 1)
       val fn = hit.group(1)
       val open = hit.end - 1
-      val close = ReplaceRewrite.closeOf(cur, open)
+      val close = DuckLexer(cur).closeOf(open)
       if (close < 0) return None
       val args = cur.substring(open + 1, close - 1).trim
       val call =
@@ -882,10 +842,10 @@ object ListOpRewrite {
   }
 
   def rewriteLimitPercent(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = DuckLexer(text).masked
     val hit = limitPctRe.findFirstMatchIn(m).getOrElse(return None)
     val pct = hit.group(1)
-    val words = QualifyRewrite.topLevelWords(text)
+    val words = DuckLexer(text).topLevelWords
     // the LIMIT must be top-level (not inside a subquery)
     val limW = words.reverse.find(w => w._1 == "LIMIT").getOrElse(return None)
     if (limW._2 != hit.start) return None
@@ -896,7 +856,7 @@ object ListOpRewrite {
         val keys = text.substring(ow._2, hit.start).trim
           .replaceFirst("(?i)\\Aorder\\s+by\\b", "").trim
         if (keys.isEmpty) return None
-        if (ReplaceRewrite.splitTop(keys).map(_.trim)
+        if (DuckLexer(keys).split(',').map(_.trim)
           .exists(k => k.split("\\s+").headOption.exists(_.matches("\\d+"))))
           return None // ordinal keys: constants inside OVER
         val body = text.substring(0, ow._2).trim

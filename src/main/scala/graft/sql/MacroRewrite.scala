@@ -129,23 +129,11 @@ object MacroRewrite {
     * claim a native statement; calls to names without a recorded
     * signature decline (nothing safe to reorder against).
     */
-  /** `:=` present at paren-depth 0 of an ALREADY-MASKED text — a named
-    * argument of THIS call, not of a call nested inside an argument.
+  /** `:=` in code at paren-depth 0 of `args` — a named argument of
+    * THIS call, not of a call nested inside an argument.
     */
-  private def topLevelNamedOp(masked: String): Boolean = {
-    var depth = 0
-    var i = 0
-    while (i < masked.length - 1) {
-      masked.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ':' if depth == 0 && masked.charAt(i + 1) == '=' => return true
-        case _ =>
-      }
-      i += 1
-    }
-    false
-  }
+  private def namedOp(args: String): Boolean =
+    DuckLexer(args).topLevel()(args.startsWith(":=", _)).nonEmpty
 
   def namedCallRewrite(text: String): Option[String] = {
     if (!text.contains(":=")) return None
@@ -154,39 +142,34 @@ object MacroRewrite {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = DuckLexer(cur).masked
       // First call whose OWN top-level argument list carries := (a
       // named argument of a NESTED call must not claim the outer one —
       // the scan skips it here and reaches the inner call's own match).
       val callRe = """([A-Za-z_]\w*)\s*\(""".r
       val hit = callRe.findAllMatchIn(masked).flatMap { m =>
         val open = m.end - 1
-        val close = ReplaceRewrite.closeOf(cur, open)
-        if (close < 0) None
-        else {
-          val innerMasked = masked.substring(open + 1, close - 1)
-          if (topLevelNamedOp(innerMasked))
-            Some((m.group(1), m.start(1), open, close))
-          else None
-        }
+        val close = DuckLexer(cur).closeOf(open)
+        if (close > 0 && namedOp(cur.substring(open + 1, close - 1)))
+          Some((m.group(1), m.start(1), open, close))
+        else None
       }.toSeq.headOption
       hit match {
         case None => return if (changed) Some(cur) else None
         case Some((fname, nameStart, open, close)) =>
           val params = signatureOf(fname).getOrElse(return None)
           val inner = cur.substring(open + 1, close - 1)
-          val args = ReplaceRewrite.splitTop(inner).map(_.trim)
+          val args = DuckLexer(inner).split(',').map(_.trim)
           val lowered = params.map(_._1.toLowerCase)
           val slots = Array.fill[Option[String]](params.size)(None)
           var seenNamed = false
           var posIdx = 0
           val namedRe = """(?s)\A([A-Za-z_]\w*)\s*:=\s*(.+)\z""".r
           for (a <- args) {
-            // := detection on the MASKED arg at depth 0: a literal ':='
+            // := detection in code at depth 0: a literal ':='
             // inside a string is data, and one inside a nested call
             // belongs to that call, not this argument.
-            val aMasked = ReplaceRewrite.maskLiterals(a)
-            if (topLevelNamedOp(aMasked)) {
+            if (namedOp(a)) {
               seenNamed = true
               val m = namedRe.findFirstMatchIn(a).getOrElse(return None)
               val slot = lowered.indexOf(m.group(1).toLowerCase)
@@ -227,16 +210,16 @@ object MacroRewrite {
     // not "any word characters", and a first segment containing
     // `AS TABLE` routes to the table path regardless.
     val defsText = sql.substring(m.end - 1).trim.stripSuffix(";").trim
-    val segs = ReplaceRewrite.splitTop(defsText).map(_.trim)
+    val segs = DuckLexer(defsText).split(',').map(_.trim)
     // A continuation segment is overload-shaped when its leading paren
     // group (closed structurally, so `c := greatest(1, 2)` defaults
     // survive) holds only `ident` / `ident := expr` items and `AS`
     // follows — the same item grammar [[overloads]] re-parses strictly.
     def overloadSeg(s: String): Boolean = s.startsWith("(") && {
-      val c = ReplaceRewrite.closeOf(s, 0)
+      val c = DuckLexer(s).closeOf(0)
       c > 0 && """(?is)\A\s*AS\b""".r.findFirstIn(s.substring(c)).isDefined && {
         val inner = s.substring(1, c - 1).trim
-        inner.isEmpty || ReplaceRewrite.splitTop(inner).map(_.trim).forall {
+        inner.isEmpty || DuckLexer(inner).split(',').map(_.trim).forall {
           it =>
             val i = it.indexOf(":=")
             val nm = if (i < 0) it else it.take(i).trim
@@ -253,14 +236,14 @@ object MacroRewrite {
     // `name := <default-expr>` slots (DuckDB's default parameters). Types
     // decline to the hint.
     val open = m.end - 1 // the '(' headRe ended on
-    val closeIdx = ReplaceRewrite.closeOf(sql, open)
+    val closeIdx = DuckLexer(sql).closeOf(open)
     if (closeIdx < 0) return None
     val paramText = sql.substring(open + 1, closeIdx - 1).trim
     val identRe = """\A[A-Za-z_][A-Za-z0-9_]*\z""".r
     final case class Param(name: String, default: Option[String])
     val params: Vector[Param] =
       if (paramText.isEmpty) Vector.empty
-      else ReplaceRewrite.splitTop(paramText).map(_.trim).map { item =>
+      else DuckLexer(paramText).split(',').map(_.trim).map { item =>
         val i = item.indexOf(":=")
         if (i < 0) {
           if (identRe.findFirstIn(item).isEmpty) return None
@@ -396,13 +379,13 @@ object MacroRewrite {
       defaults: Map[String, Expression], nRequired: Int, template: Expression)
     val parsed: Vector[Ovl] = segs.map { seg =>
       if (!seg.startsWith("(")) return None
-      val close = ReplaceRewrite.closeOf(seg, 0)
+      val close = DuckLexer(seg).closeOf(0)
       if (close < 0) return None
       val paramText = seg.substring(1, close - 1).trim
       final case class P(name: String, default: Option[String])
       val ps: Vector[P] =
         if (paramText.isEmpty) Vector.empty
-        else ReplaceRewrite.splitTop(paramText).map(_.trim).map { item =>
+        else DuckLexer(paramText).split(',').map(_.trim).map { item =>
           val i = item.indexOf(":=")
           if (i < 0) {
             if (identRe.findFirstIn(item).isEmpty) return None

@@ -81,7 +81,7 @@ object OrderedAggRewrite {
     "(?is)\\A(.+?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*\\z".r
 
   private def parseKeys(keysText: String): Option[Vector[Key]] = {
-    val parts = ReplaceRewrite.splitTop(keysText).map(_.trim).filter(_.nonEmpty)
+    val parts = DuckLexer(keysText).split(',').map(_.trim).filter(_.nonEmpty)
     if (parts.isEmpty) return None
     val ks = parts.map { p =>
       keyRe.findFirstMatchIn(p) match {
@@ -149,23 +149,23 @@ object OrderedAggRewrite {
 
   def rewrite(text: String): Option[String] = {
     if (!shapedRe.pattern.matcher(
-      ReplaceRewrite.maskLiterals(text)).matches) return None
+      DuckLexer(text).masked).matches) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = DuckLexer(cur).masked
       // Innermost-first (the structPack convention): skip a call whose
       // own args still contain another qualifying call, so nested
       // occurrences resolve inside-out.
       val hit = callRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.end - 1)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = DuckLexer(cur).closeOf(open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
-          val innerMasked = ReplaceRewrite.maskLiterals(inner)
+          val innerMasked = DuckLexer(inner).masked
           val ob = topOrderBy(innerMasked)
           if (ob < 0) None
           else if (shapedRe.pattern.matcher(innerMasked).matches) None
@@ -188,7 +188,7 @@ object OrderedAggRewrite {
           val (filterSuffix, afterCall) =
             filterRe.findFirstMatchIn(tail) match {
               case Some(fm) =>
-                val fc = ReplaceRewrite.closeOf(tail, fm.end - 1)
+                val fc = DuckLexer(tail).closeOf(fm.end - 1)
                 if (fc < 0) ("", close)
                 else (" " + tail.substring(0, fc).trim, close + fc)
               case None => ("", close)

@@ -53,7 +53,7 @@ object PivotRewrite {
         case None =>
           val h = parenHeadRe.findFirstMatchIn(sql).getOrElse(return None)
           val open = h.end
-          val close = ReplaceRewrite.closeOf(sql, open)
+          val close = DuckLexer(sql).closeOf(open)
           if (close < 0) return None
           val t = tailRe.findFirstMatchIn(sql.substring(close))
             .getOrElse(return None)
@@ -68,7 +68,7 @@ object PivotRewrite {
     // Each top-level USING part may carry one trailing alias; with
     // several parts every one must (pivot_auto enforces it too, but
     // declining here keeps the error on the friendlier hint path).
-    val parts = ReplaceRewrite.splitTop(agg)
+    val parts = DuckLexer(agg).split(',')
     if (parts.size > 1) {
       val outers = parts.map { p =>
         var o = p

@@ -64,7 +64,7 @@ object PrepareRewrite {
         fail(s"""Prepared statement "${name.toLowerCase}" does not exist""")
       val args =
         if (argText == null || argText.trim.isEmpty) Vector.empty[String]
-        else ReplaceRewrite.splitTop(argText).map(_.trim)
+        else DuckLexer(argText).split(',').map(_.trim)
       if (args.exists(_.isEmpty)) fail(s"EXECUTE $name: empty argument")
       Some(Right(substitute(name.toLowerCase, template, args)))
     case _ => None
@@ -74,6 +74,7 @@ object PrepareRewrite {
     * identifiers, and comments) with the parenthesized argument texts.
     */
   private def substitute(name: String, template: String, args: Vector[String]): String = {
+    val view = DuckLexer(template)
     val out = new StringBuilder
     var i = 0
     var positional = 0
@@ -81,48 +82,29 @@ object PrepareRewrite {
     val n = template.length
     while (i < n) {
       val c = template.charAt(i)
-      c match {
-        case '\'' =>
-          out.append(c); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (template.charAt(i) == '\'') {
-              if (i + 1 < n && template.charAt(i + 1) == '\'') {
-                out.append("''"); i += 2
-              } else { out.append('\''); i += 1; done = true }
-            } else { out.append(template.charAt(i)); i += 1 }
-          }
-        case '"' | '`' =>
-          out.append(c); i += 1
-          while (i < n && template.charAt(i) != c) { out.append(template.charAt(i)); i += 1 }
-          if (i < n) { out.append(c); i += 1 }
-        case '-' if i + 1 < n && template.charAt(i + 1) == '-' =>
-          while (i < n && template.charAt(i) != '\n') { out.append(template.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && template.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(template.charAt(i) == '*' && template.charAt(i + 1) == '/')) {
-            out.append(template.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
-        case '$' if i + 1 < n && template.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < n && template.charAt(j).isDigit) j += 1
-          val idx = template.substring(i + 1, j).toInt
-          if (idx < 1 || idx > args.length)
-            fail(s"EXECUTE $name: statement references $$$idx but " +
-              s"${args.length} argument(s) were supplied")
-          used += idx
-          out.append('(').append(args(idx - 1)).append(')')
-          i = j
-        case '?' =>
-          positional += 1
-          if (positional > args.length)
-            fail(s"EXECUTE $name: statement has at least $positional " +
-              s"positional markers but ${args.length} argument(s) were supplied")
-          used += positional
-          out.append('(').append(args(positional - 1)).append(')')
-          i += 1
-        case ch => out.append(ch); i += 1
+      view.span(i) match {
+        case Some((_, end)) => out.append(template.substring(i, end)); i = end
+        case None => c match {
+          case '$' if i + 1 < n && template.charAt(i + 1).isDigit =>
+            var j = i + 1
+            while (j < n && template.charAt(j).isDigit) j += 1
+            val idx = template.substring(i + 1, j).toInt
+            if (idx < 1 || idx > args.length)
+              fail(s"EXECUTE $name: statement references $$$idx but " +
+                s"${args.length} argument(s) were supplied")
+            used += idx
+            out.append('(').append(args(idx - 1)).append(')')
+            i = j
+          case '?' =>
+            positional += 1
+            if (positional > args.length)
+              fail(s"EXECUTE $name: statement has at least $positional " +
+                s"positional markers but ${args.length} argument(s) were supplied")
+            used += positional
+            out.append('(').append(args(positional - 1)).append(')')
+            i += 1
+          case ch => out.append(ch); i += 1
+        }
       }
     }
     if (used.size < args.length)

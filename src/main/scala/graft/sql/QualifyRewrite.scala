@@ -31,72 +31,11 @@ package graft.sql
   */
 object QualifyRewrite {
 
-  /** Top-level (depth-0) bare words with their char offsets — skips
-    * string literals ('…' with '' escapes), quoted identifiers ("…", `…`),
-    * line comments (`-- …`), bracketed comments, and any parenthesized
-    * region. A positional parameter marker `?` at ANY depth (outside
-    * strings/comments) is surfaced as the pseudo-word `?`: positional
-    * binding is by marker ORDER, and the rewrite moves the predicate text
-    * ahead of the FROM/WHERE section — values would silently bind to the
-    * wrong markers — so the caller declines such statements (named `:p`
-    * parameters bind by name and survive reordering fine).
-    */
-  /** Like [[topLevelWords]] but at ANY paren depth — still skipping
-    * strings, quoted identifiers, and comments. For constructs that can
-    * appear inside subqueries (POSITIONAL JOIN) where the caller needs
-    * "is this really in the SQL, not in a string literal".
-    */
-  private[sql] def allWords(sql: String): Vector[(String, Int)] =
-    scanWords(sql, anyDepth = true)
-
-  private[sql] def topLevelWords(sql: String): Vector[(String, Int)] =
-    scanWords(sql, anyDepth = false)
-
-  private def scanWords(sql: String, anyDepth: Boolean): Vector[(String, Int)] = {
-    val out = Vector.newBuilder[(String, Int)]
-    var i = 0
-    var depth = 0
-    val n = sql.length
-    while (i < n) {
-      sql.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '?' => out += (("?", i)); i += 1
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' =>
-          i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case c if c.isLetter || c == '_' =>
-          val s = i
-          while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-          if (anyDepth || depth == 0)
-            out += ((sql.substring(s, i).toUpperCase, s))
-        case _ => i += 1
-      }
-    }
-    out.result()
-  }
-
   /** The rewritten statement, or None when the shape isn't the supported
     * single query block (caller then surfaces the landing-pad hint).
     */
   def rewrite(sql: String): Option[String] = {
-    val words = topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     val qIdx = words.indexWhere(_._1 == "QUALIFY")
     if (qIdx < 0) return None
     // Positional parameters bind by marker order — reordering text around

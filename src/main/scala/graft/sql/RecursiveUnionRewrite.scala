@@ -57,10 +57,10 @@ object RecursiveUnionRewrite {
     * through to native delegation, not be claimed and hinted.
     */
   def isShaped(sql: String): Boolean = {
-    val m = ReplaceRewrite.maskLiterals(sql)
+    val m = DuckLexer(sql).masked
     val hm = headRe.findFirstMatchIn(m).getOrElse(return false)
     val openIdx = hm.end - 1
-    val closeAfter = ReplaceRewrite.closeOf(sql, openIdx)
+    val closeAfter = DuckLexer(sql).closeOf(openIdx)
     if (closeAfter <= 0 || closeAfter > sql.length) return false
     val bodyMask = m.substring(openIdx + 1, closeAfter - 1)
     val depth = depthAt(bodyMask)
@@ -127,13 +127,13 @@ object RecursiveUnionRewrite {
   }
 
   def rewrite(sql: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(sql)
+    val m = DuckLexer(sql).masked
     val hm = headRe.findFirstMatchIn(m).getOrElse(return None)
     val name = sql.substring(hm.start(1), hm.end(1))
     val aliases =
       if (hm.group(2) == null) "" else " " + sql.substring(hm.start(2), hm.end(2))
     val openIdx = hm.end - 1
-    val closeAfter = ReplaceRewrite.closeOf(sql, openIdx)
+    val closeAfter = DuckLexer(sql).closeOf(openIdx)
     if (closeAfter <= 0 || closeAfter > sql.length) return None
     val body = sql.substring(openIdx + 1, closeAfter - 1)
     val bodyMask = m.substring(openIdx + 1, closeAfter - 1)

@@ -32,105 +32,6 @@ object ReplaceRewrite {
 
   private val starReplaceRe = """(?i)\*\s*REPLACE\b""".r
 
-  /** Index just past the paren that closes the one opening at `open`,
-    * quote/comment-aware; -1 if unbalanced. */
-  private[sql] def closeOf(s: String, open: Int): Int = {
-    var i = open + 1
-    var depth = 1
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1; if (depth == 0) return i
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && s.charAt(i + 1) == '-' =>
-          while (i < n && s.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
-  /** Copy of the text with string/identifier literals and comments
-    * blanked to spaces (same length) — regex scans over the mask see
-    * only real operator positions.
-    */
-  private[sql] def maskLiterals(text: String): String = {
-    val m = text.toCharArray
-    var i = 0
-    val n = text.length
-    def blank(): Unit = { m(i) = ' '; i += 1 }
-    while (i < n) {
-      text.charAt(i) match {
-        case '\'' =>
-          blank()
-          var done = false
-          while (i < n && !done) {
-            if (text.charAt(i) == '\'') {
-              if (i + 1 < n && text.charAt(i + 1) == '\'') { blank(); blank() }
-              else { blank(); done = true }
-            } else blank()
-          }
-        case q @ ('"' | '`') =>
-          blank()
-          while (i < n && text.charAt(i) != q) blank()
-          if (i < n) blank()
-        case '-' if i + 1 < n && text.charAt(i + 1) == '-' =>
-          while (i < n && text.charAt(i) != '\n') blank()
-        case '/' if i + 1 < n && text.charAt(i + 1) == '*' =>
-          blank(); blank()
-          while (i + 1 < n && !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) blank()
-          if (i + 1 < n) { blank(); blank() }
-        case _ => i += 1
-      }
-    }
-    new String(m)
-  }
-
-  /** Split at top-level commas (parens/quotes/comments respected). */
-  private[sql] def splitTop(s: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var start = 0
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case _ => i += 1
-      }
-    }
-    out += s.substring(start)
-    out.result()
-  }
-
   def rewrite(sql: String): Option[String] =
     starListRewrite(sql, "REPLACE", starReplaceRe)
 
@@ -147,7 +48,7 @@ object ReplaceRewrite {
   private def starListRewrite(sql: String, keyword: String,
       guard: scala.util.matching.Regex): Option[String] = {
     if (guard.findAllMatchIn(sql).size != 1) return None
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     val selIdx = words.indexWhere(_._1 == "SELECT")
     if (selIdx != 0 || words.isEmpty) return None
     if (sql.take(words(0)._2).exists(!_.isWhitespace)) return None
@@ -163,7 +64,7 @@ object ReplaceRewrite {
     val replM = ("(?is)\\A\\s*" + keyword + "\\s*\\(").r
       .findFirstMatchIn(sql.substring(starPos + 1)).getOrElse(return None)
     val openParen = starPos + 1 + replM.end - 1
-    val afterList = closeOf(sql, openParen)
+    val afterList = DuckLexer(sql).closeOf(openParen)
     if (afterList < 0) return None
     val listText = sql.substring(openParen + 1, afterList - 1)
 
@@ -189,11 +90,11 @@ object ReplaceRewrite {
     if (fromSpan.contains(",")) return None
 
     // Replacement targets: `expr AS name`, name = LAST top-level AS.
-    val items = splitTop(listText).map(_.trim)
+    val items = DuckLexer(listText).split(',').map(_.trim)
     if (items.isEmpty || items.exists(_.isEmpty)) return None
     val repl = scala.collection.mutable.LinkedHashMap[String, String]()
     items.foreach { item =>
-      val ws = QualifyRewrite.topLevelWords(item)
+      val ws = DuckLexer(item).topLevelWords
       val lastAs = ws.lastIndexWhere(_._1 == "AS")
       if (lastAs < 0) return None
       val asPos = ws(lastAs)._2

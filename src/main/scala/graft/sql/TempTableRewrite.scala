@@ -84,7 +84,7 @@ object TempTableRewrite {
   private def splitColsBody(body0: String): Option[(Seq[String], String)] =
     if (body0.startsWith("(")) {
       // closeOf returns the index AFTER the matching ')'.
-      val close = ReplaceRewrite.closeOf(body0, 0)
+      val close = DuckLexer(body0).closeOf(0)
       if (close < 0) return None
       val inner = body0.substring(1, close - 1)
       val after = body0.substring(close).trim
@@ -112,7 +112,7 @@ object TempTableRewrite {
           // INSERT-OVERWRITE recipe there; the PK comes from the
           // constraint-stripping CREATE TABLE claim).
           if (!TempTables.exists(name) && !catalogHas(name)) return None
-          val words = QualifyRewrite.topLevelWords(rest)
+          val words = DuckLexer(rest).topLevelWords
           if (words.exists(_._1 == "?")) return None
           // RETURNING / an explicit ON CONFLICT on top of the shorthand
           // have no lane here.
@@ -124,7 +124,7 @@ object TempTableRewrite {
             else ConflictAction.Ignore))
         case insertRe(name, rest) =>
           // RETURNING split: last top-level RETURNING word.
-          val words = QualifyRewrite.topLevelWords(rest)
+          val words = DuckLexer(rest).topLevelWords
           if (words.exists(_._1 == "?")) return None
           val retW = words.reverse.find(_._1 == "RETURNING")
           val (body0, returning) = retW match {
@@ -140,7 +140,7 @@ object TempTableRewrite {
           // clause (paren-aware scan, so a join's ON inside the source
           // query is never mistaken for it). DO UPDATE declines to the
           // hint; combining with RETURNING declines too.
-          val bodyWords = QualifyRewrite.topLevelWords(body0)
+          val bodyWords = DuckLexer(body0).topLevelWords
           val conflictAt = bodyWords.sliding(2).collectFirst {
             case Seq((on, pos), (conf, _))
               if on == "ON" && conf == "CONFLICT" => pos
@@ -169,7 +169,7 @@ object TempTableRewrite {
                 val setM = "(?is)\\ASET\\s+(.+)\\z".r
                   .findFirstMatchIn(tail).getOrElse(return None)
                 val setAll = setM.group(1)
-                val whereW = QualifyRewrite.topLevelWords(setAll)
+                val whereW = DuckLexer(setAll).topLevelWords
                   .find(_._1 == "WHERE")
                 val (setText, whereText) = whereW match {
                   case Some((_, p)) =>

@@ -45,7 +45,7 @@ object UnionByNameRewrite {
   private val trailing = Set("ORDER", "LIMIT", "OFFSET", "FETCH")
 
   def rewrite(sql: String): Option[String] = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     if (words.isEmpty) return None
     if (words.exists(_._1 == "?")) return None
     // Only a bare query can be split textually: a WITH's CTE scope must

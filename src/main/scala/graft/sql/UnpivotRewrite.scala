@@ -45,7 +45,7 @@ object UnpivotRewrite {
         case None =>
           val h = parenHeadRe.findFirstMatchIn(sql).getOrElse(return None)
           val open = h.end
-          val close = ReplaceRewrite.closeOf(sql, open)
+          val close = DuckLexer(sql).closeOf(open)
           if (close < 0) return None
           val t = parenTailRe.findFirstMatchIn(sql.substring(close))
             .getOrElse(return None)

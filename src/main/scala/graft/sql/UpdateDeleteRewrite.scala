@@ -83,7 +83,7 @@ object UpdateDeleteRewrite {
   /** The statement's command, or None → delegate to Spark's native path. */
   def rewrite(sql: String): Option[LogicalPlan] =
     try {
-      val words = QualifyRewrite.topLevelWords(sql)
+      val words = DuckLexer(sql).topLevelWords
       if (words.isEmpty) return None
       if (words.exists(_._1 == "?")) return None // positional params move
       words.head._1 match {

@@ -29,43 +29,6 @@ import java.util.regex.Pattern
   */
 object UsingKeyRewrite {
 
-  /** From `open` (index of '('), the index of its matching ')' — quote-
-    * and comment-aware; -1 when unbalanced.
-    */
-  private def matchParen(sql: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    val n = sql.length
-    while (i < n) {
-      sql.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-          i += 1
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
   private def nextNonSpace(sql: String, from: Int): Int = {
     var i = from
     while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
@@ -73,7 +36,7 @@ object UsingKeyRewrite {
   }
 
   def rewrite(sql: String): Option[String] = {
-    val words = QualifyRewrite.topLevelWords(sql)
+    val words = DuckLexer(sql).topLevelWords
     // WITH RECURSIVE <name> USING KEY ( … ) AS ( … ) SELECT …
     if (words.length < 6) return None
     val shape = words.take(2).map(_._1)
@@ -85,7 +48,7 @@ object UsingKeyRewrite {
     // Key list: the paren group right after KEY.
     val keyOpen = nextNonSpace(sql, words(4)._2 + "KEY".length)
     if (keyOpen >= sql.length || sql.charAt(keyOpen) != '(') return None
-    val keyClose = matchParen(sql, keyOpen)
+    val keyClose = DuckLexer(sql).closeOf(keyOpen) - 1
     if (keyClose < 0) return None
     val keys = sql.substring(keyOpen + 1, keyClose).split(",").map(_.trim)
     if (keys.isEmpty || !keys.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")))
@@ -95,11 +58,11 @@ object UsingKeyRewrite {
     if (!sql.regionMatches(true, asIdx, "AS", 0, 2)) return None
     val bodyOpen = nextNonSpace(sql, asIdx + 2)
     if (bodyOpen >= sql.length || sql.charAt(bodyOpen) != '(') return None
-    val bodyClose = matchParen(sql, bodyOpen)
+    val bodyClose = DuckLexer(sql).closeOf(bodyOpen) - 1
     if (bodyClose < 0) return None
     val body = sql.substring(bodyOpen + 1, bodyClose)
     // Exactly one top-level UNION [ALL] splits seed from step.
-    val bodyWords = QualifyRewrite.topLevelWords(body)
+    val bodyWords = DuckLexer(body).topLevelWords
     val unions = bodyWords.filter(_._1 == "UNION")
     if (unions.length != 1) return None
     val uPos = unions.head._2

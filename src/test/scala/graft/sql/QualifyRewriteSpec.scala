@@ -5,20 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[QualifyRewrite]] — the purely textual QUALIFY→subquery transform.
   * Execution-level behavior (the rewritten SQL actually running, schema
   * hygiene, the declined-shape hint) lives in SqlEntryPointsSpec; this
-  * suite pins the scanner and the decline rules.
+  * suite pins the decline rules (the word scan it reads is
+  * [[DuckLexer]]'s, pinned in DuckLexerSpec).
   */
 class QualifyRewriteSpec extends AnyFunSuite {
-
-  test("topLevelWords skips strings, quoted identifiers, comments, and parens") {
-    val sql =
-      """SELECT 'QUALIFY (not) -- here', "QUALIFY", `QUALIFY x`,
-         (SELECT max(v) FROM t2 /* QUALIFY */) AS m -- QUALIFY
-         FROM t"""
-    val words = QualifyRewrite.topLevelWords(sql).map(_._1)
-    assert(!words.contains("QUALIFY"))
-    assert(words.count(_ == "SELECT") == 1) // the subquery's SELECT is depth-1
-    assert(words.containsSlice(Seq("AS", "M", "FROM", "T")))
-  }
 
   test("simple rewrite wraps, filters, and preserves trailing ORDER BY") {
     val out = QualifyRewrite.rewrite(
