@@ -141,11 +141,8 @@ object Engine {
     * Idempotent per (session, sfDir): repeat calls (every SQL-surface query
     * invokes this defensively) skip the 10-table re-registration. Switching
     * sfDir on the same session re-registers, replacing the views.
-    */
-  private val viewsRegistered =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (String, Set[String])]()
-
-  /** Per-view failures are non-fatal: registration is defensive (all 10
+    *
+    * Per-view failures are non-fatal: registration is defensive (all 10
     * views before any SQL-surface query), so one unreadable table must not
     * take down queries that never reference it — a ROLLUP over
     * customer/nation should not die on an events schema drift. The broken
@@ -154,12 +151,13 @@ object Engine {
     * references it then fails, with TABLE_OR_VIEW_NOT_FOUND pointing at
     * the right name. The memo stores (sfDir, failed set): repeat calls
     * for the same sfDir retry ONLY the failures (covers a table
-    * regenerated mid-session) instead of re-registering all 10.
+    * regenerated mid-session) instead of re-registering all 10. The memo
+    * is the session's own ([[graft.sql.DuckSession]]).
     */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    viewsRegistered.compute(spark, { (_, prev) =>
-      val (prevDir, prevFailed) =
-        if (prev == null) (null, Set.empty[String]) else prev
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
+    val duck = graft.sql.DuckSession(spark)
+    duck.synchronized {
+      val (prevDir, prevFailed) = duck.views
       val sameDir = prevDir == sfDir
       val toRegister = if (sameDir) prevFailed else tableNames.toSet
       val warned = if (sameDir) prevFailed else Set.empty[String]
@@ -174,6 +172,7 @@ object Engine {
             true
         }
       }
-      (sfDir, failed)
-    })
+      duck.views = (sfDir, failed)
+    }
+  }
 }

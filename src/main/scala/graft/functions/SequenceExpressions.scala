@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * nextval('s') AS b` into one advance (DuckDB yields 1, 2) and constant
   * folding would advance it at plan time. CodegenFallback keeps the
   * stateful call out of generated code; the surrounding operators still
-  * codegen.
+  * codegen. `session` is the planning session's [[graft.sql.DuckSession.id]].
   */
-case class NextVal(child: Expression)
+case class NextVal(child: Expression, session: Long)
     extends UnaryExpression with Nondeterministic with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -22,7 +22,7 @@ case class NextVal(child: Expression)
   override protected def evalInternal(input: InternalRow): Any = {
     val name = child.eval(input)
     require(name != null, "nextval: sequence name must not be NULL")
-    graft.sql.Sequences.nextval(name.toString)
+    graft.sql.Sequences.nextval(graft.sql.DuckSession.byId(session), name.toString)
   }
   override protected def withNewChildInternal(newChild: Expression): NextVal =
     copy(child = newChild)
@@ -34,7 +34,7 @@ case class NextVal(child: Expression)
   * mutable session state and must re-evaluate at execution time, after
   * any `nextval` earlier in the same select list.
   */
-case class CurrVal(child: Expression)
+case class CurrVal(child: Expression, session: Long)
     extends UnaryExpression with Nondeterministic with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -42,7 +42,7 @@ case class CurrVal(child: Expression)
   override protected def evalInternal(input: InternalRow): Any = {
     val name = child.eval(input)
     require(name != null, "currval: sequence name must not be NULL")
-    graft.sql.Sequences.currval(name.toString)
+    graft.sql.Sequences.currval(graft.sql.DuckSession.byId(session), name.toString)
   }
   override protected def withNewChildInternal(newChild: Expression): CurrVal =
     copy(child = newChild)

@@ -40,10 +40,12 @@ private[graft] object Scratch {
       val conf = spark.sparkContext.hadoopConfiguration
       val p = new Path(dir)
       p.getFileSystem(conf).mkdirs(p)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      // The hook thread inherits no thread locals: Spark's active session
+      // is one, and the hook lives as long as the JVM.
+      Runtime.getRuntime.addShutdownHook(new Thread(null, () => {
         try { p.getFileSystem(conf).delete(p, true); () }
         catch { case _: Throwable => () } // best-effort: never fail exit
-      }, s"graft-scratch-cleanup"))
+      }, "graft-scratch-cleanup", 0, false))
       dir
     })
   }

@@ -1125,7 +1125,7 @@ object AnalyticsQueries {
 
   // Prepared-statement parity (round 14): the scripted PREPARE name AS
   // <stmt with $N/? markers> / EXECUTE name(args) / DEALLOCATE workflow
-  // (sql/PrepareRewrite — session-keyed template registry, quote-aware
+  // (sql/PrepareRewrite — per-session templates, quote-aware
   // marker substitution, substituted text re-entering the full rewrite
   // chain). Both engines run the SAME two statements; DuckDB binds
   // values where this splices constant expression text — equivalent for
@@ -2948,8 +2948,8 @@ object AnalyticsQueries {
   }
 
   // COMMENT ON + system-table introspection (round 15): table and
-  // column comments execute against the temp-table layer (Comments
-  // registry; the TABLE form parses natively in Spark and is claimed
+  // column comments execute against the temp-table layer (the table's
+  // record; the TABLE form parses natively in Spark and is claimed
   // pre-delegation, the COLUMN form rides the parse-failure chain) and
   // surface through DuckDB's duckdb_tables()/duckdb_columns() system
   // TVFs — identical script both engines; the uncommented column's

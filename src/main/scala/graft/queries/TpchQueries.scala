@@ -74,19 +74,20 @@ object TpchQueries {
     * `main.<table>` — DuckDB's default schema, mirrored on the Spark
     * side by the engine's own directory ATTACH — so the IDENTICAL
     * statement text runs on both engines with the official query body
-    * untouched below the WITH clause.
+    * untouched below the WITH clause. The session attaches `main` once
+    * per sfDir.
     */
-  private var mainAttached: Option[(SparkSession, String)] = None
+  private def attachMain(spark: SparkSession, sfDir: String): Unit =
+    if (graft.sql.DuckSession(spark).attached.get("main") != sfDir) {
+      spark.sql("DETACH IF EXISTS main")
+      spark.sql(s"ATTACH '$sfDir' AS main")
+    }
   private def laneWithMain(name: String, tables: Seq[String],
       sql: String): Unit =
     all += Declared(name, (spark, sfDir) => {
       tables.foreach(tb =>
         t(spark, sfDir, tb).createOrReplaceTempView(tb))
-      if (!mainAttached.contains((spark, sfDir))) {
-        spark.sql("DETACH IF EXISTS main")
-        spark.sql(s"ATTACH '$sfDir' AS main")
-        mainAttached = Some((spark, sfDir))
-      }
+      attachMain(spark, sfDir)
       spark.sql(sql)
     }, Some(sql))
 
@@ -524,11 +525,7 @@ ORDER BY s_suppkey"""
   all += Declared("tpch_q15", (spark, sfDir) => {
     Seq("lineitem").foreach(tb =>
       t(spark, sfDir, tb).createOrReplaceTempView(tb))
-    if (!mainAttached.contains((spark, sfDir))) {
-      spark.sql("DETACH IF EXISTS main")
-      spark.sql(s"ATTACH '$sfDir' AS main")
-      mainAttached = Some((spark, sfDir))
-    }
+    attachMain(spark, sfDir)
     spark.sql(q15View).collect()
     spark.sql(q15Select)
   }, Some(q15View + ";\n" + q15Select))

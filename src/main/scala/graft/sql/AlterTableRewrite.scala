@@ -35,7 +35,7 @@ object AlterTableRewrite {
     */
   def rewrite(sql: String): Option[AlterTempTableCommand] = {
     val m = headRe.findFirstMatchIn(sql).getOrElse(return None)
-    if (!TempTables.exists(m.group(1))) return None
+    if (!TempTables.exists(org.apache.spark.sql.SparkSession.active, m.group(1))) return None
     Some(AlterTempTableCommand(m.group(1), DuckLiterals.halveBackslashes(m.group(2).trim)))
   }
 }

@@ -49,7 +49,7 @@ object DuckCommands {
 
   /** CREATE TEMP TABLE without OR REPLACE onto an existing name. */
   private[sql] def failIfExists(spark: SparkSession, name: String): Unit =
-    if (TempTables.exists(name) || spark.catalog.tableExists(name))
+    if (TempTables.exists(spark, name) || spark.catalog.tableExists(name))
       fail(s"""Table with name "$name" already exists!""")
 
   /** Overwrite `table` with `df`: a temp table re-registers its
@@ -59,7 +59,7 @@ object DuckCommands {
     */
   private[sql] def overwrite(spark: SparkSession, table: String, df: DataFrame,
       stage: String): Unit =
-    if (TempTables.exists(table)) TempTables.put(table, df)
+    if (TempTables.exists(spark, table)) TempTables.put(spark, table, df)
     else {
       val (staged, stageDir) = Scratch.materialize(df, stage)
       staged.write.mode("overwrite").insertInto(table)
@@ -70,7 +70,7 @@ object DuckCommands {
     * targets are plain column names of `schema`, each assigned once.
     */
   private[sql] def assignments(setText: String, schema: StructType): Seq[(String, String)] = {
-    val as = DuckLexer(setText).split(',').map { a =>
+    val as = DuckLexer(setText).split(',', groups = true).map { a =>
       val eq = DuckLexer(a).assignmentEq
       require(eq > 0, s"UPDATE: assignment without '=': $a")
       val name = a.substring(0, eq).trim
@@ -204,7 +204,7 @@ object DuckCommands {
   private[sql] def insert(spark: SparkSession, name: String, query: String,
       cols: Seq[String], intoTemp: Boolean): (DataFrame, () => Long) = {
     val target = spark.table(name)
-    val defaults = TempTables.defaultsOf(name)
+    val defaults = TempTables.facts(spark, name).defaults
     val aligned = alignInsert(target,
       spark.sql(substituteDefaultKeyword(query, target.schema, cols, defaults)),
       cols, defaults)
@@ -241,23 +241,11 @@ object DuckCommands {
       case None => Scratch.materialize(
         aligned.observe(obsN, count(lit(1)).as("n")), s"ins_$name")._1
     }
-    if (intoTemp) TempTables.putLazy(name, target.union(staged))
+    if (intoTemp) TempTables.putLazy(spark, name, target.union(staged))
     else staged.write.mode("append").insertInto(name)
     // Literal sources know their row count without a job.
     (staged, () => localRel.map(_.data.length.toLong).getOrElse(countOf(obsN)))
   }
-
-  /** Names ATTACH created, keyed per session. DETACH may only drop
-    * names in this set: the host refuses to DETACH anything that was
-    * not ATTACHed ("Failed to detach database with name "s1": database
-    * not found" — probed v1.0.0, including for CREATE SCHEMA schemas),
-    * and without the registry a DETACH of a user-created database would
-    * DROP ... CASCADE managed table data (round-19 ADVICE).
-    */
-  private[sql] val attachedDbs: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[sql] def attachKey(spark: SparkSession, name: String): String =
-    java.lang.System.identityHashCode(spark) + "/" + name.toLowerCase
 }
 
 import DuckCommands._
@@ -311,8 +299,8 @@ case class DeleteFromCommand(table: String, where: String) extends DuckCommand {
       else base.observe(obs, matched).filter(keepPred)
     val nBefore = if (hasSubquery) base.count() else 0L
     var nKept = 0L
-    if (TempTables.exists(table)) {
-      TempTables.put(table, kept)
+    if (TempTables.exists(spark, table)) {
+      TempTables.put(spark, table, kept)
       if (hasSubquery) nKept = spark.table(table).count()
     } else {
       val (staged, stageDir) = Scratch.materialize(kept, "delete_stage")
@@ -398,8 +386,8 @@ case class DeleteUsingCommand(table: String, source: String, where: String)
         (if (where.isEmpty) "" else s" WHERE $where") + ")")
     val nBefore = target.count()
     var nKept = 0L
-    if (TempTables.exists(table)) {
-      TempTables.put(table, kept)
+    if (TempTables.exists(spark, table)) {
+      TempTables.put(spark, table, kept)
       nKept = spark.table(table).count()
     } else {
       val (staged, stageDir) = Scratch.materialize(kept, "delete_using_stage")
@@ -418,7 +406,7 @@ case class CreateTempTableAsCommand(name: String, query: String,
     orReplace: Boolean) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     if (!orReplace) failIfExists(spark, name)
-    TempTables.put(name, spark.sql(query))
+    TempTables.create(spark, name, spark.sql(query))
     Seq(Row(spark.table(name).count())) // parquet metadata count
   }
 }
@@ -492,7 +480,7 @@ case class CreateTempTableCommand(name: String, columns: String,
       // is considered — a column merely NAMED like an enum is safe.
       val d = {
         val toks = d0.trim.split("\\s+", 3)
-        if (toks.length >= 2 && EnumTypes.get(toks(1)).isDefined)
+        if (toks.length >= 2 && EnumTypes.get(spark, toks(1)).isDefined)
           (Seq(toks(0), "STRING") ++ toks.drop(2)).mkString(" ")
         else d0
       }
@@ -510,10 +498,9 @@ case class CreateTempTableCommand(name: String, columns: String,
     }
     val schema = spark.sessionState.sqlParser.parseTableSchema(
       normalized.mkString(", "))
-    TempTables.put(name, spark.createDataFrame(
-      new java.util.ArrayList[Row](), schema))
-    if (pkCols.nonEmpty) TempTables.setKeys(name, pkCols)
-    TempTables.setDefaults(name, defaults)
+    TempTables.create(spark, name,
+      spark.createDataFrame(new java.util.ArrayList[Row](), schema),
+      TempTables.Facts(keys = Some(pkCols).filter(_.nonEmpty), defaults = defaults))
     Nil
   }
 }
@@ -607,7 +594,8 @@ case class InsertReturningCommand(name: String, query: String, columns: Seq[Stri
     copy(output = outputOf(project(spark.table(name), returning)))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (staged, _) = insert(spark, name, query, columns, intoTemp = TempTables.exists(name))
+    val (staged, _) = insert(spark, name, query, columns,
+      intoTemp = TempTables.exists(spark, name))
     project(staged, returning).collect().toSeq
   }
 }
@@ -640,7 +628,7 @@ object ConflictAction {
 case class UpsertCommand(name: String, query: String, columns: Seq[String],
     keys: Seq[String], onConflict: ConflictAction) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val isTemp = TempTables.exists(name)
+    val isTemp = TempTables.exists(spark, name)
     // Catalog (non-temp) tables execute too (round 17): the upsert is
     // the staged-INSERT-OVERWRITE recipe run mechanically. tableExists
     // on the session catalog sees persistent tables, not temp views —
@@ -671,7 +659,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
     // format with a real commit protocol (Iceberg/Delta MERGE), where
     // the same staged plan commits atomically.
     def commit(df: DataFrame): Unit =
-      if (isTemp) TempTables.put(name, df)
+      if (isTemp) TempTables.put(spark, name, df)
       else {
         val (merged, _) = Scratch.materialize(
           df.select(target.columns.map(col).toIndexedSeq: _*), s"cat_$name")
@@ -679,7 +667,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
       }
     val conflictKeys =
       if (keys.nonEmpty) keys
-      else TempTables.keysOf(name).getOrElse(fail(
+      else TempTables.facts(spark, name).keys.getOrElse(fail(
         s"'$name' has no PRIMARY KEY declared and the statement names no " +
           "conflict target — declare one (CREATE [TEMP] TABLE t (id " +
           "INTEGER PRIMARY KEY, ...)) or use ON CONFLICT (cols) DO " +
@@ -688,7 +676,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
       target.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
     if (missing.nonEmpty)
       fail(s"conflict target column(s) not in '$name': ${missing.mkString(", ")}")
-    val upsDefaults = TempTables.defaultsOf(name)
+    val upsDefaults = TempTables.facts(spark, name).defaults
     val aligned = alignInsert(target,
       spark.sql(substituteDefaultKeyword(query, target.schema, columns, upsDefaults)),
       columns, upsDefaults)
@@ -736,7 +724,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
           .observe(obsF, count(lit(1)).as("n"))
         val (freshStaged, _) = Scratch.materialize(fresh, s"upsf_$name")
         val nFresh = countOf(obsF)
-        if (isTemp) TempTables.put(name, target.unionByName(freshStaged))
+        if (isTemp) TempTables.put(spark, name, target.unionByName(freshStaged))
         else // catalog: conflicts lose, so only the fresh rows APPEND
           freshStaged.select(target.columns.map(col).toIndexedSeq: _*)
             .write.mode("append").insertInto(name)
@@ -770,7 +758,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
           sb.append(s.substring(pos))
           sb.toString
         }
-        val assigns = DuckLexer(set).split(',').map { a =>
+        val assigns = DuckLexer(set).split(',', groups = true).map { a =>
           val eq = DuckLexer(a).masked.indexOf('=')
           if (eq <= 0) fail(s"DO UPDATE SET: cannot parse assignment '$a'")
           val c = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
@@ -825,7 +813,7 @@ case class UpsertCommand(name: String, query: String, columns: Seq[String],
 /** `DROP TABLE [IF EXISTS] t` of a graft temp table: the registry drop. */
 case class DropTempTableCommand(name: String) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    TempTables.drop(name)
+    TempTables.drop(spark, name)
     Nil
   }
 }
@@ -851,33 +839,33 @@ case class AlterTempTableCommand(name: String, change: String) extends DuckComma
         } else {
           val dt = parseType(tpe)
           val e = Option(dflt).map(d => expr(d.trim)).getOrElse(lit(null))
-          TempTables.put(name, df.withColumn(c, e.cast(dt)))
+          TempTables.put(spark, name, df.withColumn(c, e.cast(dt)))
         }
       case dropRe(ifex, c) =>
         resolve(c) match {
-          case Some(real) => TempTables.put(name, df.drop(real))
+          case Some(real) => TempTables.put(spark, name, df.drop(real))
           case None if ifex != null => ()
           case None =>
             fail(s"""ALTER TABLE $name: column "$c" does not exist""")
         }
       case renToRe(newName) =>
-        if (TempTables.exists(newName) || spark.catalog.tableExists(newName))
+        if (TempTables.exists(spark, newName) || spark.catalog.tableExists(newName))
           fail(s"""ALTER TABLE: table with name "$newName" already exists""")
-        TempTables.put(newName, df)
-        TempTables.keysOf(name).foreach(TempTables.setKeys(newName, _))
-        TempTables.drop(name)
+        // The table moves whole: keys, defaults and comments go with it.
+        TempTables.create(spark, newName, df, TempTables.facts(spark, name))
+        TempTables.drop(spark, name)
       case renColRe(a, b) =>
         val real = resolve(a).getOrElse(
           fail(s"""ALTER TABLE $name: column "$a" does not exist"""))
         if (resolve(b).isDefined)
           fail(s"""ALTER TABLE $name: column "$b" already exists""")
-        TempTables.put(name, df.withColumnRenamed(real, b))
+        TempTables.put(spark, name, df.withColumnRenamed(real, b))
       case altTypeRe(c, tpe) if !"(?i)\\bUSING\\b".r
           .findFirstIn(DuckLexer(tpe).masked).isDefined =>
         val real = resolve(c).getOrElse(
           fail(s"""ALTER TABLE $name: column "$c" does not exist"""))
         val dt = parseType(tpe)
-        TempTables.put(name, df.withColumn(real, col(real).cast(dt)))
+        TempTables.put(spark, name, df.withColumn(real, col(real).cast(dt)))
       case _ =>
         fail(s"ALTER TABLE on temp table '$name': supported forms are " +
           "ADD [COLUMN] [IF NOT EXISTS] c TYPE [DEFAULT expr], " +
@@ -1018,7 +1006,7 @@ case class ExportDatabaseCommand(dir: String) extends DuckCommand {
     val catalogTables = spark.sessionState.catalog
       .listTables(spark.sessionState.catalog.getCurrentDatabase)
       .filter(_.database.isDefined).map(_.table)
-    val all = (catalogTables ++ TempTables.names()).distinct.sorted
+    val all = (catalogTables ++ TempTables.names(spark)).distinct.sorted
     // Tables export as INDEPENDENT concurrent jobs (guide §2.6): a
     // serial per-table loop leaves the cluster idle in every table's
     // write tail; 3 writes in flight back-fill it. Submission-bounded
@@ -1078,7 +1066,7 @@ case class ImportDatabaseCommand(dir: String) extends DuckCommand {
       .filter(_.endsWith(".parquet")).sorted
     require(entries.nonEmpty, s"IMPORT DATABASE: no *.parquet entries under $root")
     entries.foreach { e =>
-      TempTables.put(e.stripSuffix(".parquet"), spark.read.parquet(s"$root/$e"))
+      TempTables.create(spark, e.stripSuffix(".parquet"), spark.read.parquet(s"$root/$e"))
     }
     Seq(Row(spark.table(entries.last.stripSuffix(".parquet")).count()))
   }
@@ -1093,9 +1081,9 @@ case class ImportDatabaseCommand(dir: String) extends DuckCommand {
 case class TransactionCommand(op: TransactionOp) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     op match {
-      case TransactionOp.Begin => TempTables.txnBegin()
-      case TransactionOp.Commit => TempTables.txnCommit()
-      case TransactionOp.Rollback => TempTables.txnRollback()
+      case TransactionOp.Begin => TempTables.txnBegin(spark)
+      case TransactionOp.Commit => TempTables.txnCommit(spark)
+      case TransactionOp.Rollback => TempTables.txnRollback(spark)
     }
     Nil
   }
@@ -1114,7 +1102,7 @@ case class CreateSequenceCommand(name: String, start: Option[Long],
     cycle: Boolean, orReplace: Boolean, ifNotExists: Boolean)
     extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    Sequences.create(name, start, increment, minValue, maxValue, cycle,
+    Sequences.create(DuckSession(spark), name, start, increment, minValue, maxValue, cycle,
       orReplace, ifNotExists)
     Nil
   }
@@ -1123,13 +1111,13 @@ case class CreateSequenceCommand(name: String, start: Option[Long],
 /** DROP SEQUENCE ([[Sequences]]). */
 case class DropSequenceCommand(name: String, ifExists: Boolean) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    Sequences.drop(name, ifExists)
+    Sequences.drop(DuckSession(spark), name, ifExists)
     Nil
   }
 }
 
 /** COMMENT ON TABLE (a graft temp table) / COMMENT ON COLUMN
-  * ([[Comments]]); `comment` None is `IS NULL`. Missing table/column
+  * ([[TempTables.Facts]]); `comment` None is `IS NULL`. Missing table/column
   * errors mirror DuckDB's Catalog Error.
   */
 case class CommentOnCommand(table: String, column: Option[String],
@@ -1139,12 +1127,14 @@ case class CommentOnCommand(table: String, column: Option[String],
       throw new IllegalStateException(
         s"Catalog Error: Table with name $table does not exist!")
     column match {
-      case None => Comments.setTable(table, comment)
+      case None => TempTables.updateFacts(spark, table)(_.copy(comment = comment))
       case Some(c) =>
         if (!spark.table(table).schema.fieldNames.exists(_.equalsIgnoreCase(c)))
           throw new IllegalStateException(
             s"""Catalog Error: Column with name $c does not exist!""")
-        Comments.setColumn(table, c, comment)
+        val k = c.toLowerCase
+        TempTables.updateFacts(spark, table)(f => f.copy(columnComments =
+          comment.fold(f.columnComments - k)(v => f.columnComments + (k -> v))))
     }
     Nil
   }
@@ -1159,7 +1149,7 @@ case class CreateTableWithKeyCommand(table: String, keys: Seq[String], ddl: Stri
     extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     spark.sql(ddl).collect() // throws on failure; keys stay unregistered
-    TempTables.setKeys(table, keys)
+    TempTables.updateFacts(spark, table)(_.copy(keys = Some(keys)))
     Nil
   }
 }
@@ -1200,7 +1190,7 @@ case class AttachDatabaseCommand(path: String, name: String, ifNotExists: Boolea
         spark.sql(s"CREATE TABLE `$name`.`$tbl` USING parquet " +
           s"LOCATION '${p.toString.replace("'", "''")}'")
       }
-      attachedDbs.add(attachKey(spark, name))
+      DuckSession(spark).attached.put(name.toLowerCase, path)
     }
     Nil
   }
@@ -1215,13 +1205,14 @@ case class DetachDatabaseCommand(name: String, ifExists: Boolean) extends DuckCo
     // user-created database (CREATE SCHEMA + managed tables) gets the
     // host's not-found error instead of a silent CASCADE drop of its
     // managed data (round-19 ADVICE; host message probed v1.0.0).
-    if (!attachedDbs.contains(attachKey(spark, name)) ||
+    val attached = DuckSession(spark).attached
+    if (!attached.containsKey(name.toLowerCase) ||
         !spark.catalog.databaseExists(name)) {
       if (!ifExists)
         fail(s"""Failed to detach database with name "$name": database not found""")
     } else {
       spark.sql(s"DROP DATABASE `$name` CASCADE")
-      attachedDbs.remove(attachKey(spark, name))
+      attached.remove(name.toLowerCase)
     }
     Nil
   }
@@ -1242,7 +1233,7 @@ case class MaintenanceNoopCommand(kind: String, message: String) extends DuckCom
 /** CREATE TYPE name AS ENUM (...) ([[EnumTypes]]). */
 case class CreateEnumTypeCommand(name: String, values: Seq[String]) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    EnumTypes.define(name, values)
+    EnumTypes.define(spark, name, values)
     Nil
   }
 }
@@ -1250,7 +1241,7 @@ case class CreateEnumTypeCommand(name: String, values: Seq[String]) extends Duck
 /** DROP TYPE [IF EXISTS] name ([[EnumTypes]]). */
 case class DropEnumTypeCommand(name: String, ifExists: Boolean) extends DuckCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    if (!EnumTypes.drop(name) && !ifExists)
+    if (!EnumTypes.drop(spark, name) && !ifExists)
       fail(s"Type with name $name does not exist!")
     Nil
   }

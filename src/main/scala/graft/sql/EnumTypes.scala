@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped ENUM type registry (round 18) — DuckDB's
+/** ENUM types (round 18) — DuckDB's
   * `CREATE TYPE name AS ENUM ('a', 'b', ...)`.
   *
   * Spark has no user-defined SQL types, so enums are MODELED as their
@@ -18,22 +18,18 @@ import org.apache.spark.sql.SparkSession
   */
 object EnumTypes {
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[String]]()
+  private def registry(spark: SparkSession) = DuckSession(spark).enums
 
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
-
-  def define(name: String, values: Seq[String]): Unit = {
-    registry.put(key(name), values)
+  def define(spark: SparkSession, name: String, values: Seq[String]): Unit = {
+    registry(spark).put(name.toLowerCase, values)
     ()
   }
 
-  def get(name: String): Option[Seq[String]] =
-    try Option(registry.get(key(name)))
-    catch { case scala.util.control.NonFatal(_) => None }
+  def get(spark: SparkSession, name: String): Option[Seq[String]] =
+    Option(registry(spark).get(name.toLowerCase))
 
-  def drop(name: String): Boolean = registry.remove(key(name)) != null
+  def drop(spark: SparkSession, name: String): Boolean =
+    registry(spark).remove(name.toLowerCase) != null
 
   private val createTypeRe =
     ("""(?is)\A\s*CREATE\s+TYPE\s+([A-Za-z_]\w*)\s+AS\s+ENUM\s*""" +
@@ -72,6 +68,7 @@ object EnumTypes {
     * registry has no column-type tracking to know better.
     */
   def castRewrite(text: String): Option[String] = {
+    val spark = SparkSession.active
     var cur = ordRewrite(text).getOrElse(text)
     var changed = cur ne text
     var m = DuckLexer(cur).masked
@@ -89,7 +86,7 @@ object EnumTypes {
     var hit = rangeRe.findFirstMatchIn(m)
     while (hit.isDefined) {
       val h = hit.get
-      get(h.group(1)) match {
+      get(spark, h.group(1)) match {
         case Some(vals) =>
           cur = cur.substring(0, h.start) + arrayLit(vals) + cur.substring(h.end)
           m = DuckLexer(cur).masked
@@ -115,7 +112,7 @@ object EnumTypes {
           // yielding an empty operand).
           val asRe = """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r
           asRe.findFirstMatchIn(innerM).foreach { am =>
-            get(am.group(1)) match {
+            get(spark, am.group(1)) match {
               case Some(_) =>
                 val operand = inner.substring(0, am.start).trim
                 val tryPrefix = h.group(1) != null
@@ -141,7 +138,7 @@ object EnumTypes {
       again = false
       for (h <- colonRe.findAllMatchIn(m) if !again
            if m.charAt(h.start) == ':') {
-        get(h.group(1)) match {
+        get(spark, h.group(1)) match {
           case Some(_) =>
             ListOpRewrite.scanLeftPub(cur, m, h.start - 1) match {
               case Some(ls) =>
@@ -173,7 +170,8 @@ object EnumTypes {
     * documented divergence.
     */
   private[sql] def ordRewrite(text: String): Option[String] = {
-    if (registry.isEmpty) return None
+    val spark = SparkSession.active
+    if (registry(spark).isEmpty) return None
     var cur = text
     var changed = true
     var any = false
@@ -187,7 +185,7 @@ object EnumTypes {
       val casts = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Int, String, String)]
       for (h <- """::\s*([A-Za-z_]\w*)""".r.findAllMatchIn(m)
-           if get(h.group(1)).isDefined)
+           if get(spark, h.group(1)).isDefined)
         ListOpRewrite.scanLeftPub(cur, m, h.start - 1).foreach { ls =>
           val op = cur.substring(ls, h.start).trim
           if (op.nonEmpty) casts += ((ls, h.end, h.group(1), op))
@@ -198,7 +196,7 @@ object EnumTypes {
         if (close > 0) {
           val innerM = m.substring(open + 1, close - 1)
           """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r.findFirstMatchIn(innerM)
-            .filter(am => get(am.group(1)).isDefined)
+            .filter(am => get(spark, am.group(1)).isDefined)
             .foreach { am =>
               val operand =
                 cur.substring(open + 1, open + 1 + am.start).trim

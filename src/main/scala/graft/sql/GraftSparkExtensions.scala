@@ -92,6 +92,8 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   */
 class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
     extends org.apache.spark.sql.catalyst.parser.ParserInterface {
+  /** The session's DuckDB-level state (one parser per session). */
+  private[sql] val duck = new DuckSession
   import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException}
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -1080,7 +1082,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       Some(DropSequenceCommand(name, ifExists != null))
     case _ => None
   }
-  // COMMENT ON (temp tables route through the Comments registry; the
+  // COMMENT ON (temp tables keep comments in their record; the
   // TABLE form parses natively and is claimed in preRewrite, the COLUMN
   // form never parses and rides the chain).
   private val commentTableRe =
@@ -2010,7 +2012,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // temp views in analysis — claim it pre-delegation for graft temp
     // tables; catalog tables keep Spark's native comment machinery
     // (duckdb_tables() reads their description as fallback).
-    case commentTableRe(tbl, lit) if TempTables.exists(tbl) =>
+    case commentTableRe(tbl, lit)
+        if TempTables.exists(org.apache.spark.sql.SparkSession.active, tbl) =>
       Left(CommentOnCommand(tbl, None, commentText(lit)))
     // CREATE TABLE with PRIMARY KEY / UNIQUE: Spark 4.1 parses the
     // constraint but v1 tables reject it in analysis — strip it,
@@ -2205,9 +2208,17 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   // Expression fragments (commands' SET/WHERE texts, df.selectExpr)
   // get the same treatment: by the time a fragment reaches expr() it is
   // back at DuckDB level (a command's fields are halved back; a table
-  // function's literal argument was unescaped once).
-  override def parseExpression(sqlText: String) =
-    delegate.parseExpression(DuckLiterals.doubleBackslashes(sqlText))
+  // function's literal argument was unescaped once). An expression Spark
+  // cannot parse (a SET value `[1, 2]`) gets the bracket and brace
+  // literal rewrite.
+  override def parseExpression(sqlText: String) = {
+    val text = DuckLiterals.doubleBackslashes(sqlText)
+    try delegate.parseExpression(text)
+    catch {
+      case e: ParseException => DuckLiteralRewrite.rewrite(text)
+        .map(delegate.parseExpression).getOrElse(throw e)
+    }
+  }
   override def parseTableIdentifier(sqlText: String) = delegate.parseTableIdentifier(sqlText)
   override def parseFunctionIdentifier(sqlText: String) = delegate.parseFunctionIdentifier(sqlText)
   override def parseMultipartIdentifier(sqlText: String) = delegate.parseMultipartIdentifier(sqlText)
@@ -2376,7 +2387,7 @@ object GraftSparkExtensions {
     require(nameE.foldable && nameE.dataType == StringType,
       "graft_enum: the type name must be a constant string")
     val name = nameE.eval(null).toString
-    val vals = graft.sql.EnumTypes.get(name).getOrElse(
+    val vals = EnumTypes.get(org.apache.spark.sql.SparkSession.active, name).getOrElse(
       throw new org.apache.spark.sql.AnalysisException(
         "USER_RAISED_EXCEPTION", Map("errorMessage" ->
           s"Type with name $name does not exist!")))
@@ -3282,8 +3293,8 @@ object GraftSparkExtensions {
           require(a(0).foldable && a(0).dataType == StringType,
             "graft_enum_ord: the type name must be a constant string")
           val name = a(0).eval(null).toString
-          val vals = graft.sql.EnumTypes.get(name).getOrElse(
-            throw new org.apache.spark.sql.AnalysisException(
+          val vals = EnumTypes.get(org.apache.spark.sql.SparkSession.active, name)
+            .getOrElse(throw new org.apache.spark.sql.AnalysisException(
               "USER_RAISED_EXCEPTION", Map("errorMessage" ->
                 s"Type with name $name does not exist!")))
           ArrayPosition(CreateArray(vals.map(v => Literal(v))),
@@ -3490,8 +3501,10 @@ object GraftSparkExtensions {
         },
         // Sequences (sql/Sequences) — nondeterministic by declaration so
         // CSE/constant folding can't collapse or pre-advance them.
-        aliasFn("nextval", (1, 1))(a => graft.functions.NextVal(a(0))),
-        aliasFn("currval", (1, 1))(a => graft.functions.CurrVal(a(0))),
+        aliasFn("nextval", (1, 1))(a => graft.functions.NextVal(a(0),
+          DuckSession(org.apache.spark.sql.SparkSession.active).id)),
+        aliasFn("currval", (1, 1))(a => graft.functions.CurrVal(a(0),
+          DuckSession(org.apache.spark.sql.SparkSession.active).id)),
         // String-similarity scalars (functions/StringSimilarity —
         // DuckDB-1.0-pinned semantics incl. error texts and the
         // 0.7-threshold Winkler boost); StaticInvoke = codegen-inlined.
@@ -5129,14 +5142,14 @@ object GraftSparkExtensions {
   /** DuckDB's `pragma_table_info` table function (also the target of the
     * `PRAGMA table_info('t')` statement rewrite): one row per column with
     * DuckDB's exact header and type spellings. `pk`/`notnull` reflect the
-    * temp-table layer's declared PRIMARY KEY ([[TempTables.keysOf]]) —
+    * temp-table layer's declared PRIMARY KEY ([[TempTables.Facts]]) —
     * PK columns are NOT NULL in DuckDB — plus the relation's own
     * nullability; declared DEFAULTs aren't tracked (dflt_value NULL).
     */
   val tableInfoFn = driverFn("pragma_table_info(table)", 1 to 1, tableInfoSchema) {
     (spark, v) =>
       val tbl = asString(v(0))
-      val pkCols = TempTables.keysOf(tbl).getOrElse(Nil).map(_.toLowerCase).toSet
+      val pkCols = TempTables.facts(spark, tbl).keys.getOrElse(Nil).map(_.toLowerCase).toSet
       spark.table(tbl).schema.zipWithIndex.map { case (f, i) =>
         val isPk = pkCols.contains(f.name.toLowerCase)
         org.apache.spark.sql.Row(i, f.name, duckTypeName(f.dataType),
@@ -5182,7 +5195,7 @@ object GraftSparkExtensions {
   val duckdbTablesFn = driverFn("duckdb_tables()", 0 to 0, duckdbTablesSchema) {
     (spark, _) =>
       listTables(spark).map { t =>
-        val comment = Comments.tableComment(t.name)
+        val comment = TempTables.facts(spark, t.name).comment
           .orElse(t.description.filter(_.nonEmpty))
         org.apache.spark.sql.Row(if (t.temporary) "temp" else t.database, "main",
           t.name, t.temporary, comment.orNull)
@@ -5204,10 +5217,11 @@ object GraftSparkExtensions {
           try spark.table(t.name).schema
           catch { case scala.util.control.NonFatal(_) =>
             org.apache.spark.sql.types.StructType(Nil) }
+        val facts = TempTables.facts(spark, t.name)
         schema.zipWithIndex.map { case (f, i) =>
           org.apache.spark.sql.Row(if (t.temporary) "temp" else t.database,
             "main", t.name, f.name, i + 1, duckTypeName(f.dataType),
-            Comments.columnComment(t.name, f.name).orNull)
+            facts.columnComments.get(f.name.toLowerCase).orNull)
         }
       }
   }

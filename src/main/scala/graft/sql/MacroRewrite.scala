@@ -100,25 +100,14 @@ object MacroRewrite {
       case _ => false
     }))
 
-  /** Session-scoped (name → ordered (param, defaultText)) signatures of
-    * registered macros — what [[namedCallRewrite]] needs to lower
+  /** The session's (ordered (param, defaultText)) signature of macro
+    * `name` ([[DuckSession]]) — what [[namedCallRewrite]] needs to lower
     * DuckDB's named CALL syntax (`f(x, b := 1)`) to positional before
     * delegation. Overload lists are not recorded (no defaults, and
     * arity dispatch makes name→slot mapping ambiguous).
     */
-  private val signatures = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Vector[(String, Option[String])]]()
-
-  private[sql] def recordSignature(spark: SparkSession,
-      name: String, params: Vector[(String, Option[String])]): Unit = {
-    signatures.put((spark, name.toLowerCase), params)
-    ()
-  }
-
   private def signatureOf(name: String): Option[Vector[(String, Option[String])]] =
-    try Option(signatures.get(
-      (org.apache.spark.sql.SparkSession.active, name.toLowerCase)))
-    catch { case NonFatal(_) => None }
+    Option(DuckSession(SparkSession.active).macroSignatures.get(name.toLowerCase))
 
   /** Lower DuckDB named-argument CALL sites of registered macros —
     * `cents_of(x, f := 10)` — to positional calls: positionals bind the
@@ -584,7 +573,7 @@ case class CreateMacroCommand(
       case Left(b) => spark.sessionState.functionRegistry.registerFunction(fid, info, b)
       case Right(b) => spark.sessionState.tableFunctionRegistry.registerFunction(fid, info, b)
     }
-    signature.foreach(MacroRewrite.recordSignature(spark, name, _))
+    signature.foreach(DuckSession(spark).macroSignatures.put(name.toLowerCase, _))
     Seq(Row(name))
   }
 }

@@ -14,24 +14,21 @@ import org.apache.spark.sql.types.StringType
   * Spark parses none of the three, so all ride the hint parser's
   * failure chain. PREPARE and DEALLOCATE parse to commands
   * ([[PrepareCommand]], [[DeallocateCommand]]) that store or remove the
-  * statement TEXT as a session-keyed template when they run (PREPARE
-  * replaces silently, as DuckDB does) and return a 1-row marker, so
-  * EXPLAIN of either changes nothing; EXECUTE splices the call's
-  * argument expression texts into the template's `$N` / positional `?`
-  * markers (quote/comment-aware, each argument parenthesized) and hands
-  * the substituted statement back to the parse chain — so a prepared
+  * statement TEXT as a template in the session's [[DuckSession]] when
+  * they run (PREPARE replaces silently, as DuckDB does) and return a
+  * 1-row marker, so EXPLAIN of either changes nothing; EXECUTE splices
+  * the call's argument expression texts into the template's `$N` /
+  * positional `?` markers (quote/comment-aware, each argument
+  * parenthesized) and hands the substituted statement back to the
+  * parse chain — so a prepared
   * QUALIFY/EXCLUDE/UPDATE statement re-enters the other rewrites and
   * runs. DuckDB binds VALUES where this splices EXPRESSION TEXT: for
   * the constant arguments EXECUTE takes, the two are equivalent; a
   * non-constant argument simply evaluates per row at its splice sites.
   *
-  * Registry is session-keyed (a plain ConcurrentHashMap on the
-  * SparkSession — entries are small template STRINGS, but the session
-  * key itself is strongly retained, so a service that churns through
-  * thousands of short-lived sessions with prepared statements should
-  * DEALLOCATE or accept the retained keys; DuckDB's registry is
-  * connection-scoped the same way). Wrong argument count and unknown
-  * names raise clean errors, matching DuckDB's binder.
+  * Templates are scoped to the session and go with it, as DuckDB's are
+  * scoped to the connection. Wrong argument count and unknown names
+  * raise clean errors, matching DuckDB's binder.
   */
 object PrepareRewrite {
 
@@ -41,9 +38,6 @@ object PrepareRewrite {
     """(?is)\A\s*EXECUTE\s+([A-Za-z_]\w*)\s*(?:\((.*)\))?\s*;?\s*\z""".r
   private val deallocateRe =
     """(?is)\A\s*DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
-
-  private[sql] val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
 
   private def fail(msg: String): Nothing =
     throw new org.apache.spark.sql.AnalysisException(
@@ -58,8 +52,7 @@ object PrepareRewrite {
     case deallocateRe(name) =>
       Some(Left(DeallocateCommand(name.toLowerCase)))
     case executeRe(name, argText) =>
-      val spark = SparkSession.active
-      val template = registry.get((spark, name.toLowerCase))
+      val template = DuckSession(SparkSession.active).prepared.get(name.toLowerCase)
       if (template == null)
         fail(s"""Prepared statement "${name.toLowerCase}" does not exist""")
       val args =
@@ -120,7 +113,7 @@ case class PrepareCommand(name: String, statement: String) extends LeafRunnableC
     Seq(AttributeReference("prepare", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    PrepareRewrite.registry.put((spark, name), statement)
+    DuckSession(spark).prepared.put(name, statement)
     Seq(Row(name))
   }
 }
@@ -131,7 +124,7 @@ case class DeallocateCommand(name: String) extends LeafRunnableCommand {
     Seq(AttributeReference("deallocate", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    PrepareRewrite.registry.remove((spark, name))
+    DuckSession(spark).prepared.remove(name)
     Seq(Row(name))
   }
 }

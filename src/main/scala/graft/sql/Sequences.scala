@@ -1,9 +1,7 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
-
-/** Session-scoped sequences — DuckDB's `CREATE SEQUENCE` / `nextval` /
-  * `currval` surface (reference host engine; semantics pinned on 1.0:
+/** Sequences — DuckDB's `CREATE SEQUENCE` / `nextval` / `currval`
+  * surface (reference host engine; semantics pinned on 1.0:
   * START/INCREMENT options, MINVALUE/MAXVALUE bounds with [NO] CYCLE
   * wraparound, duplicate-create and missing-sequence Catalog Errors,
   * currval-before-nextval Sequence Error, CREATE OR REPLACE resets
@@ -21,7 +19,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale contract, stated not hidden: a sequence is a single atomic
   * counter — inherently serialized state, exactly as single-node DuckDB
-  * runs it. Counters live in this JVM keyed by session; driver-side
+  * runs it. Counters live in the session's [[DuckSession]], on the
+  * driver's JVM; `nextval` resolves them through the session id it
+  * captured at planning ([[DuckSession.byId]]). Driver-side
   * evaluation (constant select lists, small local relations — the shapes
   * scripts use sequences for) is exact. A `nextval` inside a distributed
   * scan serializes every row through one counter — DuckDB pays the same
@@ -32,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sequences {
 
-  private final class State(val increment: Long, start: Long,
+  private[sql] final class State(val increment: Long, start: Long,
       minV: Long, maxV: Long, cycle: Boolean) {
     private var nextV: Long = start
     private var pastBound = false // advance overflowed Long
@@ -59,14 +59,8 @@ object Sequences {
     }
   }
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), State]()
-
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
-
-  def create(name: String, start: Option[Long] = None, increment: Long = 1L,
-      minValue: Option[Long] = None, maxValue: Option[Long] = None,
+  def create(duck: DuckSession, name: String, start: Option[Long] = None,
+      increment: Long = 1L, minValue: Option[Long] = None, maxValue: Option[Long] = None,
       cycle: Boolean = false, orReplace: Boolean = false,
       ifNotExists: Boolean = false): Unit = {
     val asc = increment >= 0
@@ -79,24 +73,24 @@ object Sequences {
       s"Parser Error: START value ($st) cannot be greater than MAXVALUE ($maxV)")
     if (st < minV) throw new IllegalStateException(
       s"Parser Error: START value ($st) cannot be less than MINVALUE ($minV)")
-    val k = key(name)
-    if (registry.containsKey(k) && !orReplace) {
+    val k = name.toLowerCase
+    if (duck.sequences.containsKey(k) && !orReplace) {
       if (ifNotExists) return
       throw new IllegalStateException(
         s"""Catalog Error: Sequence with name "$name" already exists!""")
     }
-    registry.put(k, new State(increment, st, minV, maxV, cycle))
+    duck.sequences.put(k, new State(increment, st, minV, maxV, cycle))
     ()
   }
 
-  def drop(name: String, ifExists: Boolean = false): Unit = {
-    if (registry.remove(key(name)) == null && !ifExists)
+  def drop(duck: DuckSession, name: String, ifExists: Boolean = false): Unit = {
+    if (duck.sequences.remove(name.toLowerCase) == null && !ifExists)
       throw new IllegalStateException(
         s"Catalog Error: Sequence with name $name does not exist!")
   }
 
-  private def lookup(name: String): State = {
-    val s = registry.get(key(name))
+  private def lookup(duck: DuckSession, name: String): State = {
+    val s = duck.sequences.get(name.toLowerCase)
     if (s == null)
       throw new IllegalStateException(
         s"Catalog Error: Sequence with name $name does not exist! " +
@@ -105,10 +99,10 @@ object Sequences {
     s
   }
 
-  def nextval(name: String): Long = lookup(name).nextval(name)
+  def nextval(duck: DuckSession, name: String): Long = lookup(duck, name).nextval(name)
 
-  def currval(name: String): Long = {
-    val s = lookup(name)
+  def currval(duck: DuckSession, name: String): Long = {
+    val s = lookup(duck, name)
     if (!s.defined)
       throw new IllegalStateException(
         "Sequence Error: currval: sequence is not yet defined in this session")

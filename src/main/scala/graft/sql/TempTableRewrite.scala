@@ -71,11 +71,9 @@ object TempTableRewrite {
     * keep DuckDB's error shape, raised by the TVF).
     */
   private def catalogHas(name: String): Boolean =
-    try {
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(name))
-    } catch { case NonFatal(_) => false }
+    try SparkSession.active.sessionState.catalog.tableExists(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+    catch { case NonFatal(_) => false }
 
   /** Optional leading column list: a parenthesized ident CSV followed
     * by MORE text (a bare `(SELECT ...)` body has no trailing text
@@ -103,7 +101,7 @@ object TempTableRewrite {
           Some(CreateTempTableAsCommand(name, halveBackslashes(query.trim), orReplace != null))
         case createColsRe(orReplace, name, colDefs) =>
           Some(CreateTempTableCommand(name, halveBackslashes(colDefs.trim), orReplace != null))
-        case dropRe(_, name) if TempTables.exists(name) =>
+        case dropRe(_, name) if TempTables.exists(SparkSession.active, name) =>
           Some(DropTempTableCommand(name))
         case insertOrRe(modeWord, name, rest) =>
           // INSERT OR REPLACE / OR IGNORE — keyed upsert against the
@@ -111,7 +109,7 @@ object TempTableRewrite {
           // catalog tables (the upsert command runs the staged
           // INSERT-OVERWRITE recipe there; the PK comes from the
           // constraint-stripping CREATE TABLE claim).
-          if (!TempTables.exists(name) && !catalogHas(name)) return None
+          if (!TempTables.exists(SparkSession.active, name) && !catalogHas(name)) return None
           val words = DuckLexer(rest).topLevelWords
           if (words.exists(_._1 == "?")) return None
           // RETURNING / an explicit ON CONFLICT on top of the shorthand
@@ -133,7 +131,7 @@ object TempTableRewrite {
                 Some(rest.substring(pos + "RETURNING".length).trim))
             case None => (rest.trim, None)
           }
-          val isTemp = TempTables.exists(name)
+          val isTemp = TempTables.exists(SparkSession.active, name)
           // BY NAME into a temp table has no lane here; native/hint path.
           if (body0.toUpperCase.startsWith("BY NAME")) return None
           // ON CONFLICT [(cols)] DO NOTHING — the explicit conflict
@@ -183,15 +181,7 @@ object TempTableRewrite {
               }
             case None =>
               if (!isTemp && returning.isEmpty) return None // native INSERT
-              if (!isTemp) {
-                // Catalog table + RETURNING.
-                val cat = try {
-                  val spark = org.apache.spark.sql.SparkSession.active
-                  spark.sessionState.catalog.tableExists(
-                    org.apache.spark.sql.catalyst.TableIdentifier(name))
-                } catch { case NonFatal(_) => false }
-                if (!cat) return None
-              }
+              if (!isTemp && !catalogHas(name)) return None // catalog + RETURNING
               val (cols, body) = splitColsBody(body0).getOrElse(return None)
               returning match {
                 case None => Some(InsertIntoTempCommand(name, halveBackslashes(body), cols))

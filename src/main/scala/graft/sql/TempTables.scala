@@ -2,10 +2,11 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped MATERIALIZED temp tables — the semantics DuckDB's
-  * `CREATE TEMP TABLE` carries and Spark lacks (a TEMPORARY VIEW is a
-  * lazy plan that re-evaluates per query; a temp TABLE is a snapshot
-  * that mutates in place).
+/** MATERIALIZED temp tables — the semantics DuckDB's `CREATE TEMP TABLE`
+  * carries and Spark lacks (a TEMPORARY VIEW is a lazy plan that
+  * re-evaluates per query; a temp TABLE is a snapshot that mutates in
+  * place). Each table is one [[TempTables.Table]] record in its
+  * session's [[DuckSession]], so it lives and dies with the session.
   *
   * Each temp table is a scratch-parquet dataset
   * ([[graft.operators.Scratch]] — per-JVM session root, shutdown-hook
@@ -22,58 +23,68 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TempTables {
 
-  /** Table content: the DataFrame the fronting view is registered from,
-    * and the scratch dir behind it (None for the LocalRelation snapshots
-    * of small tables, see [[put]]).
+  /** What DuckDB keeps with a table besides its rows: the declared
+    * PRIMARY KEY (the conflict target INSERT OR REPLACE / OR IGNORE use
+    * when the statement names none; the upsert rejects duplicate keys,
+    * reads don't enforce it), DEFAULT expressions by lower-cased column
+    * (SQL text, compiled per insert as DuckDB evaluates them), and
+    * COMMENT ON text (`duckdb_tables()` / `duckdb_columns()`).
     */
-  private final case class Snapshot(df: DataFrame, dir: Option[String])
+  final case class Facts(keys: Option[Seq[String]] = None,
+      defaults: Map[String, String] = Map.empty,
+      comment: Option[String] = None,
+      columnComments: Map[String, String] = Map.empty)
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Snapshot]()
-
-  /** Declared PRIMARY KEY columns (CREATE TEMP TABLE ... PRIMARY KEY) —
-    * the conflict target INSERT OR REPLACE / OR IGNORE resolve against
-    * when the statement names none. Advisory: reads don't enforce it;
-    * the upsert TVF rejects duplicate keys like DuckDB's constraint.
+  /** One temp table: the DataFrame its view was last materialized from,
+    * its scratch dir (None for a driver-local snapshot), the
+    * depth of the lazy append chain on top ([[putLazy]]), and its facts.
     */
-  private val pkRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[String]]()
+  final case class Table(df: DataFrame, dir: Option[String], pending: Int, facts: Facts)
 
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
+  def exists(spark: SparkSession, name: String): Boolean =
+    DuckSession(spark).tables.containsKey(name.toLowerCase)
 
-  def setKeys(name: String, cols: Seq[String]): Unit = {
-    pkRegistry.put(key(name), cols)
+  /** The facts of temp table `name`, else those recorded for the
+    * relation of that name, else none.
+    */
+  def facts(spark: SparkSession, name: String): Facts = {
+    val duck = DuckSession(spark)
+    Option(duck.tables.get(name.toLowerCase)).map(_.facts)
+      .orElse(Option(duck.otherFacts.get(name.toLowerCase)))
+      .getOrElse(Facts())
+  }
+
+  /** Apply `f` to the facts of temp table `name`, or of the relation of
+    * that name when it is not a temp table.
+    */
+  def updateFacts(spark: SparkSession, name: String)(f: Facts => Facts): Unit = {
+    val duck = DuckSession(spark)
+    val k = name.toLowerCase
+    if (duck.tables.computeIfPresent(k, (_, t) => t.copy(facts = f(t.facts))) == null)
+      duck.otherFacts.compute(k, (_, old) => f(Option(old).getOrElse(Facts())))
     ()
   }
 
-  def keysOf(name: String): Option[Seq[String]] =
-    Option(pkRegistry.get(key(name)))
-
-  /** Declared column DEFAULT expressions (round 18): column-name
-    * (lowercased) → the default's SQL text, recorded by CREATE TEMP
-    * TABLE and applied by INSERTs that omit the column or write the
-    * DEFAULT keyword. DuckDB evaluates the expression per insert —
-    * these are raw SQL texts compiled at insert time, not frozen
-    * values.
+  /** Create (or fully replace) temp table `name` with content `df` and
+    * `facts`, as CREATE [OR REPLACE] TEMP TABLE does.
     */
-  private val defaultsRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[String, String]]()
-
-  def setDefaults(name: String, defs: Map[String, String]): Unit = {
-    if (defs.nonEmpty) defaultsRegistry.put(key(name), defs)
+  def create(spark: SparkSession, name: String, df: DataFrame,
+      facts: Facts = Facts()): Unit = {
+    val (content, dir) = materialize(spark, name, df)
+    DuckSession(spark).tables.put(name.toLowerCase, Table(content, dir, 0, facts))
     ()
   }
 
-  def defaultsOf(name: String): Map[String, String] =
-    Option(defaultsRegistry.get(key(name))).getOrElse(Map.empty)
+  /** Replace temp table `name`'s content with `df`, keeping its facts. */
+  def put(spark: SparkSession, name: String, df: DataFrame): Unit = {
+    val (content, dir) = materialize(spark, name, df)
+    DuckSession(spark).tables.compute(name.toLowerCase, (_, old) =>
+      Table(content, dir, 0, Option(old).map(_.facts).getOrElse(Facts())))
+    ()
+  }
 
-  def exists(name: String): Boolean =
-    try registry.containsKey(key(name))
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  /** Materialize `df` as the content of temp table `name` (create or
-    * full replace) and (re-)register the fronting view.
+  /** Materialize `df` as the content of temp table `name` and
+    * (re-)register the fronting view.
     *
     * SMALL snapshots skip the parquet round trip (round 21): when the
     * OPTIMIZER proves the content is at most `spark.graft.
@@ -96,14 +107,14 @@ object TempTables {
     * [[graft.operators.Scratch.materialize]] read back with the written
     * schema: the write is the statement's only Spark job.
     */
-  def put(name: String, df: DataFrame): Unit = {
-    val spark = df.sparkSession
+  private def materialize(spark: SparkSession, name: String,
+      df: DataFrame): (DataFrame, Option[String]) = {
     val cap = graft.GraftConf.TempTableLocalRows(spark)
     val content =
       if (cap > 0 &&
           df.queryExecution.optimizedPlan.maxRows.exists(_ <= cap)) {
         val rows = df.collect()
-        Snapshot(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*),
           graft.operators.Scratch.nullableSchema(df.schema)), None)
       } else {
         // The superseded dir is NOT deleted eagerly: a DataFrame captured
@@ -112,12 +123,10 @@ object TempTables {
         // root's JVM-exit cleanup; a mutation-heavy loop trades that disk
         // for never breaking a reader.
         val (back, dir) = graft.operators.Scratch.materialize(df, s"ttab_$name")
-        Snapshot(back, Some(dir))
+        (back, Some(dir))
       }
-    content.df.createOrReplaceTempView(name)
-    registry.put(key(name), content)
-    pending.remove(key(name))
-    ()
+    content._1.createOrReplaceTempView(name)
+    content
   }
 
   // --- Coalesced appends (round 19, verdict-18 #8) -------------------
@@ -135,21 +144,20 @@ object TempTables {
   // O(depth) analysis per read, so the cap rematerializes. Transactions
   // flush first — BEGIN/ROLLBACK reason over materialized dirs.
 
-  private val pending = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Int]()
-
   private val maxPendingDepth = 32
 
   /** Register `df` (current ∪ frozen-appendix) as the table's content
     * WITHOUT materializing, provided the pending chain stays shallow.
     * Callers guarantee every new leaf in `df` is immutable.
     */
-  def putLazy(name: String, df: DataFrame): Unit = {
-    val d = Option(pending.get(key(name))).map(_.intValue()).getOrElse(0)
-    if (d >= maxPendingDepth || txnActive) put(name, df)
+  def putLazy(spark: SparkSession, name: String, df: DataFrame): Unit = {
+    val duck = DuckSession(spark)
+    val depth = Option(duck.tables.get(name.toLowerCase)).map(_.pending).getOrElse(0)
+    if (depth >= maxPendingDepth || txnActive(duck)) put(spark, name, df)
     else {
       df.createOrReplaceTempView(name)
-      pending.put(key(name), d + 1)
+      duck.tables.computeIfPresent(name.toLowerCase, (_, t) =>
+        t.copy(pending = t.pending + 1))
       ()
     }
   }
@@ -157,43 +165,35 @@ object TempTables {
   /** Materialize every pending lazy chain of this session (transaction
     * boundaries and EXPORT need real dirs).
     */
-  def flushPending(): Unit = {
-    val spark = SparkSession.active
+  def flushPending(spark: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
-    pending.keySet.asScala.toSeq.collect { case (s, n) if s eq spark => n }
-      .foreach(n => put(n, spark.table(n)))
+    DuckSession(spark).tables.asScala.toSeq.collect {
+      case (n, t) if t.pending > 0 => n }
+      .foreach(n => put(spark, n, spark.table(n)))
   }
-
-  /** Current content (the fronting view). */
-  def table(name: String): DataFrame = SparkSession.active.table(name)
 
   /** Names of this session's temp tables (for EXPORT DATABASE). */
-  def names(): Seq[String] = {
-    val spark = SparkSession.active
+  def names(spark: SparkSession): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    registry.keySet.asScala.toSeq.collect {
-      case (s, n) if s eq spark => n }.sorted
+    DuckSession(spark).tables.keySet.asScala.toSeq.sorted
   }
 
-  def drop(name: String): Boolean = {
-    val content = registry.remove(key(name))
-    pending.remove(key(name))
-    pkRegistry.remove(key(name))
-    defaultsRegistry.remove(key(name))
-    if (content == null) false
-    else {
-      SparkSession.active.catalog.dropTempView(name.toLowerCase)
-      Comments.dropTable(name)
-      // Inside a transaction the dropped snapshot is the ROLLBACK
-      // target — deletion defers to the scratch root's JVM-exit
-      // cleanup, the same lifecycle superseded mutation snapshots get.
-      // (Local snapshots have no dir; the driver copy is GC'd.)
-      content.dir match {
-        case Some(dir) if !txnActive =>
-          graft.operators.Scratch.delete(SparkSession.active, dir)
-        case _ => ()
-      }
-      true
+  def drop(spark: SparkSession, name: String): Boolean = {
+    val duck = DuckSession(spark)
+    Option(duck.tables.remove(name.toLowerCase)) match {
+      case None => false
+      case Some(t) =>
+        spark.catalog.dropTempView(name.toLowerCase)
+        // Inside a transaction the dropped snapshot is the ROLLBACK
+        // target — deletion defers to the scratch root's JVM-exit
+        // cleanup, the same lifecycle superseded mutation snapshots get.
+        // (Local snapshots have no dir; the driver copy is GC'd.)
+        t.dir match {
+          case Some(dir) if !txnActive(duck) =>
+            graft.operators.Scratch.delete(spark, dir)
+          case _ => ()
+        }
+        true
     }
   }
 
@@ -201,52 +201,52 @@ object TempTables {
   //
   // The mutation protocol above IS multi-version: every write lands in a
   // fresh scratch dir and re-points the fronting view, never touching
-  // the superseded snapshot. A transaction is therefore just a saved
-  // registry state: BEGIN captures each table's current (dir, pk) —
-  // O(tables) driver metadata, no data copied — COMMIT discards the
-  // capture, ROLLBACK re-registers every captured snapshot, drops
-  // tables created since, and restores tables dropped since. Scope:
-  // the graft temp-table layer (catalog tables keep Spark's own
+  // the superseded snapshot. A transaction is therefore just the saved
+  // records: BEGIN keeps each table's current record (content, keys,
+  // defaults, comments) — O(tables) driver metadata, no data copied —
+  // COMMIT discards them, ROLLBACK re-registers every saved record,
+  // drops tables created since, and restores tables dropped since.
+  // Scope: the graft temp-table layer (catalog tables keep Spark's own
   // semantics — Spark has no transactions to coordinate with).
   // Error texts mirror DuckDB's TransactionContext errors (pinned on
   // 1.0: nested BEGIN, bare COMMIT/ROLLBACK).
 
-  private val txnRegistry = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, Map[String, (Snapshot, Option[Seq[String]])]]()
+  def txnActive(duck: DuckSession): Boolean = duck.synchronized(duck.txn.isDefined)
 
-  def txnActive: Boolean = txnRegistry.containsKey(SparkSession.active)
-
-  def txnBegin(): Unit = {
-    val spark = SparkSession.active
-    flushPending() // BEGIN captures dirs; lazy chains must be real
-    val snap = names().map(n =>
-      n -> ((registry.get(key(n)), keysOf(n)))).toMap
-    if (txnRegistry.putIfAbsent(spark, snap) != null)
-      throw new IllegalStateException(
-        "TransactionContext Error: cannot start a transaction within a transaction")
+  def txnBegin(spark: SparkSession): Unit = {
+    val duck = DuckSession(spark)
+    flushPending(spark) // BEGIN captures dirs; lazy chains must be real
+    import scala.jdk.CollectionConverters._
+    duck.synchronized {
+      if (duck.txn.isDefined)
+        throw new IllegalStateException(
+          "TransactionContext Error: cannot start a transaction within a transaction")
+      duck.txn = Some(duck.tables.asScala.toMap)
+    }
   }
 
-  def txnCommit(): Unit = {
-    if (txnRegistry.remove(SparkSession.active) == null)
-      throw new IllegalStateException(
-        "TransactionContext Error: cannot commit - no transaction is active")
+  def txnCommit(spark: SparkSession): Unit = {
+    val duck = DuckSession(spark)
+    duck.synchronized {
+      if (duck.txn.isEmpty)
+        throw new IllegalStateException(
+          "TransactionContext Error: cannot commit - no transaction is active")
+      duck.txn = None
+    }
   }
 
-  def txnRollback(): Unit = {
-    val spark = SparkSession.active
-    val snap = txnRegistry.remove(spark)
-    if (snap == null)
-      throw new IllegalStateException(
-        "TransactionContext Error: cannot rollback - no transaction is active")
-    names().filterNot(snap.contains).foreach(drop)
-    snap.foreach { case (n, (content, pk)) =>
-      content.df.createOrReplaceTempView(n)
-      registry.put(key(n), content)
-      pending.remove(key(n))
-      pk match {
-        case Some(cols) => pkRegistry.put(key(n), cols)
-        case None => pkRegistry.remove(key(n)); ()
-      }
+  def txnRollback(spark: SparkSession): Unit = {
+    val duck = DuckSession(spark)
+    val saved = duck.synchronized {
+      val s = duck.txn.getOrElse(throw new IllegalStateException(
+        "TransactionContext Error: cannot rollback - no transaction is active"))
+      duck.txn = None
+      s
+    }
+    names(spark).filterNot(saved.contains).foreach(drop(spark, _))
+    saved.foreach { case (n, t) =>
+      t.df.createOrReplaceTempView(n)
+      duck.tables.put(n, t)
     }
   }
 }

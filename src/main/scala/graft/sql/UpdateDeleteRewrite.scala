@@ -60,8 +60,8 @@ object UpdateDeleteRewrite {
       // Graft temp tables (materialized snapshots fronted by a temp
       // view — TempTables) are mutable targets too; plain user temp
       // views are not.
-      if (TempTables.exists(name)) return true
-      val spark = org.apache.spark.sql.SparkSession.active
+      val spark = SparkSession.active
+      if (TempTables.exists(spark, name)) return true
       val cat = spark.sessionState.catalog
       val ident = org.apache.spark.sql.catalyst.TableIdentifier(name)
       cat.getTempView(name).isEmpty && cat.tableExists(ident) && {

@@ -28,9 +28,9 @@ class HighsSqlSpec extends AnyFunSuite {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       // Restore the JVM-global default the other suites (and direct
-      // TempTables/registry API calls outside a spark.sql execution
-      // scope) rely on — leaving it cleared broke whichever suite next
-      // touched SparkSession.active from the test thread.
+      // parser calls outside a spark.sql execution scope) rely on —
+      // leaving it cleared broke whichever suite next touched
+      // SparkSession.active from the test thread.
       SparkSession.setDefaultSession(SparkTestSession.spark)
       SparkSession.setActiveSession(SparkTestSession.spark)
     }

@@ -47,4 +47,12 @@ class DialectLexingSpec extends AnyFunSuite {
     assert(rows("SELECT 'p POSITIONAL JOIN q' AS s, a, b FROM pa POSITIONAL JOIN pb") ==
       Seq(Seq("p POSITIONAL JOIN q", 1, 10), Seq("p POSITIONAL JOIN q", 2, 20)))
   }
+
+  test("an UPDATE SET value may be a list literal") {
+    spark.sql("CREATE OR REPLACE TEMP TABLE ul AS SELECT 1 AS k, [9] AS l")
+    assert(rows("UPDATE ul SET l = [1, 2]") == Seq(Seq(1L)))
+    assert(rows("SELECT k, l FROM ul") == Seq(Seq(1, Seq(1, 2))))
+    assert(rows("UPDATE ul SET l = [3], k = 2 WHERE l = [1, 2]") == Seq(Seq(1L)))
+    assert(rows("SELECT k, l FROM ul") == Seq(Seq(2, Seq(3))))
+  }
 }

@@ -15,8 +15,8 @@ import graft.SparkTestSession
   */
 class DuckCommandSpec extends AnyFunSuite {
 
-  // TempTables/EnumTypes calls from the test thread resolve
-  // SparkSession.active — pin it.
+  // parsePlan called directly (not through spark.sql) reads temp tables
+  // and the catalog of SparkSession.active — pin it.
   private lazy val spark = {
     val s = SparkTestSession.spark
     SparkSession.setActiveSession(s)
@@ -50,7 +50,7 @@ class DuckCommandSpec extends AnyFunSuite {
       "EXPLAIN BEGIN" -> "TransactionCommand")
     val tBefore = rows("SELECT * FROM cmd_t ORDER BY k")
     val kBefore = rows("SELECT * FROM cmd_k ORDER BY k")
-    val namesBefore = TempTables.names()
+    val namesBefore = TempTables.names(spark)
     cases.foreach { case (stmt, command) =>
       val (text, jobs) = jobsDuring(
         spark.sql(stmt).collect().map(_.getString(0)).mkString("\n"))
@@ -61,9 +61,9 @@ class DuckCommandSpec extends AnyFunSuite {
     }
     assert(rows("SELECT * FROM cmd_t ORDER BY k") == tBefore)
     assert(rows("SELECT * FROM cmd_k ORDER BY k") == kBefore)
-    assert(TempTables.names() == namesBefore)
-    assert(TempTables.keysOf("cmd_k").contains(Seq("k")))
-    assert(!TempTables.txnActive)
+    assert(TempTables.names(spark) == namesBefore)
+    assert(TempTables.facts(spark, "cmd_k").keys.contains(Seq("k")))
+    assert(!TempTables.txnActive(DuckSession(spark)))
     assert(!java.nio.file.Files.exists(out))
     // The statements themselves still run, each once.
     assert(rows("UPDATE cmd_t SET amount = amount * 2 WHERE k = 2") == Seq(Seq(1L)))
@@ -79,7 +79,7 @@ class DuckCommandSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS cmd_rc")
     spark.sql("CREATE TABLE cmd_rc USING parquet AS SELECT 1 AS k UNION ALL SELECT 2")
     def state = (rows("SELECT * FROM cmd_r ORDER BY k"),
-      rows("SELECT k FROM cmd_rc ORDER BY k"), TempTables.names())
+      rows("SELECT k FROM cmd_rc ORDER BY k"), TempTables.names(spark))
     val before = state
     Seq(
       "EXPLAIN UPDATE cmd_r SET amount = 0 WHERE k = 1 RETURNING k" -> "UpdateReturningCommand",
@@ -242,9 +242,9 @@ class DuckCommandSpec extends AnyFunSuite {
       .isInstanceOf[CreateEnumTypeCommand])
     assert(parser.parsePlan("CREATE OR REPLACE TABLE cmd_cat AS SELECT 8 AS x")
       .isInstanceOf[CreateOrReplaceTableCommand])
-    assert(TempTables.exists("cmd_p"))
+    assert(TempTables.exists(spark, "cmd_p"))
     assert(spark.table("cmd_p").columns.toSeq == Seq("k", "s"))
-    assert(EnumTypes.get("cmd_mood").isEmpty)
+    assert(EnumTypes.get(spark, "cmd_mood").isEmpty)
     assert(rows("SELECT x FROM cmd_cat") == Seq(Seq(7)))
     spark.sql("DROP TABLE cmd_p")
     spark.sql("DROP TABLE cmd_cat")

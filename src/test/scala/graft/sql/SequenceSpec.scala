@@ -11,11 +11,7 @@ import graft.SparkTestSession
   */
 class SequenceSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    org.apache.spark.sql.SparkSession.setActiveSession(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   test("nextval advances per evaluation; currval reads the last value") {
     spark.sql("CREATE OR REPLACE SEQUENCE seq_a START 10 INCREMENT 2").collect()

@@ -2320,14 +2320,14 @@ class SqlEntryPointsSpec extends AnyFunSuite {
     // error surfaces) and register NO key for the name.
     intercept[Exception](spark.sql("CREATE OR REPLACE TABLE u18_c " +
       "(id INT, CONSTRAINT pk_x PRIMARY KEY (id)) USING parquet"))
-    assert(graft.sql.TempTables.keysOf("u18_c").isEmpty)
+    assert(graft.sql.TempTables.facts(spark, "u18_c").keys.isEmpty)
     // A FAILING stripped CREATE leaves no stale registration: u18_t
     // already exists (no OR REPLACE / IF NOT EXISTS), so the CREATE
     // errors — and the failed statement's single-column key must NOT
     // replace the registered (a, b) pair.
     intercept[Exception](spark.sql(
       "CREATE TABLE u18_t (z INT PRIMARY KEY) USING parquet"))
-    assert(graft.sql.TempTables.keysOf("u18_t").contains(Seq("a", "b")))
+    assert(graft.sql.TempTables.facts(spark, "u18_t").keys.contains(Seq("a", "b")))
     spark.sql("DROP TABLE IF EXISTS u18_t")
     // DISTINCT ON with an ordinal ORDER BY key (previously spliced as
     // the constant N into the window/hidden columns — wrong row picks).

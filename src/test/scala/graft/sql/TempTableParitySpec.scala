@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,12 +19,7 @@ import graft.operators.Scratch
   */
 class TempTableParitySpec extends AnyFunSuite {
 
-  // TempTables calls from the test thread resolve SparkSession.active.
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    SparkSession.setActiveSession(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   /** Rows with binary values compared by content, in a fixed order. */
   private def comparable(df: DataFrame): Seq[String] =

@@ -13,15 +13,7 @@ import graft.SparkTestSession
   */
 class TempTableTxnSpec extends AnyFunSuite {
 
-  // This spec calls TempTables' API directly (keysOf/exists), which
-  // resolves SparkSession.active on the TEST thread — pin it, since a
-  // prior suite may have run on a different thread (spark.sql calls
-  // set-and-restore active, so they never need this).
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    org.apache.spark.sql.SparkSession.setActiveSession(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private def sql(s: String) = spark.sql(s).collect()
 
@@ -51,7 +43,7 @@ class TempTableTxnSpec extends AnyFunSuite {
     sql("CREATE TEMP TABLE txn_b (k INTEGER, v VARCHAR)")
     sql("INSERT INTO txn_b VALUES (1, 'x')")
     sql("ROLLBACK")
-    assert(!TempTables.exists("txn_b"))
+    assert(!TempTables.exists(spark, "txn_b"))
     assert(!spark.catalog.tableExists("txn_b"))
   }
 
@@ -61,10 +53,10 @@ class TempTableTxnSpec extends AnyFunSuite {
     sql("INSERT INTO txn_c VALUES (1, 'survives')")
     sql("BEGIN")
     sql("DROP TABLE txn_c")
-    assert(!TempTables.exists("txn_c"))
+    assert(!TempTables.exists(spark, "txn_c"))
     sql("ROLLBACK")
     assert(rows("txn_c") == Seq(1 -> "survives"))
-    assert(TempTables.keysOf("txn_c").contains(Seq("k")))
+    assert(TempTables.facts(spark, "txn_c").keys.contains(Seq("k")))
     sql("DROP TABLE txn_c")
   }
 
