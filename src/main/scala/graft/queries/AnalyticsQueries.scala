@@ -3952,13 +3952,12 @@ object AnalyticsQueries {
 
   // Default null ordering (round 18): DuckDB sorts NULLs LAST by
   // default — ASC and DESC, statement and window ORDER BY alike —
-  // where Spark's ASC default is NULLS FIRST. The engine now spells
-  // the host default out (sql/DuckNullOrder: every bare ASC sort key
-  // gains NULLS LAST after a successful native parse, with fallback),
-  // so a pasted ORDER BY over a nullable key returns the host's rows
-  // under LIMIT and the host's window frames for NULL rows. The LIMIT
-  // here is what makes the gate sensitive: without the transform the
-  // NULL row displaces a real one.
+  // where Spark's ASC default is NULLS FIRST. The engine's parser
+  // gives every sort key without a NULLS clause NULLS LAST
+  // (sql/DuckSqlParser), so a pasted ORDER BY over a nullable key
+  // returns the host's rows under LIMIT and the host's window frames
+  // for NULL rows. The LIMIT here is what makes the gate sensitive:
+  // with Spark's default the NULL row displaces a real one.
   declare("q160_null_order",
     """SELECT x, grp,
          CAST(row_number() OVER (PARTITION BY grp ORDER BY x) AS BIGINT) AS rn,

@@ -56,11 +56,13 @@ object PipelineQueries {
     * disk stays bounded (reclaimed grace seconds after eviction, with the
     * Scratch session shutdown hook as the JVM-exit backstop) and a reader
     * racing an eviction would have to run a single query longer than the
-    * grace window to observe a missing file.
+    * grace window to observe a missing file. The timer's thread
+    * inherits no thread locals: Spark's active session is one, and the
+    * thread lives as long as the JVM.
     */
-  private lazy val archiveEvictTimer =
+  private[graft] lazy val archiveEvictTimer =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
-      val th = new Thread(r, "graft-archive-evict"); th.setDaemon(true); th
+      val th = new Thread(null, r, "graft-archive-evict", 0, false); th.setDaemon(true); th
     })
   private val archiveIndexCache =
     new graft.LruMap[(SparkSession, String), (Dedup.ArchiveIndex, Seq[String])](8,

@@ -39,12 +39,12 @@ final class DuckSession private[sql] () {
 object DuckSession {
 
   /** The state of `spark`, which must be built with [[GraftSparkExtensions]]
-    * as its outermost parser extension.
+    * as its only parser extension.
     */
   def apply(spark: SparkSession): DuckSession = spark.sessionState.sqlParser match {
     case p: GraftHintParser => p.duck
     case _ => throw new IllegalStateException("graft.sql.GraftSparkExtensions is not " +
-      "this session's parser; list it last in spark.sql.extensions")
+      "this session's parser; it must be the only parser extension in spark.sql.extensions")
   }
 
   /** Live sessions by id, held weakly. An expression evaluated on a task

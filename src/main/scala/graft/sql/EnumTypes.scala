@@ -161,6 +161,58 @@ object EnumTypes {
     if (changed) Some(cur) else None
   }
 
+  private val orderByRe = "(?i)\\bORDER\\s+BY\\b".r
+  // Clause-level words that end a sort-key list at depth 0.
+  // Expression-level words (AND, CASE, COLLATE, ASC, ...) are not here.
+  private val keyListEnd = Set(
+    "LIMIT", "OFFSET", "FETCH", "WINDOW", "UNION", "EXCEPT", "INTERSECT",
+    "ROWS", "RANGE", "GROUPS", "USING", "QUALIFY", "FOR", "INTO",
+    "RETURNING", "HAVING", "WHERE", "GROUP", "ORDER", "SELECT", "FROM",
+    "JOIN", "ON", "SETTINGS", "CLUSTER", "DISTRIBUTE", "SORT")
+
+  private def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
+
+  /** [start, end) spans of every ORDER BY sort key in the masked text,
+    * whitespace-trimmed. Enum casts are gone before the AST exists, so
+    * this rewrite finds its keys in the text.
+    */
+  private def keySpans(m: String): Seq[(Int, Int)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    for (h <- orderByRe.findAllMatchIn(m)) {
+      var i = h.end
+      var depth = 0
+      var keyStart = i
+      var done = false
+      def closeKey(endExclusive: Int): Unit = {
+        var ks = keyStart
+        while (ks < endExclusive && m.charAt(ks).isWhitespace) ks += 1
+        var ke = endExclusive
+        while (ke > ks && m.charAt(ke - 1).isWhitespace) ke -= 1
+        if (ke > ks) out += ((ks, ke))
+      }
+      while (i < m.length && !done) {
+        val c = m.charAt(i)
+        if (c == '(') { depth += 1; i += 1 }
+        else if (c == ')') {
+          if (depth == 0) { closeKey(i); done = true }
+          else { depth -= 1; i += 1 }
+        } else if (c == ';' && depth == 0) { closeKey(i); done = true }
+        else if (c == ',' && depth == 0) {
+          closeKey(i); i += 1; keyStart = i
+        } else if (depth == 0 && c.isLetter &&
+          (i == 0 || !wordChar(m.charAt(i - 1)))) {
+          var e = i
+          while (e < m.length && wordChar(m.charAt(e))) e += 1
+          if (keyListEnd(m.substring(i, e).toUpperCase)) {
+            closeKey(i); done = true
+          } else i = e
+        } else i += 1
+      }
+      if (!done) closeKey(m.length)
+    }
+    out.toSeq
+  }
+
   /** Definition-order contexts (round 19): wrap enum casts in ORDER BY
     * keys and in `<`/`<=`/`>`/`>=` comparisons with
     * `graft_enum_ord('name', x)` — the inlined value→index CASE — so
@@ -180,7 +232,7 @@ object EnumTypes {
     while (changed) {
       changed = false
       val m = DuckLexer(cur).masked
-      val spans = DuckNullOrder.keySpans(m)
+      val spans = keySpans(m)
       // Enum casts present in the text: (start, end, name, operand).
       val casts = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Int, String, String)]

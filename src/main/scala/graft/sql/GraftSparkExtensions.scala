@@ -19,6 +19,9 @@ import graft.sql.DuckLexer.operandCh
   *
   * Usage: `.config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")`
   * or `SparkSession.builder.withExtensions(new GraftSparkExtensions)`.
+  * It must be the only parser extension: graft's parser replaces Spark's
+  * own [[org.apache.spark.sql.execution.SparkSqlParser]] with
+  * [[DuckSqlParser]], and fails to build over any other parser.
   *
   * Execution contract: a table function's builder only checks its
   * constant arguments ([[GraftSparkExtensions.constArgs]]) and returns a
@@ -40,7 +43,12 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     GraftSparkExtensions.duckdbAliasFns.foreach(ext.injectFunction)
     GraftSparkExtensions.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectPlannerStrategy(_ => DriverRowsStrategy)
-    ext.injectParser((_, delegate) => new GraftHintParser(delegate))
+    ext.injectParser { (_, delegate) =>
+      if (delegate.getClass != classOf[org.apache.spark.sql.execution.SparkSqlParser])
+        throw new IllegalStateException("graft.sql.GraftSparkExtensions must be the only " +
+          s"parser extension in spark.sql.extensions; it was given ${delegate.getClass.getName}")
+      new GraftHintParser
+    }
     // Grouped 1-arg bitstring_agg → column-wide range (ADVICE-18 #1).
     ext.injectOptimizerRule(_ => BitstringGlobalRange)
     // `//` (parsed as ` div `) → DuckDB divide semantics (verdict-19 #5).
@@ -86,12 +94,21 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   * The ORIGINAL parse error stays primary in hint messages — the keyword
   * regexes match anywhere in the statement, so an unrelated typo in SQL
   * that merely mentions one of the keywords must still read as its own
-  * error, with the pointer as an appended "if you meant…". Pure delegation
-  * otherwise: statements that parse are untouched, and failures matching
-  * no pattern rethrow the original ParseException.
+  * error, with the pointer as an appended "if you meant…". Failures
+  * matching no pattern rethrow the original ParseException.
+  *
+  * A statement that parses is parsed once, by [[DuckSqlParser]]: Spark's
+  * grammar with DuckDB's meaning built into the AST (NULLS LAST by
+  * default, DuckDB collation names, window FILTER). The same parser
+  * serves expression fragments, macro bodies and types, so that meaning
+  * does not depend on where the SQL text comes from.
   */
-class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
-    extends org.apache.spark.sql.catalyst.parser.ParserInterface {
+class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterface {
+  /** Spark's parser with DuckDB's meaning for the constructs Spark
+    * already accepts (NULLS LAST by default, collation names, window
+    * FILTER); every parse below goes through it.
+    */
+  private val parser = new DuckSqlParser
   /** The session's DuckDB-level state (one parser per session). */
   private[sql] val duck = new DuckSession
   import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException}
@@ -974,6 +991,24 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   }
 
   private val powOpRe = "(?s).*\\*\\*.*".r
+  // The hints raised both by a pre-delegation claim and by the chain.
+  private val powerOpHint =
+    "DuckDB's ** power operator runs automatically as power(l, r) " +
+      "(left-associative, DOUBLE result, unary minus binding tighter on " +
+      "the base: -2 ** 2 = 4), but this statement's operand shape " +
+      "declined — quoted identifiers and exponent-notation bases have no " +
+      "mechanical extraction here. Use power(a, b) / pow(a, b) directly " +
+      "— and beware ^ is XOR in Spark, not power."
+  private val distinctOnHint =
+    "DuckDB/Postgres SELECT DISTINCT ON (exprs): the common forms run " +
+      "automatically via a row_number() window rewrite — plain blocks " +
+      "(optional WITH prefix, trailing ORDER BY as the per-group " +
+      "tiebreak), GROUP BY/HAVING/QUALIFY blocks (hidden-column splice), " +
+      "and every shaped block of a set-operation chain — but this one " +
+      "wasn't that shape (star select lists over aggregate blocks, " +
+      "parenthesized set-op branches, and ? parameters decline). Write " +
+      "the window form directly: SELECT ... FROM (SELECT *, row_number() " +
+      "OVER (PARTITION BY exprs ORDER BY tiebreak) rn FROM t) WHERE rn = 1."
   private val groupsFrameRe =
     "(?is).*\\bGROUPS\\s+(?:BETWEEN|UNBOUNDED|CURRENT|\\d).*".r
   private val tildeRe = "(?s).*~.*".r
@@ -1296,7 +1331,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             () => text match { case copyStmtRe() =>
               CopyToRewrite.rewrite(text); case _ => None },
             () => text match { case macroRe() =>
-              MacroRewrite.rewrite(text, delegate); case _ => None },
+              MacroRewrite.rewrite(text, parser); case _ => None },
             // struct_pack(a := 1) → named_struct — before the macro
             // named-call lowering (struct_pack has no macro signature
             // and would decline there).
@@ -1434,19 +1469,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                   "Use TABLESAMPLE directly: SELECT * FROM t TABLESAMPLE " +
                   "(10 PERCENT) [REPEATABLE (42)] or (50 ROWS), or the " +
                   "Dataset API df.sample(fraction, seed).")
-              case distinctOnRe() =>
-                Some("If you meant DuckDB/Postgres SELECT DISTINCT ON " +
-                  "(exprs): the common forms run automatically via a " +
-                  "row_number() window rewrite — plain blocks with the " +
-                  "trailing ORDER BY as the per-group tiebreak, GROUP " +
-                  "BY/HAVING/QUALIFY blocks (hidden-column splice), " +
-                  "and every shaped block of a set-operation chain — " +
-                  "but this one wasn't that shape (star select lists " +
-                  "over aggregate blocks, parenthesized set-op " +
-                  "branches, and ? parameters decline). Write the " +
-                  "window form directly: SELECT ... FROM (SELECT *, " +
-                  "row_number() OVER (PARTITION BY exprs ORDER BY " +
-                  "tiebreak) rn FROM t) WHERE rn = 1.")
+              case distinctOnRe() => Some(s"If you meant $distinctOnHint")
               case insertByNameRe() =>
                 Some("If you meant DuckDB's INSERT INTO tbl BY NAME " +
                   "<query>: the common form runs automatically " +
@@ -1609,15 +1632,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                   "FILTER clauses, and non-literal offsets have no " +
                   "sound decomposition here. Rewrite manually, e.g. " +
                   "sum(x) OVER frame - x for EXCLUDE CURRENT ROW.")
-              case powOpRe() =>
-                Some("DuckDB's ** power operator runs automatically as " +
-                  "power(l, r) (left-associative, DOUBLE result, unary " +
-                  "minus binding tighter on the base: -2 ** 2 = 4), but " +
-                  "this statement's operand shape declined — quoted " +
-                  "identifiers and exponent-notation bases have no " +
-                  "mechanical extraction here. Use power(a, b) / " +
-                  "pow(a, b) directly — and beware ^ is XOR in Spark, " +
-                  "not power.")
+              case powOpRe() => Some(powerOpHint)
               case tildeRe() =>
                 Some("If you meant the Postgres-style match operators " +
                   "(DuckDB: expr ~ 'regex' is a FULL-string regex " +
@@ -1853,51 +1868,14 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     Some(sb.toString)
   }
 
-  /** DuckDB collation names → Spark collation names (round 18).
-    * NOCASE/NOACCENT are NEVER valid Spark collations (always
-    * COLLATION_INVALID_NAME — a SparkException the parse-failure chain
-    * does not see), so the textual map can't shadow native usage:
-    * NOCASE → UTF8_LCASE, NOACCENT → UNICODE_AI, the combined form →
-    * UNICODE_CI_AI. Other host collations (language codes) keep their
-    * native error.
-    */
-  private val duckCollateRe =
-    "(?i)(\\bCOLLATE\\s+)(NOCASE\\.NOACCENT|NOACCENT\\.NOCASE|NOCASE|NOACCENT)\\b".r
-  private val collateNoRe = "(?i)\\bCOLLATE\\s+NO".r
-  private def duckCollateRewrite(text: String): Option[String] = {
-    if (collateNoRe.findFirstIn(text).isEmpty) return None
-    val masked = DuckLexer(text).masked
-    val ms = duckCollateRe.findAllMatchIn(masked).toList
-    if (ms.isEmpty) return None
-    val sb = new StringBuilder
-    var pos = 0
-    ms.foreach { m =>
-      val mapped = m.group(2).toUpperCase match {
-        case "NOCASE" => "UTF8_LCASE"
-        case "NOACCENT" => "UNICODE_AI"
-        case _ => "UNICODE_CI_AI"
-      }
-      sb.append(text.substring(pos, m.start)).append(m.group(1)).append(mapped)
-      pos = m.end
-    }
-    sb.append(text.substring(pos))
-    Some(sb.toString)
-  }
-
   /** Single-evaluation pattern for an Option-returning claim: an arm's
     * match and its body share one call of the rewrite.
     */
   private final class Claim[A](rewrite: String => Option[A]) {
     def unapply(sql: String): Option[A] = rewrite(sql)
   }
-  private val DuckCollated = new Claim(duckCollateRewrite)
   private val NamedReaderCall = new Claim(namedReaderCallRewrite)
   private val ExtractField = new Claim(extractFieldRewrite)
-  private val WindowFilter = new Claim(t => {
-    val u = t.toUpperCase
-    if (u.contains("FILTER") && u.contains("OVER")) ListOpRewrite.rewriteWindowFilter(t)
-    else None
-  })
   private val EnumDdl = new Claim(EnumTypes.ddlRewrite)
   private val AlteredTempTable = new Claim(AlterTableRewrite.rewrite)
   private val IndexStatement = new Claim(indexRewrite)
@@ -1907,15 +1885,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * side effect — or Right(the statement text to parse).
     */
   private def preRewrite(sqlText: String): Either[LogicalPlan, String] = sqlText match {
-    case DuckCollated(r) => preRewrite(r)
     case NamedReaderCall(r) => preRewrite(r)
     case ExtractField(r) => preRewrite(r)
-    // Window FILTER: `agg(x) FILTER (WHERE p) OVER w`. Spark PARSES the
-    // clause and dies in a BUILT-IN analyzer rule ("not supported
-    // yet"), which runs before any injected resolution rule — so the
-    // CASE-rewrite must claim pre-delegation too. Non-whitelisted
-    // shapes pass through untouched and keep Spark's loud error.
-    case WindowFilter(r) => preRewrite(r)
     // DuckDB's `**` power operator. Spark PARSES `a ** b` — as
     // multiply(a, star) — and only dies later in analysis with a
     // confusing INVALID_USAGE_OF_STAR_OR_REGEX, so the parse-failure
@@ -1927,16 +1898,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         DuckLexer(sqlText).masked.contains("**") =>
       powerOpRewrite(sqlText) match {
         case Some(r) => preRewrite(r)
-        case None => throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("DuckDB's ** power operator runs automatically as " +
-              "power(l, r) (left-associative, DOUBLE result, unary " +
-              "minus binding tighter on the base: -2 ** 2 = 4), but " +
-              "this statement's operand shape declined — quoted " +
-              "identifiers and exponent-notation bases have no " +
-              "mechanical extraction here. Use power(a, b) / pow(a, b) " +
-              "directly — and beware ^ is XOR in Spark, not power.")))
+        case None => DuckCommands.fail(powerOpHint)
       }
     case describeRe(tbl) if duckDescribeEnabled =>
       Right(s"SELECT * FROM duck_describe('$tbl')")
@@ -2129,42 +2091,11 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // UNRESOLVED_ROUTINE for `ON`. isShaped keys on the top-level
       // word sequence (quote-/comment-/paren-aware), so a string
       // literal containing the text passes through untouched.
-      DistinctOnRewrite.rewrite(sqlText).map(Right(_)).getOrElse {
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("SELECT DISTINCT ON (exprs) could not be rewritten: the " +
-              "common forms run automatically via a row_number() " +
-              "window rewrite — plain blocks (optional WITH prefix, " +
-              "trailing ORDER BY as the per-group tiebreak), GROUP " +
-              "BY/HAVING/QUALIFY blocks, and every shaped block of a " +
-              "set-operation chain — but this one doesn't (star " +
-              "select lists over aggregate blocks, parenthesized " +
-              "set-op branches, and ? parameters decline). Write the " +
-              "window form directly: SELECT ... FROM (SELECT *, " +
-              "row_number() OVER (PARTITION BY exprs ORDER BY " +
-              "tiebreak) rn FROM t) WHERE rn = 1.")))
-      }
+      DistinctOnRewrite.rewrite(sqlText).map(Right(_))
+        .getOrElse(DuckCommands.fail(distinctOnHint))
     case _ => Right(sqlText)
   }
 
-  /** Parse with DuckDB's default null ordering (round 18): the text
-    * must parse as-is first (anything else falls to the hint chain),
-    * then the NULLS LAST transform re-parses — falling back to the
-    * untransformed plan if the spelled-out form is rejected anywhere
-    * (e.g. a bare ALL key, an exotic position). Passed as the chain's
-    * reparse too, so rewritten statements' spliced orderings carry the
-    * host's null placement.
-    */
-  private def parseDuckOrdered(text: String, parse: String => LogicalPlan): LogicalPlan = {
-    val plan = parse(text)
-    DuckNullOrder.rewrite(text) match {
-      case Some(t2) =>
-        try parse(t2)
-        catch { case scala.util.control.NonFatal(_) => plan }
-      case None => plan
-    }
-  }
   /** `EXPLAIN [mode] <statement>`. DuckDB's EXPLAIN ANALYZE renders as
     * the simple mode (the host's profile text is engine-specific anyway;
     * the plan still renders), unless ANALYZE begins Spark's own ANALYZE
@@ -2177,8 +2108,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   /** One entry for every parse: EXPLAIN wraps graft's own parse of its
     * statement, so a DuckDB statement explains as the command it runs
     * as, without running it (Spark's EXPLAIN plans in SKIP mode);
-    * everything else is claimed by [[preRewrite]] or parsed by the
-    * delegate, with the hint chain on parse failure. Literal
+    * everything else is claimed by [[preRewrite]] or parsed once by
+    * [[DuckSqlParser]], with the hint chain on parse failure. Literal
     * backslashes are doubled ONCE here (sql/DuckLiterals): the one
     * unescape at parse consumes the doubling, so values carry DuckDB's
     * raw-literal semantics; rewrites and command re-entries stay
@@ -2194,17 +2125,16 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       case _ =>
         preRewrite(DuckLiterals.doubleBackslashes(sqlText)) match {
           case Left(command) => command
-          case Right(pre) =>
-            withHint(pre, parseDuckOrdered(_, parse))(parseDuckOrdered(pre, parse))
+          case Right(pre) => withHint(pre, parse)(parse(pre))
         }
     }
   override def parsePlan(sqlText: String): LogicalPlan =
-    parseWith(sqlText, delegate.parsePlan)
+    parseWith(sqlText, parser.parsePlan)
   override def parseQuery(sqlText: String): LogicalPlan =
-    parseWith(sqlText, delegate.parseQuery)
+    parseWith(sqlText, parser.parseQuery)
   override def parsePlanWithParameters(
       sqlText: String, parameters: ParameterContext): LogicalPlan =
-    parseWith(sqlText, delegate.parsePlanWithParameters(_, parameters))
+    parseWith(sqlText, parser.parsePlanWithParameters(_, parameters))
   // Expression fragments (commands' SET/WHERE texts, df.selectExpr)
   // get the same treatment: by the time a fragment reaches expr() it is
   // back at DuckDB level (a command's fields are halved back; a table
@@ -2213,18 +2143,18 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   // literal rewrite.
   override def parseExpression(sqlText: String) = {
     val text = DuckLiterals.doubleBackslashes(sqlText)
-    try delegate.parseExpression(text)
+    try parser.parseExpression(text)
     catch {
       case e: ParseException => DuckLiteralRewrite.rewrite(text)
-        .map(delegate.parseExpression).getOrElse(throw e)
+        .map(parser.parseExpression).getOrElse(throw e)
     }
   }
-  override def parseTableIdentifier(sqlText: String) = delegate.parseTableIdentifier(sqlText)
-  override def parseFunctionIdentifier(sqlText: String) = delegate.parseFunctionIdentifier(sqlText)
-  override def parseMultipartIdentifier(sqlText: String) = delegate.parseMultipartIdentifier(sqlText)
-  override def parseRoutineParam(sqlText: String) = delegate.parseRoutineParam(sqlText)
-  override def parseTableSchema(sqlText: String) = delegate.parseTableSchema(sqlText)
-  override def parseDataType(sqlText: String) = delegate.parseDataType(sqlText)
+  override def parseTableIdentifier(sqlText: String) = parser.parseTableIdentifier(sqlText)
+  override def parseFunctionIdentifier(sqlText: String) = parser.parseFunctionIdentifier(sqlText)
+  override def parseMultipartIdentifier(sqlText: String) = parser.parseMultipartIdentifier(sqlText)
+  override def parseRoutineParam(sqlText: String) = parser.parseRoutineParam(sqlText)
+  override def parseTableSchema(sqlText: String) = parser.parseTableSchema(sqlText)
+  override def parseDataType(sqlText: String) = parser.parseDataType(sqlText)
 }
 
 object GraftSparkExtensions {

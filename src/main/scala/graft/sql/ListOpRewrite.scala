@@ -315,125 +315,6 @@ object ListOpRewrite {
     Some(sb.toString)
   }
 
-  private val windowFilterRe = "(?i)\\bFILTER\\s*\\(".r
-  private val nullSkippingAggs =
-    Set("count", "sum", "avg", "min", "max", "mean", "total")
-
-  /** `agg(x) FILTER (WHERE p) OVER w` → `agg(CASE WHEN p THEN x END)
-    * OVER w` (round 20, verdict-19 #2). Spark PARSES the clause but its
-    * analyzer throws _LEGACY_ERROR_TEMP_1030 ("Window aggregate
-    * function with filter predicate is not supported yet") from a
-    * built-in resolution rule — before any injected rule could rewrite
-    * the node — so the fold must claim pre-delegation, like `**`. The
-    * CASE form is exactly the host's semantics for the NULL-skipping
-    * aggregates (count/sum/avg/min/max: a row failing p contributes
-    * NULL, which they ignore); count(*) counts `CASE WHEN p THEN 1
-    * END`. Anything else (DISTINCT args, multi-arg or NULL-honoring
-    * aggregates) declines untouched and keeps Spark's loud error. Only
-    * a FILTER directly preceded by `)` (the aggregate call) and
-    * directly followed by OVER is a window clause — grouped-aggregate
-    * FILTER parses natively and never enters here; scalar filter(a, f)
-    * has no `)` before it.
-    */
-  def rewriteWindowFilter(text: String): Option[String] = {
-    var cur = text
-    var changed = false
-    var rounds = 0
-    var progress = true
-    while (progress && rounds < 64) {
-      rounds += 1
-      progress = false
-      val m = DuckLexer(cur).masked
-      val hits = windowFilterRe.findAllMatchIn(m).toList
-      var done = false
-      for (h <- hits if !done) {
-        val rewritten: Option[String] = {
-          // previous non-ws char must close the aggregate call
-          var i = h.start - 1
-          while (i >= 0 && cur.charAt(i).isWhitespace) i -= 1
-          if (i < 0 || m.charAt(i) != ')') None
-          else {
-            val aggClose = i
-            val open = h.end - 1 // the FILTER clause's '('
-            val close = DuckLexer(cur).closeOf(open)
-            if (close < 0) None
-            else {
-              var a = close
-              while (a < cur.length && cur.charAt(a).isWhitespace) a += 1
-              val overNext = a + 4 <= m.length &&
-                m.substring(a, a + 4).equalsIgnoreCase("OVER") &&
-                (a + 4 == m.length || !(m.charAt(a + 4).isLetterOrDigit ||
-                  m.charAt(a + 4) == '_'))
-              if (!overNext) None
-              else {
-                // backward balanced scan to the aggregate's '('
-                var depth = 1
-                var j = aggClose - 1
-                while (j >= 0 && depth > 0) {
-                  m.charAt(j) match {
-                    case ')' => depth += 1
-                    case '(' => depth -= 1
-                    case _ =>
-                  }
-                  j -= 1
-                }
-                if (depth != 0) None
-                else {
-                  val aggOpen = j + 1
-                  var k = j
-                  while (k >= 0 && cur.charAt(k).isWhitespace) k -= 1
-                  val nameEnd = k
-                  while (k >= 0 && (cur.charAt(k).isLetterOrDigit ||
-                    cur.charAt(k) == '_')) k -= 1
-                  val name = cur.substring(k + 1, nameEnd + 1)
-                  val nameStart = k + 1
-                  val arg = cur.substring(aggOpen + 1, aggClose).trim
-                  val argMask = m.substring(aggOpen + 1, aggClose)
-                  val topComma = {
-                    var d = 0; var c = false
-                    argMask.foreach {
-                      case '(' => d += 1
-                      case ')' => d -= 1
-                      case ',' if d == 0 => c = true
-                      case _ =>
-                    }
-                    c
-                  }
-                  val distinctArg =
-                    "(?i)\\ADISTINCT\\b".r.findFirstIn(arg).isDefined
-                  if (!nullSkippingAggs(name.toLowerCase) || topComma ||
-                    distinctArg) None
-                  else {
-                    var pred = cur.substring(open + 1, close - 1).trim
-                    pred = "(?i)\\AWHERE\\b".r
-                      .findFirstIn(pred) match {
-                        case Some(w) => pred.substring(w.length).trim
-                        case None => pred
-                      }
-                    if (pred.isEmpty) None
-                    else {
-                      val isCountStar = name.equalsIgnoreCase("count") &&
-                        (arg == "*" || arg.isEmpty || arg == "1")
-                      val body =
-                        if (isCountStar) s"CASE WHEN $pred THEN 1 END"
-                        else s"CASE WHEN $pred THEN $arg END"
-                      Some(cur.substring(0, nameStart) +
-                        s"$name($body)" + cur.substring(close))
-                    }
-                  }
-                }
-              }
-            }
-          }
-        }
-        rewritten.foreach { r =>
-          cur = r; changed = true; progress = true; done = true
-        }
-      }
-    }
-    if (changed) Some(cur) else None
-  }
-
   private val quantRe =
     "(?i)(==|=|<>|!=|<=|>=|<|>)\\s*(ANY|ALL|SOME)\\s*\\(".r
 

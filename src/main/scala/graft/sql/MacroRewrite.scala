@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StringType
   * silently changes semantics for the shapes it guesses wrong (a DOUBLE
   * default breaks string macros, and vice versa). So instead of rewriting
   * the text, this handler reproduces the semantics: it parses the body
-  * once into an expression TEMPLATE (via the delegated Spark parser) and
+  * once into an expression TEMPLATE (via [[DuckSqlParser]]) and
   * registers a function builder in the session's function registry that,
   * at each call site, substitutes the caller's argument expressions for
   * the parameter names and lets the analyzer type the result in place —

@@ -63,16 +63,28 @@ object StreamingDedup {
     * derived checkpoints, the kept write, the three index appends).
     * Bounded small: it carries ACTION SUBMISSION concurrency, not
     * compute — the work itself runs on Spark's scheduler. Daemon
-    * threads so a stopped session never hangs the JVM.
+    * threads so a stopped session never hangs the JVM. The threads
+    * inherit no thread locals: Spark's active session is one, and an
+    * inherited session would stay reachable for the life of the JVM.
     */
-  private[streaming] lazy val actionEc: scala.concurrent.ExecutionContext =
+  private[graft] lazy val actionEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(4,
         (r: Runnable) => {
-          val t = new Thread(r, "graft-sdedup-action")
+          val t = new Thread(null, r, "graft-sdedup-action", 0, false)
           t.setDaemon(true)
           t
         }))
+
+  /** `body` on [[actionEc]], with `spark` active while it runs: building
+    * and running an action reads the active session's conf
+    * (`SQLConf.get`).
+    */
+  private def onActionPool[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] =
+    scala.concurrent.Future {
+      SparkSession.setActiveSession(spark)
+      try body finally SparkSession.clearActiveSession()
+    }(actionEc)
 
   /** Per-query standing state rooted under one temp directory. Each
     * standing table is BASE + DELTA (the LSM/lakehouse shape): the base
@@ -236,16 +248,13 @@ object StreamingDedup {
       // materialization is the thing to avoid), run concurrently: the
       // bootstrap is the lane's single biggest serial span and the
       // writes don't depend on each other.
+      def fork(body: => Unit) = StreamingDedup.onActionPool(spark)(body)
       val seeds = Seq(
-        scala.concurrent.Future(hashesT.seed(Dedup.archiveHashes(a)))(
-          StreamingDedup.actionEc),
-        scala.concurrent.Future(bandsT.seed(
-          Dedup.minhashBands(a, numHashes, numBands, shingleN)))(
-          StreamingDedup.actionEc),
-        scala.concurrent.Future(seenT.seed(a))(StreamingDedup.actionEc),
+        fork(hashesT.seed(Dedup.archiveHashes(a))),
+        fork(bandsT.seed(Dedup.minhashBands(a, numHashes, numBands, shingleN))),
+        fork(seenT.seed(a)),
         // kept starts empty, schema-stable
-        scala.concurrent.Future(keptSeed
-          .write.mode("overwrite").parquet(keptDir))(StreamingDedup.actionEc))
+        fork(keptSeed.write.mode("overwrite").parquet(keptDir)))
       seeds.foreach(f => scala.concurrent.Await.result(f,
         scala.concurrent.duration.Duration(3600, "s")))
     }
@@ -312,7 +321,7 @@ object StreamingDedup {
       // thread-safe and at production batch sizes the same overlap
       // hides the small side's I/O behind the big probe job.
       def fork[T](body: => T): scala.concurrent.Future[T] =
-        scala.concurrent.Future(body)(StreamingDedup.actionEc)
+        StreamingDedup.onActionPool(sp)(body)
       def await[T](f: scala.concurrent.Future[T]): T =
         scala.concurrent.Await.result(f,
           scala.concurrent.duration.Duration(600, "s"))
@@ -495,7 +504,7 @@ object StreamingDedup {
     staging.toFile.deleteOnExit()
     val base = System.currentTimeMillis() - 3600L * 1000
     val staged = (0 until nBatches).map { i =>
-      scala.concurrent.Future {
+      onActionPool(increment.sparkSession) {
       val (lo, hi) = boundsOf(i)
       val dir = staging.resolve(s"stage$i")
       increment.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -521,7 +530,7 @@ object StreamingDedup {
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
       finally walk.close()
-      }(StreamingDedup.actionEc)
+      }
     }
     staged.foreach(f => scala.concurrent.Await.result(f,
       scala.concurrent.duration.Duration(3600, "s")))

@@ -690,7 +690,7 @@ class Round18DialectSpec extends AnyFunSuite {
   }
 
   // ---------------------------------------------------------------
-  // Default null ordering (DuckNullOrder)
+  // Default null ordering (DuckSqlParser)
   // ---------------------------------------------------------------
 
   test("bare ORDER BY sorts NULLs LAST like the host; explicit spellings win") {
@@ -708,10 +708,13 @@ class Round18DialectSpec extends AnyFunSuite {
     assert(rows("SELECT x, row_number() OVER (ORDER BY x) AS rn FROM " +
       "(VALUES (NULL),(1)) t(x) ORDER BY rn") ==
       Seq(Seq(1, 1L), Seq(null, 2L)))
-    // ORDER BY ALL keeps Spark's per-key defaults (no per-key NULLS
-    // syntax exists there) — documented divergence, pinned.
+    // ORDER BY ALL gives every column its one key's null order.
     assert(xs("SELECT x FROM (VALUES (NULL),(1)) t(x) ORDER BY ALL") ==
-      Seq(null, 1))
+      Seq(1, null))
+    // A key holding a clause word (FROM) still leaves the next key
+    // NULLS LAST.
+    assert(xs("SELECT z FROM (VALUES (1,1,NULL),(1,1,2)) t(x,y,z) " +
+      "ORDER BY x IS DISTINCT FROM y, z") == Seq(2, null))
     // Multi-key with mixed explicitness: only the bare key transforms.
     assert(rows("SELECT g, x FROM (VALUES (1, NULL),(1, 2),(2, NULL)) " +
       "t(g, x) ORDER BY g DESC, x") ==
@@ -720,19 +723,26 @@ class Round18DialectSpec extends AnyFunSuite {
 
   test("bare ORDER BY key ENDING in a string literal still gets NULLS LAST (r19)") {
     def xs(sql: String): Seq[Any] = rows(sql).map(_.head)
-    // The literal is blanked in the masked scan; the insertion must
-    // land AFTER it in the raw text (not mid-literal, which would trip
-    // the reparse fallback and silently drop the transform).
+    // A key ending in a string literal.
     assert(xs("SELECT x FROM (VALUES (NULL),('b'),('a')) t(x) " +
       "ORDER BY x || 'suffix'") == Seq("a", "b", null))
     // Both keys in a multi-key list keep working.
     assert(rows("SELECT g, x FROM (VALUES (1, NULL),(1, 'a'),(2, NULL)) " +
       "t(g, x) ORDER BY g || '', x") ==
       Seq(Seq(1, "a"), Seq(1, null), Seq(2, null)))
-    // A trailing comment after the key: still host-ordered (the
-    // insertion lands at the masked end, before the comment).
+    // A trailing comment after the key.
     assert(xs("SELECT x FROM (VALUES (NULL),(1)) t(x) ORDER BY x -- c\n")
       == Seq(1, null))
+  }
+
+  test("expression fragments get DuckDB's null order and collation names") {
+    import org.apache.spark.sql.functions.expr
+    val df = spark.sql("SELECT * FROM (VALUES (NULL),(1)) t(x)")
+    assert(df.selectExpr("x", "row_number() OVER (ORDER BY x) AS rn")
+      .orderBy("rn").collect().map(r => (r.get(0), r.getInt(1))).toSeq ==
+      Seq((1, 1), (null, 2)))
+    assert(spark.sql("SELECT 'ABC' AS s").select(expr("s COLLATE NOCASE = 'abc'"))
+      .head().getBoolean(0))
   }
 
   test("CREATE TEMP TABLE DEFAULTs fill omitted columns and the DEFAULT keyword") {

@@ -40,6 +40,19 @@ class Round20DialectSpec extends AnyFunSuite {
     // Grouped-aggregate FILTER (no OVER) keeps its native path.
     assert(one[Long]("SELECT count(*) FILTER (WHERE x > 1) FROM " +
       "(VALUES (1),(2),(3)) t(x)") == 2L)
+    // DuckDB's count() counts rows.
+    assert(rows("SELECT x, count() FILTER (WHERE x > 1) OVER (ORDER BY x) AS c " +
+      "FROM (VALUES (1),(2),(3)) t(x) ORDER BY x") ==
+      Seq(Seq(1, 0L), Seq(2, 1L), Seq(3, 2L)))
+    // A named window, and a fragment parsed by selectExpr.
+    assert(rows("SELECT x, sum(x) FILTER (WHERE x > 1) OVER w AS s, " +
+      "count(*) FILTER (WHERE x > 1) OVER w AS c FROM (VALUES (1),(2),(3)) " +
+      "t(x) WINDOW w AS (ORDER BY x) ORDER BY x") ==
+      Seq(Seq(1, null, 0L), Seq(2, 2L, 1L), Seq(3, 5L, 2L)))
+    assert(spark.sql("SELECT * FROM (VALUES (1),(2),(3)) t(x)")
+      .selectExpr("x", "sum(x) FILTER (WHERE x > 1) OVER (ORDER BY x) AS s")
+      .orderBy("x").collect().toSeq.map(_.toSeq) ==
+      Seq(Seq(1, null), Seq(2, 2L), Seq(3, 5L)))
     // Non-whitelisted window aggregate still declines loudly.
     val e = intercept[Exception](spark.sql("SELECT first_value(x) FILTER " +
       "(WHERE x > 1) OVER (ORDER BY x) FROM (VALUES (1)) t(x)").collect())

@@ -146,4 +146,17 @@ class SessionStateSpec extends AnyFunSuite {
     assert(rows(s, "INSERT OR REPLACE INTO dd2 VALUES (2, 9)") == Seq(Row(1L)))
     assert(rows(s, "SELECT k, v FROM dd2 ORDER BY k") == Seq(Row(1, 7), Row(2, 9)))
   }
+
+  test("graft's pool threads do not inherit the submitting thread's session") {
+    SparkSession.setActiveSession(spark)
+    val evict = graft.queries.PipelineQueries.archiveEvictTimer.submit(
+      new java.util.concurrent.Callable[Boolean] {
+        def call(): Boolean = SparkSession.getActiveSession.isEmpty
+      })
+    val action = scala.concurrent.Future(SparkSession.getActiveSession.isEmpty)(
+      graft.streaming.StreamingDedup.actionEc)
+    assert(evict.get(60, java.util.concurrent.TimeUnit.SECONDS), "graft-archive-evict")
+    assert(scala.concurrent.Await.result(action, scala.concurrent.duration.Duration(60, "s")),
+      "graft-sdedup-action")
+  }
 }
