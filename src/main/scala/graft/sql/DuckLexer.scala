@@ -12,8 +12,12 @@ package graft.sql
   *
   * An unterminated string, identifier or comment runs to the end of the
   * text. Every rewrite reads the views below instead of scanning:
-  * [[masked]], [[isCode]], [[closeOf]], [[split]], [[splitWord]],
-  * [[assignmentEq]], [[topLevelWords]], [[words]] and [[strings]].
+  * [[masked]], [[isCode]], [[closeOf]], [[openOf]], [[split]],
+  * [[splitWord]], [[assignmentEq]], [[topLevelWords]], [[words]] and
+  * [[strings]]. An operator rewrite finds its operands with
+  * [[operandBefore]] and [[operandAfter]], one operand grammar for every
+  * operator, checks its neighbours with [[bindsTighter]], and a cast
+  * rewrite finds its casts with [[namedCasts]].
   * [[DuckLexer.apply]] keeps the last few views of each thread, so a
   * text that several arms inspect is lexed once.
   */
@@ -148,6 +152,179 @@ final class DuckLexer private (val text: String) {
   def closeOf(open: Int): Int =
     if (open < 0 || open >= n || closes(open) == 0) -1 else closes(open)
 
+  // Per close position, its opener (-1: none).
+  private lazy val opens: Array[Int] = {
+    val out = Array.fill(n)(-1)
+    for (o <- 0 until n if closes(o) > 0) out(closes(o) - 1) = o
+    out
+  }
+
+  /** Index of the opener that the paren, bracket or brace closing at
+    * `close` matches; -1 when `close` holds no close in code, or nothing
+    * opens it. */
+  def openOf(close: Int): Int = if (close < 0 || close >= n) -1 else opens(close)
+
+  /** The operand an operator reads on its left: the one whose last
+    * character is the last non-blank before `end`, as [start, stop);
+    * None when nothing operand-shaped ends there. An operand is one or
+    * more segments chained by `.` (`t.c`, `` `s`.`c` ``, `f(x).y`); a
+    * segment is
+    *  - a closed string literal, with a typed-literal keyword before it
+    *    pulled in (`TIMESTAMP '…'`);
+    *  - a closed backtick-quoted identifier (Spark reads `"…"` as a
+    *    string, so a double-quoted name is no operand: the operator
+    *    declines rather than splice a string where DuckDB reads a
+    *    column);
+    *  - a paren group, with the name before it unless that name is a
+    *    clause keyword (`f (x)` is a call, `DISTINCT (x)` a group);
+    *  - a bracket group;
+    *  - a run of [[DuckLexer.operandCh]] characters.
+    */
+  def operandBefore(end: Int): Option[(Int, Int)] = {
+    val last = nonBlankBefore(end - 1)
+    var start = segmentBefore(last)
+    if (start < 0) return None
+    var more = true
+    while (more) {
+      val dot = if (text.charAt(start) == '.') start
+        else if (start > 0 && masked.charAt(start - 1) == '.') start - 1
+        else -1
+      val prev = if (dot > 0) segmentBefore(dot - 1) else -1
+      if (prev >= 0) start = prev else more = false
+    }
+    Some((start, last + 1))
+  }
+
+  /** The operand an operator reads on its right: the one starting at
+    * the first non-blank from `start`, as [start, stop); None when
+    * nothing operand-shaped starts there. The grammar of
+    * [[operandBefore]], read forwards: a run may carry call parens
+    * (`f (x)`), and a typed-literal keyword its string. */
+  def operandAfter(start: Int): Option[(Int, Int)] = {
+    val first = nonBlankFrom(start)
+    var end = segmentAfter(first)
+    if (end < 0) return None
+    var more = true
+    while (more) {
+      val next = if (end < n && (text.charAt(end - 1) == '.' || masked.charAt(end) == '.'))
+        segmentAfter(end) else -1
+      if (next >= 0) end = next else more = false
+    }
+    Some((first, end))
+  }
+
+  /** True when the code character before `start`, or the one from
+    * `end`, blanks skipped, is one of `left` or `right`: an operator
+    * there binds tighter than the one whose operands span
+    * [start, end). */
+  def bindsTighter(start: Int, end: Int, left: String, right: String): Boolean = {
+    val b = nonBlankBefore(start - 1)
+    val a = nonBlankFrom(end)
+    (b >= 0 && left.indexOf(masked.charAt(b)) >= 0) ||
+      (a < n && right.indexOf(masked.charAt(a)) >= 0)
+  }
+
+  /** The casts to a type name that `isType` accepts, in text order. A
+    * `CAST` spans its call; `x::t` spans its [[operandBefore]] operand
+    * and the type. A cast with an empty operand is left out. */
+  def namedCasts(isType: String => Boolean): Vector[NamedCast] = {
+    val calls = castCallRe.findAllMatchIn(masked).flatMap { h =>
+      val open = h.end - 1
+      val close = closeOf(open)
+      if (close < 0) None
+      else castTypeRe.findFirstMatchIn(masked.substring(open + 1, close - 1))
+        .filter(t => isType(t.group(1)))
+        .map(t => NamedCast(h.start, close, text.substring(open + 1, open + 1 + t.start).trim,
+          t.group(1), h.group(1) != null))
+    }
+    val colons = colonCastRe.findAllMatchIn(masked).filter(h => isType(h.group(1))).flatMap { h =>
+      operandBefore(h.start).map { case (s, _) =>
+        NamedCast(s, h.end, text.substring(s, h.start).trim, h.group(1), isTry = false)
+      }
+    }
+    (calls ++ colons).filter(_.operand.nonEmpty).toVector.sortBy(_.start)
+  }
+
+  // The last non-blank index at or before `i` (-1: none), and the
+  // first at or after `i` (n: none).
+  private def nonBlankBefore(i: Int): Int = {
+    var j = i
+    while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
+    j
+  }
+  private def nonBlankFrom(i: Int): Int = {
+    var j = i
+    while (j < n && text.charAt(j).isWhitespace) j += 1
+    j
+  }
+
+  // Start of the run of code operand characters ending at `i` (i + 1
+  // when there is none).
+  private def runStart(i: Int): Int = {
+    var j = i
+    while (j >= 0 && operandCh(masked.charAt(j))) j -= 1
+    j + 1
+  }
+
+  // Start of the quoted identifier span `k` when backticks quote it, or -1.
+  private def backtickStart(k: Int): Int =
+    if (text.charAt(spanStart(k)) == '`') spanStart(k) else -1
+
+  // Start of the segment whose last character is at `last`, or -1.
+  private def segmentBefore(last: Int): Int = {
+    if (last < 0) return -1
+    // The word ending at or before `w`, blanks skipped: (start, word).
+    def wordBefore(w0: Int): (Int, String) = {
+      val w = nonBlankBefore(w0)
+      val s = runStart(w)
+      (s, if (w < 0) "" else text.substring(s, w + 1))
+    }
+    val k = spanAt(last)
+    if (k >= 0) {
+      if (spanKind(k) == Comment || spanEnd(k) != last + 1 || !spanClosed(k)) -1
+      else if (spanKind(k) == Ident) backtickStart(k)
+      else {
+        val (ws, word) = wordBefore(spanStart(k) - 1)
+        if (typedLiteralKeywords(word.toLowerCase)) ws else spanStart(k)
+      }
+    } else text.charAt(last) match {
+      case ')' =>
+        val open = openOf(last)
+        if (open < 0) -1
+        else {
+          val (ws, word) = wordBefore(open - 1)
+          if (word.isEmpty || isClauseKeyword(word)) open else ws
+        }
+      case ']' => openOf(last)
+      case c if operandCh(c) => runStart(last)
+      case _ => -1
+    }
+  }
+
+  // End (exclusive) of the segment starting at `first`, or -1.
+  private def segmentAfter(first: Int): Int = {
+    if (first >= n) return -1
+    val k = spanAt(first)
+    if (k >= 0) {
+      if (spanKind(k) == Comment || spanStart(k) != first || !spanClosed(k)) -1
+      else if (spanKind(k) == Ident && backtickStart(k) < 0) -1
+      else spanEnd(k)
+    } else text.charAt(first) match {
+      case '(' | '[' => closeOf(first)
+      case c if operandCh(c) =>
+        var e = first
+        while (e < n && operandCh(masked.charAt(e))) e += 1
+        val p = nonBlankFrom(e)
+        val lit = if (p < n) spanAt(p) else -1
+        if (p < n && masked.charAt(p) == '(') closeOf(p)
+        else if (lit >= 0 && spanKind(lit) <= Dollar && spanStart(lit) == p &&
+            spanClosed(lit) && typedLiteralKeywords(text.substring(first, e).toLowerCase))
+          spanEnd(lit)
+        else e
+      case _ => -1
+    }
+  }
+
   /** Code positions at depth 0 where `p` holds: depth counts parens, or
     * with `groups` parens, brackets and braces. */
   def topLevel(groups: Boolean = false)(p: Int => Boolean): Vector[Int] = {
@@ -270,6 +447,47 @@ object DuckLexer {
   /** A character of an operand the operator rewrites lift out: word
     * characters, `.` of a dotted name and `$`. */
   private[sql] def operandCh(c: Char): Boolean = wordCh(c) || c == '.' || c == '$'
+
+  /** Words that open a clause or join an expression rather than name a
+    * function: a paren group after one is a plain group, and a sign
+    * after one is unary. `filter` is not here: `filter(list, lambda)`
+    * is a function. */
+  private val clauseKeywords = Set("select", "where", "when", "then", "else",
+    "and", "or", "not", "by", "having", "qualify", "on", "return", "returns",
+    "case", "set", "limit", "offset", "in", "as", "distinct", "all", "any",
+    "some", "union", "except", "intersect", "from", "join", "between", "like",
+    "ilike", "is", "values")
+
+  private[sql] def isClauseKeyword(word: String): Boolean =
+    clauseKeywords(word.toLowerCase)
+
+  /** A cast to a named type: `[TRY_]CAST(x AS t)` or `x::t`, spanning
+    * [start, end). */
+  final case class NamedCast(start: Int, end: Int, operand: String, typeName: String,
+      isTry: Boolean)
+
+  /** `text` with each cast to a type that `isType` accepts replaced by
+    * `render` of it, one at a time from the first, so a cast inside
+    * another's operand is replaced too. */
+  private[sql] def replaceCasts(text: String, isType: String => Boolean)(
+      render: NamedCast => String): String = {
+    var cur = text
+    var next = DuckLexer(cur).namedCasts(isType).headOption
+    while (next.isDefined) {
+      val c = next.get
+      cur = cur.substring(0, c.start) + render(c) + cur.substring(c.end)
+      next = DuckLexer(cur).namedCasts(isType).headOption
+    }
+    cur
+  }
+
+  private val castCallRe = """(?i)\b(TRY_)?CAST\s*\(""".r
+  private val castTypeRe = """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r
+  private val colonCastRe = """::\s*([A-Za-z_]\w*)""".r
+
+  // Keywords that type the string literal after them.
+  private val typedLiteralKeywords = Set("date", "time", "timestamp",
+    "timestamptz", "timestamp_ntz", "timestamp_ltz")
 
   /** Index just past the quote closing a `q`-quoted run whose body
     * starts at `from` (a doubled quote continues it); -1 when unclosed. */

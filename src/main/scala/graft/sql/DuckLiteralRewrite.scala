@@ -98,7 +98,7 @@ object DuckLiteralRewrite {
               if (lastSig == 0) true
               else if (lastSig == ')' || lastSig == ']' || lastSig == '\'' ||
                 lastSig == '"' || lastSig == '`') false
-              else if (lastSig.isLetterOrDigit || lastSig == '_')
+              else if (DuckLexer.wordCh(lastSig))
                 lastWord != null && exprPositionWords(lastWord._1)
               else true // operator, comma, paren-open, colon, …
             if (literalPos) {
@@ -124,7 +124,7 @@ object DuckLiteralRewrite {
             lastSig = ')'; lastWord = null
           case ch if ch.isLetter || ch == '_' =>
             val start = i
-            while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
+            while (i < n && DuckLexer.wordCh(s.charAt(i))) i += 1
             val w = s.substring(start, i)
             lastWord = (w.toUpperCase, out.length)
             out.append(w)
@@ -213,49 +213,14 @@ object DuckLiteralRewrite {
     }
   }
 
-  /** Start offset (in `out`) of the maximal trailing primary expression:
-    * dotted identifiers, quoted identifiers, a string literal, or a
-    * balanced call/paren group, possibly chained (`f(x)`, `a.b`,
-    * `t.`m``, `duck_index(...)` from an earlier rewrite). Declines when
-    * nothing receiver-shaped precedes the bracket.
+  /** Start offset (in `out`) of the trailing operand the bracket
+    * indexes: the lexer's [[DuckLexer.operandBefore]] — dotted names,
+    * quoted identifiers, a string literal, or a call/paren group,
+    * chained by `.` (`f(x)`, `a.b`, `t.`m``, `duck_index(...)` from an
+    * earlier rewrite). Declines when nothing receiver-shaped precedes
+    * the bracket.
     */
-  private def receiverStart(out: StringBuilder): Int = {
-    val view = DuckLexer(out.toString)
-    def wordCh(c: Char) = c.isLetterOrDigit || c == '_' || c == '$'
-    var j = out.length - 1
-    while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-    if (j < 0) throw Decline("bracket with no receiver")
-    val end = j + 1 // exclusive end of receiver (trailing ws excluded)
-    def declineIf(cond: Boolean, why: String): Unit =
-      if (cond) throw Decline(why)
-    var expectMore = true
-    while (expectMore && j >= 0) {
-      val c = out.charAt(j)
-      view.span(j) match {
-        case Some((start, _)) => // a string or quoted identifier
-          declineIf(view.inComment(j), "comment before bracket")
-          j = start - 1
-        case None if wordCh(c) =>
-          while (j >= 0 && wordCh(out.charAt(j))) j -= 1
-        case None if c == ')' =>
-          val m = view.masked
-          var depth = 1; j -= 1
-          while (j >= 0 && depth > 0) {
-            if (m.charAt(j) == '(') depth -= 1
-            else if (m.charAt(j) == ')') depth += 1
-            j -= 1
-          }
-          declineIf(depth != 0, "unbalanced parens")
-          // A function name may precede the group; consume it if present.
-          if (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_'))
-            while (j >= 0 && wordCh(out.charAt(j))) j -= 1
-        case None => throw Decline(s"receiver boundary at '$c'")
-      }
-      // Chain through a dot to the next segment; otherwise stop.
-      if (j >= 0 && out.charAt(j) == '.') j -= 1 else expectMore = false
-    }
-    val start = j + 1
-    declineIf(start >= end, "empty receiver")
-    start
-  }
+  private def receiverStart(out: StringBuilder): Int =
+    DuckLexer(out.toString).operandBefore(out.length)
+      .getOrElse(throw Decline("bracket with no receiver"))._1
 }

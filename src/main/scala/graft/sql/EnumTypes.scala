@@ -96,69 +96,11 @@ object EnumTypes {
       }
     }
 
-    // CAST(x AS name) / TRY_CAST — operand directly delimited.
-    val castRe = """(?i)\b(TRY_)?CAST\s*\(""".r
-    var scan = true
-    while (scan) {
-      scan = false
-      for (h <- castRe.findAllMatchIn(m) if !scan) {
-        val open = m.indexOf('(', h.start)
-        val close = DuckLexer(cur).closeOf(open)
-        if (close > 0) {
-          val inner = cur.substring(open + 1, close - 1)
-          val innerM = m.substring(open + 1, close - 1)
-          // Anchor on the AS keyword itself (a leading \s+ would match
-          // from position 0 when the operand is a masked literal,
-          // yielding an empty operand).
-          val asRe = """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r
-          asRe.findFirstMatchIn(innerM).foreach { am =>
-            get(spark, am.group(1)) match {
-              case Some(_) =>
-                val operand = inner.substring(0, am.start).trim
-                val tryPrefix = h.group(1) != null
-                val fn = if (tryPrefix) "graft_enum_try" else "graft_enum"
-                cur = cur.substring(0, h.start) +
-                  s"$fn('${am.group(1).toLowerCase}', $operand)" +
-                  cur.substring(close)
-                m = DuckLexer(cur).masked
-                changed = true
-                scan = true
-              case None =>
-            }
-          }
-        }
-      }
+    // CAST(x AS name), TRY_CAST and x::name.
+    val cast = DuckLexer.replaceCasts(cur, get(spark, _).isDefined) { c =>
+      s"${if (c.isTry) "graft_enum_try" else "graft_enum"}('${c.typeName.toLowerCase}', ${c.operand})"
     }
-
-    // x::name — postfix cast; the operand is the tightest primary to
-    // the left (ListOpRewrite's scan discipline).
-    val colonRe = """::\s*([A-Za-z_]\w*)""".r
-    var again = true
-    while (again) {
-      again = false
-      for (h <- colonRe.findAllMatchIn(m) if !again
-           if m.charAt(h.start) == ':') {
-        get(spark, h.group(1)) match {
-          case Some(_) =>
-            ListOpRewrite.scanLeftPub(cur, m, h.start - 1) match {
-              case Some(ls) =>
-                val operand = cur.substring(ls, h.start).trim
-                if (operand.nonEmpty) {
-                  cur = cur.substring(0, ls) +
-                    s"graft_enum('${h.group(1).toLowerCase}', $operand)" +
-                    cur.substring(h.end)
-                  m = DuckLexer(cur).masked
-                  changed = true
-                  again = true
-                }
-              case None =>
-            }
-          case None =>
-        }
-      }
-    }
-
-    if (changed) Some(cur) else None
+    if (changed || (cast ne cur)) Some(cast) else None
   }
 
   private val orderByRe = "(?i)\\bORDER\\s+BY\\b".r
@@ -169,8 +111,6 @@ object EnumTypes {
     "ROWS", "RANGE", "GROUPS", "USING", "QUALIFY", "FOR", "INTO",
     "RETURNING", "HAVING", "WHERE", "GROUP", "ORDER", "SELECT", "FROM",
     "JOIN", "ON", "SETTINGS", "CLUSTER", "DISTRIBUTE", "SORT")
-
-  private def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
 
   /** [start, end) spans of every ORDER BY sort key in the masked text,
     * whitespace-trimmed. Enum casts are gone before the AST exists, so
@@ -200,9 +140,9 @@ object EnumTypes {
         else if (c == ',' && depth == 0) {
           closeKey(i); i += 1; keyStart = i
         } else if (depth == 0 && c.isLetter &&
-          (i == 0 || !wordChar(m.charAt(i - 1)))) {
+          (i == 0 || !DuckLexer.operandCh(m.charAt(i - 1)))) {
           var e = i
-          while (e < m.length && wordChar(m.charAt(e))) e += 1
+          while (e < m.length && DuckLexer.operandCh(m.charAt(e))) e += 1
           if (keyListEnd(m.substring(i, e).toUpperCase)) {
             closeKey(i); done = true
           } else i = e
@@ -233,29 +173,7 @@ object EnumTypes {
       changed = false
       val m = DuckLexer(cur).masked
       val spans = keySpans(m)
-      // Enum casts present in the text: (start, end, name, operand).
-      val casts = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Int, String, String)]
-      for (h <- """::\s*([A-Za-z_]\w*)""".r.findAllMatchIn(m)
-           if get(spark, h.group(1)).isDefined)
-        ListOpRewrite.scanLeftPub(cur, m, h.start - 1).foreach { ls =>
-          val op = cur.substring(ls, h.start).trim
-          if (op.nonEmpty) casts += ((ls, h.end, h.group(1), op))
-        }
-      for (h <- """(?i)\b(TRY_)?CAST\s*\(""".r.findAllMatchIn(m)) {
-        val open = m.indexOf('(', h.start)
-        val close = DuckLexer(cur).closeOf(open)
-        if (close > 0) {
-          val innerM = m.substring(open + 1, close - 1)
-          """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r.findFirstMatchIn(innerM)
-            .filter(am => get(spark, am.group(1)).isDefined)
-            .foreach { am =>
-              val operand =
-                cur.substring(open + 1, open + 1 + am.start).trim
-              casts += ((h.start, close, am.group(1), operand))
-            }
-        }
-      }
+      val casts = DuckLexer(cur).namedCasts(get(spark, _).isDefined)
       def wrap(name: String, inner: String): String =
         s"graft_enum_ord('${name.toLowerCase}', $inner)"
       // Raw-text whitespace skip: a masked literal is all spaces in m,
@@ -272,7 +190,7 @@ object EnumTypes {
       }
       val it = casts.iterator
       while (it.hasNext && !changed) {
-        val (s, e, name, operand) = it.next()
+        val DuckLexer.NamedCast(s, e, _, name, _) = it.next()
         if (!alreadyWrapped(s)) {
           // (a) the cast IS an ORDER BY key (trailing direction words ok).
           val asKey = spans.exists { case (ks, ke) =>
@@ -295,8 +213,7 @@ object EnumTypes {
               !(o == ">" && r0 + 1 < m.length && m.charAt(r0 + 1) == '='))
           val rhsCast = opRight.flatMap { op =>
             val rs = nextNonSpace(r0 + op.length)
-            casts.find { case (s2, _, n2, _) =>
-              s2 == rs && n2.equalsIgnoreCase(name) }
+            casts.find(c => c.start == rs && c.typeName.equalsIgnoreCase(name))
               .map(c => (op, c))
           }
           if (asKey) {
@@ -304,7 +221,7 @@ object EnumTypes {
               cur.substring(e)
             changed = true; any = true
           } else rhsCast match {
-            case Some((op, (s2, e2, _, _))) =>
+            case Some((op, DuckLexer.NamedCast(s2, e2, _, _, _))) =>
               cur = cur.substring(0, s) +
                 wrap(name, cur.substring(s, e)) + s" $op " +
                 wrap(name, cur.substring(s2, e2)) + cur.substring(e2)

@@ -100,27 +100,14 @@ object ExcludeFrameRewrite {
       val specMasked = masked.substring(open + 1, close - 1)
       if (excludeRe.findFirstMatchIn(specMasked).isDefined) {
         // The aggregate call directly before OVER: `name( args )`.
-        var p = m.start - 1
-        while (p >= 0 && text.charAt(p).isWhitespace) p -= 1
-        if (p < 0 || text.charAt(p) != ')') return None
-        var q = p; var depth = 0; var argsOpen = -1
-        while (q >= 0 && argsOpen < 0) {
-          val c = masked.charAt(q)
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) argsOpen = q }
-          q -= 1
-        }
-        if (argsOpen < 0) return None
-        var s = argsOpen - 1
-        while (s >= 0 && text.charAt(s).isWhitespace) s -= 1
-        val e2 = s
-        while (s >= 0 && (text.charAt(s).isLetterOrDigit ||
-          text.charAt(s) == '_')) s -= 1
-        val fn = text.substring(s + 1, e2 + 1).toLowerCase
-        if (fn.isEmpty) return None
-        val arg = text.substring(argsOpen + 1, p).trim
+        val view = DuckLexer(text)
+        val (s, e) = view.operandBefore(m.start).getOrElse(return None)
+        val argsOpen = view.openOf(e - 1)
+        if (masked.charAt(e - 1) != ')' || argsOpen <= s) return None
+        val fn = text.substring(s, argsOpen).trim.toLowerCase
+        val arg = text.substring(argsOpen + 1, e - 1).trim
         buildReplacement(fn, arg, spec, specMasked) match {
-          case Some(r) => repls += ((s + 1, close, r))
+          case Some(r) => repls += ((s, close, r))
           case None => return None
         }
       }

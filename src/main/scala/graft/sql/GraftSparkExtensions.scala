@@ -10,7 +10,6 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.highs.HighsFunctions
-import graft.sql.DuckLexer.operandCh
 
 /** SQL parity layer (SURVEY.md §7 M3): registers the reference's two scalar
   * functions and four table functions into the Spark SQL catalog, so
@@ -317,110 +316,49 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     * (`2*3**2` = 18), unary minus binds tighter on the BASE (`-2 ** 2`
     * = 4 after a clause keyword, while `3 - 2 ** 2` = -1 — the sign is
     * binary after an identifier), and the result is DOUBLE — exactly
-    * Spark's `power`. Only ever runs on parse failure (`**` is never
-    * Spark syntax), so no native statement can be claimed. Operands are
-    * recognized textually over the literal-masked text: numbers,
-    * dotted identifier chains, function calls (incl. CAST), and
-    * parenthesized groups, each with a unary sign where SQL's grammar
-    * makes it unary (after `(`/`,`/an operator/a clause keyword). Any
-    * other operand shape — quoted identifiers, exponent-notation bases
-    * — declines the whole statement to the hint rather than guessing;
-    * the leftmost-first fold reproduces the left associativity.
+    * Spark's `power`. `**` is never Spark syntax, so no native
+    * statement can be claimed. The operands are the lexer's
+    * ([[DuckLexer.operandBefore]], [[DuckLexer.operandAfter]]), each
+    * with a unary sign where SQL's grammar makes it unary (after
+    * `(`/`,`/an operator/a clause keyword); an operand the grammar
+    * cannot delimit declines the whole statement to the hint rather
+    * than guessing. The leftmost-first fold reproduces the left
+    * associativity.
     */
   private def powerOpRewrite(text: String): Option[String] = {
     if (!text.contains("**")) return None
-    val unaryKeywords = Set("select", "where", "when", "then", "else",
-      "and", "or", "not", "by", "having", "on", "return", "returns",
-      "case", "set", "limit", "offset", "in", "as", "distinct", "all",
-      "union", "except", "intersect", "from", "join", "between",
-      "like", "ilike", "is", "values")
     var cur = text
     var changed = false
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
-      val n = m.length
+      val view = DuckLexer(cur)
+      val m = view.masked
       val idx = m.indexOf("**")
       if (idx < 0) return if (changed) Some(cur) else None
-      // ---- right operand: [rs, re) ----
-      var r = idx + 2
-      while (r < n && cur.charAt(r).isWhitespace) r += 1
-      val rs = r
-      while (r < n && (m.charAt(r) == '-' || m.charAt(r) == '+')) {
-        r += 1
-        while (r < n && cur.charAt(r).isWhitespace) r += 1
-      }
-      if (r >= n) return None
-      if (m.charAt(r) == '(') {
-        val c = DuckLexer(cur).closeOf(r)
-        if (c < 0) return None
-        r = c
-      } else if (operandCh(m.charAt(r))) {
-        while (r < n && operandCh(m.charAt(r))) r += 1
-        var k = r
-        while (k < n && cur.charAt(k).isWhitespace) k += 1
-        if (k < n && m.charAt(k) == '(') {
-          val c = DuckLexer(cur).closeOf(k)
-          if (c < 0) return None
-          r = c
-        }
-      } else return None
-      val re = r
-      // ---- left operand: [ls, le) ----
-      var l = idx - 1
-      while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-      if (l < 0) return None
-      val le = l + 1
-      if (m.charAt(l) == ')') {
-        // balanced backward scan over the mask (literal parens blanked)
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
-        // an optional function name directly before the open paren —
-        // but never a keyword (`THEN (a) ** 2` is a plain group)
-        val beforeParen = l
-        while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-        val nameEnd = l
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-        if (nameEnd > l &&
-            unaryKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
-          l = beforeParen
-      } else if (operandCh(m.charAt(l))) {
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-      } else return None
-      var ls = l + 1
-      // boundary sanity: a blanked literal abutting the operand means a
-      // quoted identifier/string base — decline rather than misparse
-      if (ls > 0 && m.charAt(ls - 1) == ' ' &&
-          !cur.charAt(ls - 1).isWhitespace) return None
-      // ---- unary sign on the left operand ----
+      // The right operand, its signs included.
+      var rs = idx + 2
+      while (rs < m.length && cur.charAt(rs).isWhitespace) rs += 1
+      var r = rs
+      while (r < m.length && (m.charAt(r) == '-' || m.charAt(r) == '+' ||
+          cur.charAt(r).isWhitespace)) r += 1
+      val re = view.operandAfter(r).getOrElse(return None)._2
+      val (ls0, le) = view.operandBefore(idx).getOrElse(return None)
+      var ls = ls0
+      // A sign before the left operand is unary at the start, after an
+      // operator, or after a clause keyword.
       var s = ls - 1
       while (s >= 0 && cur.charAt(s).isWhitespace) s -= 1
       if (s >= 0 && (m.charAt(s) == '-' || m.charAt(s) == '+')) {
         var p = s - 1
         while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
-        val unary =
-          if (p < 0) true
-          else if ("(,=<>+-*/%|&~".indexOf(m.charAt(p)) >= 0) true
-          else if (operandCh(m.charAt(p))) {
-            var w = p
-            while (w >= 0 && operandCh(m.charAt(w))) w -= 1
-            unaryKeywords(cur.substring(w + 1, p + 1).toLowerCase)
-          } else false
+        val unary = p < 0 || "(,=<>+-*/%|&~".indexOf(m.charAt(p)) >= 0 ||
+          view.operandBefore(s).exists { case (a, b) =>
+            DuckLexer.isClauseKeyword(cur.substring(a, b)) }
         if (unary) ls = s
       }
-      val lText = cur.substring(ls, le).trim
-      val rText = cur.substring(rs, re).trim
-      if (lText.isEmpty || rText.isEmpty) return None
+      val lText = cur.substring(ls, le)
+      val rText = cur.substring(rs, re)
       cur = cur.substring(0, ls) + "power(" + lText + ", " + rText + ")" +
         cur.substring(re)
       changed = true
@@ -438,23 +376,17 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     * negation, `~~`/`!~~` are [NOT] LIKE. Spark's `~` is unary bitwise
     * NOT, so every infix use is a parse error and rides the failure
     * chain — no native statement can be claimed (a genuine unary `~`
-    * has no left operand and declines). Operands are recognized
-    * textually over the literal-masked text: string literals, numbers,
-    * dotted identifier chains, function calls, parenthesized groups.
+    * has no left operand and declines). The operands are the lexer's
+    * ([[DuckLexer.operandBefore]], [[DuckLexer.operandAfter]]).
     * Precedence pinned on 1.0: comparisons are looser (safe on either
     * boundary); left-adjacent `||`/arithmetic binds FIRST (`'a'||'b' ~
     * p` groups the concat — the one-operand extraction would misgroup,
     * and a boolean fed to Spark's `||` silently coerces to concat, so
     * those decline); right-adjacent `||` is the left-assoc
-    * same-precedence class (`(a ~ b) || c`) and rewrites exactly;
-    * right-adjacent arithmetic binds tighter and declines.
+    * same-precedence class (`(a ~ b) || c` — pinned `'ab' ~ 'a' || 'b'`
+    * = 'falseb') and rewrites exactly; right-adjacent arithmetic binds
+    * tighter (`a ~ b + 1` groups `b + 1`) and declines.
     */
-  private val tildeKeywords = Set("select", "where", "when", "then",
-    "else", "and", "or", "not", "by", "having", "on", "return",
-    "returns", "case", "set", "limit", "offset", "in", "as", "distinct",
-    "all", "union", "except", "intersect", "from", "join", "between",
-    "like", "ilike", "is", "values", "filter", "qualify")
-
   private def tildeOpRewrite(text: String): Option[String] = {
     if (!text.contains("~")) return None
     var cur = text
@@ -462,99 +394,23 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
-      val n = m.length
+      val view = DuckLexer(cur)
+      val m = view.masked
       val ti = m.indexOf('~')
       if (ti < 0) return if (changed) Some(cur) else None
       // operator token: [opS, opE) — longest of !~~, ~~, !~, ~
-      var opS = ti
-      var opE = ti + 1
-      if (opE < n && m.charAt(opE) == '~') opE += 1
-      if (opS > 0 && m.charAt(opS - 1) == '!') opS -= 1
-      val op = cur.substring(opS, opE)
-      // ---- right operand [rs, re): literal | paren group | word chain
-      // (with optional call parens) ----
-      var r = opE
-      while (r < n && cur.charAt(r).isWhitespace) r += 1
-      if (r >= n) return None
-      val rs = r
-      if (cur.charAt(r) == '\'') {
-        val lit = DuckLexer(cur).stringAt(r).filter(_.closed).getOrElse(return None)
-        r = lit.end
-      } else if (m.charAt(r) == '(') {
-        val c = DuckLexer(cur).closeOf(r)
-        if (c < 0) return None
-        r = c
-      } else if (operandCh(m.charAt(r))) {
-        while (r < n && operandCh(m.charAt(r))) r += 1
-        var k = r
-        while (k < n && cur.charAt(k).isWhitespace) k += 1
-        if (k < n && m.charAt(k) == '(') {
-          val c = DuckLexer(cur).closeOf(k)
-          if (c < 0) return None
-          r = c
-        }
-      } else return None
-      val re = r
-      // ---- left operand (ls, le]: literal | paren group | word chain ----
-      var l = opS - 1
-      while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-      if (l < 0) return None
-      val le = l + 1
-      if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a string literal: the operand is all of it
-        l = DuckLexer(cur).stringAt(l).filter(_.end == l + 1)
-          .getOrElse(return None).start - 1
-      } else if (m.charAt(l) == ')') {
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
-        // optional function name directly before the open paren — but
-        // never a clause keyword (`WHERE (a) ~ p` is a plain group)
-        val beforeParen = l
-        while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-        val nameEnd = l
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-        if (nameEnd == l ||
-            tildeKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
-          l = beforeParen
-      } else if (operandCh(m.charAt(l))) {
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-      } else return None
-      val ls = l + 1
-      // ---- boundary guards (Postgres precedence, pinned on 1.0):
-      // comparisons =/</> are LOOSER than ~ — safe on either side.
-      // Left-adjacent ||/arithmetic bind first ('a'||'b' ~ p groups the
-      // concat) — one-operand extraction would misgroup, decline.
-      // Right-adjacent || is the left-assoc same-precedence class
-      // ((a ~ b) || c — pinned 'ab' ~ 'a' || 'b' = 'falseb'), so the
-      // rewrite is exact; right-adjacent arithmetic binds tighter
-      // (a ~ b + 1 groups b + 1), decline. ----
-      var pb = ls - 1
-      while (pb >= 0 && cur.charAt(pb).isWhitespace) pb -= 1
-      if (pb >= 0 && "|+-*/%^&~!".indexOf(m.charAt(pb)) >= 0)
-        return None
-      var pa = re
-      while (pa < n && cur.charAt(pa).isWhitespace) pa += 1
-      if (pa < n && "+-*/%^&~![".indexOf(m.charAt(pa)) >= 0)
-        return None
-      val lText = cur.substring(ls, le).trim
-      val rText = cur.substring(rs, re).trim
-      if (lText.isEmpty || rText.isEmpty) return None
-      val repl = op match {
+      val opS = if (ti > 0 && m.charAt(ti - 1) == '!') ti - 1 else ti
+      val opE = if (ti + 1 < m.length && m.charAt(ti + 1) == '~') ti + 2 else ti + 1
+      val (rs, re) = view.operandAfter(opE).getOrElse(return None)
+      val (ls, le) = view.operandBefore(opS).getOrElse(return None)
+      if (view.bindsTighter(ls, re, "|+-*/%^&~!", "+-*/%^&~![")) return None
+      val lText = cur.substring(ls, le)
+      val rText = cur.substring(rs, re)
+      val repl = cur.substring(opS, opE) match {
         case "~" => s"regexp_full_match($lText, $rText)"
         case "!~" => s"(NOT regexp_full_match($lText, $rText))"
         case "~~" => s"($lText LIKE $rText)"
         case "!~~" => s"($lText NOT LIKE $rText)"
-        case _ => return None
       }
       cur = cur.substring(0, ls) + repl + cur.substring(re)
       changed = true
@@ -580,9 +436,8 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     * Under a UTC session the from_utc_timestamp result renders and
     * epoch-extracts exactly like DuckDB's naive TIMESTAMP. Only ever
     * runs on parse failure (Spark has no AT TIME ZONE grammar), so no
-    * native statement can be claimed. Operands are recognized textually
-    * over the literal-masked text: typed/plain string literals, dotted
-    * identifier chains, function calls, parenthesized groups; the zone
+    * native statement can be claimed. The operand is the lexer's
+    * ([[DuckLexer.operandBefore]], typed literals included); the zone
     * must be a string literal. Left-adjacent arithmetic/concat declines
     * (one-operand extraction would misgroup) to the landing-pad hint.
     */
@@ -595,65 +450,16 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     var rounds = 0
     while (rounds < 16) {
       rounds += 1
-      val m = DuckLexer(cur).masked
-      val n = m.length
-      val mt = atRe.findFirstMatchIn(m).getOrElse(
+      val view = DuckLexer(cur)
+      val mt = atRe.findFirstMatchIn(view.masked).getOrElse(
         return if (changed) Some(cur) else None)
-      // ---- zone: a string literal straight after the keywords ----
-      var r = mt.end
-      while (r < n && cur.charAt(r).isWhitespace) r += 1
-      if (r >= n || cur.charAt(r) != '\'') return None
-      val zoneLit = DuckLexer(cur).stringAt(r).filter(_.closed).getOrElse(return None)
-      val zone = cur.substring(r, zoneLit.end)
-      val re0 = zoneLit.end
-      // ---- left operand (ls, le] ----
-      var l = mt.start - 1
-      while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-      if (l < 0) return None
-      val le = l + 1
-      if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a string literal: the operand is all of it,
-        // with a typed-literal keyword (TIMESTAMP '...' / DATE '...')
-        // pulled in if present.
-        val start = DuckLexer(cur).stringAt(l).filter(_.end == l + 1)
-          .getOrElse(return None).start
-        l = start - 1
-        while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-        val kwEnd = l
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-        val kw = cur.substring(l + 1, kwEnd + 1).toLowerCase
-        if (!Set("timestamp", "timestamp_ntz", "date").contains(kw))
-          l = start - 1
-      } else if (m.charAt(l) == ')') {
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
-        val beforeParen = l
-        while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-        val nameEnd = l
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-        if (nameEnd == l ||
-            tildeKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
-          l = beforeParen
-      } else if (operandCh(m.charAt(l))) {
-        while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-      } else return None
-      val ls = l + 1
+      val (zs, ze) = view.operandAfter(mt.end).getOrElse(return None)
+      if (view.stringAt(zs).forall(_.end != ze)) return None
+      val (ls, le) = view.operandBefore(mt.start).getOrElse(return None)
       // left-adjacent operator binds first in DuckDB — decline rather
       // than misgroup (same policy as the ~ rewrite).
-      var pb = ls - 1
-      while (pb >= 0 && cur.charAt(pb).isWhitespace) pb -= 1
-      if (pb >= 0 && "|+-*/%^&~!".indexOf(m.charAt(pb)) >= 0) return None
-      val lText = cur.substring(ls, le).trim
-      if (lText.isEmpty) return None
+      if (view.bindsTighter(ls, le, "|+-*/%^&~!", "")) return None
+      val lText = cur.substring(ls, le)
       // strip redundant outer parens to classify the operand's source
       var core = lText
       while (core.startsWith("(") && core.endsWith(")") &&
@@ -662,8 +468,8 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
       val fn =
         if (instantHeadRe.findFirstIn(core).isDefined) "from_utc_timestamp"
         else "to_utc_timestamp"
-      cur = cur.substring(0, ls) + fn + "(" + lText + ", " + zone + ")" +
-        cur.substring(re0)
+      cur = cur.substring(0, ls) + fn + "(" + lText + ", " + cur.substring(zs, ze) + ")" +
+        cur.substring(ze)
       changed = true
     }
     None
@@ -1009,6 +815,57 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
       "parenthesized set-op branches, and ? parameters decline). Write " +
       "the window form directly: SELECT ... FROM (SELECT *, row_number() " +
       "OVER (PARTITION BY exprs ORDER BY tiebreak) rn FROM t) WHERE rn = 1."
+  private val columnsHint =
+    "COLUMNS(...) could not be expanded: the common forms " +
+      "(SELECT COLUMNS('regex') FROM t, COLUMNS(*), COLUMNS(* " +
+      "EXCLUDE (a, b)), the name-filter lambda COLUMNS(c -> " +
+      "c LIKE '...'), a mixed select list SELECT a, " +
+      "COLUMNS('re') FROM t, and the set in any expression " +
+      "position of one select item — min(COLUMNS(*)), " +
+      "round(COLUMNS('^x'), 1), min(COLUMNS(*)) + 1, lockstep " +
+      "repeats like max(COLUMNS(s)) - min(COLUMNS(s)) — " +
+      "single resolvable table, ≥1 matching column, every " +
+      "excluded name present) run automatically — including " +
+      "COLUMNS in WHERE (the per-column AND expansion) — but " +
+      "this one doesn't: e.g. two DIFFERENT sets in one " +
+      "expression (a DuckDB binder error too) or a join " +
+      "source. Enumerate the columns explicitly " +
+      "(df.select(df.columns.map(c => expr(...)): _*)), or use " +
+      "* EXCLUDE (...) / * REPLACE (...), which do run here."
+  private val asofHint =
+    "ASOF JOIN could not be rewritten: the common forms " +
+      "(FROM l ASOF [LEFT] JOIN r ON l.k = r.k AND l.ts >= " +
+      "r.ts — any of >=, >, <=, < in either conjunct order — " +
+      "or USING (k, ts), explicit select list or left-side " +
+      "star, single-part view names, including inside a " +
+      "parenthesized subquery or CTE body) run automatically, " +
+      "but this shape doesn't — and left unrewritten Spark would " +
+      "misparse ASOF as a table alias. Use the asof_join() " +
+      "table function directly: asof_join('left_view', " +
+      "'right_view', 'on_col', 'left_order', 'right_order', " +
+      "'payload_csv'[, strict[, inner[, forward]]]). " +
+      "See README 'As-of joins'."
+  private val recursiveHint =
+    "Spark 4.1 hosts standard UNION ALL recursive CTEs " +
+      "natively, single-CTE UNION-distinct recursion " +
+      "(`WITH RECURSIVE r AS (seed UNION step) SELECT ...`) " +
+      "is rewritten to run automatically (fixpoint), and so " +
+      "is the common linear `WITH RECURSIVE r USING " +
+      "KEY (...)` form " +
+      "(fixpoint_keyed) — this statement matched none: check " +
+      "for multiple CTEs in one WITH, a recursive reference in " +
+      "the seed branch, or UNION ALL mixed after the recursive " +
+      "UNION. For " +
+      "general fixpoints use the table functions directly: " +
+      "SELECT ... FROM fixpoint('seed_view', " +
+      "'SELECT ... FROM __frontier ...'[, max_rounds[, buckets]]) " +
+      "for UNION-distinct recursion, or fixpoint_keyed(seed, " +
+      "step_sql, 'key_csv') for one-row-per-key upsert " +
+      "semantics — the step SQL sees each round's new/changed " +
+      "rows as the view __frontier and the accumulated state " +
+      "as __recurring (USING KEY statements with " +
+      "recurring.<name> rewrite onto it automatically). See " +
+      "README 'Recursive queries'."
   private val groupsFrameRe =
     "(?is).*\\bGROUPS\\s+(?:BETWEEN|UNBOUNDED|CURRENT|\\d).*".r
   private val tildeRe = "(?s).*~.*".r
@@ -1490,34 +1347,8 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
                   "'intersect[_all]|except[_all]') directly, or the " +
                   "Dataset API: df1.unionByName(df2, " +
                   "allowMissingColumns = true).")
-              case recursiveRe() =>
-                Some("Spark 4.1 hosts standard UNION ALL recursive CTEs " +
-                  "natively, single-CTE UNION-distinct recursion " +
-                  "(`WITH RECURSIVE r AS (seed UNION step) SELECT ...`) " +
-                  "is rewritten to run automatically (fixpoint), and so " +
-                  "is the common linear `WITH RECURSIVE r USING " +
-                  "KEY (...)` form " +
-                  "(fixpoint_keyed) — this statement matched none. For " +
-                  "general fixpoints use the table functions directly: " +
-                  "SELECT ... FROM fixpoint('seed_view', " +
-                  "'SELECT ... FROM __frontier ...'[, max_rounds[, buckets]]) " +
-                  "for UNION-distinct recursion, or fixpoint_keyed(seed, " +
-                  "step_sql, 'key_csv') for one-row-per-key upsert " +
-                  "semantics — the step SQL sees each round's new/changed " +
-                  "rows as the view __frontier and the accumulated state " +
-                  "as __recurring (USING KEY statements with " +
-                  "recurring.<name> rewrite onto it automatically). See " +
-                  "README 'Recursive queries'.")
-              case asofRe() =>
-                Some("If you meant DuckDB's ASOF JOIN: the common backward " +
-                  "form (FROM l ASOF [LEFT] JOIN r ON l.k = r.k AND " +
-                  "l.ts >= r.ts, explicit select list, single-part view " +
-                  "names) is rewritten to run automatically, but this one " +
-                  "wasn't — use the asof_join() table function directly: " +
-                  "SELECT ... FROM " +
-                  "asof_join('left_view', 'right_view', 'on_col', 'left_order', " +
-                  "'right_order', 'payload_csv'[, strict[, inner]]). " +
-                  "See README 'As-of joins'.")
+              case recursiveRe() => Some(recursiveHint)
+              case asofRe() => Some(asofHint)
               case summarizeRe() =>
                 Some("If you meant DuckDB's SUMMARIZE: the table form " +
                   "`SUMMARIZE t` runs directly (rewritten to the " +
@@ -1550,22 +1381,7 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
                   "source, or an unresolvable table) — expand the star " +
                   "by hand, swapping the replaced columns: SELECT c1, " +
                   "expr AS c2, ... FROM t.")
-              case columnsRe() =>
-                Some("If you meant DuckDB's COLUMNS(...) expression: the " +
-                  "common forms (SELECT COLUMNS('regex') FROM t, " +
-                  "COLUMNS(*), COLUMNS(* EXCLUDE (a, b)), the " +
-                  "name-filter lambda COLUMNS(c -> c LIKE '...'), and " +
-                  "the set in ANY expression position of a select item " +
-                  "— min(COLUMNS(*)) + 1, max(COLUMNS(s)) - " +
-                  "min(COLUMNS(s)) in lockstep — over a single " +
-                  "resolvable table with ≥1 match) are star-expanded " +
-                  "to run automatically, but this one wasn't — check " +
-                  "for two DIFFERENT sets in one item (a DuckDB binder " +
-                  "error too), COLUMNS outside the select list, a " +
-                  "join/set-op source, an unknown EXCLUDE name, or " +
-                  "zero matches. Enumerate the columns " +
-                  "explicitly (one line in the DataFrame API: " +
-                  "df.select(df.columns.map(c => expr(...)): _*)).")
+              case columnsRe() => Some(columnsHint)
               case fromFirstRe() =>
                 Some("If you meant DuckDB's FROM-first syntax: the plain " +
                   "form (FROM t [WHERE ...] [ORDER BY ...] ...) runs " +
@@ -1815,59 +1631,6 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     Some(sb.toString)
   }
 
-  /** EXTRACT fields DuckDB has and Spark rejects
-    * (INVALID_EXTRACT_FIELD at analysis, so the statement parses
-    * natively and must be claimed pre-delegation): epoch (the original
-    * field — the engine's epoch() alias carries DuckDB's DOUBLE-seconds
-    * contract), plus the round-18 set — era/isoyear/century/decade/
-    * millennium on the registered scalar aliases, the session-offset
-    * trio timezone/timezone_hour/timezone_minute (the engine pins the
-    * session to UTC, where DuckDB's naive-TIMESTAMP answer is 0; NULL
-    * passes through), julian (DuckDB's JDN-plus-day-fraction spelling:
-    * 2440588 + epoch-days, exactly `2440588 + unix_micros/86.4e9`),
-    * isodow (Mon=1..Sun=7), dayofyear, and the SECONDS-INCLUSIVE
-    * microsecond/millisecond fields (DuckDB: 11.123456 s → 11123456).
-    * The same fields are claimed in the `date_part('<field>', x)` /
-    * `datepart` spellings — literal field only, so Spark's native
-    * date_part keeps every field it already supports. Results CAST to
-    * DuckDB's BIGINT (julian: DOUBLE).
-    */
-  private def duckExtractFields = GraftSparkExtensions.duckExtractFields
-  private def duckExtractTemplate(field: String, e: String): String =
-    GraftSparkExtensions.duckExtractTemplate(field, e)
-  private val extractFieldRe =
-    ("(?i)\\bEXTRACT\\s*\\(\\s*(" + duckExtractFields + ")\\s+FROM\\b").r
-  private val datePartFieldRe =
-    ("(?i)\\b(?:date_part|datepart)\\s*\\(\\s*'(" + duckExtractFields +
-      ")'\\s*,").r
-  private def extractFieldRewrite(text: String): Option[String] = {
-    if (extractFieldRe.findFirstIn(text).isEmpty &&
-      datePartFieldRe.findFirstIn(text).isEmpty) return None
-    val masked = DuckLexer(text).masked
-    // EXTRACT(field FROM e): field is a bare word, match on masked;
-    // date_part('field', e): field is a literal (masked to spaces), so
-    // match raw text and require the call keyword itself unmasked.
-    val ms =
-      (extractFieldRe.findAllMatchIn(masked).map(m => (m, true)) ++
-        datePartFieldRe.findAllMatchIn(text).filter(m =>
-          DuckLexer(text).isCode(m.start)).map(m => (m, false)))
-        .toList.sortBy(_._1.start)
-    if (ms.isEmpty) return None
-    val sb = new StringBuilder
-    var pos = 0
-    for ((m, _) <- ms if m.start >= pos) {
-      val open = masked.indexOf('(', m.start)
-      val close = DuckLexer(text).closeOf(open)
-      if (close < 0) return None
-      val inner = text.substring(m.end, close - 1).trim
-      sb.append(text.substring(pos, m.start))
-        .append(duckExtractTemplate(m.group(1), inner))
-      pos = close
-    }
-    sb.append(text.substring(pos))
-    Some(sb.toString)
-  }
-
   /** Single-evaluation pattern for an Option-returning claim: an arm's
     * match and its body share one call of the rewrite.
     */
@@ -1875,7 +1638,6 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     def unapply(sql: String): Option[A] = rewrite(sql)
   }
   private val NamedReaderCall = new Claim(namedReaderCallRewrite)
-  private val ExtractField = new Claim(extractFieldRewrite)
   private val EnumDdl = new Claim(EnumTypes.ddlRewrite)
   private val AlteredTempTable = new Claim(AlterTableRewrite.rewrite)
   private val IndexStatement = new Claim(indexRewrite)
@@ -1886,7 +1648,6 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     */
   private def preRewrite(sqlText: String): Either[LogicalPlan, String] = sqlText match {
     case NamedReaderCall(r) => preRewrite(r)
-    case ExtractField(r) => preRewrite(r)
     // DuckDB's `**` power operator. Spark PARSES `a ** b` — as
     // multiply(a, star) — and only dies later in analysis with a
     // confusing INVALID_USAGE_OF_STAR_OR_REGEX, so the parse-failure
@@ -1918,25 +1679,7 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
         // (a select-list COLUMNS the rewrite declined) — a raw string
         // literal containing the text passes through untouched.
         if (!ColumnsRewrite.isColumnsShaped(sqlText)) Right(sqlText)
-        else throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("COLUMNS(...) could not be expanded: the common forms " +
-              "(SELECT COLUMNS('regex') FROM t, COLUMNS(*), COLUMNS(* " +
-              "EXCLUDE (a, b)), the name-filter lambda COLUMNS(c -> " +
-              "c LIKE '...'), a mixed select list SELECT a, " +
-              "COLUMNS('re') FROM t, and the set in any expression " +
-              "position of one select item — min(COLUMNS(*)), " +
-              "round(COLUMNS('^x'), 1), min(COLUMNS(*)) + 1, lockstep " +
-              "repeats like max(COLUMNS(s)) - min(COLUMNS(s)) — " +
-              "single resolvable table, ≥1 matching column, every " +
-              "excluded name present) run automatically — including " +
-              "COLUMNS in WHERE (the per-column AND expansion) — but " +
-              "this one doesn't: e.g. two DIFFERENT sets in one " +
-              "expression (a DuckDB binder error too) or a join " +
-              "source. Enumerate the columns explicitly " +
-              "(df.select(df.columns.map(c => expr(...)): _*)), or use " +
-              "* EXCLUDE (...) / * REPLACE (...), which do run here.")))
+        else DuckCommands.fail(columnsHint)
       }
     case positionalRe() if positionalShaped(sqlText) =>
       preRewrite(positionalPreRewrite(sqlText))
@@ -1948,19 +1691,7 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     case _ if RecursiveUnionRewrite.isShaped(sqlText) =>
       RecursiveUnionRewrite.rewrite(sqlText) match {
         case Some(r) => preRewrite(r)
-        case None => throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("This UNION-distinct WITH RECURSIVE shape could not be " +
-              "rewritten (the single-CTE form `WITH RECURSIVE r [(cols)] " +
-              "AS (seed UNION step) SELECT ...` runs automatically via " +
-              "the fixpoint() table function) — check for multiple " +
-              "CTEs in one WITH, a recursive reference in the seed " +
-              "branch, or UNION ALL mixed after the recursive UNION. " +
-              "Use the table function directly: SELECT * FROM " +
-              "fixpoint('<seed view or SQL>', '<step SQL over " +
-              "__frontier>'[, max_rounds]); Spark runs UNION ALL " +
-              "recursion natively.")))
+        case None => DuckCommands.fail(recursiveHint)
       }
     // DuckDB temp-table DML (CREATE TEMP TABLE [AS], INSERT INTO a
     // registered temp table or INSERT ... RETURNING, DROP TABLE of a
@@ -2027,21 +1758,7 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
     case _ if asofShaped(sqlText) =>
       AsofJoinRewrite.rewrite(sqlText)
         .orElse(AsofJoinRewrite.rewriteNested(sqlText))
-        .map(preRewrite).getOrElse(
-        throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("ASOF JOIN could not be rewritten: the common forms " +
-              "(FROM l ASOF [LEFT] JOIN r ON l.k = r.k AND l.ts >= " +
-              "r.ts — any of >=, >, <=, < in either conjunct order — " +
-              "or USING (k, ts), explicit select list or left-side " +
-              "star, single-part view names, including inside a " +
-              "parenthesized subquery or CTE body) run automatically, " +
-              "but this shape doesn't — and left unrewritten Spark would " +
-              "misparse ASOF as a table alias. Use the asof_join() " +
-              "table function directly: asof_join('left_view', " +
-              "'right_view', 'on_col', 'left_order', 'right_order', " +
-              "'payload_csv'[, strict[, inner[, forward]]])."))))
+        .map(preRewrite).getOrElse(DuckCommands.fail(asofHint))
     // ALTER TABLE parses natively (v2 syntax) but dies in analysis on
     // a temp view — the graft temp-table forms re-materialize the
     // snapshot as a command; catalog tables keep Spark's own ALTER.
@@ -2158,43 +1875,55 @@ class GraftHintParser extends org.apache.spark.sql.catalyst.parser.ParserInterfa
 }
 
 object GraftSparkExtensions {
-  /** EXTRACT/date_part field vocabulary the pre-parse claim and the
-    * registry-level datepart list form share (moved object-side in the
-    * thirteenth sweep so both arms use ONE definition).
+  /** The EXTRACT/date_part fields DuckDB has and Spark rejects or
+    * answers differently, as DuckDB computes them over `e`; None for any
+    * other field. epoch is the engine's epoch() alias (DuckDB's
+    * DOUBLE-seconds contract); era/isoyear/century/decade/millennium are
+    * the registered scalar aliases; the session-offset trio
+    * timezone/timezone_hour/timezone_minute is 0 (the engine pins the
+    * session to UTC, where DuckDB's naive-TIMESTAMP answer is 0; NULL
+    * passes through); julian is DuckDB's JDN-plus-day-fraction, 2440588
+    * + epoch-days; isodow is Mon=1..Sun=7, derived from the 0-based
+    * Sunday dayofweek() override, not from Spark's Monday-0 weekday;
+    * microsecond/millisecond include the seconds (11.123456 s →
+    * 11123456). Results are DuckDB's BIGINT (julian: DOUBLE).
     */
-  private[sql] val duckExtractFields =
-    "timezone_hour|timezone_minute|timezone|epoch|era|isoyear|century|" +
-      "decade|millennium|julian|isodow|dayofyear|microseconds|" +
-      "microsecond|milliseconds|millisecond|dayofweek|weekday|dow"
-
-  private[sql] def duckExtractTemplate(field: String, e: String): String =
-    field.toLowerCase match {
-      case "epoch" => s"epoch($e)"
-      case f @ ("era" | "isoyear" | "century" | "decade" | "millennium") =>
-        s"CAST($f($e) AS BIGINT)"
-      case "timezone" | "timezone_hour" | "timezone_minute" =>
-        s"CAST(CASE WHEN CAST(($e) AS TIMESTAMP) IS NULL THEN NULL " +
-          "ELSE 0 END AS BIGINT)"
-      case "julian" =>
-        s"CAST(2440588.0 + unix_micros(CAST(($e) AS TIMESTAMP)) / " +
-          "86400000000.0 AS DOUBLE)"
-      // dayofweek()/weekday() resolve to the sweep-13 OVERRIDES
-      // (0-based Sunday, the host contract) — isodow derives Mon=1..
-      // Sun=7 from that, NOT from Spark's Monday-0 weekday.
-      case "isodow" =>
-        s"CAST(pmod(dayofweek(CAST(($e) AS DATE)) + 6, 7) + 1 AS BIGINT)"
-      case "dayofweek" | "weekday" | "dow" =>
-        s"CAST(dayofweek(CAST(($e) AS DATE)) AS BIGINT)"
-      case "dayofyear" =>
-        s"CAST(dayofyear(CAST(($e) AS DATE)) AS BIGINT)"
-      case "microsecond" | "microseconds" =>
-        s"CAST(pmod(unix_micros(CAST(($e) AS TIMESTAMP)), 60000000) " +
-          "AS BIGINT)"
-      case "millisecond" | "milliseconds" =>
-        s"CAST(pmod(unix_micros(CAST(($e) AS TIMESTAMP)), 60000000) " +
-          "DIV 1000 AS BIGINT)"
+  private[sql] def duckExtract(field: String, e: Expression): Option[Expression] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.catalyst.expressions.{Add, CaseWhen, Cast, Divide,
+      IntegralDivide, IsNull, Literal}
+    import org.apache.spark.sql.types.{DateType, DoubleType, LongType, TimestampType}
+    def fn(name: String, args: Expression*): Expression =
+      UnresolvedFunction(name, args, isDistinct = false)
+    // A cast as SQL text spells it, so it shows in the column name.
+    def cast(x: Expression, t: DataType): Expression = {
+      val c = Cast(x, t)
+      c.setTagValue(Cast.USER_SPECIFIED_CAST, ())
+      c
     }
-
+    def micros = fn("unix_micros", cast(e, TimestampType))
+    def secondMicros = fn("pmod", micros, Literal(60000000))
+    def date = cast(e, DateType)
+    def decimal(v: String) = Literal(new java.math.BigDecimal(v))
+    Some(field.toLowerCase match {
+      case "epoch" => fn("epoch", e)
+      case f @ ("era" | "isoyear" | "century" | "decade" | "millennium") =>
+        cast(fn(f, e), LongType)
+      case "timezone" | "timezone_hour" | "timezone_minute" =>
+        cast(CaseWhen(Seq(IsNull(cast(e, TimestampType)) -> Literal(null)), Some(Literal(0))),
+          LongType)
+      case "julian" =>
+        cast(Add(decimal("2440588.0"), Divide(micros, decimal("86400000000.0"))), DoubleType)
+      case "isodow" =>
+        cast(Add(fn("pmod", Add(fn("dayofweek", date), Literal(6)), Literal(7)), Literal(1)),
+          LongType)
+      case "dayofweek" | "weekday" | "dow" => cast(fn("dayofweek", date), LongType)
+      case "dayofyear" => cast(fn("dayofyear", date), LongType)
+      case "microsecond" | "microseconds" => cast(secondMicros, LongType)
+      case "millisecond" | "milliseconds" => cast(IntegralDivide(secondMicros, Literal(1000)), LongType)
+      case _ => return None
+    })
+  }
 
   /** txid_current(): session-monotonic statement id source. */
   private[sql] val txidCounter = new java.util.concurrent.atomic.AtomicLong(1000L)
@@ -3878,28 +3607,19 @@ object GraftSparkExtensions {
 
   /** date_part/datepart: Spark-native for a scalar field (via extract —
     * the same registry target), the host's STRUCT form for a list of
-    * parts. Fields the host defines differently route through
-    * duckExtractTemplate (the same text the pre-parse claim uses),
-    * parsed back to an expression against the source's SQL text.
+    * parts. Fields the host defines differently are [[duckExtract]]'s.
     */
   private def datePartExpr(a: Seq[Expression]): Expression = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, CreateNamedStruct, Literal}
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.types.LongType
-    val fieldSet = duckExtractFields.split('|').toSet
-    def onePart(name: String, forStruct: Boolean): Expression = {
-      val lower = name.toLowerCase
-      if (fieldSet(lower))
-        org.apache.spark.sql.SparkSession.active.sessionState.sqlParser
-          .parseExpression(duckExtractTemplate(lower, a(1).sql))
-      else {
+    def onePart(name: String, forStruct: Boolean): Expression =
+      duckExtract(name, a(1)).getOrElse {
         val native = org.apache.spark.sql.catalyst.expressions.Extract
-          .createExpr("date_part", Literal(lower), a(1))
+          .createExpr("date_part", Literal(name.toLowerCase), a(1))
         // struct fields are BIGINT on the host; the scalar form keeps
         // Spark's native result type (pre-override behavior).
         if (forStruct) Cast(native, LongType) else native
       }
-    }
     a(0) match {
       case org.apache.spark.sql.catalyst.expressions.CreateArray(parts, _)
           if parts.nonEmpty && parts.forall(p =>
@@ -4047,12 +3767,19 @@ object GraftSparkExtensions {
       // datepart/date_part with a LIST of parts returns the host's
       // STRUCT{part: BIGINT, ...} (datepart(['year','month'], d)).
       // Scalar fields delegate to Spark's native extract; fields Spark
-      // rejects or mis-bases reuse the duckExtractTemplate text parsed
-      // back to an expression. Registered over the native name, so the
-      // scalar form must behave identically to before (extract ≡
-      // date_part in Spark's registry).
+      // rejects or mis-bases are duckExtract's. Registered over the
+      // native name, so the scalar form must behave identically to
+      // before (extract ≡ date_part in Spark's registry).
       aliasFn("datepart", (2, 2))(a => datePartExpr(a)),
       aliasFn("date_part", (2, 2))(a => datePartExpr(a)),
+      // EXTRACT(field FROM x): Spark's parser builds a call of extract,
+      // so statements and expression fragments both arrive here.
+      aliasFn("extract", (2, 2)) { a =>
+        import org.apache.spark.sql.catalyst.expressions.Extract
+        Some(a(0)).filter(f => f.foldable && f.dataType == StringType)
+          .flatMap(f => duckExtract(String.valueOf(f.eval(null)), a(1)))
+          .getOrElse(new Extract(a(0), a(1)))
+      },
       // alias(): the name a bare column reference binds under; for
       // other expressions the host prints the expression text.
       aliasFn("alias", (1, 1)) { a =>

@@ -33,121 +33,19 @@ package graft.sql
   *    of an unordered result is arbitrary rows on both engines —
   *    declined to the hint rather than picked silently).
   *
-  * Operand extraction reuses the tilde-operator discipline
-  * (GraftSparkExtensions.tildeOpRewrite, round 14): one operand on
-  * each side — a literal, a word chain (optional call parens), or a
-  * parenthesized group — with tighter-binding neighbors (arithmetic,
-  * concat, brackets) DECLINING to the hint instead of misgrouping.
+  * Each operator reads its operands with the lexer's operand grammar
+  * ([[DuckLexer.operandBefore]], [[DuckLexer.operandAfter]]), the one
+  * the `**`, `~` and AT TIME ZONE rewrites read too, and declines to the
+  * hint when a tighter-binding neighbour (arithmetic, concat, brackets)
+  * would make the one-operand extraction misgroup.
   */
 object ListOpRewrite {
 
   import DuckLexer.operandCh
 
-  /** End index (exclusive) of the right operand starting at/after
-    * `from`: literal | paren group | word chain w/ optional call parens
-    * | bracket literal (the duck list form — rewritten later in the
-    * chain).
-    */
-  private def scanRight(cur: String, m: String, from: Int): Option[Int] = {
-    val n = m.length
-    var r = from
-    while (r < n && cur.charAt(r).isWhitespace) r += 1
-    if (r >= n) return None
-    if (cur.charAt(r) == '\'') DuckLexer(cur).stringAt(r).filter(_.closed).map(_.end)
-    else if (m.charAt(r) == '(' || m.charAt(r) == '[') {
-      // a paren group, or a bracket list literal
-      val c = DuckLexer(cur).closeOf(r)
-      if (c < 0) None else Some(c)
-    } else if (operandCh(m.charAt(r))) {
-      while (r < n && operandCh(m.charAt(r))) r += 1
-      var k = r
-      while (k < n && cur.charAt(k).isWhitespace) k += 1
-      if (k < n && m.charAt(k) == '(') {
-        val c = DuckLexer(cur).closeOf(k)
-        if (c < 0) None else Some(c)
-      } else Some(r)
-    } else None
-  }
-
-  private val clauseKeywords = Set("select", "where", "and", "or", "on",
-    "when", "then", "else", "by", "having", "qualify", "not", "in",
-    "as", "from", "join", "case", "limit", "all", "any", "some")
-
-  /** Public bridge for sibling rewrites (EnumTypes' `x::enum` claim
-    * reuses the operand discipline).
-    */
-  private[sql] def scanLeftPub(cur: String, m: String, at: Int): Option[Int] =
-    scanLeft(cur, m, at)
-
-  /** Right-operand bridge for EnumTypes' comparison wrap. */
-  private[sql] def scanRightPub(cur: String, m: String, from: Int): Option[Int] =
-    scanRight(cur, m, from)
-
-  /** Start index of the left operand whose last char sits at `at`
-    * (inclusive): mirrors scanRight. Returns the start index.
-    */
-  private def scanLeft(cur: String, m: String, at: Int): Option[Int] = {
-    var l = at
-    while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-    if (l < 0) return None
-    if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-      // closing quote of a string literal: the operand is all of it
-      DuckLexer(cur).stringAt(l).filter(_.end == l + 1).map(_.start)
-    } else if (m.charAt(l) == ']') {
-      var depth = 0
-      var i = l
-      while (i >= 0) {
-        m.charAt(i) match {
-          case ']' => depth += 1
-          case '[' => depth -= 1; if (depth == 0) return Some(i)
-          case _ =>
-        }
-        i -= 1
-      }
-      None
-    } else if (m.charAt(l) == ')') {
-      var depth = 1
-      l -= 1
-      while (l >= 0 && depth > 0) {
-        m.charAt(l) match {
-          case ')' => depth += 1
-          case '(' => depth -= 1
-          case _ =>
-        }
-        l -= 1
-      }
-      if (depth != 0) return None
-      // optional function name directly before the open paren — but
-      // never a clause keyword
-      val beforeParen = l
-      while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-      val nameEnd = l
-      while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-      if (nameEnd == l ||
-        clauseKeywords(cur.substring(l + 1, nameEnd + 1).toLowerCase))
-        Some(beforeParen + 1)
-      else Some(l + 1)
-    } else if (operandCh(m.charAt(l))) {
-      while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-      Some(l + 1)
-    } else None
-  }
-
-  /** Tighter-binding neighbor guards (the tilde discipline): decline if
-    * the char left of the left operand or right of the right operand
-    * binds tighter than a comparison.
-    */
-  private def neighborsSafe(cur: String, m: String, ls: Int, re: Int)
-      : Boolean = {
-    var pb = ls - 1
-    while (pb >= 0 && cur.charAt(pb).isWhitespace) pb -= 1
-    if (pb >= 0 && "|+-*/%^&~!@<".indexOf(m.charAt(pb)) >= 0) return false
-    var pa = re
-    while (pa < m.length && cur.charAt(pa).isWhitespace) pa += 1
-    if (pa < m.length && "+-*/%^&~!@[<|".indexOf(m.charAt(pa)) >= 0)
-      return false
-    true
-  }
+  // The neighbours that bind tighter than a comparison, left and right.
+  private val tighterLeft = "|+-*/%^&~!@<"
+  private val tighterRight = "+-*/%^&~!@[<|"
 
   /** `^@`, `&&`, `@>`, `<@` — one per pass, re-entering via the chain's
     * recursion for multiples and for bracket-literal operands.
@@ -160,19 +58,18 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
+      val view = DuckLexer(cur)
       val hits = ops.flatMap { op =>
-        val i = m.indexOf(op)
+        val i = view.masked.indexOf(op)
         if (i >= 0) Some((i, op)) else None
       }
       if (hits.isEmpty) return if (changed) Some(cur) else None
       val (oi, op) = hits.minBy(_._1)
-      val re = scanRight(cur, m, oi + op.length).getOrElse(return None)
-      val ls = scanLeft(cur, m, oi - 1).getOrElse(return None)
-      if (!neighborsSafe(cur, m, ls, re)) return None
-      val a = cur.substring(ls, oi).trim
-      val b = cur.substring(oi + op.length, re).trim
-      if (a.isEmpty || b.isEmpty) return None
+      val (rs, re) = view.operandAfter(oi + op.length).getOrElse(return None)
+      val (ls, le) = view.operandBefore(oi).getOrElse(return None)
+      if (view.bindsTighter(ls, re, tighterLeft, tighterRight)) return None
+      val a = cur.substring(ls, le)
+      val b = cur.substring(rs, re)
       val repl = op match {
         case "^@" => s"startswith($a, $b)"
         case "&&" => s"arrays_overlap(array_compact($a), array_compact($b))"
@@ -209,24 +106,13 @@ object ListOpRewrite {
   /** Name of the innermost call enclosing `pos`, lowercased ("" when
     * not inside any call or the paren is a bare group).
     */
-  private def enclosingCallee(cur: String, m: String, pos: Int): String = {
-    var depth = 0
-    var i = pos
-    var open = -1
-    while (i >= 0 && open < 0) {
-      m.charAt(i) match {
-        case ')' => depth += 1
-        case '(' => if (depth == 0) open = i else depth -= 1
-        case _ =>
-      }
-      i -= 1
-    }
-    if (open < 0) return ""
-    var l = open - 1
-    while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
-    val e = l
-    while (l >= 0 && operandCh(m.charAt(l))) l -= 1
-    if (e == l) "" else cur.substring(l + 1, e + 1).toLowerCase
+  private def enclosingCallee(view: DuckLexer, pos: Int): String = {
+    val m = view.masked
+    val open = (pos to 0 by -1).find { i =>
+      m.charAt(i) == '(' && { val c = view.closeOf(i); c < 0 || c > pos }
+    }.getOrElse(return "")
+    view.operandBefore(open).filter { case (s, e) => s < e && operandCh(m.charAt(e - 1)) }
+      .map { case (s, e) => view.text.substring(s, e).toLowerCase }.getOrElse("")
   }
 
   def rewriteJsonArrows(text: String): Option[String] = {
@@ -236,7 +122,8 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 256) {
       rounds += 1
-      val m = DuckLexer(cur).masked
+      val view = DuckLexer(cur)
+      val m = view.masked
       var oi = m.indexOf("->")
       var applied = false
       while (oi >= 0 && !applied) {
@@ -247,43 +134,32 @@ object ListOpRewrite {
         // a higher-order function's argument, so an occurrence inside
         // a call to a known HOF name is SKIPPED — splicing a lambda
         // arrow into json_extract would be silent corruption.
-        if (hofNames(enclosingCallee(cur, m, oi))) skip()
-        else {
-          val reOpt = scanRight(cur, m, oi + opLen)
-          val lsOpt = scanLeft(cur, m, oi - 1)
-          if (reOpt.isEmpty || lsOpt.isEmpty) skip()
-          else {
-            val re = reOpt.get
-            val ls = lsOpt.get
-            val l = cur.substring(ls, oi).trim
-            val kRaw = cur.substring(oi + opLen, re).trim
+        if (hofNames(enclosingCallee(view, oi))) skip()
+        else (view.operandBefore(oi), view.operandAfter(oi + opLen)) match {
+          case (Some((ls, le)), Some((ks, re))) =>
+            val l = cur.substring(ls, le)
+            val kRaw = cur.substring(ks, re)
             // Same-precedence left-assoc chains: a FOLLOWING arrow is
             // fine (this splice becomes its left operand next round);
             // other tight-binding neighbors skip the occurrence.
-            var pb = ls - 1
-            while (pb >= 0 && cur.charAt(pb).isWhitespace) pb -= 1
             var pa = re
             while (pa < m.length && cur.charAt(pa).isWhitespace) pa += 1
-            val nextIsArrow = pa + 1 < m.length && m.charAt(pa) == '-' &&
-              m.charAt(pa + 1) == '>'
-            val badLeft =
-              pb >= 0 && "|+-*/%^&~!@<".indexOf(m.charAt(pb)) >= 0
-            val badRight = !nextIsArrow && pa < m.length &&
-              "+-*/%^&~!@[<|".indexOf(m.charAt(pa)) >= 0
+            val nextIsArrow = m.startsWith("->", pa)
             val path =
               if (kRaw.matches("\\d+")) Some(s"'$$[$kRaw]'")
               else if (kRaw.startsWith("'") && kRaw.length >= 2) {
                 val k = kRaw.substring(1, kRaw.length - 1)
                 if (k.startsWith("$")) Some(kRaw) else Some(s"'$$.$k'")
               } else None // lambda body / expression key: skip
-            if (l.isEmpty || badLeft || badRight || path.isEmpty) skip()
+            if (path.isEmpty ||
+                view.bindsTighter(ls, re, tighterLeft, if (nextIsArrow) "" else tighterRight)) skip()
             else {
               val fn = if (isText) "json_extract_string" else "json_extract"
               cur = cur.substring(0, ls) +
                 s"$fn($l, ${path.get})" + cur.substring(re)
               applied = true
             }
-          }
+          case _ => skip()
         }
       }
       if (!applied) return if (changed) Some(cur) else None
@@ -327,22 +203,22 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
+      val view = DuckLexer(cur)
+      val m = view.masked
       val hit = quantRe.findFirstMatchIn(m) match {
         case Some(h) => h
         case None => return if (changed) Some(cur) else None
       }
       val open = m.indexOf('(', hit.end - 1)
-      val close = DuckLexer(cur).closeOf(open)
+      val close = view.closeOf(open)
       if (close < 0) return None
       val inner = cur.substring(open + 1, close - 1).trim
       if (inner.toUpperCase.startsWith("SELECT") ||
         inner.toUpperCase.startsWith("WITH") ||
         inner.toUpperCase.startsWith("FROM")) return None
-      val ls = scanLeft(cur, m, hit.start - 1).getOrElse(return None)
-      if (!neighborsSafe(cur, m, ls, close)) return None
-      val l = cur.substring(ls, hit.start).trim
-      if (l.isEmpty) return None
+      val (ls, le) = view.operandBefore(hit.start).getOrElse(return None)
+      if (view.bindsTighter(ls, close, tighterLeft, tighterRight)) return None
+      val l = cur.substring(ls, le)
       val op = hit.group(1)
       val fn = if (hit.group(2).equalsIgnoreCase("ALL")) "forall" else "exists"
       cur = cur.substring(0, ls) +
@@ -388,7 +264,8 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
+      val view = DuckLexer(cur)
+      val m = view.masked
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
@@ -396,12 +273,10 @@ object ListOpRewrite {
           (i + 1 >= m.length || m.charAt(i + 1) != '=') &&
           (i == 0 || m.charAt(i - 1) != '!')) {
           // postfix: an operand must END directly before the `!`
-          val lsOpt = scanLeft(cur, m, i - 1)
-          lsOpt match {
-            case Some(ls) if cur.substring(ls, i).trim.nonEmpty &&
-                !clauseKeywords(cur.substring(ls, i).trim.toLowerCase) &&
-                neighborsSafe(cur, m, ls, i + 1) =>
-              val a = cur.substring(ls, i).trim
+          view.operandBefore(i) match {
+            case Some((ls, le)) if !DuckLexer.isClauseKeyword(cur.substring(ls, le)) &&
+                !view.bindsTighter(ls, i + 1, tighterLeft, tighterRight) =>
+              val a = cur.substring(ls, le)
               cur = cur.substring(0, ls) + s"graft_factorial($a)" +
                 cur.substring(i + 1)
               applied = true
@@ -426,21 +301,18 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
+      val view = DuckLexer(cur)
+      val m = view.masked
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
         if (m.charAt(i) == '@' &&
           (i + 1 >= m.length || m.charAt(i + 1) != '>') &&
           (i == 0 || (m.charAt(i - 1) != '<' && !operandCh(m.charAt(i - 1))))) {
-          scanRight(cur, m, i + 1) match {
-            case Some(re) if neighborsSafe(cur, m, i, re) =>
-              val b = cur.substring(i + 1, re).trim
-              if (b.isEmpty) i += 1
-              else {
-                cur = cur.substring(0, i) + s"abs($b)" + cur.substring(re)
-                applied = true
-              }
+          view.operandAfter(i + 1) match {
+            case Some((bs, re)) if !view.bindsTighter(i, re, tighterLeft, tighterRight) =>
+              cur = cur.substring(0, i) + s"abs(${cur.substring(bs, re)})" + cur.substring(re)
+              applied = true
             case _ => i += 1
           }
         } else i += 1
@@ -565,57 +437,10 @@ object ListOpRewrite {
     */
   def rewriteJsonCast(text: String): Option[String] = {
     if (!"(?i)\\bJSON\\b".r.findFirstIn(text).isDefined) return None
-    var cur = text
-    var m = DuckLexer(cur).masked
-    var changed = false
-
-    val castRe = """(?i)\b(TRY_)?CAST\s*\(""".r
-    var scan = true
-    while (scan) {
-      scan = false
-      for (h <- castRe.findAllMatchIn(m) if !scan) {
-        val open = m.indexOf('(', h.start)
-        val close = DuckLexer(cur).closeOf(open)
-        if (close > 0) {
-          val inner = cur.substring(open + 1, close - 1)
-          val innerM = m.substring(open + 1, close - 1)
-          val asRe = """(?i)\bAS\s+JSON\s*\z""".r
-          asRe.findFirstMatchIn(innerM).foreach { am =>
-            val operand = inner.substring(0, am.start).trim
-            if (operand.nonEmpty) {
-              val fn = if (h.group(1) != null) "graft_json_try_cast"
-                else "graft_json_cast"
-              cur = cur.substring(0, h.start) + s"$fn($operand)" +
-                cur.substring(close)
-              m = DuckLexer(cur).masked
-              changed = true
-              scan = true
-            }
-          }
-        }
-      }
+    val out = DuckLexer.replaceCasts(text, _.equalsIgnoreCase("JSON")) { c =>
+      s"${if (c.isTry) "graft_json_try_cast" else "graft_json_cast"}(${c.operand})"
     }
-
-    val colonRe = """(?i)::\s*JSON\b""".r
-    var again = true
-    while (again) {
-      again = false
-      for (h <- colonRe.findAllMatchIn(m) if !again) {
-        scanLeft(cur, m, h.start - 1) match {
-          case Some(ls) =>
-            val operand = cur.substring(ls, h.start).trim
-            if (operand.nonEmpty) {
-              cur = cur.substring(0, ls) + s"graft_json_cast($operand)" +
-                cur.substring(h.end)
-              m = DuckLexer(cur).masked
-              changed = true
-              again = true
-            }
-          case None =>
-        }
-      }
-    }
-    if (changed) Some(cur) else None
+    if (out ne text) Some(out) else None
   }
 
   private val limitPctRe =
@@ -639,15 +464,13 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 32) {
       rounds += 1
-      val m = DuckLexer(cur).masked
-      val hit = globWordRe.findFirstMatchIn(m).getOrElse(
+      val view = DuckLexer(cur)
+      val hit = globWordRe.findFirstMatchIn(view.masked).getOrElse(
         return if (changed) Some(cur) else None)
-      val re = scanRight(cur, m, hit.end).getOrElse(return None)
-      val ls = scanLeft(cur, m, hit.start - 1).getOrElse(return None)
-      val a = cur.substring(ls, hit.start).trim
-      val b = cur.substring(hit.end, re).trim
-      if (a.isEmpty || b.isEmpty) return None
-      cur = cur.substring(0, ls) + s"graft_glob($a, $b)" + cur.substring(re)
+      val (bs, re) = view.operandAfter(hit.end).getOrElse(return None)
+      val (ls, le) = view.operandBefore(hit.start).getOrElse(return None)
+      cur = cur.substring(0, ls) +
+        s"graft_glob(${cur.substring(ls, le)}, ${cur.substring(bs, re)})" + cur.substring(re)
       changed = true
     }
     if (changed) Some(cur) else None
@@ -697,21 +520,20 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = DuckLexer(cur).masked
-      val hitOpt = dotCallRe.findAllMatchIn(m).find { h =>
-        var p = h.start - 1
-        while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
-        p >= 0 && (m.charAt(p) == ')' || m.charAt(p) == ']' ||
-          (cur.charAt(p) == '\'' && m.charAt(p) == ' '))
-      }
-      val hit = hitOpt.getOrElse(return if (changed) Some(cur) else None)
-      var p = hit.start - 1
-      while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
-      val ls = scanLeft(cur, m, p).getOrElse(return None)
-      val receiver = cur.substring(ls, p + 1)
+      val view = DuckLexer(cur)
+      val m = view.masked
+      // A receiver that ends in a close or a string literal: a bare
+      // name before the dot parses natively as a qualified name.
+      val found = dotCallRe.findAllMatchIn(m).flatMap { h =>
+        view.operandBefore(h.start).filter { case (_, e) =>
+          m.charAt(e - 1) == ')' || m.charAt(e - 1) == ']' || cur.charAt(e - 1) == '\''
+        }.map((h, _))
+      }.nextOption()
+      val (hit, (ls, le)) = found.getOrElse(return if (changed) Some(cur) else None)
+      val receiver = cur.substring(ls, le)
       val fn = hit.group(1)
       val open = hit.end - 1
-      val close = DuckLexer(cur).closeOf(open)
+      val close = view.closeOf(open)
       if (close < 0) return None
       val args = cur.substring(open + 1, close - 1).trim
       val call =

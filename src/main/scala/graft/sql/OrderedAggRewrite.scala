@@ -62,19 +62,18 @@ object OrderedAggRewrite {
         case ')' | ']' | '}' => depth -= 1; i += 1
         case c if depth == 0 && (c == 'o' || c == 'O') &&
             masked.regionMatches(true, i, "ORDER", 0, 5) &&
-            (i == 0 || !isWordChar(masked.charAt(i - 1))) =>
+            (i == 0 || !DuckLexer.wordCh(masked.charAt(i - 1))) =>
           var j = i + 5
           var sawWs = false
           while (j < n && masked.charAt(j).isWhitespace) { j += 1; sawWs = true }
           if (sawWs && masked.regionMatches(true, j, "BY", 0, 2) &&
-            (j + 2 >= n || !isWordChar(masked.charAt(j + 2)))) return i
+            (j + 2 >= n || !DuckLexer.wordCh(masked.charAt(j + 2)))) return i
           i += 5
         case _ => i += 1
       }
     }
     -1
   }
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
 
   private case class Key(expr: String, desc: Boolean, nullsFirst: Boolean)
   private val keyRe =

@@ -81,7 +81,7 @@ object RecursiveUnionRewrite {
       val c = mask.charAt(i)
       if (c.isLetter || c == '_') {
         val s = i
-        while (i < n && (mask.charAt(i).isLetterOrDigit || mask.charAt(i) == '_')) i += 1
+        while (i < n && DuckLexer.wordCh(mask.charAt(i))) i += 1
         out += ((mask.substring(s, i).toUpperCase, s))
       } else i += 1
     }

@@ -3,8 +3,8 @@ package graft.sql
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[DuckLexer]]: token kinds and spans, and each view the dialect arms
-  * read (masked text, matching close, top-level split, words, literal
-  * values).
+  * read (masked text, matching close and open, top-level split, words,
+  * literal values, the operand grammar and named casts).
   */
 class DuckLexerSpec extends AnyFunSuite {
 
@@ -80,6 +80,88 @@ class DuckLexerSpec extends AnyFunSuite {
       .map(_.trim) == Vector("x * 2", "x IN [y FOR y IN z] IF x > 1"))
     assert(DuckLexer("a = f(b = c), d").assignmentEq == 2)
     assert(DuckLexer("a <= b, c == d, e").assignmentEq == -1)
+  }
+
+  test("openOf is closeOf read backwards") {
+    val s = "f(a, [b, (c)], {'k': d}), [e] ')'"
+    val v = DuckLexer(s)
+    for (o <- s.indices if v.closeOf(o) > 0) assert(v.openOf(v.closeOf(o) - 1) == o)
+    assert(v.openOf(22) == 15 && v.openOf(23) == 1 && v.openOf(28) == 26)
+    assert(v.openOf(0) == -1 && v.openOf(31) == -1) // no close; a close in a string
+    assert(DuckLexer("a) (b").openOf(1) == -1) // nothing opens it
+  }
+
+  /** The operand text each side of the `~` in `sql`. */
+  private def operands(sql: String): (Option[String], Option[String]) = {
+    val v = DuckLexer(sql)
+    val op = v.masked.indexOf('~')
+    def text(span: Option[(Int, Int)]) = span.map { case (a, b) => sql.substring(a, b) }
+    (text(v.operandBefore(op)), text(v.operandAfter(op + 1)))
+  }
+
+  test("operands: each kind, read from either side") {
+    assert(operands("SELECT 'a''b' ~ 'c'") == ((Some("'a''b'"), Some("'c'"))))
+    assert(operands("WHERE E'\\n' ~ $$x$$") == ((Some("E'\\n'"), Some("$$x$$"))))
+    assert(operands("SELECT `c d` ~ `e`") == ((Some("`c d`"), Some("`e`"))))
+    // Spark reads a double-quoted name as a string: no operand.
+    assert(operands("SELECT \"c d\" ~ \"e\"") == ((None, None)))
+    assert(operands("SELECT (a + b) ~ (c)") == ((Some("(a + b)"), Some("(c)"))))
+    assert(operands("SELECT f (a) ~ g(b, c) + 1") == ((Some("f (a)"), Some("g(b, c)"))))
+    assert(operands("SELECT [1, 2] ~ [3]") == ((Some("[1, 2]"), Some("[3]"))))
+    assert(operands("SELECT t.x_1 ~ $1") == ((Some("t.x_1"), Some("$1"))))
+    assert(operands("SELECT ~ x") == ((Some("SELECT"), Some("x"))))
+    assert(operands("SELECT 1 + ~ ,") == ((None, None)))
+  }
+
+  test("operands: a clause keyword before a group is no function name") {
+    for (kw <- Seq("DISTINCT", "BETWEEN", "qualify", "any", "NOT", "In"))
+      assert(operands(s"SELECT $kw (x) ~ y")._1 == Some("(x)"), kw)
+    assert(operands("SELECT filter (l) ~ y")._1 == Some("filter (l)"))
+    assert(operands("SELECT exists (x) ~ y")._1 == Some("exists (x)"))
+    assert(DuckLexer.isClauseKeyword("Distinct") && !DuckLexer.isClauseKeyword("filter"))
+  }
+
+  test("operands: a typed literal keeps its keyword") {
+    assert(operands("SELECT TIMESTAMP '2024-01-01' ~ DATE '2024-01-02' x") ==
+      ((Some("TIMESTAMP '2024-01-01'"), Some("DATE '2024-01-02'"))))
+    assert(operands("SELECT interval '1' ~ x")._1 == Some("'1'")) // not a typed keyword here
+    assert(operands("SELECT DATE ~ '2024'") == ((Some("DATE"), Some("'2024'"))))
+  }
+
+  test("operands: segments chain through dots") {
+    assert(operands("SELECT `s`.`t`.c ~ x") == ((Some("`s`.`t`.c"), Some("x"))))
+    assert(operands("SELECT f(x).y ~ a.g(b).h") == ((Some("f(x).y"), Some("a.g(b).h"))))
+    assert(operands("SELECT ('a').upper() ~ 'b'.lower()") ==
+      ((Some("('a').upper()"), Some("'b'.lower()"))))
+    assert(operands("SELECT 1.5 ~ .5") == ((Some("1.5"), Some(".5"))))
+  }
+
+  test("operands: an unbalanced or commented group declines") {
+    assert(operands("SELECT a) ~ (b") == ((None, None)))
+    assert(operands("SELECT ] ~ [") == ((None, None)))
+    assert(operands("SELECT x ~ 'open")._2 == None) // an unclosed string
+    assert(operands("SELECT x /* c */ ~ -- c\n y") == ((None, None)))
+  }
+
+  test("bindsTighter reads the code neighbours, blanks skipped") {
+    val s = "SELECT 1 +  a ~ b   * 2, 'x' || c ~ d"
+    val v = DuckLexer(s)
+    assert(v.bindsTighter(12, 17, "+", ""))
+    assert(v.bindsTighter(12, 17, "", "*"))
+    assert(!v.bindsTighter(12, 17, "-", "/"))
+    assert(v.bindsTighter(32, 37, "|", ""))
+    assert(!v.bindsTighter(29, 37, "x'", "")) // a string holds no code neighbour
+  }
+
+  test("namedCasts finds CAST, TRY_CAST and :: casts to the accepted types") {
+    val s = "SELECT CAST(a AS mood), try_cast(f(b) AS Mood), 'x'::mood, " +
+      "(c)::JSON, d::int, CAST(e AS INT), CAST( AS mood), ::mood"
+    val cs = DuckLexer(s).namedCasts(_.equalsIgnoreCase("mood"))
+    assert(cs.map(c => (s.substring(c.start, c.end), c.operand, c.typeName, c.isTry)) == Vector(
+      ("CAST(a AS mood)", "a", "mood", false),
+      ("try_cast(f(b) AS Mood)", "f(b)", "Mood", true),
+      ("'x'::mood", "'x'", "mood", false)))
+    assert(DuckLexer(s).namedCasts(_ == "JSON").map(_.operand) == Vector("(c)"))
   }
 
   test("topLevelWords skips strings, quoted identifiers, comments, and parens") {

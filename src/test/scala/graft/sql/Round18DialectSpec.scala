@@ -151,6 +151,15 @@ class Round18DialectSpec extends AnyFunSuite {
       "AS INT)") == 2024)
   }
 
+  test("duck-only EXTRACT fields answer in expression fragments and lambdas") {
+    // DuckDB 1.0: extract(isodow FROM DATE '2024-03-03') = 7 (a Sunday),
+    // list_transform([DATE '2024-03-03'], x -> date_part('isodow', x)) = [7].
+    val df = spark.sql("SELECT DATE '2024-03-03' AS d")
+    assert(df.selectExpr("extract(isodow FROM d)").head().getLong(0) == 7L)
+    assert(df.selectExpr("transform(array(d), x -> date_part('isodow', x))")
+      .head().getSeq[Long](0) == Seq(7L))
+  }
+
   // ---------------------------------------------------------------
   // BIT lane
   // ---------------------------------------------------------------
@@ -284,6 +293,24 @@ class Round18DialectSpec extends AnyFunSuite {
       Seq(Seq(true, false, true, true, false, null)))
     assert(rows("SELECT [1,2] <@ [1,2,3], [1,4] <@ [1,2,3]") ==
       Seq(Seq(true, false)))
+  }
+
+  test("an operator after a clause keyword reads the group as its operand") {
+    // DuckDB 1.0's answers; a clause keyword before a paren group is no
+    // function name, whichever operator reads the group.
+    Seq(
+      "SELECT DISTINCT ([1, 2]) && ([2, 3])" -> "true",
+      "SELECT DISTINCT (3)!" -> "6",
+      "SELECT DISTINCT ('{\"a\":1}') ->> 'a'" -> "1",
+      "SELECT DISTINCT ('a.txt') GLOB '*.txt'" -> "true",
+      "SELECT DISTINCT ('abc') ^@ 'a'" -> "true",
+      "SELECT DISTINCT ([1, 2]) @> ([2])" -> "true",
+      "SELECT DISTINCT ('{\"a\":1}')::JSON" -> "{\"a\":1}",
+      "SELECT 6 BETWEEN (3)! AND 7" -> "true",
+      "SELECT x FROM (SELECT 2 AS x) QUALIFY (count(*) OVER ()) ** 2 > 0" -> "2"
+    ).foreach { case (sql, want) =>
+      assert(rows(sql).map(_.map(String.valueOf)) == Seq(Seq(want)), sql)
+    }
   }
 
   test("quantified comparisons over lists match DuckDB's 3VL") {
